@@ -135,23 +135,41 @@ object FraudModel {
     }
   }
 
-  /** M9+M8: score a batch with the current Production model (pointer
-    * re-resolved on every call → hot reload per micro-batch), falling
+  /** Closed forms of loaded registry versions, keyed by version dir +
+    * its `metadata` dir's mtime and file key. Plain doubles, no frame
+    * or session, so one entry serves every session; a version rewritten
+    * at the same path stats differently and is loaded afresh. */
+  private val closedForms = graft.SessionCaches.register(
+    scala.collection.concurrent.TrieMap.empty[String, (Seq[Double], Seq[Double], Seq[Double], Double)])
+
+  /** M9+M8: score a batch with the current Production model, falling
     * back to the heuristic when the registry is empty.
     *
-    * The loaded model is immediately exported to closed form and
-    * scored as column arithmetic — no `model.transform`, so no model
-    * object (whose persisted training summary drags a SparkSession
-    * along) ever enters a task closure, and the scoring stays inside
-    * WholeStageCodegen. Equivalence with `transform` probabilities is
-    * pinned at < 1e-9 by MlSpec/ml_train_eval. */
+    * Hot reload costs ONE pointer read per call, so a promotion takes
+    * effect at the next micro-batch, and the version stamped on the
+    * rows is the version they were scored with. `PipelineModel.load`
+    * runs once per version: its closed form is memoized (one stat of
+    * the version's `metadata` dir per call guards the memo against a
+    * version rewritten at the same path; registry versions are
+    * write-once, so that is a miss, never a stale hit).
+    *
+    * The closed form is scored as column arithmetic — no
+    * `model.transform`, so no model object (whose persisted training
+    * summary drags a SparkSession along) ever enters a task closure,
+    * and the scoring stays inside WholeStageCodegen. Equivalence with
+    * `transform` probabilities is pinned at < 1e-9 by
+    * MlSpec/ml_train_eval. */
   def scoreBatch(spark: SparkSession, registry: ModelRegistry, name: String, batch: DataFrame): DataFrame =
-    registry.loadProduction(spark, name) match {
-      case Some(model) =>
-        val v = registry.productionVersion(name).get
-        val feats = Scoring.FeatureOrder.map(col)
+    registry.productionVersion(name) match {
+      case Some(v) =>
+        val dir = registry.versionDir(name, v)
+        val meta = java.nio.file.Files.readAttributes(java.nio.file.Paths.get(dir, "metadata"),
+          classOf[java.nio.file.attribute.BasicFileAttributes])
+        val key = s"$dir#${meta.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS)}#${meta.fileKey}"
+        val (means, stds, coef, b) =
+          closedForms.getOrElseUpdate(key, closedForm(PipelineModel.load(dir)))
         batch
-          .withColumn("proba", closedFormProba(model, feats))
+          .withColumn("proba", Scoring.logisticProba(Scoring.FeatureOrder.map(col), means, stds, coef, b))
           .withColumn("prediction", Scoring.classify(col("proba")))
           .withColumn("model_version", lit(s"v$v"))
       case None =>

@@ -14,8 +14,12 @@ import org.apache.spark.sql.SparkSession
   *
   * The reference resolves "Production" stage at load and hot-reloads
   * every 60 s (`services/fraud_service/app/main.py:73-97,183-189`);
-  * here resolution is a pointer read, cheap enough to run per
-  * micro-batch (M8). The reference's version-vs-run-id confusion and
+  * here resolution is ONE pointer read ([[productionVersion]] +
+  * [[versionDir]]), cheap enough to run per micro-batch (M8), and the
+  * scoring path loads each version's `PipelineModel` once
+  * ([[FraudModel.scoreBatch]]). Versions are WRITE-ONCE: `register`
+  * always writes a fresh `v<N>`, and nothing rewrites a promoted one
+  * in place. The reference's version-vs-run-id confusion and
   * never-set `_model_version` (`main.py:77-83`) are implemented as
   * intended, not as shipped.
   */
@@ -71,15 +75,18 @@ final class ModelRegistry(root: String) extends Serializable {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  def productionVersion(name: String): Option[Int] = {
-    val p = nameDir(name).resolve("PRODUCTION")
-    if (Files.exists(p)) Some(Files.readString(p).trim.toInt) else None
-  }
+  /** One read of the PRODUCTION pointer; None when it is absent,
+    * including when it disappears under the read. */
+  def productionVersion(name: String): Option[Int] =
+    try Some(Files.readString(nameDir(name).resolve("PRODUCTION")).trim.toInt)
+    catch { case _: java.nio.file.NoSuchFileException => None }
+
+  /** The directory `register` saved `version` of `name` to. */
+  def versionDir(name: String, version: Int): String =
+    nameDir(name).resolve(s"v$version").toString
 
   /** Resolve + load the Production model; None → caller falls back to
     * the heuristic score (M9). */
   def loadProduction(spark: SparkSession, name: String): Option[PipelineModel] =
-    productionVersion(name).map { v =>
-      PipelineModel.load(nameDir(name).resolve(s"v$v").toString)
-    }
+    productionVersion(name).map(v => PipelineModel.load(versionDir(name, v)))
 }

@@ -151,10 +151,12 @@ object ScoringStream {
   /** The complete real-time scoring shape (M8 in streaming form):
     * event stream → model-feature projection → `foreachBatch` that
     * re-resolves the Production model from the registry on EVERY
-    * micro-batch (pointer read — the reference's 60 s reload thread,
-    * `main.py:183-189`, collapsed to per-batch freshness) and appends
-    * scored rows. Falls back to the heuristic while the registry is
-    * empty (M9). */
+    * micro-batch and appends scored rows. The reference's 60 s reload
+    * thread (`main.py:183-189`) collapses to per-batch freshness at
+    * the cost of one pointer read per batch: [[graft.ml.FraudModel.scoreBatch]]
+    * runs `PipelineModel.load` once per (write-once) version and
+    * serves later batches from its memoized closed form. Falls back to
+    * the heuristic while the registry is empty (M9). */
   def runModelScoredStream(spark: SparkSession, dir: String, outDir: String,
                            registry: graft.ml.ModelRegistry,
                            modelName: String): DataFrame = {

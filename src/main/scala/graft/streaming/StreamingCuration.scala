@@ -399,15 +399,17 @@ object StreamingCuration {
         spanFirsts.groupBy(col("fp")).agg(count(lit(1)).as("n_docs"))
           .withColumn("batch_id", lit(batchId)),
         batchId = Some(batchId), streamId = Some(env.ckpt)); () })
-    StreamPools.runAll(decisionActs ++ appendActs)
-    // shared is dead once both faces landed — free its checkpoint
-    // blocks now rather than letting past batches' pins wait on
-    // driver GC + ContextCleaner
-    sharedPin.foreach(org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint)
-    starts.unpersist()
-    segs.unpersist()
-    batchHs.unpersist()
-    docs.unpersist()
+    try StreamPools.runAll(decisionActs ++ appendActs)
+    finally {
+      // shared is dead once both faces landed (or the batch failed and
+      // will replay) — free its checkpoint blocks now rather than
+      // letting past batches' pins wait on driver GC + ContextCleaner
+      sharedPin.foreach(org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint)
+      starts.unpersist()
+      segs.unpersist()
+      batchHs.unpersist()
+      docs.unpersist()
+    }
     ()
   }
 

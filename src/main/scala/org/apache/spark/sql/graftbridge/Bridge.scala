@@ -71,12 +71,16 @@ object Bridge {
     * deterministically bounds the storage footprint at one batch's
     * pins. The frame is UNREADABLE afterwards (localCheckpoint
     * severed its lineage) — callers only pass frames whose consumers
-    * have all completed. */
-  def unpersistLocalCheckpoint(df: DataFrame): Unit = {
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
+    * have all completed.
+    *
+    * Only the direct `localCheckpoint(true)` result is accepted: a
+    * frame derived from it (or joined with a memoized pin) would
+    * otherwise free blocks that other frames still read, so any plan
+    * whose root is not a `LogicalRDD` throws IllegalArgumentException. */
+  def unpersistLocalCheckpoint(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case lr: org.apache.spark.sql.execution.LogicalRDD =>
+      lr.rdd.unpersist(blocking = false); ()
+    case other => throw new IllegalArgumentException(
+      s"unpersistLocalCheckpoint takes a localCheckpoint(true) result, not a derived ${other.nodeName} plan")
   }
 }

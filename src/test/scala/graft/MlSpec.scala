@@ -4,7 +4,11 @@ import java.nio.file.Files
 
 import graft.ml.{FraudModel, ModelRegistry}
 import graft.functions.Scoring
+import org.apache.spark.ml.PipelineModel
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Training path, registry lifecycle, closed-form equivalence,
   * hot-reload and heuristic fallback (SURVEY.md §2.8). */
@@ -13,6 +17,36 @@ class MlSpec extends SparkSpec {
 
   private lazy val data = FraudModel.syntheticTraining(spark, n = 3000, seed = 42).cache()
   private lazy val trained = FraudModel.train(data)
+  // a second model whose coefficients differ from `trained`'s
+  private lazy val trained2 =
+    FraudModel.train(FraudModel.syntheticTraining(spark, n = 3000, seed = 7), seed = 7)
+
+  // max |scoreBatch proba − MLlib's own probability| over the batch
+  private def probaGap(scored: DataFrame, model: PipelineModel): Double = {
+    val feats = Scoring.FeatureOrder.map(col)
+    val rows = scored.select((feats :+ col("proba")): _*).collect()
+    FraudModel.mllibProbaLocal(model,
+      rows.toIndexedSeq.map(r => Array.tabulate(feats.length)(r.getDouble)))
+      .zip(rows.map(_.getDouble(feats.length)))
+      .map { case (m, p) => math.abs(m - p) }.max
+  }
+
+  private def versionOf(scored: DataFrame): Seq[String] =
+    scored.select("model_version").distinct().collect().map(_.getString(0)).toSeq
+
+  // Spark jobs started while `body` runs (the bus is drained on both
+  // sides so no earlier job's event is counted and none of body's is
+  // missed)
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    }
+    Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try { val r = body; Bridge.drainListenerBus(spark); (r, n.get) }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
 
   test("G1-G6 generator: schema, determinism, label plausibility") {
     assert(data.columns.toSeq == Seq("amount", "num_items", "merchant_risk", "hour", "label"))
@@ -90,6 +124,50 @@ class MlSpec extends SparkSpec {
     assert(scored.filter(col("proba") < 0 || col("proba") > 1).count() == 0)
     val both = scored.withColumn("expected", Scoring.classify(col("proba")))
     assert(both.filter(col("prediction") =!= col("expected")).count() == 0)
+  }
+
+  test("M8: a promote switches the next batch to that version's coefficients, and back") {
+    assert(FraudModel.closedForm(trained.model)._3 != FraudModel.closedForm(trained2.model)._3)
+    val reg = new ModelRegistry(Files.createTempDirectory("graft-registry-").toString)
+    val batch = data.limit(50)
+    reg.promote("fraud_detector", reg.register(trained.model, "fraud_detector"))
+    val s1 = FraudModel.scoreBatch(spark, reg, "fraud_detector", batch)
+    assert(versionOf(s1) == Seq("v1") && probaGap(s1, trained.model) < 1e-9)
+    // v1 is now cached; a promote of v2 is served at the next batch
+    reg.promote("fraud_detector", reg.register(trained2.model, "fraud_detector"))
+    val s2 = FraudModel.scoreBatch(spark, reg, "fraud_detector", batch)
+    assert(versionOf(s2) == Seq("v2"))
+    assert(probaGap(s2, trained2.model) < 1e-9, "v2 rows must carry v2's probabilities")
+    assert(probaGap(s2, trained.model) > 1e-6, "v2 rows must not carry v1's probabilities")
+    reg.promote("fraud_detector", 1)
+    val s3 = FraudModel.scoreBatch(spark, reg, "fraud_detector", batch)
+    assert(versionOf(s3) == Seq("v1") && probaGap(s3, trained.model) < 1e-9)
+  }
+
+  test("M8: scoring with an already-loaded version starts no Spark job") {
+    val reg = new ModelRegistry(Files.createTempDirectory("graft-registry-").toString)
+    val batch = data.limit(50)
+    reg.promote("fraud_detector", reg.register(trained.model, "fraud_detector"))
+    // the first call loads the version (eager); scoring itself is lazy
+    val (_, loadJobs) = jobsDuring(FraudModel.scoreBatch(spark, reg, "fraud_detector", batch))
+    assert(loadJobs > 0, "the listener must see the first call's model load")
+    val (again, cachedJobs) = jobsDuring(FraudModel.scoreBatch(spark, reg, "fraud_detector", batch))
+    assert(cachedJobs == 0, s"a cached version reloaded: $cachedJobs jobs")
+    assert(versionOf(again) == Seq("v1") && probaGap(again, trained.model) < 1e-9)
+  }
+
+  test("M8: a version rewritten at the same path is reloaded, not served stale") {
+    val root = Files.createTempDirectory("graft-registry-")
+    val reg = new ModelRegistry(root.toString)
+    val batch = data.limit(50)
+    reg.promote("fraud_detector", reg.register(trained.model, "fraud_detector"))
+    assert(probaGap(FraudModel.scoreBatch(spark, reg, "fraud_detector", batch), trained.model) < 1e-9)
+    new scala.reflect.io.Directory(root.toFile).deleteRecursively()
+    assert(reg.productionVersion("fraud_detector").isEmpty)
+    reg.promote("fraud_detector", reg.register(trained2.model, "fraud_detector"))
+    val scored = FraudModel.scoreBatch(spark, reg, "fraud_detector", batch)
+    assert(versionOf(scored) == Seq("v1"))
+    assert(probaGap(scored, trained2.model) < 1e-9, "stale coefficients served for a rewritten v1")
   }
 
   test("ml_train_eval_cert: deterministic split, exact AUC facts, booleans hold") {
