@@ -1,5 +1,20 @@
 package graft
 object Bench {
+  /** Wall seconds of `body`, or None when it throws (logged to stderr). */
+  private[graft] def timed(body: => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { body; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => System.err.println(s"[bench-fail] $e"); None }
+  }
+
+  /** Min wall seconds over `n` runs of `body`, or None once a run
+    * throws (later runs are skipped): a query that fails at once must
+    * fail its entry, never read as a fast one. */
+  private[graft] def minOfReps(n: Int)(body: => Unit): Option[Double] = {
+    val secs = Iterator.fill(n)(timed(body)).takeWhile(_.isDefined).flatten.toSeq
+    if (secs.size == n) Some(secs.min) else None
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -73,18 +88,20 @@ object Bench {
     // quiet-run swing on a byte-identical warm localizes to "drain"
     // vs "artifacts" vs "register" from the artifact itself instead
     // of needing an adjudicating re-run (the r19 variance item).
+    // failed: some timed run of the entry threw — its time is left out
+    // of "value" and the entry is named on the [bench-gc] line.
     final case class Entry(name: String, sec: Double, gcMsDelta: Long, load: Double,
                            resolveSec: Double = -1.0,
-                           phases: Seq[(String, Double)] = Nil)
+                           phases: Seq[(String, Double)] = Nil,
+                           failed: Boolean = false)
     def timedWarm(name: String)(f: => Unit): Entry = {
       WarmPhases.drain() // attribute phases to exactly this build
-      val load0 = loadAvg(); val gc0 = gcMs(); val t0 = System.nanoTime()
-      warmup(f)
-      val build = (System.nanoTime() - t0) / 1e9
+      val load0 = loadAvg(); val gc0 = gcMs()
+      val build = timed(f)
       val ph = WarmPhases.drain()
-      val t1 = System.nanoTime()
-      warmup(f)
-      Entry(name, build, gcMs() - gc0, load0, (System.nanoTime() - t1) / 1e9, ph)
+      val resolve = timed(f)
+      Entry(name, build.getOrElse(0.0), gcMs() - gc0, load0, resolve.getOrElse(0.0), ph,
+        failed = build.isEmpty || resolve.isEmpty)
     }
     val warmShared = Seq(
       timedWarm("cache_warm_shingles") {
@@ -279,16 +296,11 @@ object Bench {
       // timing filters load spikes, but GC cost is real work the entry
       // caused regardless of which rep it surfaced in.
       val gc0 = gcMs()
-      def rep(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val reps = (1 to 2).map(_ => rep()) ++
-        (if (load0 >= LoadRetryThreshold) Seq(rep()) else Seq.empty)
-      Entry(name, reps.min, gcMs() - gc0, load0)
+      val sec = minOfReps(if (load0 >= LoadRetryThreshold) 3 else 2) { fn(spark, sfDir).count(); () }
+      Entry(name, sec.getOrElse(0.0), gcMs() - gc0, load0, failed = sec.isEmpty)
     }
-    val total = results.map(_.sec).sum
+    val timedOk = results.filterNot(_.failed)
+    val total = timedOk.map(_.sec).sum
     // Locale-pinned decimal format: f"" uses the JVM default locale,
     // and a comma-decimal locale (de_DE, ...) would emit 68,008 and
     // break the one-line JSON contract.
@@ -300,20 +312,22 @@ object Bench {
     // the stdout line keeps only the last ~2000 chars of output, and
     // 80+ query timings don't fit — a longer line loses its head
     // (including "metric") to the truncation and never parses.
-    System.err.println(s"""[bench-detail] ${fmt(results.map(e => e.name -> e.sec))}""")
+    System.err.println(s"""[bench-detail] ${fmt(timedOk.map(e => e.name -> e.sec))}""")
     // Per-entry noise attribution record: gc_ms = JVM GC time inside
     // the entry (both reps), load = 1-min system load at entry start,
-    // resolve = the post-build memo re-resolve (warm entries only).
+    // resolve = the post-build memo re-resolve (warm entries only),
+    // failed = a timed run threw (the entry has no time).
     System.err.println("[bench-gc] " + results.map { e =>
       "\"" + e.name + "\":{\"gc_ms\":" + e.gcMsDelta + ",\"load\":" + d2(e.load) +
         (if (e.resolveSec >= 0) ",\"resolve\":" + d3(e.resolveSec) else "") +
-        (if (e.phases.nonEmpty) ",\"phases\":" + fmt(e.phases) else "") + "}"
+        (if (e.phases.nonEmpty) ",\"phases\":" + fmt(e.phases) else "") +
+        (if (e.failed) ",\"failed\":true" else "") + "}"
     }.mkString("{", ",", "}"))
     // The ONE stdout JSON line, capped so line + sbt's trailing
     // "[success] ..." stays inside the consumer's tail window: the
     // slowest queries first (the ones worth grading), the rest summed
     // into "queries_other" so the map still totals to "value".
-    val byCost = results.sortBy(-_.sec)
+    val byCost = timedOk.sortBy(-_.sec)
     // Aggregate noise fields on the ONE stdout line: total GC ms
     // across the run and the load average at start/end bracket the
     // host conditions this total was measured under. Per-entry
@@ -330,9 +344,9 @@ object Bench {
     // "value") — round-over-round comparison keys off value minus
     // load-suspect warm builds, adjudicated per entry by the 4th
     // element ([sec, gc_ms, load, resolve]) each kept warm carries.
-    val warmBuild = results.filter(_.resolveSec >= 0).map(_.sec).sum
-    val warmResolve = results.filter(_.resolveSec >= 0).map(_.resolveSec).sum
-    val prefix = s"""{"metric":"total","value":${d3(total)},"unit":"sec","sf":"$sfDir","gc_ms":$gcTotal,"load_start":${d2(results.headOption.map(_.load).getOrElse(loadEnd))},"load_end":${d2(loadEnd)},"warm_build":${d3(warmBuild)},"warm_resolve":${d3(warmResolve)},"queries_total":${results.size},"queries":"""
+    val warmBuild = timedOk.filter(_.resolveSec >= 0).map(_.sec).sum
+    val warmResolve = timedOk.filter(_.resolveSec >= 0).map(_.resolveSec).sum
+    val prefix = s"""{"metric":"total","value":${d3(total)},"unit":"sec","sf":"$sfDir","gc_ms":$gcTotal,"load_start":${d2(results.headOption.map(_.load).getOrElse(loadEnd))},"load_end":${d2(loadEnd)},"warm_build":${d3(warmBuild)},"warm_resolve":${d3(warmResolve)},"queries_total":${results.size},"failed":${results.size - timedOk.size},"queries":"""
     val budget = 1600 - prefix.length
     // kept warm entries carry [sec, gc_ms, load, resolve, {phases}]:
     // the 5th element is the per-phase build breakdown (short keys,

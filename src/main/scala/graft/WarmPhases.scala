@@ -15,8 +15,10 @@ package graft
   * artifacts" vs "the store registration" from the artifact alone,
   * without a human re-run.
   *
-  * Single-threaded by design: warm builds run sequentially on the
-  * bench main thread, and phases do not nest (a nested call simply
+  * Thread-safe: warm builders run independent phases concurrently
+  * through `StreamPools.runAll`, so the record is appended under its
+  * lock, and overlapping phases each record their own wall (their sum
+  * can exceed the entry's). Phases do not nest (a nested call simply
   * records its own wall alongside the outer one — attribution stays
   * readable because builders keep phases flat). Recording is
   * best-effort accounting, never behavior: a builder running outside

@@ -46,20 +46,22 @@ object Jobs {
   /** One cron firing of Data_quality_checks: the three reference
     * checks (freshness window non-empty, no null ids, fraud rate in
     * bounds — `Data_quality_checks.py:20-41`) as one (check, value,
-    * ok) report. The DAG ran three separate SQL statements; here all
-    * three ride ONE scan of the scored stream and ONE conditional
-    * aggregate (the anchor is the usual 1-row broadcast), then
-    * `stack` reshapes the 1-row summary into the report rows — at
-    * any scale this is a single pass over the day's data. */
-  def dataQualityTick(spark: SparkSession, dir: String): DataFrame =
-    FraudAnalytics.anchoredScored(spark, dir)
-      .agg(
-        count(when(col("ts") > col("anchor_ts") - expr("INTERVAL 15 MINUTES"), lit(1)))
+    * ok) report. The DAG ran three separate SQL statements; here the
+    * two counts share ONE pass over the unscored events (no JSON is
+    * parsed), and only the trailing hour is scored for the rate. The
+    * rate rides along as a scalar subquery, whose `max(ts)` anchor
+    * Spark reuses from the counts pass, and `stack` reshapes the
+    * 1-row summary into the report rows. */
+  def dataQualityTick(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(spark, dir)
+    val rate = FraudAnalytics.scored(FraudAnalytics.trailing(ev, "1 HOUR"))
+      .agg(round(coalesce(avg(col("prediction").cast("double")), lit(0.0)), 6))
+    ev.agg(
+        count(when(col("ts") > FraudAnalytics.anchorTs(ev) - expr("INTERVAL 15 MINUTES"), lit(1)))
           .as("recent_rows"),
         count(when(col("event_id").isNull || col("event_type").isNull, lit(1)))
-          .as("null_id_rows"),
-        round(coalesce(avg(when(col("ts") > col("anchor_ts") - expr("INTERVAL 1 HOUR"),
-          col("prediction").cast("double"))), lit(0.0)), 6).as("rate"))
+          .as("null_id_rows"))
+      .withColumn("rate", rate.scalar())
       .selectExpr(
         """stack(3,
           |  'freshness_15m', cast(recent_rows AS double), recent_rows >= 1,
@@ -67,6 +69,7 @@ object Jobs {
           |  'rate_bound_1h', rate,                          rate BETWEEN 0.0 AND 1.0
           |) AS (`check`, value, ok)""".stripMargin)
       .orderBy(col("check"))
+  }
 
   /** Engine-native scheduling of the daily-metrics job: the streaming
     * twin of [[dailyMetricsTick]] on a processing-time cadence (the

@@ -22,8 +22,10 @@ import org.apache.spark.sql.types.DecimalType
   * for the aggregate. The scoring pipeline itself is pure column
   * arithmetic (no UDF, no shuffle): at 100 TB it is an
   * embarrassingly-parallel map over scan partitions inside one
-  * WholeStageCodegen stage. Time-anchored predicates use a 1-row
-  * broadcast of `max(ts)` (never a driver-side collect).
+  * WholeStageCodegen stage. Time-anchored predicates compare `ts`
+  * with a scalar subquery on `max(ts)` (never a driver-side collect)
+  * and filter before scoring, so `from_json(props)` runs only on the
+  * rows inside the window.
   */
 object FraudAnalytics {
 
@@ -103,17 +105,21 @@ object FraudAnalytics {
       |  FROM l
       |)""".stripMargin
 
-  /** `max(ts)` as a 1-row broadcast — the deterministic stand-in for
-    * the reference's `NOW()` predicates. */
-  private def withAnchor(events: DataFrame): DataFrame =
-    events.crossJoin(broadcast(events.agg(max(col("ts")).as("anchor_ts"))))
+  /** `max(ts)` as a scalar subquery — the deterministic stand-in for
+    * the reference's `NOW()` predicates. A predicate on it stays a
+    * plain filter on `ts`, so it can sit below the scoring projection
+    * (a cross join with the 1-row aggregate would pin it above). NULL
+    * on an empty table, where every window is empty. */
+  def anchorTs(events: DataFrame): Column = events.agg(max(col("ts"))).scalar()
+
+  /** The rows of `events` inside the trailing `interval` (an interval
+    * literal body such as `"1 HOUR"`) of [[anchorTs]] — the reference's
+    * `event_time > NOW() - INTERVAL …`. Filter with this BEFORE
+    * [[scored]] so only the window's payloads are parsed. */
+  def trailing(events: DataFrame, interval: String): DataFrame =
+    events.filter(col("ts") > anchorTs(events) - expr(s"INTERVAL $interval"))
 
   private def r6(c: Column): Column = round(c, 6)
-
-  /** Scored events with the `max(ts)` anchor attached — the shared
-    * input of the anchored DQ surfaces ([[graft.jobs.Jobs]]). */
-  def anchoredScored(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    withAnchor(scored(Tables.events(s, dir)))
 
   // ---------------------------------------------------------------- A1/A2
   /** Daily metrics rollup (`compute-daily-metrics.py:21-30`,
@@ -218,8 +224,7 @@ object FraudAnalytics {
     """SELECT COUNT(*) AS recent_rows, COUNT(*) >= 1 AS fresh
       |FROM events
       |WHERE ts > (SELECT MAX(ts) FROM events) - INTERVAL '15 minutes'""".stripMargin) { (s, dir) =>
-    withAnchor(Tables.events(s, dir))
-      .filter(col("ts") > col("anchor_ts") - expr("INTERVAL 15 MINUTES"))
+    trailing(Tables.events(s, dir), "15 MINUTES")
       .agg(count(lit(1)).as("recent_rows"))
       .select(col("recent_rows"), (col("recent_rows") >= 1).as("fresh"))
   }
@@ -243,8 +248,7 @@ object FraudAnalytics {
        |       COALESCE(AVG(CAST(prediction AS DOUBLE)), 0.0) BETWEEN 0.0 AND 1.0 AS within_bounds
        |FROM s WHERE ts > (SELECT MAX(ts) FROM events) - INTERVAL '1 hour'""".stripMargin) { (s, dir) =>
     val rate = coalesce(avg(col("prediction").cast("double")), lit(0.0))
-    withAnchor(scored(Tables.events(s, dir)))
-      .filter(col("ts") > col("anchor_ts") - expr("INTERVAL 1 HOUR"))
+    scored(trailing(Tables.events(s, dir), "1 HOUR"))
       .agg(rate.as("rate"))
       .select(
         r6(col("rate")).as("fraud_rate_1h"),
@@ -277,8 +281,7 @@ object FraudAnalytics {
        |       ROUND(COALESCE(AVG(value), 0.0), 6) AS avg_amount_1h,
        |       COUNT(*) AS n_1h
        |FROM s WHERE ts > (SELECT MAX(ts) FROM events) - INTERVAL '1 hour'""".stripMargin) { (s, dir) =>
-    withAnchor(scored(Tables.events(s, dir)))
-      .filter(col("ts") > col("anchor_ts") - expr("INTERVAL 1 HOUR"))
+    scored(trailing(Tables.events(s, dir), "1 HOUR"))
       .agg(
         r6(coalesce(avg(col("prediction").cast("double")), lit(0.0))).as("avg_prediction_1h"),
         r6(coalesce(avg(col("value")), lit(0.0))).as("avg_amount_1h"),

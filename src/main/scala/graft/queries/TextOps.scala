@@ -2906,7 +2906,7 @@ object TextOps {
     val idf = log((col("n_docs") + lit(1)).cast("double") / (col("df") + lit(1)))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("score_key").desc, col("tok"))
     tf.join(dfreq, "tok")
-      .crossJoin(broadcast(nDocs)) // 1-row anchor, same pattern as anchoredScored
+      .crossJoin(broadcast(nDocs)) // 1-row n_docs broadcast onto every (doc, tok)
       .withColumn("score_key", col("tf") * round(idf * lit(1e6)).cast("long"))
       .withColumn("score", r6(col("tf") * idf))
       .withColumn("rn", row_number().over(w))

@@ -10,10 +10,13 @@ package graft.streaming
   * without changing any action's lineage or output. Six threads: the
   * widest concurrent action set (2 decision faces + 4 index appends). */
 private[graft] object StreamPools {
+  private val onPool = ThreadLocal.withInitial[java.lang.Boolean](() => false)
+
   lazy val pool: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(
       java.util.concurrent.Executors.newFixedThreadPool(6, (r: Runnable) => {
-        val t = new Thread(r, "graft-batch-act"); t.setDaemon(true); t
+        val t = new Thread(() => { onPool.set(true); r.run() }, "graft-batch-act")
+        t.setDaemon(true); t
       }))
 
   /** Run the given independent actions concurrently on [[pool]] and
@@ -21,12 +24,18 @@ private[graft] object StreamPools {
     * (the batch must fail loudly, exactly as the sequential
     * composition did). Settling EVERY future before rethrowing keeps
     * the sequential contract that no action outlives its batch — a
-    * failed batch must not leave a store append racing a replay. */
+    * failed batch must not leave a store append racing a replay.
+    *
+    * Called from a pool thread (an action that itself fans out), the
+    * actions run inline in order under the same settle-then-rethrow
+    * contract: submitting them would wait on threads that may all be
+    * blocked in this same call. */
   def runAll(acts: Seq[() => Unit]): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    val settled = acts.map(a => Future(a())(pool))
-      .map(f => Await.ready(f, Duration.Inf).value.get)
+    val settled =
+      if (onPool.get) acts.map(a => scala.util.Try(a()))
+      else acts.map(a => Future(a())(pool)).map(f => Await.ready(f, Duration.Inf).value.get)
     settled.collectFirst { case scala.util.Failure(e) => e }.foreach(throw _)
   }
 }

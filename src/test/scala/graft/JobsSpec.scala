@@ -26,6 +26,20 @@ class JobsSpec extends SparkSpec {
     assert(report.forall(_.getBoolean(2)), report.mkString("; "))
   }
 
+  test("trailing-window panels and the DQ tick on an empty events table (NULL anchor)") {
+    import org.apache.spark.sql.Row
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty-events-").toString
+    spark.read.parquet(s"$sf/events.parquet").limit(0).write.parquet(s"$dir/events.parquet")
+    def rows(name: String) = SparkEntry.queries(name)(spark, dir).collect().toSeq
+    assert(rows("fraud_hourly_stats") == Seq(Row(0.0, 0.0, 0L)))
+    assert(rows("fraud_rate_bound_1h") == Seq(Row(0.0, true)))
+    assert(rows("fraud_freshness_15m") == Seq(Row(0L, false)))
+    assert(Jobs.dataQualityTick(spark, dir).collect().toSeq == Seq(
+      Row("freshness_15m", 0.0, false),
+      Row("null_ids", 0.0, true),
+      Row("rate_bound_1h", 0.0, true)))
+  }
+
   test("processing-time schedule maintains the jdbc store until stopped") {
     val url = JdbcMetricsSink.derbyUrl()
     val q = Jobs.scheduleDailyMetrics(spark, sf, url, every = "1 second")

@@ -93,6 +93,31 @@ class PlanInvariantsSpec extends SparkSpec {
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"), plan)
   }
 
+  test("trailing-window fraud panels filter on ts before any JSON parse, never a nested loop") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+    def parses(p: LogicalPlan): Boolean =
+      p.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs]))
+    def tsFilter(p: LogicalPlan): Boolean = p match {
+      case Filter(cond, _) => cond.references.exists(_.name == "ts")
+      case _               => false
+    }
+    for ((name, scores) <- Seq("fraud_hourly_stats" -> true, "fraud_rate_bound_1h" -> true,
+                               "fraud_freshness_15m" -> false, "fraud_dq_report" -> true)) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      val plan = formatted(df)
+      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+        s"$name:\n$plan")
+      // the window predicate must sit below every from_json, subquery
+      // plans included: no payload outside the window is parsed
+      val optimized = df.queryExecution.optimizedPlan
+      val parsing = optimized.collectWithSubqueries { case p if parses(p) => p }
+      assert(parsing.nonEmpty == scores, s"$name:\n$optimized")
+      parsing.foreach(p =>
+        assert(p.children.exists(_.exists(tsFilter)), s"$name parses JSON below the window:\n$p"))
+    }
+  }
+
   test("sequence packing sub-shards the per-source running sum (bounded window tasks)") {
     // the prefix sum must partition on (source, graft_sub) — a bare
     // per-source window would sort one dominant source's whole doc

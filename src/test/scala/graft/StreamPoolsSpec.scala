@@ -38,4 +38,32 @@ class StreamPoolsSpec extends SparkSpec {
     val expect = (1 to 4).map(i => { val m = 1000L * i; m * (m - 1) / 2 }).sum
     assert(sums.get == expect)
   }
+
+  // bounded: a regression that re-enters the pool deadlocks it
+  private def within60s(body: => Unit): Unit = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    Await.result(Future(body)(ExecutionContext.global), scala.concurrent.duration.Duration(60, "s"))
+  }
+
+  test("nested runAll from pool threads runs inline instead of waiting on a full pool") {
+    val hits = new java.util.concurrent.atomic.AtomicInteger(0)
+    val inner: () => Unit = () => { hits.incrementAndGet(); () }
+    // more outer actions than pool threads, each nesting its own
+    // runAll: a re-entrant submit would queue behind its own callers
+    val outer = (1 to 8).map(_ => () => graft.streaming.StreamPools.runAll(Seq.fill(3)(inner)))
+    within60s(graft.streaming.StreamPools.runAll(outer))
+    assert(hits.get == 24)
+  }
+
+  test("nested runAll settles every action before rethrowing the first failure") {
+    val done = new java.util.concurrent.atomic.AtomicInteger(0)
+    val ok: () => Unit = () => { done.incrementAndGet(); () }
+    val boom: () => Unit = () => sys.error("nested action failed")
+    val e = intercept[RuntimeException] {
+      within60s(graft.streaming.StreamPools.runAll(Seq(() =>
+        graft.streaming.StreamPools.runAll(Seq(ok, boom, ok, boom)))))
+    }
+    assert(e.getMessage.contains("nested action failed"))
+    assert(done.get == 2, s"inline actions after a failure must still run (done=${done.get})")
+  }
 }
