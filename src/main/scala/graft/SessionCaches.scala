@@ -1,20 +1,27 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 import scala.collection.concurrent.TrieMap
 
 /** Central registry for the engine's memoized session caches (the
-  * `appId#dir`-keyed TrieMaps holding persisted frames, trained
+  * `appId#dir`-keyed memos holding persisted frames, trained
   * centroids, promoted artifact stores, …).
   *
-  * Each memo registers itself at class-init; the registry adds the
-  * BOUNDED-SESSION hook the per-query memos deliberately lack: a
-  * long-lived session that walks many datasets calls
-  * [[evict]] after finishing one, releasing every persisted block
-  * and memo entry for that (application, dataset) pair instead of
-  * accumulating cached state without bound. The gate/bench harness
-  * never needs this (one dataset per JVM); a multi-tenant deployment
-  * calls it from its dataset-lifecycle hook.
+  * It OWNS THE KEY FORMAT: every memo is a [[SessionCaches.Memo]]
+  * made by [[SessionCaches.memo]], which registers it at class-init
+  * and builds its `appId#dir[#variant…]` keys — the same format
+  * [[SessionCaches.evict]] matches. Keys that are not per dataset dir
+  * are plan-canonical ([[SessionCaches.planKey]], which embeds the
+  * input file paths) or not per application at all.
+  *
+  * The registry adds the BOUNDED-SESSION hook the per-query memos
+  * deliberately lack: a long-lived session that walks many datasets
+  * calls [[SessionCaches.evict]] after finishing one, releasing every
+  * persisted block and memo entry for that (application, dataset)
+  * pair instead of accumulating cached state without bound. The
+  * gate/bench harness never needs this (one dataset per JVM); a
+  * multi-tenant deployment calls it from its dataset-lifecycle hook.
   */
 /** A memoized value whose on-disk footprint spans engine-created
   * temp directories beyond any [[graft.sources.VersionedStore]] it
@@ -41,12 +48,49 @@ object SessionCaches {
   private val registered =
     scala.collection.mutable.ArrayBuffer.empty[TrieMap[String, _]]
 
-  /** Register a memo at definition site: `SessionCaches.register(
-    * TrieMap.empty[String, DataFrame])`. Returns the map unchanged. */
-  def register[V](m: TrieMap[String, V]): TrieMap[String, V] = synchronized {
+  private def register[V](m: TrieMap[String, V]): TrieMap[String, V] = synchronized {
     registered += m
     m
   }
+
+  private def key(s: SparkSession, dir: String, variant: Seq[String]): String =
+    (s.sparkContext.applicationId +: dir +: variant).mkString("#")
+
+  /** A registered memo: `m(s, dir)(build)` is the entry for this
+    * application × dataset dir, built on first use; `m(s, dir,
+    * variant)(build)` a compound entry that evicts with `dir`. */
+  final class Memo[V] private[SessionCaches] {
+    private val map = register(TrieMap.empty[String, V])
+
+    def apply(s: SparkSession, dir: String, variant: String*)(build: => V): V =
+      map.getOrElseUpdate(key(s, dir, variant), build)
+
+    def put(s: SparkSession, dir: String, variant: String*)(v: V): Unit = {
+      map.put(key(s, dir, variant), v); ()
+    }
+
+    def contains(s: SparkSession, dir: String, variant: String*): Boolean =
+      map.contains(key(s, dir, variant))
+
+    /** The entry under a caller-built key: a [[planKey]], or a key
+      * that is not per application (it then evicts only through a
+      * dataset path it embeds, or through [[evictAll]]). */
+    def keyed(k: String)(build: => V): V = map.getOrElseUpdate(k, build)
+  }
+
+  def memo[V]: Memo[V] = new Memo[V]
+
+  /** Memo key for a frame's input: the application, the variant
+    * parts, the frame's input files, then the FULL canonicalized
+    * analyzed plan (expression ids normalized, so two reads of the
+    * same table share one key; not the 32-bit semanticHash, whose
+    * collision would serve another frame's entry). The plan text names
+    * a file scan's format, not its path, so the input files are what
+    * keep the entry evictable per dataset dir. */
+  def planKey(df: DataFrame, variant: String*): String =
+    ((df.sparkSession.sparkContext.applicationId +: variant) ++
+      Seq(df.inputFiles.sorted.mkString(","),
+        df.queryExecution.analyzed.canonicalized.toString)).mkString("#")
 
   // Release whatever resources a memo value pins: persisted frames
   // unpersist; promoted artifact stores delete their directory tree
@@ -70,7 +114,10 @@ object SessionCaches {
   // recursion path: unpersist frames, reap declared roots, but never
   // reap a store discovered through a field (shared-store safety)
   private def releaseShared(v: Any): Unit = v match {
-    case df: DataFrame => df.unpersist(); ()
+    case df: DataFrame =>
+      df.unpersist()
+      // a localCheckpoint pin lives outside the CacheManager
+      if (Bridge.isLocalCheckpoint(df)) Bridge.unpersistLocalCheckpoint(df)
     case _: graft.sources.VersionedStore => () // shared — owner reaps
     case r: Reapable =>
       r.reapRoots.foreach(reapTempRoot)
@@ -101,9 +148,9 @@ object SessionCaches {
   // PATH-BOUNDED: not glued to further filename characters on either
   // side ("/x/corpus" must not match inside "/x/corpus-v2" or
   // "/data/x/corpus"), while genuine embeddings — "dir#variant" memo
-  // keys and scan paths in canonicalized plan text ("dir/t.parquet",
-  // "file:dir]") — stay matched because '#', '/', ':' and bracket
-  // delimiters are not filename characters
+  // keys and the input files of a planKey ("file:dir/t.parquet") —
+  // stay matched because '#', '/', ':' and bracket delimiters are
+  // not filename characters
   private def boundedRe(dir: String) =
     ("(?<![A-Za-z0-9._\\-])" + java.util.regex.Pattern.quote(dir) +
       "(?![A-Za-z0-9._\\-])").r
@@ -113,14 +160,14 @@ object SessionCaches {
     * datasets' entries stay warm. Matches the exact `appId#dir` key,
     * compound `appId#dir#<variant>` keys, and — best-effort —
     * path-bounded occurrences of the dataset dir anywhere in the key
-    * (plan-canonicalized memo keys carry the scan path inside the
-    * plan text; sibling dirs sharing a prefix never cross-evict). */
+    * (a [[planKey]] carries its input file paths; sibling dirs
+    * sharing a prefix never cross-evict). */
   def evict(spark: SparkSession, dir: String): Int = synchronized {
-    val key = spark.sparkContext.applicationId + "#" + dir
+    val exact = key(spark, dir, Nil)
     val re = boundedRe(dir)
     registered.map { m =>
       val hits = m.keys.filter(k =>
-        k == key || k.startsWith(key + "#") || re.findFirstIn(k).isDefined).toSeq
+        k == exact || k.startsWith(exact + "#") || re.findFirstIn(k).isDefined).toSeq
       hits.flatMap(m.remove).map { v => release(v); 1 }.sum
     }.sum
   }

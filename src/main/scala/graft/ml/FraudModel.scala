@@ -139,8 +139,8 @@ object FraudModel {
     * its `metadata` dir's mtime and file key. Plain doubles, no frame
     * or session, so one entry serves every session; a version rewritten
     * at the same path stats differently and is loaded afresh. */
-  private val closedForms = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, (Seq[Double], Seq[Double], Seq[Double], Double)])
+  private val closedForms =
+    graft.SessionCaches.memo[(Seq[Double], Seq[Double], Seq[Double], Double)]
 
   /** M9+M8: score a batch with the current Production model, falling
     * back to the heuristic when the registry is empty.
@@ -167,7 +167,7 @@ object FraudModel {
           classOf[java.nio.file.attribute.BasicFileAttributes])
         val key = s"$dir#${meta.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS)}#${meta.fileKey}"
         val (means, stds, coef, b) =
-          closedForms.getOrElseUpdate(key, closedForm(PipelineModel.load(dir)))
+          closedForms.keyed(key)(closedForm(PipelineModel.load(dir)))
         batch
           .withColumn("proba", Scoring.logisticProba(Scoring.FeatureOrder.map(col), means, stds, coef, b))
           .withColumn("prediction", Scoring.classify(col("proba")))

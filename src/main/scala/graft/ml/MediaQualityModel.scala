@@ -60,11 +60,10 @@ object MediaQualityModel {
     * feature store the batch gate and the streaming gate both join
     * (the `Tables.embeddings` stream-static pattern: decode happens
     * at ingest, gating reads the store). */
-  private val statsMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame])
+  private val statsMemo = graft.SessionCaches.memo[DataFrame]
 
   def mediaStats(s: SparkSession, dir: String): DataFrame =
-    statsMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    statsMemo(s, dir) {
       // The peak/RMS columns scan every audio sample (the one decode
       // path column pruning can't cheapen), and the corpus arrives as
       // one small parquet split — without a repartition the whole
@@ -82,7 +81,7 @@ object MediaQualityModel {
       val df = img.join(au, Seq("doc_id")).join(vid, Seq("doc_id")).persist()
       df.count()
       df
-    })
+    }
 
   /** Deterministic labeled media: replayable latent over the decode
     * stats + md5 noise label + md5 split bucket — [[QualityModel
@@ -188,29 +187,26 @@ object MediaQualityModel {
 
   /** The LR fit on the md5-bucketed training split, memoized per
     * (application, sf dir). */
-  private val lrMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap
-      .empty[String, org.apache.spark.ml.PipelineModel])
+  private val lrMemo = graft.SessionCaches.memo[org.apache.spark.ml.PipelineModel]
 
   private def fittedPipeline(s: SparkSession, dir: String): org.apache.spark.ml.PipelineModel =
-    lrMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    lrMemo(s, dir) {
       val tr = labeledMedia(s, dir).filter(col("bucket") < 75)
       new Pipeline().setStages(Array(
         new VectorAssembler().setInputCols(FeatureNames.toArray)
           .setOutputCol("features"),
         new LogisticRegression().setMaxIter(100).setLabelCol("label")))
         .fit(tr.coalesce(1))
-    })
+    }
 
   /** Closed-form export: one `(idx, coef)` row per feature
     * (idx = position in [[FeatureNames]]) plus the intercept at
     * idx −1 — the model as a 9-row frame, inference a broadcast
     * join + sigmoid with no MLlib at serving time. */
-  private val fitMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame])
+  private val fitMemo = graft.SessionCaches.memo[DataFrame]
 
   def closedForm(s: SparkSession, dir: String): DataFrame =
-    fitMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    fitMemo(s, dir) {
       val lr = fittedPipeline(s, dir).stages.collectFirst {
         case m: org.apache.spark.ml.classification.LogisticRegressionModel => m
       }.get
@@ -220,7 +216,7 @@ object MediaQualityModel {
       val df = rows.toDF("idx", "coef").persist()
       df.count()
       df
-    })
+    }
 
   /** Closed-form scoring over a feature frame carrying doc_id + the
     * [[FeatureNames]] columns: margin = Σ coef·feature + intercept in

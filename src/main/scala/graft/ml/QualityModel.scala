@@ -91,19 +91,17 @@ object QualityModel {
     * (application, sf dir): the certificate and the closed-form
     * export both consume it, so a session pays the 100-iteration
     * LBFGS fit once, with one Pipeline definition. */
-  private val lrMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap
-      .empty[String, org.apache.spark.ml.PipelineModel])
+  private val lrMemo = graft.SessionCaches.memo[org.apache.spark.ml.PipelineModel]
 
   private def fittedPipeline(s: SparkSession, dir: String): org.apache.spark.ml.PipelineModel =
-    lrMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    lrMemo(s, dir) {
       val tr = labeledDocs(s, dir).filter(col("bucket") < 75)
       new Pipeline().setStages(Array(
         new HashingTF().setInputCol("w").setOutputCol("features")
           .setNumFeatures(NumFeatures),
         new LogisticRegression().setMaxIter(100).setLabelCol("label")))
         .fit(tr.coalesce(1))
-    })
+    }
 
   val qualityModelCert: Q = Q("text_quality_model",
     labeledSql + """,
@@ -143,11 +141,10 @@ object QualityModel {
     * MLlib at serving time (the [[FraudModel]] literal-arithmetic
     * export, here as a versioned ARTIFACT because the hashed space is
     * too wide to inline as literals). */
-  private val fitMemo =
-    graft.SessionCaches.register(scala.collection.concurrent.TrieMap.empty[String, DataFrame])
+  private val fitMemo = graft.SessionCaches.memo[DataFrame]
 
   def closedForm(s: SparkSession, dir: String): DataFrame =
-    fitMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    fitMemo(s, dir) {
       val lr = fittedPipeline(s, dir).stages.collectFirst {
         case m: org.apache.spark.ml.classification.LogisticRegressionModel => m
       }.get
@@ -157,18 +154,17 @@ object QualityModel {
       val df = rows.toDF("idx", "coef").persist()
       df.count()
       df
-    })
+    }
 
   /** One promoted `quality_lr` model store per (application, sf dir)
     * — the registry artifact the streaming gate re-resolves per
     * batch (the `stream_ann_query` PRODUCTION discipline). */
-  private val storeMemo =
-    graft.SessionCaches.register(scala.collection.concurrent.TrieMap.empty[String, graft.sources.FrameStore])
+  private val storeMemo = graft.SessionCaches.memo[graft.sources.FrameStore]
 
   val ModelName = "quality_lr"
 
   def productionStore(s: SparkSession, dir: String): graft.sources.FrameStore =
-    storeMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    storeMemo(s, dir) {
       val store = new graft.sources.FrameStore(
         java.nio.file.Files.createTempDirectory("graft-quality-lr-").toString)
       store.promote(ModelName, store.register(s, ModelName, closedForm(s, dir)))
@@ -180,7 +176,7 @@ object QualityModel {
         store.register(s, MediaQualityModel.ModelName,
           MediaQualityModel.closedForm(s, dir)))
       store
-    })
+    }
 
   /** Closed-form scoring: proba per doc over a token-array column
     * `toks` — term index = the trainer's OWN `HashingTF.indexOf`

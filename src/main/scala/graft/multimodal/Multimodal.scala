@@ -594,8 +594,7 @@ object Multimodal {
     def reapRoots: Seq[String] = Seq(store.root)
   }
 
-  private val mediaSeriesMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, MediaSeriesWorld])
+  private val mediaSeriesMemo = graft.SessionCaches.memo[MediaSeriesWorld]
 
   /** LONGITUDINAL DRIFT ACROSS THE MEDIA RELEASE SERIES —
     * `text_drift_series` mirrored onto the decoded-loudness face: a
@@ -662,7 +661,7 @@ object Multimodal {
       |             / ((CAST(cb AS DOUBLE) + 1) / (n_base + nb)))), 6) >= 0.2 AS drifted
       |FROM grid GROUP BY 1, 2, 3, n_new, n_base
       |ORDER BY v_new, v_base, feature""".stripMargin) { (s, dir) =>
-    mediaSeriesMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    mediaSeriesMemo(s, dir) {
       val docs = Tables.documents(s, dir)
       val r = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
       val (mn, mx) = (r.getLong(0), r.getLong(1))
@@ -685,7 +684,7 @@ object Multimodal {
       MediaSeriesWorld(store,
         graft.queries.Curation.psiSeries(counts, nsFeature = "rms")
           .localCheckpoint(true))
-    }).report.orderBy(col("v_new"), col("v_base"), col("feature"))
+    }.report.orderBy(col("v_new"), col("v_base"), col("feature"))
   }
 
   /** Per-doc `(slice, feature, bucket)` loudness rows of a documents
@@ -718,15 +717,14 @@ object Multimodal {
     * per-clip loudness — without the memo each pays its own corpus
     * decode (the "new worlds ride existing passes" rule). Three
     * columns per clip, the persist footprint class of tokenCounts. */
-  private val loudnessMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame])
+  private val loudnessMemo = graft.SessionCaches.memo[org.apache.spark.sql.DataFrame]
 
   private[graft] def mediaLoudnessStatsCached(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    loudnessMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    loudnessMemo(s, dir) {
       val df = mediaLoudnessStats(Tables.documents(s, dir)).persist()
       df.count()
       df
-    })
+    }
 
   /** Per-clip `(…carry…, feature, bucket)` loudness rows — THE one
     * spelling of the media drift bucketer (16-wide bands capped at
@@ -944,28 +942,26 @@ object Multimodal {
     * query, the cluster build, and any downstream keeper filter all
     * consume the same pair list, so the fingerprint pass and the
     * band join run once per session (the nearDupPairs05 discipline). */
-  private val pairMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame])
+  private val pairMemo = graft.SessionCaches.memo[org.apache.spark.sql.DataFrame]
 
   private def memoPairs(s: SparkSession, dir: String, kind: String,
                         bands: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    pairMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir + "#" + kind, {
+    pairMemo(s, dir, kind) {
       val df = hammingPairs(bandCandidates(bands)).persist()
       df.count()
       df
-    })
+    }
 
   /** Corpus fingerprint frames, memoized per (application, sf dir,
     * modality): the hash pass (decode + staged HOF evaluation) is
     * each modality's most expensive column op — the pair build and
     * the data card share ONE pass. The hash functions already
     * localCheckpoint, so the memo hands out the materialized rows. */
-  private val hashMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame])
+  private val hashMemo = graft.SessionCaches.memo[org.apache.spark.sql.DataFrame]
 
   private def memoHashes(s: SparkSession, dir: String, kind: String,
                          mk: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    hashMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir + "#" + kind, mk)
+    hashMemo(s, dir, kind)(mk)
 
   def imageHashesOf(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     memoHashes(s, dir, "image", imageHashes(Tables.documents(s, dir)))
@@ -1265,11 +1261,10 @@ object Multimodal {
     def reapRoots: Seq[String] = Seq(store.root)
   }
 
-  private val jointForgetMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, JointForgetWorld])
+  private val jointForgetMemo = graft.SessionCaches.memo[JointForgetWorld]
 
   private def jointForgetWorld(s: SparkSession, dir: String): JointForgetWorld =
-    jointForgetMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    jointForgetMemo(s, dir) {
       val pairs = jointPairsUnion(s, dir)
       val store = new graft.sources.FrameStore(
         java.nio.file.Files.createTempDirectory("graft-forget-joint-").toString)
@@ -1296,7 +1291,7 @@ object Multimodal {
       store.rewrite(s, "joint_clusters")(_ => after)
       store.gc("joint_clusters", keep = 0)
       JointForgetWorld(store, after)
-    })
+    }
 
   /** Bench warm hook: build the joint forget world once, attributed. */
   private[graft] def warmJointForget(s: SparkSession, dir: String): Unit = {
@@ -1927,11 +1922,10 @@ object Multimodal {
     * pack manifest and the trimodal emission (which prefix-sum
     * DIFFERENT costs over the same record stream: patch-only vs
     * patch + transcript ids). */
-  private val trimodalGatedMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame])
+  private val trimodalGatedMemo = graft.SessionCaches.memo[org.apache.spark.sql.DataFrame]
 
   private[graft] def trimodalGated(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    trimodalGatedMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir,
+    trimodalGatedMemo(s, dir)(
       // localCheckpoint (lineage CUT), not persist: the three
       // alignment programs are a deep tree, and each consumer ACTION
       // re-runs Catalyst over it (persist caches execution only) —
@@ -2247,10 +2241,9 @@ object Multimodal {
     * groupBy on the (shard, seq_id) window key; both schedules ride
     * the two-level rank (no single-task sort); every certificate leg
     * is a ≤ 5-row aggregate crossJoin. */
-  private val triCompositeMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String,
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame)])
+  private val triCompositeMemo = graft.SessionCaches.memo[
+    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+      org.apache.spark.sql.DataFrame)]
 
   val trimodalCurriculumComposite: Q = Q("mm_trimodal_curriculum_composite",
     "WITH w AS (SELECT * FROM (" + trimodalEmitIds.oracle.get + ") t),\n" +
@@ -2264,8 +2257,7 @@ object Multimodal {
     // hundred rows but their LINEAGE carries the model-scoring join —
     // localCheckpoint once per (application, dir) so the certificate's
     // six aggregate legs (× bench reps) don't re-pay the scoring DAG
-    val (w, ranked, rankedPatch) = triCompositeMemo.getOrElseUpdate(
-      s.sparkContext.applicationId + "#" + dir, {
+    val (w, ranked, rankedPatch) = triCompositeMemo(s, dir) {
         val store = graft.ml.QualityModel.productionStore(s, dir)
         val model = store.loadProduction(s, graft.ml.MediaQualityModel.ModelName)
           .getOrElse(sys.error("no production media quality model"))
@@ -2297,7 +2289,7 @@ object Multimodal {
           graft.queries.Curation.quartileMembershipAsc(wf,
             scaled = (col("patch_share") + 1) * 8,
             tieKey = trimodalTieKey).localCheckpoint(true))
-      })
+      }
     def key(salt: String) = md5(concat(lit(salt), col("data_shard").cast("string"),
       lit(":"), col("seq_id").cast("string")))
     val main = ranked.withColumn("phase", col("quartile"))
@@ -2416,11 +2408,10 @@ object Multimodal {
     * transcript-length join, which [[graft.queries.TextOps.sourcePrefixSum]]'s
     * three branches would otherwise re-pay per bench rep (the
     * [[mmEmitPositioned]] rationale). */
-  private val trimodalPosMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame])
+  private val trimodalPosMemo = graft.SessionCaches.memo[org.apache.spark.sql.DataFrame]
 
   private[graft] def trimodalPositioned(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    trimodalPosMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir,
+    trimodalPosMemo(s, dir)(
       // localCheckpoint, not persist — same lineage-cut rationale as
       // trimodalGated (the positioned frame feeds the pack/emit/freq
       // family, each action re-analyzing the whole tree otherwise)
@@ -2468,16 +2459,15 @@ object Multimodal {
     * batch sides all consume it — without the cut each rep re-pays
     * the patch explode + transcript-id cut (measured 8.6 s on the
     * shuffle at sf0.1; the rank program itself is ~0.5 s). */
-  private val trimodalWinMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame])
+  private val trimodalWinMemo = graft.SessionCaches.memo[org.apache.spark.sql.DataFrame]
 
   private[graft] def trimodalEmitWindows(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    trimodalWinMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    trimodalWinMemo(s, dir) {
       val pos = graft.WarmPhases.phase("position") { trimodalPositioned(s, dir) }
       graft.WarmPhases.phase("windows") {
         trimodalEmitWindowsOf(s, dir, pos).localCheckpoint(true)
       }
-    })
+    }
 
   /** The trimodal window cut over any positioned record frame —
     * shared by the batch query and the streaming twin's drain. */
@@ -2676,11 +2666,10 @@ object Multimodal {
     def reapRoots: Seq[String] = Seq(store.root)
   }
 
-  private val trimodalForgetMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, TrimodalForgetWorld])
+  private val trimodalForgetMemo = graft.SessionCaches.memo[TrimodalForgetWorld]
 
   private def forgottenTrimodalWorld(s: SparkSession, dir: String): TrimodalForgetWorld =
-    trimodalForgetMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    trimodalForgetMemo(s, dir) {
       val gated = trimodalGated(s, dir)
       val store = new graft.sources.FrameStore(
         java.nio.file.Files.createTempDirectory("graft-forget-trimodal-").toString)
@@ -2701,7 +2690,7 @@ object Multimodal {
       }
       store.gc("trimodal_windows", keep = 0)
       TrimodalForgetWorld(store, before = before, rebuilt = rebuilt)
-    })
+    }
 
   /** Bench warm hook: build the forget world once, attributed. */
   private[graft] def warmTrimodalForget(s: SparkSession, dir: String): Unit = {
@@ -3188,13 +3177,11 @@ object Multimodal {
     * gate flip can never surface an OOV or shift the id space.
     * Bounded by |alphabet| + merge rounds like every symbol table in
     * the family. */
-  private val mmSymCache = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap
-      .empty[String, (org.apache.spark.sql.DataFrame, Long)])
+  private val mmSymCache = graft.SessionCaches.memo[(org.apache.spark.sql.DataFrame, Long)]
 
   private[graft] def mmCaptionSymsStats(s: SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame, Long) =
-    mmSymCache.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    mmSymCache(s, dir) {
       val words = Tables.documents(s, dir)
         .select(explode(split(col("text"), " ")).as("word")).distinct()
       val seg = words.select(col("word"),
@@ -3210,7 +3197,7 @@ object Multimodal {
         .select(col("word"), col("j").cast("long").as("j"), col("id"), col("sym"))
         .localCheckpoint(true)
       (df, df.count())
-    })
+    }
 
   /** The per-word symbol-COUNT lens `(word, nsym)` over the release
     * vocabulary, plus its exact row count, memoized + persisted:
@@ -3218,18 +3205,16 @@ object Multimodal {
     * MICRO-BATCH in both gated mm streams — so the groupBy is paid
     * once per session and the join side's size is KNOWN for the
     * broadcast gate below. */
-  private val mmVocabLensCache = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap
-      .empty[String, (org.apache.spark.sql.DataFrame, Long)])
+  private val mmVocabLensCache = graft.SessionCaches.memo[(org.apache.spark.sql.DataFrame, Long)]
 
   private[graft] def mmVocabLensStats(s: SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame, Long) =
-    mmVocabLensCache.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    mmVocabLensCache(s, dir) {
       val (syms, _) = mmCaptionSymsStats(s, dir)
       val df = syms.groupBy(col("word")).agg(count(lit(1)).as("nsym"))
         .localCheckpoint(true)
       (df, df.count())
-    })
+    }
 
   /** Per-doc caption/transcript token-ID count against a vocabulary
     * lens frame, broadcast-GATED ([[graft.queries.TextOps.maybeBroadcast]]):
@@ -3260,13 +3245,12 @@ object Multimodal {
     * partition key — the prefix-sum upstream here carries a
     * vocab-keyed join, so the frame persists rather than re-paying it
     * per prefix-sum branch). */
-  private val mmPosCache = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame])
+  private val mmPosCache = graft.SessionCaches.memo[org.apache.spark.sql.DataFrame]
 
   private[graft] def mmEmitPositioned(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    mmPosCache.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    mmPosCache(s, dir) {
       mmPositionOf(s, dir, mmEmitDocs(s, dir)).localCheckpoint(true)
-    })
+    }
 
   /** Position any `(doc_id, shard, media_tokens, text)` aligned-docs
     * frame on the interleaved stream — shared by the batch query
@@ -3342,8 +3326,7 @@ object Multimodal {
     * table itself. */
   private[graft] def mmCaptionWordEncStats(s: SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame, Long, Long) =
-    graft.queries.TextOps.wordEncOf(
-      s.sparkContext.applicationId + "#mmcap#" + dir, mmCaptionSymsStats(s, dir))
+    graft.queries.TextOps.wordEncOf(s, dir, "mmcap", mmCaptionSymsStats(s, dir))
 
   /** Caption token-ID contributions as WORD-RUN SLICES instead of one
     * row per BPE symbol — [[patchRunSlices]]' device applied to the
@@ -3612,8 +3595,7 @@ object Multimodal {
     def reapRoots: Seq[String] = Seq(store.root)
   }
 
-  private val mmForgetMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, MmForgetWorld])
+  private val mmForgetMemo = graft.SessionCaches.memo[MmForgetWorld]
 
   /** The interleaved-emission takedown: every 20th doc ≡ 8 — a
     * residue whose docs are NON-plants (always alignment-kept), so
@@ -3624,7 +3606,7 @@ object Multimodal {
     id % 20 === 8
 
   private def forgottenMmWorld(s: SparkSession, dir: String): MmForgetWorld =
-    mmForgetMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    mmForgetMemo(s, dir) {
       val store = new graft.sources.FrameStore(
         java.nio.file.Files.createTempDirectory("graft-forget-mm-emit-").toString)
       // the full and reduced emissions are deterministic functions of
@@ -3654,7 +3636,7 @@ object Multimodal {
       }
       store.gc("mm_windows", keep = 0)
       MmForgetWorld(store, before = before, rebuilt = rebuilt)
-    })
+    }
 
   /** Bench warm hook: build the forget world once, attributed. */
   private[graft] def warmMmEmitForget(s: SparkSession, dir: String): Unit = {

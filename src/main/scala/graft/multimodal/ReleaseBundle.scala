@@ -55,21 +55,19 @@ object ReleaseBundle {
     def reapRoots: Seq[String] = Seq(store.root)
   }
 
-  private val memo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, BundleWorld])
+  private val memo = graft.SessionCaches.memo[BundleWorld]
 
   private[graft] def bundleWorld(s: SparkSession, dir: String): BundleWorld =
-    memo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    memo(s, dir) {
       buildBundleWorld(s, dir,
         winBefore = Multimodal.trimodalEmitWindows(s, dir),
         recordsBefore = Multimodal.trimodalGated(s, dir),
         winAfter = Multimodal.trimodalForgetRebuilt(s, dir),
         recordsAfter = Multimodal.trimodalGated(s, dir)
           .filter(!forgotten(col("doc_id"))))
-    })
+    }
 
-  private val streamMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, BundleWorld])
+  private val streamMemo = graft.SessionCaches.memo[BundleWorld]
 
   /** The bundle published FROM THE LIVE PIPELINE: windows/shuffle/
     * card ride the continuously-landed trimodal pass, the post-forget
@@ -77,14 +75,14 @@ object ReleaseBundle {
     * the same promote → forget → gc lifecycle, sourced from what a
     * continuously-publishing deployment actually has on disk. */
   private[graft] def streamBundleWorld(s: SparkSession, dir: String): BundleWorld =
-    streamMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    streamMemo(s, dir) {
       val forgetWorld = graft.streaming.StreamingMmEmit.trimodalStreamForgetWorld(s, dir)
       buildBundleWorld(s, dir,
         winBefore = graft.streaming.StreamingMmEmit.streamedTrimodalWindows(s, dir),
         recordsBefore = graft.streaming.StreamingMmEmit.streamedTrimodalEntries(s, dir),
         winAfter = forgetWorld.finalWindows,
         recordsAfter = forgetWorld.entries)
-    })
+    }
 
   private def buildBundleWorld(s: SparkSession, dir: String,
       winBefore: DataFrame, recordsBefore: DataFrame,

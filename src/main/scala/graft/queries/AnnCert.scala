@@ -44,8 +44,7 @@ object AnnCert {
     * result is ≤ NumQueries·K rows). Keyed on the full canonicalized
     * plan string, same collision-safe scheme as the IVF centroid
     * memo. */
-  private val exactMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+  private val exactMemo = graft.SessionCaches.memo[DataFrame]
 
   /** Warm the memoized exact-kNN side from Bench, so its one-time
     * cost lands on a named warm entry instead of whichever
@@ -55,13 +54,11 @@ object AnnCert {
   }
 
   private def exactKnn(emb: DataFrame): DataFrame =
-    exactMemo.getOrElseUpdate(
-      (emb.sparkSession.sparkContext.applicationId,
-        emb.queryExecution.analyzed.canonicalized.toString), {
-        val df = exactKnnCompute(emb).persist()
-        df.count()
-        df
-      })
+    exactMemo.keyed(graft.SessionCaches.planKey(emb)) {
+      val df = exactKnnCompute(emb).persist()
+      df.count()
+      df
+    }
 
   private def exactKnnCompute(emb: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)

@@ -203,16 +203,16 @@ object AnnIndexStore {
   /** One persisted index per (application, sf dir), built and
     * promoted on first use — bench reps and the roundtrip query reuse
     * the artifact instead of re-encoding the corpus. */
-  private val memo = graft.SessionCaches.register(scala.collection.concurrent.TrieMap.empty[String, AnnIndexStore])
+  private val memo = graft.SessionCaches.memo[AnnIndexStore]
 
   private[graft] def forDir(spark: SparkSession, dir: String): AnnIndexStore =
-    memo.getOrElseUpdate(spark.sparkContext.applicationId + "#" + dir, {
+    memo(spark, dir) {
       val root = Files.createTempDirectory("graft_ann_index_").toString
       val store = new AnnIndexStore(root)
       val v = store.register(spark, PqAnn.cachedIndex(spark, dir), IndexName)
       store.promote(IndexName, v)
       store
-    })
+    }
 
   /** Certificate: the reloaded index must answer EXACTLY like the
     * in-session build, and the persisted codes must cover the corpus
@@ -259,13 +259,13 @@ object AnnIndexStore {
     * 4`), built once per (application, sf dir) — the batch append
     * certificate and its streaming twin both seed their stores from
     * this one training pass. */
-  private val baseIdxMemo = graft.SessionCaches.register(scala.collection.concurrent.TrieMap.empty[String, PqAnn.PqIndex])
+  private val baseIdxMemo = graft.SessionCaches.memo[PqAnn.PqIndex]
 
   private[graft] def baseIndex(spark: SparkSession, dir: String): PqAnn.PqIndex =
-    baseIdxMemo.getOrElseUpdate(spark.sparkContext.applicationId + "#" + dir, {
+    baseIdxMemo(spark, dir) {
       PqAnn.buildIndex(
         Tables.embeddings(spark, dir).filter(col("vec_id") % 5 =!= 4))
-    })
+    }
 
   /** Fresh store seeded with the promoted base index. */
   private[graft] def seededBaseStore(spark: SparkSession, dir: String,
@@ -280,15 +280,15 @@ object AnnIndexStore {
     * (application, sf dir): promote the base, then insert the
     * held-out 20% via [[AnnIndexStore.appendBatch]] — the
     * daily-arrivals lifecycle. */
-  private val appendMemo = graft.SessionCaches.register(scala.collection.concurrent.TrieMap.empty[String, AnnIndexStore])
+  private val appendMemo = graft.SessionCaches.memo[AnnIndexStore]
 
   private def appendedStore(spark: SparkSession, dir: String): AnnIndexStore =
-    appendMemo.getOrElseUpdate(spark.sparkContext.applicationId + "#" + dir, {
+    appendMemo(spark, dir) {
       val emb = Tables.embeddings(spark, dir)
       val store = seededBaseStore(spark, dir, "graft_ann_append_")
       store.appendBatch(spark, BaseIndexName, emb.filter(col("vec_id") % 5 === 4))
       store
-    })
+    }
 
   /** The append-soundness + recall certificate frame over a
     * production index that should equal a one-shot encode of the
@@ -337,17 +337,17 @@ object AnnIndexStore {
   /** One forgotten-from store per (application, sf dir): the shared
     * session index, re-registered into its OWN store (the roundtrip
     * artifact must stay intact), then `vec_id % 17 = 3` deleted. */
-  private val forgetMemo = graft.SessionCaches.register(scala.collection.concurrent.TrieMap.empty[String, AnnIndexStore])
+  private val forgetMemo = graft.SessionCaches.memo[AnnIndexStore]
 
   private def forgottenStore(spark: SparkSession, dir: String): AnnIndexStore =
-    forgetMemo.getOrElseUpdate(spark.sparkContext.applicationId + "#" + dir, {
+    forgetMemo(spark, dir) {
       val store = new AnnIndexStore(
         Files.createTempDirectory("graft_ann_forget_").toString)
       store.promote(IndexName,
         store.register(spark, PqAnn.cachedIndex(spark, dir), IndexName))
       store.deleteWhere(spark, IndexName, col("vec_id") % 17 === 3)
       store
-    })
+    }
 
   /** Right-to-be-forgotten certificate on the ANN artifact: after
     * deleting the (deterministic) `vec_id % 17 = 3` cohort from the

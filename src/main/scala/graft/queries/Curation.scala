@@ -101,15 +101,14 @@ object Curation {
     * count is the broadcast-gate evidence for [[lmScore]]'s vocab
     * join, and memoizing means repeated runs (Bench reps) neither
     * recompute the aggregate nor leak persisted frames. */
-  private val vocabCache =
-    graft.SessionCaches.register(scala.collection.concurrent.TrieMap.empty[String, (DataFrame, Long)])
+  private val vocabCache = graft.SessionCaches.memo[(DataFrame, Long)]
 
   private[graft] def vocabStats(s: SparkSession, dir: String): (DataFrame, Long) =
-    vocabCache.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    vocabCache(s, dir) {
       val df = TextOps.tokenCounts(s, dir)
         .groupBy(col("tok")).agg(sum(col("tf")).as("c")).persist()
       (df, df.count())
-    })
+    }
 
   // ---------------------------------------------------------------- lm score
   /** Unigram-LM quality score: mean log-probability of each doc's
@@ -151,11 +150,10 @@ object Curation {
     * item). One row per doc, so the persist is corpus-proportional
     * but per-doc-small — the same footprint class as
     * [[TextOps.tokenCounts]], spilling to disk at 100 TB. */
-  private val lmMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame])
+  private val lmMemo = graft.SessionCaches.memo[DataFrame]
 
   private[graft] def lmScores(s: SparkSession, dir: String): DataFrame =
-    lmMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir,
+    lmMemo(s, dir)(
       // localCheckpoint (lineage CUT), not persist: the vocab-join +
       // groupBy tree re-ANALYZES on every consumer action otherwise,
       // and downstream plans (curriculum rank, pack joins) embed this
@@ -390,12 +388,10 @@ object Curation {
     def reapRoots: Seq[String] = Seq(store.root)
   }
 
-  private val packForgetMemo =
-    graft.SessionCaches.register(
-      scala.collection.concurrent.TrieMap.empty[String, PackForgetWorld])
+  private val packForgetMemo = graft.SessionCaches.memo[PackForgetWorld]
 
   private def forgottenPackWorld(s: SparkSession, dir: String): PackForgetWorld =
-    packForgetMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    packForgetMemo(s, dir) {
       val store = new graft.sources.FrameStore(
         java.nio.file.Files.createTempDirectory("graft-forget-pack-").toString)
       // full and reduced manifests materialized ONCE each (lineage
@@ -424,7 +420,7 @@ object Curation {
       }
       store.gc("mix_pack", keep = 0)
       PackForgetWorld(store, before = before, rebuilt = rebuilt)
-    })
+    }
 
   /** Bench warm hook: build the forget world once, attributed. */
   private[graft] def warmPackForget(s: SparkSession, dir: String): Unit = {
@@ -526,11 +522,10 @@ object Curation {
     * (application, sf dir) like the other session caches (the
     * lmScore join + rank machinery is paid once; Bench attributes
     * the one-time build as `cache_warm_curriculum`). */
-  private val curriculumMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame])
+  private val curriculumMemo = graft.SessionCaches.memo[DataFrame]
 
   private[graft] def curriculumSchedule(s: SparkSession, dir: String): DataFrame =
-    curriculumMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    curriculumMemo(s, dir) {
       // localCheckpoint (lineage CUT), not persist: the memoized frame
       // carries the whole two-level-rank + tie-cut + shuffleRank tree,
       // and every consumer ACTION re-runs Catalyst over it (persist
@@ -544,7 +539,7 @@ object Curation {
       val df = df0.localCheckpoint(true)
       ranked.unpersist()
       df
-    })
+    }
 
   /** Pre-checkpoint schedule plan + the build-internal persisted rank
     * frame (returned so the memo build can unpersist it after the
@@ -642,11 +637,10 @@ object Curation {
     compositeSchedule(s, dir).orderBy(col("ord"))
   }
 
-  private val compositeMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame])
+  private val compositeMemo = graft.SessionCaches.memo[DataFrame]
 
   private[graft] def compositeSchedule(s: SparkSession, dir: String): DataFrame =
-    compositeMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    compositeMemo(s, dir) {
       // localCheckpoint, not persist — same lineage-cut rationale as
       // curriculumSchedule above (plan invariants pinned on the
       // pre-checkpoint compute)
@@ -654,7 +648,7 @@ object Curation {
       val df = df0.localCheckpoint(true)
       sc.unpersist(); ranked.unpersist()
       df
-    })
+    }
 
   /** Pre-checkpoint composite plan + the two build-internal persisted
     * frames (returned so the memo build can unpersist them after the
@@ -1187,8 +1181,7 @@ object Curation {
     def reapRoots: Seq[String] = Seq(store.root)
   }
 
-  private val baselineMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, BaselineWorld])
+  private val baselineMemo = graft.SessionCaches.memo[BaselineWorld]
 
   /** CROSS-RELEASE DRIFT MONITOR — the operational form of
     * [[corpusDrift]]: the reference is not slice 0 of the same scan
@@ -1202,7 +1195,7 @@ object Curation {
       |  bpsi.psi >= 0.2 AS drifted, CAST(1 AS BIGINT) AS baseline_version
       |FROM bpsi JOIN bns ON bns.slice = bpsi.slice
       |ORDER BY bpsi.slice, bpsi.feature""".stripMargin) { (s, dir) =>
-    baselineMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    baselineMemo(s, dir) {
       val docs = Tables.documents(s, dir)
       val mid = releaseMid(s, dir)
       val store = new graft.sources.FrameStore(
@@ -1221,7 +1214,7 @@ object Curation {
         .getOrElse(sys.error("no promoted drift baseline"))
       BaselineWorld(store,
         psiVsBaseline(newCounts, base, bv).localCheckpoint(true))
-    }).report.orderBy(col("slice"), col("feature"))
+    }.report.orderBy(col("slice"), col("feature"))
   }
 
   /** One release-series drift world per (application, sf dir): three
@@ -1235,8 +1228,7 @@ object Curation {
     def reapRoots: Seq[String] = Seq(store.root)
   }
 
-  private val seriesDriftMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, SeriesDriftWorld])
+  private val seriesDriftMemo = graft.SessionCaches.memo[SeriesDriftWorld]
 
   /** LONGITUDINAL DRIFT ACROSS THE RELEASE SERIES — [[driftBaseline]]
     * judged against one predecessor becomes the full |versions|²
@@ -1295,7 +1287,7 @@ object Curation {
       |             / ((CAST(cb AS DOUBLE) + 1) / (n_base + nb)))), 6) >= 0.2 AS drifted
       |FROM grid GROUP BY 1, 2, 3, n_new, n_base
       |ORDER BY v_new, v_base, feature""".stripMargin) { (s, dir) =>
-    seriesDriftMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    seriesDriftMemo(s, dir) {
       val docs = Tables.documents(s, dir)
       val r = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
       val (mn, mx) = (r.getLong(0), r.getLong(1))
@@ -1316,7 +1308,7 @@ object Curation {
           .withColumn("version", lit(v.toLong))
       }.reduce(_ unionByName _)
       SeriesDriftWorld(store, psiSeries(counts).localCheckpoint(true))
-    }).report.orderBy(col("v_new"), col("v_base"), col("feature"))
+    }.report.orderBy(col("v_new"), col("v_base"), col("feature"))
   }
 
   /** The pairwise-PSI triangle over a (version, feature, bucket, c)

@@ -119,27 +119,19 @@ object IvfAnn {
     * Running Lloyd distributed would cost a job + a fresh codegen of
     * the scoring expression per iteration to average a few thousand
     * rows — the sample is the thing that's small by design here. */
-  private val centCache =
-    graft.SessionCaches.register(scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]])
+  private val centCache = graft.SessionCaches.memo[Array[Array[Double]]]
 
   def trainCentroids(emb: DataFrame, numLists: Int = NumLists): Array[Array[Double]] =
     // Memoized per (application, canonical input plan): sim_ann_ivf
     // and sim_ann_ivfpq share the same coarse codebook, so a session
-    // collects and trains the bounded sample once. The key is the
-    // FULL canonicalized plan string (expression ids normalized, so
-    // two reads of the same table hit the same entry) — not the
-    // 32-bit semanticHash, whose collision between two different
-    // embedding frames in one application would silently serve the
-    // wrong codebook.
-    centCache.getOrElseUpdate(
-      emb.sparkSession.sparkContext.applicationId + "#" + numLists + "#" +
-        emb.queryExecution.analyzed.canonicalized.toString, {
+    // collects and trains the bounded sample once.
+    centCache.keyed(graft.SessionCaches.planKey(emb, numLists.toString)) {
       val sample = emb.filter(col("vec_id") < TrainSample)
         .select(col("vec_id"), col("embedding")).orderBy(col("vec_id")).collect()
         .map(_.getSeq[Float](1).toArray.map(_.toDouble))
       val seeds = sample.take(numLists)
       (1 to LloydIters).foldLeft(seeds)((c, _) => lloydLocal(sample, c))
-    })
+    }
 
   /** IVF ANN top-k for the first `numQueries` vectors (self
     * excluded), exact-cosine re-ranked. Same output shape as the

@@ -93,14 +93,13 @@ object Kmeans {
   /** Trained centroids over the corpus embeddings, memoized per
     * (application, sf dir) — the certificate and the SemDeDup
     * consumer share one training run per session. */
-  private val trainCache =
-    graft.SessionCaches.register(scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]])
+  private val trainCache = graft.SessionCaches.memo[Array[Array[Double]]]
 
   def trained(s: SparkSession, dir: String): Array[Array[Double]] =
-    trainCache.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    trainCache(s, dir) {
       val vv = vecs(Tables.embeddings(s, dir)).persist()
       try train(vv) finally vv.unpersist(blocking = false)
-    })
+    }
 
   /** Per-vector (vec_id, cluster, cos) assignment frame under the
     * trained centroids, PERSISTED and memoized per (application, sf
@@ -109,11 +108,10 @@ object Kmeans {
     * persist each consumer re-pays the full embeddings scan plus K
     * fused cosines per vector. Session eviction unpersists via
     * [[graft.SessionCaches]]. */
-  private val assignedCache =
-    graft.SessionCaches.register(scala.collection.concurrent.TrieMap.empty[String, DataFrame])
+  private val assignedCache = graft.SessionCaches.memo[DataFrame]
 
   private def assignedFrame(s: SparkSession, dir: String): DataFrame =
-    assignedCache.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    assignedCache(s, dir) {
       val b = best(col("v"), trained(s, dir))
       val df = vecs(Tables.embeddings(s, dir))
         .select(col("vec_id"), (-b.getField("col2")).cast("long").as("cluster"),
@@ -121,7 +119,7 @@ object Kmeans {
         .persist()
       df.count()
       df
-    })
+    }
 
   /** Final per-cluster report under the trained centroids: size,
     * within-cluster cosine SUM (the inertia analog — summed, not

@@ -207,11 +207,10 @@ object MinHashDedup {
     * [[TextOps.nearDupPairs05]]'s pairCache: bench reps and multiple
     * consumers reuse the one materialized pair list instead of
     * accumulating fresh persisted copies per invocation. */
-  private val memo =
-    graft.SessionCaches.register(scala.collection.concurrent.TrieMap.empty[String, DataFrame])
+  private val memo = graft.SessionCaches.memo[DataFrame]
   private def memoized(key: String, s: SparkSession, dir: String)
       (build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir + "#" + key, build)
+    memo(s, dir, key)(build)
 
   /** MinHash-LSH near-dups at the same threshold as the exact query.
     *

@@ -317,15 +317,14 @@ object PqAnn {
     * its recall certificate, and the persistence roundtrip all score
     * against the SAME artifact — and a corpus is encoded once per
     * session, the way a pipeline would land the codes as a table. */
-  private val idxCache =
-    graft.SessionCaches.register(scala.collection.concurrent.TrieMap.empty[String, PqIndex])
+  private val idxCache = graft.SessionCaches.memo[PqIndex]
 
   private[queries] def cachedIndex(s: org.apache.spark.sql.SparkSession,
                                    dir: String): PqIndex =
-    idxCache.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    idxCache(s, dir) {
       val i = buildIndex(Tables.embeddings(s, dir))
       i.copy(codes = i.codes.persist())
-    })
+    }
 
   /** IVF-PQ ANN over the driver corpus — rows-only in the driver
     * harness; recall certified by `sim_ann_ivfpq_cert` and pinned by

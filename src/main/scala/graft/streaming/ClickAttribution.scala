@@ -5,7 +5,6 @@ import java.nio.file.Files
 import graft.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Stream-stream interval join: the streaming twin of the batch
   * as-of attribution (`FraudAnalytics.clickAttribution`), bounded the
@@ -88,15 +87,9 @@ object ClickAttribution {
     // Inner-join output isn't watermark-gated; skip the trailing
     // no-data batch (it exists to finalize append-mode state only).
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val q = joinedPairs(spark, dir).writeStream
-        .option("checkpointLocation", ckpt)
-        .format("parquet")
-        .option("path", out)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
+    try Drain.run(joinedPairs(spark, dir).writeStream
+      .format("parquet").option("path", out), ckpt)
+    finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
     }
@@ -134,15 +127,8 @@ object ClickAttribution {
     // NOTE: no-data micro-batches stay ENABLED here — the trailing
     // no-data batch is precisely what advances the watermark and
     // flushes the null-extended evictions the inner variant skips.
-    try {
-      val q = pairs.writeStream
-        .option("checkpointLocation", ckpt)
-        .format("parquet")
-        .option("path", out)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    try Drain.run(pairs.writeStream.format("parquet").option("path", out), ckpt)
+    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     // Replay the eventual global watermark from the bounded input: a
     // 1-row broadcast anchor (same pattern as the anchored P6
     // queries), never a driver-side loop.

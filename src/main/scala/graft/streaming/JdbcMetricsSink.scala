@@ -5,7 +5,6 @@ import java.sql.{Connection, DriverManager}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The JDBC twin of the daily-metrics upsert sink — the reference
   * persists through SQL `INSERT … ON CONFLICT (day) DO UPDATE`
@@ -148,18 +147,13 @@ object JdbcMetricsSink {
     val prevNoData  = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val q = ScoringStream.dailyMetricsAgg(spark, dir).writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          upsertDailyMetrics(batch, url)
-          () // pin the Scala (not Java VoidFunction2) overload
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
+    try Drain.run(ScoringStream.dailyMetricsAgg(spark, dir).writeStream
+      .outputMode("update")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        upsertDailyMetrics(batch, url)
+        () // pin the Scala (not Java VoidFunction2) overload
+      }, ckpt)
+    finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
     }

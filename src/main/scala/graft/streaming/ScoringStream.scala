@@ -6,7 +6,6 @@ import graft.Q
 import graft.queries.FraudAnalytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** The real-time surface (SURVEY.md §2.10, §3.1): the same scoring
@@ -20,7 +19,7 @@ import org.apache.spark.sql.types._
   * / files) are the parallelism unit; there is no other boundary.
   *
   * The driver testdata is files, so these run the file source with
-  * `Trigger.AvailailableNow`-style semantics (bounded backfill); the
+  * `AvailableNow` semantics ([[Drain]], bounded backfill); the
   * same plans bind to a Kafka source unchanged (S1/S2: subscribe +
   * `from_json(value)`).
   *
@@ -61,7 +60,7 @@ object ScoringStream {
     * its DuckDB oracle. */
   def runScoredBackfill(spark: SparkSession, dir: String, outDir: String): DataFrame = {
     val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val q = scoredStream(spark, dir)
+    Drain.run(scoredStream(spark, dir)
       .select(
         col("event_id"), col("value").as("amount"), col("k"),
         col("hr").as("hour"), col("night"),
@@ -69,11 +68,7 @@ object ScoringStream {
         col("heuristic_proba"))
       .writeStream
       .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .option("path", outDir), ckpt)
     spark.read.parquet(outDir).orderBy(col("event_id"))
   }
 
@@ -124,9 +119,8 @@ object ScoringStream {
   private def runDailyMetricsStreamInner(spark: SparkSession, dir: String,
                                          ckpt: String, store: String): DataFrame = {
     val agg = dailyMetricsAgg(spark, dir)
-    val q = agg.writeStream
+    Drain.run(agg.writeStream
       .outputMode("update")
-      .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // Keyed upsert as dynamic partition overwrite: each updated
         // `day` replaces exactly its own partition — the scalable
@@ -136,10 +130,7 @@ object ScoringStream {
         // instead of fanning 30 rows across every core.
         batch.coalesce(1).write.mode("overwrite").partitionBy("day").parquet(store)
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, ckpt)
     spark.read.parquet(store)
       .select(col("day"), col("num_predictions"),
         round(col("fraud_rate"), 6).as("fraud_rate"),
@@ -168,8 +159,7 @@ object ScoringStream {
         lit(1.0).as("num_items"),
         (col("k") / lit(100.0)).as("merchant_risk"),
         col("hr").as("hour"))
-    val q = features.writeStream
-      .option("checkpointLocation", ckpt)
+    Drain.run(features.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // batch.sparkSession, not an outer capture: the sink closure
         // must stay serializable
@@ -177,10 +167,7 @@ object ScoringStream {
           .scoreBatch(batch.sparkSession, registry, modelName, batch)
           .write.mode("append").parquet(outDir)
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, ckpt)
     spark.read.parquet(outDir)
   }
 
@@ -235,12 +222,7 @@ object ScoringStream {
         col("user_events"),
         col("user_avg_value"),
         (col("value") > col("user_avg_value")).as("above_user_avg"))
-    val q = enriched.writeStream
-      .option("checkpointLocation", ckpt)
-      .format("parquet").option("path", out)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Drain.run(enriched.writeStream.format("parquet").option("path", out), ckpt)
     spark.read.schema(enriched.schema).parquet(out)
       .select(col("event_id"), col("user_id"), col("value"),
         col("user_events"), round(col("user_avg_value"), 6).as("user_avg_value"),
@@ -287,16 +269,9 @@ object ScoringStream {
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     // no-data micro-batches stay ENABLED: the trailing batch advances
     // the watermark to its final value and flushes closed sessions.
-    try {
-      val q = sess.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("parquet")
-        .option("path", out)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    try Drain.run(sess.writeStream
+      .outputMode("append").format("parquet").option("path", out), ckpt)
+    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     val horizon = graft.sources.Tables.events(spark, dir)
       .agg((max(col("ts"))
         - expr("INTERVAL 1 HOUR") - expr("INTERVAL 1 SECOND")).as("horizon"))

@@ -1,14 +1,19 @@
 package graft.streaming
 
-/** Shared fixed pool for overlapping INDEPENDENT per-micro-batch
-  * actions (guide §2.6: actions are only sequential because the
-  * driver calls them sequentially) — the [[StreamingMmEmit]] FacePool
-  * discipline extracted for the curation stream's decision writes,
-  * index appends, and window-cut faces. Each submitted action is
-  * latency-bound at micro-batch sizes (a handful of small jobs plus
-  * store fs ops), so overlapping them compresses the per-batch wall
-  * without changing any action's lineage or output. Six threads: the
-  * widest concurrent action set (2 decision faces + 4 index appends). */
+/** The engine's one fixed pool for overlapping INDEPENDENT
+  * per-micro-batch actions (guide §2.6: actions are only sequential
+  * because the driver calls them sequentially): the curation
+  * stream's decision writes and index appends, the trimodal batch's
+  * four face placements, the emit stream's window cuts, and the
+  * one-shot warm phases. Each submitted action is latency-bound at
+  * micro-batch sizes (a handful of small jobs plus store fs ops), so
+  * overlapping them compresses the per-batch wall without changing
+  * any action's lineage or output. Six threads: the widest
+  * concurrent action set (2 decision faces + 4 index appends).
+  *
+  * No action submitted here starts a stream whose batches fan out
+  * here again: that batch would run on a stream thread, not a pool
+  * thread, and its actions would queue behind the blocked caller. */
 private[graft] object StreamPools {
   private val onPool = ThreadLocal.withInitial[java.lang.Boolean](() => false)
 

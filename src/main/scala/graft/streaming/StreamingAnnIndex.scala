@@ -5,9 +5,8 @@ import java.nio.file.{Files, Paths}
 import graft.Q
 import graft.queries.{AnnCert, AnnIndexStore, PqAnn}
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The ANN index operated as a CONTINUOUSLY-FED artifact — the
   * streaming twin of `sim_ann_index_append`: vectors arrive as a
@@ -55,26 +54,16 @@ object StreamingAnnIndex {
     * foreachBatch batchId, and an at-least-once replay whose append
     * already committed is skipped via the store's batch watermark —
     * a replay can never encode a vector twice. */
-  def runPass(spark: SparkSession, env: Env): Unit = {
-    val q = spark.readStream.schema(env.schema)
-      .option("maxFilesPerTrigger", 1).parquet(env.inDir)
-      .writeStream
-      .option("checkpointLocation", env.ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // the store re-resolves PRODUCTION per batch (hot reload);
-          // each append re-encodes ONLY the batch with the promoted
-          // constants and flips the pointer atomically
-          env.store.appendBatch(batch.sparkSession,
-            AnnIndexStore.BaseIndexName, batch,
-            batchId = Some(batchId), streamId = Some(env.ckpt))
-          ()
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runPass(spark: SparkSession, env: Env): Unit =
+    Drain.files(spark, env.schema, env.inDir, env.ckpt) { (batch, batchId) =>
+      // the store re-resolves PRODUCTION per batch (hot reload);
+      // each append re-encodes ONLY the batch with the promoted
+      // constants and flips the pointer atomically
+      env.store.appendBatch(batch.sparkSession,
+        AnnIndexStore.BaseIndexName, batch,
+        batchId = Some(batchId), streamId = Some(env.ckpt))
+      ()
+    }
 
   /** Full loop: seed, land arrivals, drain, then run the
     * MAINTENANCE half of the lifecycle — compact the fragmented
@@ -105,12 +94,12 @@ object StreamingAnnIndex {
 
   /** One drained stream per (application, sf dir) — bench reps reuse
     * the artifact rather than re-running the stream. */
-  private val memo = graft.SessionCaches.register(scala.collection.concurrent.TrieMap.empty[String, AnnIndexStore])
+  private val memo = graft.SessionCaches.memo[AnnIndexStore]
 
   private def memoStore(s: SparkSession, dir: String): AnnIndexStore =
-    memo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    memo(s, dir) {
       runAppendStream(s, dir)
-    })
+    }
 
   val all: Seq[Q] = Seq(streamAppendCert)
 }

@@ -5,7 +5,6 @@ import graft.queries.{AnnCert, AnnIndexStore, PqAnn}
 import graft.sources.{Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The ANN SERVING path operated continuously — the query half of
   * the index lifecycle, next to [[StreamingAnnIndex]]'s build half:
@@ -50,8 +49,7 @@ object StreamingAnnServe {
     * constants and the codes scan only re-load when the VERSION
     * actually changed — what a serving process does between
     * promotions. */
-  private val idxMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), PqAnn.PqIndex]
+  private val idxMemo = graft.SessionCaches.memo[PqAnn.PqIndex]
 
   def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = {
     val bs = batch.sparkSession
@@ -59,8 +57,7 @@ object StreamingAnnServe {
     // re-load only on a version change
     val v = env.store.productionVersion(AnnIndexStore.IndexName)
       .getOrElse(sys.error("no production ANN index"))
-    val idx = idxMemo.getOrElseUpdate(
-      (bs.sparkContext.applicationId, env.store.root, v),
+    val idx = idxMemo(bs, env.dir, env.store.root, v.toString)(
       env.store.load(bs, AnnIndexStore.IndexName, v))
     PqAnn.queryIndexFrom(
         batch.select(col("vec_id").as("q_id"), col("embedding")),
@@ -68,20 +65,9 @@ object StreamingAnnServe {
       .write.mode("overwrite").parquet(s"${env.outDir}/batch=$batchId")
   }
 
-  def runPass(spark: SparkSession, env: Env): Unit = {
-    val q = spark.readStream.schema(env.schema)
-      .option("maxFilesPerTrigger", 1).parquet(env.inDir)
-      .writeStream
-      .option("checkpointLocation", env.ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          processBatch(Tables.normalizeEmbeddings(batch), batchId, env)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runPass(spark: SparkSession, env: Env): Unit =
+    Drain.files(spark, env.schema, env.inDir, env.ckpt)((batch, batchId) =>
+      processBatch(Tables.normalizeEmbeddings(batch), batchId, env))
 
   def streamedAnswers(spark: SparkSession, env: Env): DataFrame =
     spark.read.parquet(env.outDir).drop("batch")

@@ -6,7 +6,6 @@ import graft.Q
 import graft.sources.{CowMerge, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** CONTINUOUS copy-on-write upsert: late events arrive in
   * micro-batches and MERGE into the day-partitioned store per batch
@@ -193,14 +192,9 @@ object StreamingCowMerge {
     writeBase(s, dir, store)
     val late = CowMerge.lateSlice(Tables.events(s, dir))
     StreamingCuration.landOrderedSlicesOf(late, "event_id", in, slices)
-    val stream = s.readStream.schema(late.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-      .writeStream
-      .option("checkpointLocation", s"$scratch/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch((batch: DataFrame, bid: Long) => mergeBatch(batch, bid, store))
-      .start()
-    stream.awaitTermination()
+    // an empty slice merges no day, so skipping it leaves the store as is
+    Drain.files(s, late.schema, in, s"$scratch/ckpt")((batch, bid) =>
+      mergeBatch(batch, bid, store))
     store
   }
 
@@ -227,13 +221,16 @@ object StreamingCowMerge {
     * mtime order. */
   /** One drained store per session for the as-of readers — the
     * build/stream cost is a [[streamCowMerge]] concern; time travel
-    * is about the read side. */
-  private val storeCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * is about the read side. Its scratch tree (arrivals, checkpoint,
+    * store) dies with the memo entry. */
+  private final case class DrainedStore(path: String) extends graft.Reapable {
+    def reapRoots: Seq[String] = Seq(Paths.get(path).getParent.toString)
+  }
+
+  private val storeCache = graft.SessionCaches.memo[DrainedStore]
 
   private def sharedStore(s: SparkSession, dir: String): String =
-    storeCache.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir,
-      runStore(s, dir, slices = 3))
+    storeCache(s, dir)(DrainedStore(runStore(s, dir, slices = 3))).path
 
   val timeTravel: Q = Q("store_time_travel",
     """WITH h AS (SELECT MAX(CAST(ts AS DATE)) AS hday FROM events),

@@ -9,7 +9,6 @@ import graft.sources.{FrameStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The curation pipeline OPERATED CONTINUOUSLY — the end-to-end
   * composition the north star describes: documents arrive as a
@@ -333,8 +332,8 @@ object StreamingCuration {
     // The decision write(s) and the four index appends are INDEPENDENT
     // actions over frames the shared-cascade materialization already
     // persisted (docs/batchHs/segs/starts), each latency-bound at
-    // micro-batch sizes — run them CONCURRENTLY (guide §2.6, the
-    // trimodal FacePool discipline): every action keeps its exact
+    // micro-batch sizes — run them CONCURRENTLY on [[StreamPools]]
+    // (guide §2.6): every action keeps its exact
     // sequential lineage and output location, the appends target four
     // DISTINCT store names (staged-rename versioning tolerates
     // concurrent writers by design), and every production read either
@@ -415,19 +414,9 @@ object StreamingCuration {
 
   /** One `AvailableNow` pass over the arrival files, resuming from
     * the checkpoint — the restartable unit. */
-  def runPass(spark: SparkSession, env: Env): Unit = {
-    val q = spark.readStream.schema(env.schema)
-      .option("maxFilesPerTrigger", 1).parquet(env.inDir)
-      .writeStream
-      .option("checkpointLocation", env.ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(batch, batchId, env)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runPass(spark: SparkSession, env: Env): Unit =
+    Drain.files(spark, env.schema, env.inDir, env.ckpt)((batch, batchId) =>
+      processBatch(batch, batchId, env))
 
   def streamedDecisions(spark: SparkSession, env: Env): DataFrame =
     spark.read.parquet(env.outDir).drop("batch")
@@ -598,12 +587,7 @@ object StreamingCuration {
         .schema(s.read.parquet(s"$dir/documents.parquet").schema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(dir)))
-    val q = frame.writeStream
-      .option("checkpointLocation", ckpt)
-      .format("parquet").option("path", out)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Drain.run(frame.writeStream.format("parquet").option("path", out), ckpt)
     s.read.schema(frame.schema).parquet(out)
   }
 

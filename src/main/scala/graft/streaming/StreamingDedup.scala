@@ -7,7 +7,6 @@ import graft.queries.TextOps
 import graft.sources.{FrameStore, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming incremental dedup — the composition of the dedup family
   * with the streaming surface: each arriving micro-batch of documents
@@ -159,39 +158,29 @@ object StreamingDedup {
     * ([[graft.sources.VersionedStore.lastAppliedBatch]]) — so mid-batch
     * failure, not just a graceful between-batch restart, converges to
     * the exact single-run result. */
-  def runPass(spark: SparkSession, env: StreamEnv): Unit = {
-    val stream = spark.readStream.schema(env.schema)
-      .option("maxFilesPerTrigger", 1).parquet(env.inDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", env.ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // everything inside the micro-batch binds to the STREAM'S
-          // (cloned) session — the native functions must be registered
-          // there, and the index scan must come from the same session
-          // or expression resolution runs against the wrong registry
-          val bs = batch.sparkSession
-          graft.functions.GraftFunctions.register(bs)
-          val idx = env.store.loadProduction(bs, IndexName)
-            .getOrElse(sys.error("no production shingle index"))
-          // a micro-batch arrives as one small file (one input split);
-          // repartition to the session's shuffle width so the per-row
-          // shingle pass uses every core, and persist it so the dedup
-          // join and the index append pay the tokenize+hash pass ONCE
-          val hs = TextOps.hashedShingleArrays(
-            batch.repartition(bs.sessionState.conf.numShufflePartitions)).persist()
-          dedupShinglesAgainstIndex(hs, idx)
-            .write.mode("overwrite").parquet(s"${env.outDir}/batch=$batchId")
-          env.store.appendBatch(bs, IndexName, hs,
-            batchId = Some(batchId), streamId = Some(env.ckpt))
-          hs.unpersist()
-          ()
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runPass(spark: SparkSession, env: StreamEnv): Unit =
+    Drain.files(spark, env.schema, env.inDir, env.ckpt) { (batch, batchId) =>
+      // everything inside the micro-batch binds to the STREAM'S
+      // (cloned) session — the native functions must be registered
+      // there, and the index scan must come from the same session
+      // or expression resolution runs against the wrong registry
+      val bs = batch.sparkSession
+      graft.functions.GraftFunctions.register(bs)
+      val idx = env.store.loadProduction(bs, IndexName)
+        .getOrElse(sys.error("no production shingle index"))
+      // a micro-batch arrives as one small file (one input split);
+      // repartition to the session's shuffle width so the per-row
+      // shingle pass uses every core, and persist it so the dedup
+      // join and the index append pay the tokenize+hash pass ONCE
+      val hs = TextOps.hashedShingleArrays(
+        batch.repartition(bs.sessionState.conf.numShufflePartitions)).persist()
+      dedupShinglesAgainstIndex(hs, idx)
+        .write.mode("overwrite").parquet(s"${env.outDir}/batch=$batchId")
+      env.store.appendBatch(bs, IndexName, hs,
+        batchId = Some(batchId), streamId = Some(env.ckpt))
+      hs.unpersist()
+      ()
+    }
 
   /** The accumulated pair list (empty-schema frame when no batch
     * emitted a pair). The per-batch `batch=<id>` directories surface
@@ -221,16 +210,16 @@ object StreamingDedup {
 
   /** One persisted full-corpus shingle index per (application, sf
     * dir) for the roundtrip certificate. */
-  private val corpusMemo = graft.SessionCaches.register(scala.collection.concurrent.TrieMap.empty[String, FrameStore])
+  private val corpusMemo = graft.SessionCaches.memo[FrameStore]
 
   private def corpusIndexStore(s: SparkSession, dir: String): FrameStore =
-    corpusMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    corpusMemo(s, dir) {
       val store = new FrameStore(
         Files.createTempDirectory("graft-shingle-index-").toString)
       val v = store.register(s, "corpus_shingles", TextOps.hashedShingles(s, dir))
       store.promote("corpus_shingles", v)
       store
-    })
+    }
 
   /** Persistence certificate for the shingle index artifact, in the
     * `sim_ann_index_roundtrip` mold: a cold reload of the promoted
@@ -280,10 +269,10 @@ object StreamingDedup {
   }
 
   /** One forget-lifecycle store per (application, sf dir). */
-  private val forgetMemo = graft.SessionCaches.register(scala.collection.concurrent.TrieMap.empty[String, FrameStore])
+  private val forgetMemo = graft.SessionCaches.memo[FrameStore]
 
   private def forgottenStore(s: SparkSession, dir: String): FrameStore =
-    forgetMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    forgetMemo(s, dir) {
       val store = new FrameStore(
         Files.createTempDirectory("graft-forget-index-").toString)
       val v = store.register(s, "corpus_shingles", TextOps.hashedShingles(s, dir))
@@ -294,7 +283,7 @@ object StreamingDedup {
       store.deleteWhere(s, "corpus_shingles", col("doc_id") % 20 === 7)
       store.gc("corpus_shingles", keep = 0)
       store
-    })
+    }
 
   /** Deletion certificate — the right-to-be-forgotten half of the
     * index lifecycle (append/compact/gc cover growth; this covers

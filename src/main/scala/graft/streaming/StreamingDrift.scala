@@ -5,7 +5,6 @@ import graft.queries.Curation
 import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The corpus drift monitor OPERATED CONTINUOUSLY — and ACTING on the
   * pipeline. Two faces over one stream pass:
@@ -83,25 +82,8 @@ object StreamingDrift {
   }
 
   def runPass(spark: SparkSession, env: Env): Unit =
-    runPassWith(spark, env)((b, id) => processBatch(b, id, env))
-
-  /** The AvailableNow drain with a pluggable per-batch handler —
-    * shared by the text face and the media face (same slicing, same
-    * count discipline, different bucketer). */
-  def runPassWith(spark: SparkSession, env: Env)(
-      handler: (DataFrame, Long) => Unit): Unit = {
-    val q = spark.readStream.schema(env.schema)
-      .option("maxFilesPerTrigger", 1).parquet(env.inDir)
-      .writeStream
-      .option("checkpointLocation", env.ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) handler(Tables.normalizeDocuments(batch), batchId)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    Drain.files(spark, env.schema, env.inDir, env.ckpt)((batch, batchId) =>
+      processBatch(Tables.normalizeDocuments(batch), batchId, env))
 
   /** Drained partial counts summed back to the batch scan's frame. */
   def drainedCounts(spark: SparkSession, env: Env): DataFrame =
@@ -132,13 +114,10 @@ object StreamingDrift {
 
   /** One drained drift world per (application, input): stream pass,
     * summed counts, PSI report, and the clean-corpus promotion. */
-  private val worldMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, DriftWorld])
+  private val worldMemo = graft.SessionCaches.memo[DriftWorld]
 
-  private[graft] def driftWorld(s: SparkSession, dir: String): DriftWorld = {
-    ensureConsolidatedWorlds(s, dir)
-    worldMemo(s.sparkContext.applicationId + "#" + dir)
-  }
+  private[graft] def driftWorld(s: SparkSession, dir: String): DriftWorld =
+    consolidated(worldMemo, s, dir)
 
   /** The full pass over an arbitrary documents frame — exposed so the
     * planted-drift spec can drive a corpus whose tail slice genuinely
@@ -176,13 +155,10 @@ object StreamingDrift {
 
   val MediaCleanName = "media_clean"
 
-  private val mediaMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, MediaDriftWorld])
+  private val mediaMemo = graft.SessionCaches.memo[MediaDriftWorld]
 
-  private[graft] def mediaDriftWorld(s: SparkSession, dir: String): MediaDriftWorld = {
-    ensureConsolidatedWorlds(s, dir)
-    mediaMemo(s.sparkContext.applicationId + "#" + dir)
-  }
+  private[graft] def mediaDriftWorld(s: SparkSession, dir: String): MediaDriftWorld =
+    consolidated(mediaMemo, s, dir)
 
   // ------------------------------------------ cross-release baseline face
   /** The drained cross-release world: the promoted baseline's
@@ -196,13 +172,10 @@ object StreamingDrift {
       Seq(java.nio.file.Paths.get(env.outDir).getParent.toString)
   }
 
-  private val baselineMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, BaselineDriftWorld])
+  private val baselineMemo = graft.SessionCaches.memo[BaselineDriftWorld]
 
-  private[graft] def baselineDriftWorld(s: SparkSession, dir: String): BaselineDriftWorld = {
-    ensureConsolidatedWorlds(s, dir)
-    baselineMemo(s.sparkContext.applicationId + "#" + dir)
-  }
+  private[graft] def baselineDriftWorld(s: SparkSession, dir: String): BaselineDriftWorld =
+    consolidated(baselineMemo, s, dir)
 
   /** The full cross-release pass over arbitrary baseline/new-crawl
     * frames — exposed so the planted-drift spec can drive a new
@@ -248,13 +221,10 @@ object StreamingDrift {
     * baseline, the new crawl's clips stream in and bucket per batch,
     * and the drain judges each slice against the RE-RESOLVED
     * production baseline — promoting only clearing slices' clips. */
-  private val mediaBaselineMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, BaselineDriftWorld])
+  private val mediaBaselineMemo = graft.SessionCaches.memo[BaselineDriftWorld]
 
-  private[graft] def mediaBaselineWorld(s: SparkSession, dir: String): BaselineDriftWorld = {
-    ensureConsolidatedWorlds(s, dir)
-    mediaBaselineMemo(s.sparkContext.applicationId + "#" + dir)
-  }
+  private[graft] def mediaBaselineWorld(s: SparkSession, dir: String): BaselineDriftWorld =
+    consolidated(mediaBaselineMemo, s, dir)
 
   /** ONE consolidated drift drain per (application, sf dir) — the
     * four sf-corpus drift worlds (within-scan text, within-scan
@@ -272,10 +242,14 @@ object StreamingDrift {
     * to what its standalone pass produced, which the unchanged
     * oracles re-certify. The planted-drift specs still drive
     * [[buildWorld]]/[[buildBaselineWorld]] standalone. */
-  private def ensureConsolidatedWorlds(s: SparkSession, dir: String): Unit = {
-    val key = s.sparkContext.applicationId + "#" + dir
-    if (worldMemo.contains(key) && mediaMemo.contains(key) &&
-        baselineMemo.contains(key) && mediaBaselineMemo.contains(key)) return
+  private def consolidated[W](memo: graft.SessionCaches.Memo[W], s: SparkSession,
+                               dir: String): W = {
+    if (!Seq(worldMemo, mediaMemo, baselineMemo, mediaBaselineMemo)
+        .forall(_.contains(s, dir))) buildConsolidatedWorlds(s, dir)
+    memo(s, dir)(sys.error(s"drift world for $dir evicted while it was read"))
+  }
+
+  private def buildConsolidatedWorlds(s: SparkSession, dir: String): Unit = {
     import graft.multimodal.Multimodal
     val docs = Tables.documents(s, dir)
     val mid = Curation.releaseMid(s, dir)
@@ -314,7 +288,8 @@ object StreamingDrift {
       StreamingCuration.landOrderedSlicesOf(docs, "doc_id", eT.inDir, 3)
     }
     graft.WarmPhases.phase("drain") {
-    runPassWith(s, eT) { (batch, batchId) =>
+    Drain.files(s, eT.schema, eT.inDir, eT.ckpt) { (raw, batchId) =>
+      val batch = Tables.normalizeDocuments(raw)
       processBatch(batch, batchId, eT)
       processBatch(batch.filter(col("doc_id") >= mid), batchId, eB)
       // ONE loudness decode per batch, shared by both media faces
@@ -357,8 +332,7 @@ object StreamingDrift {
         tStaged.join(broadcast(tClean), Seq("slice"))))
     val tCleanCount = eT.store.loadProduction(s, CleanCorpusName)
       .getOrElse(sys.error("no promoted clean corpus")).count()
-    worldMemo.put(key, DriftWorld(eT, tCounts, tReport, tStaged, tCleanCount))
-    ()
+    worldMemo.put(s, dir)(DriftWorld(eT, tCounts, tReport, tStaged, tCleanCount))
     },
     () => {
     // media face
@@ -373,8 +347,7 @@ object StreamingDrift {
           .join(broadcast(mClean), Seq("slice"))))
     val mCleanCount = eM.store.loadProduction(s, MediaCleanName)
       .getOrElse(sys.error("no promoted clean media set")).count()
-    mediaMemo.put(key, MediaDriftWorld(eM, mCounts, mReport, mCleanCount))
-    ()
+    mediaMemo.put(s, dir)(MediaDriftWorld(eM, mCounts, mReport, mCleanCount))
     },
     () => {
     // cross-release text face (baseline re-resolved from the pointer)
@@ -389,8 +362,7 @@ object StreamingDrift {
           .join(broadcast(bClean), Seq("slice"))))
     val bCleanCount = eB.store.loadProduction(s, CleanCorpusName)
       .getOrElse(sys.error("no promoted clean corpus")).count()
-    baselineMemo.put(key, BaselineDriftWorld(eB, bv, bCounts, bReport, bCleanCount))
-    ()
+    baselineMemo.put(s, dir)(BaselineDriftWorld(eB, bv, bCounts, bReport, bCleanCount))
     },
     () => {
     // cross-release media face
@@ -409,9 +381,8 @@ object StreamingDrift {
           .join(broadcast(mbClean), Seq("slice"))))
     val mbCleanCount = eMB.store.loadProduction(s, MediaCleanName)
       .getOrElse(sys.error("no promoted clean media set")).count()
-    mediaBaselineMemo.put(key,
+    mediaBaselineMemo.put(s, dir)(
       BaselineDriftWorld(eMB, mbv, mbCounts, mbReport, mbCleanCount))
-    ()
     }))
     }
     ()

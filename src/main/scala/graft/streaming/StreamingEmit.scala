@@ -6,7 +6,6 @@ import graft.sources.FrameStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The curation pipeline EMITTING CONTINUOUSLY — training windows
   * leave the pipeline the moment they fill, instead of waiting for a
@@ -186,19 +185,9 @@ object StreamingEmit {
       .filter(col("rk") === 1)
       .select(col("source"), col("done_off"), col("carry_text"))
 
-  def runPass(spark: SparkSession, env: Env): Unit = {
-    val q = spark.readStream.schema(env.cur.schema)
-      .option("maxFilesPerTrigger", 1).parquet(env.cur.inDir)
-      .writeStream
-      .option("checkpointLocation", env.cur.ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(batch, batchId, env)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runPass(spark: SparkSession, env: Env): Unit =
+    Drain.files(spark, env.cur.schema, env.cur.inDir, env.cur.ckpt)((batch, batchId) =>
+      processBatch(batch, batchId, env))
 
   /** Drain: flush every source's final partial window from the carry
     * and read the accumulated windows back — BOTH window faces
@@ -245,8 +234,7 @@ object StreamingEmit {
                            learned: DataFrame, gatedWindows: DataFrame,
                            qmodel: DataFrame, sameModelVersion: Boolean)
 
-  private val unifiedMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, Unified])
+  private val unifiedMemo = graft.SessionCaches.memo[Unified]
 
   /** ONE full-stack curation stream pass per (application, sf dir),
     * memoized — the three operating-mode certificates
@@ -267,7 +255,7 @@ object StreamingEmit {
     * both index artifacts compact + gc, both count states snapshot —
     * the consolidated pass certifies store lifecycle too. */
   def unifiedRun(s: SparkSession, dir: String): Unified =
-    unifiedMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    unifiedMemo(s, dir) {
       val qstore = graft.ml.QualityModel.productionStore(s, dir)
       val vBefore = qstore.productionVersion(graft.ml.QualityModel.ModelName)
       val env = prepare(s, dir, quality = Some(qstore), shadow = true)
@@ -307,7 +295,7 @@ object StreamingEmit {
             .getOrElse(sys.error("no production quality model"))),
           sameModelVersion = vBefore.isDefined && vBefore == vAfter)
       }
-    })
+    }
 
   /** Streaming twin of `text_curation_emit` — same oracle: the
     * continuously-emitted window set must be byte-identical to the
@@ -399,15 +387,13 @@ object StreamingEmit {
     * certificate pays only the streamed-side comparisons (an
     * unmemoized body re-paid five prefix-sum fan-outs per rep:
     * 23 s → single digits at sf0.1). */
-  private val gatedCertMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap
-      .empty[String, (DataFrame, DataFrame, DataFrame, DataFrame)])
+  private val gatedCertMemo = graft.SessionCaches.memo[(DataFrame, DataFrame, DataFrame, DataFrame)]
 
   /** `(batchGated windows, flips, flipSeq, batchPack)` — the gated
     * certificate's batch-side artifacts, pinned once per session. */
   private def gatedCertArtifacts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    gatedCertMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    gatedCertMemo(s, dir) {
       val un = unifiedRun(s, dir)
       // localCheckpoint, not persist: these frames sit on the FULL
       // curation+scoring lineage, and a certificate plan that unions
@@ -453,7 +439,7 @@ object StreamingEmit {
       // this scope drops the last reference (dependents are
       // checkpointed themselves, so nothing re-reads it)
       (batchGated, flips, flipSeq, batchPack)
-    })
+    }
 
   val streamCurationGated: Q = Q("stream_curation_gated",
     TextOps.curationOracleBody + TextOps.emitTokenCtes + """

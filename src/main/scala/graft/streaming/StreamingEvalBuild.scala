@@ -38,11 +38,10 @@ object StreamingEvalBuild {
       Seq(java.nio.file.Paths.get(outDir).getParent.toString)
   }
 
-  private val worldMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, World])
+  private val worldMemo = graft.SessionCaches.memo[World]
 
   private[graft] def evalWorld(s: SparkSession, dir: String): World =
-    worldMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    worldMemo(s, dir) {
       val scratch = Scratch.dir("graft-evalbuild-").toString
       val docs = Tables.documents(s, dir)
       val store = new FrameStore(s"$scratch/store")
@@ -60,31 +59,21 @@ object StreamingEvalBuild {
         StreamingCuration.landOrderedSlicesOf(docs, "doc_id", inDir, 3)
       }
       graft.WarmPhases.phase("drain") {
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (!batch.isEmpty) {
-            val b = Tables.normalizeDocuments(batch)
-            val cand = b.withColumn("bucket", TextOps.splitBucket)
-              .filter(col("bucket") >= 90)
-            val seen = store.loadProduction(s, GramsName)
-              .getOrElse(sys.error("no production train-gram index"))
-            TextOps.evalManifestOf(cand, TextOps.hashedGrams8(cand), seen)
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          }
-          ()
+        Drain.files(s, docs.schema, inDir, ckpt) { (batch, batchId) =>
+          val b = Tables.normalizeDocuments(batch)
+          val cand = b.withColumn("bucket", TextOps.splitBucket)
+            .filter(col("bucket") >= 90)
+          val seen = store.loadProduction(s, GramsName)
+            .getOrElse(sys.error("no production train-gram index"))
+          TextOps.evalManifestOf(cand, TextOps.hashedGrams8(cand), seen)
+            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
       }
       val manifest = graft.WarmPhases.phase("artifacts") {
         s.read.parquet(outDir).drop("batch").localCheckpoint(true)
       }
       World(inDir, outDir, ckpt, store, manifest)
-    })
+    }
 
   /** Bench warm hook: index build + stream pass, attributed once. */
   private[graft] def warmEvalStream(s: SparkSession, dir: String): Unit = {

@@ -5,7 +5,6 @@ import graft.queries.Kmeans
 import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** One Lloyd update accumulated FROM A STREAM — the MLlib
   * StreamingKMeans pattern: vectors arrive in micro-batches, assign
@@ -65,20 +64,9 @@ object StreamingKmeansUpdate {
     ()
   }
 
-  def runPass(spark: SparkSession, env: Env): Unit = {
-    val q = spark.readStream.schema(env.schema)
-      .option("maxFilesPerTrigger", 1).parquet(env.inDir)
-      .writeStream
-      .option("checkpointLocation", env.ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          processBatch(Tables.normalizeEmbeddings(batch), batchId, env)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runPass(spark: SparkSession, env: Env): Unit =
+    Drain.files(spark, env.schema, env.inDir, env.ckpt)((batch, batchId) =>
+      processBatch(Tables.normalizeEmbeddings(batch), batchId, env))
 
   /** Merge the accumulated partials into the per-cluster update
     * report `(k, n_vecs, update_sum)` — every seed cluster reported,

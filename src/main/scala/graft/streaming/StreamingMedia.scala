@@ -5,7 +5,6 @@ import graft.multimodal.Multimodal
 import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The multimodal operators OPERATED CONTINUOUSLY.
   *
@@ -96,19 +95,9 @@ object StreamingMedia {
     ()
   }
 
-  def runPass(spark: SparkSession, env: Env): Unit = {
-    val q = spark.readStream.schema(env.schema)
-      .option("maxFilesPerTrigger", 1).parquet(env.inDir)
-      .writeStream
-      .option("checkpointLocation", env.ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(Tables.normalizeDocuments(batch), batchId, env)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runPass(spark: SparkSession, env: Env): Unit =
+    Drain.files(spark, env.schema, env.inDir, env.ckpt)((batch, batchId) =>
+      processBatch(Tables.normalizeDocuments(batch), batchId, env))
 
   def runDedupStream(spark: SparkSession, dir: String,
                      hashBands: DataFrame => DataFrame, slices: Int): DataFrame = {
@@ -178,8 +167,7 @@ object StreamingMedia {
   private def takedown(id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     (id % 20 === 7) || ((id - graft.multimodal.Multimodal.TwinOffset) % 20 === 7)
 
-  private val forgetMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, Env])
+  private val forgetMemo = graft.SessionCaches.memo[Env]
 
   /** ONE image-dedup stream ingested, its pair list snapshotted as a
     * release artifact IN THE SAME STORE, then the takedown applied —
@@ -187,7 +175,7 @@ object StreamingMedia {
     * bench reps pay the drain once (attributed by the
     * `cache_warm_media_forget` bench entry, the named-warm rule). */
   private[graft] def forgottenImageEnv(s: SparkSession, dir: String): Env =
-    forgetMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    forgetMemo(s, dir) {
       val env = prepare(s, dir,
         docs => Multimodal.imageBands(Multimodal.imageHashes(docs)))
       StreamingCuration.landOrderedSlices(s, env.inDir, dir, 2)
@@ -198,7 +186,7 @@ object StreamingMedia {
           s.read.parquet(env.outDir).drop("batch")))
       forgetMedia(s, env, PairsName, takedown)
       env
-    })
+    }
 
   /** Media-forget certificate — `text_pack_forget`'s device on the
     * image fingerprint artifacts: after the takedown rewrite + gc,

@@ -6,7 +6,6 @@ import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The epoch-mix ∘ sequence-pack composition OPERATED CONTINUOUSLY —
   * the last batch-only corpus-assembly step run as a stream: arriving
@@ -98,19 +97,9 @@ object StreamingMixPack {
     ()
   }
 
-  def runPass(spark: SparkSession, env: Env): Unit = {
-    val q = spark.readStream.schema(env.schema)
-      .option("maxFilesPerTrigger", 1).parquet(env.inDir)
-      .writeStream
-      .option("checkpointLocation", env.ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(Tables.normalizeDocuments(batch), batchId, env)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runPass(spark: SparkSession, env: Env): Unit =
+    Drain.files(spark, env.schema, env.inDir, env.ckpt)((batch, batchId) =>
+      processBatch(Tables.normalizeDocuments(batch), batchId, env))
 
   /** The packed-sequence manifest over everything streamed so far —
     * the batch query's aggregate over the accumulated entry rows. */

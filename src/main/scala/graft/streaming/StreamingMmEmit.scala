@@ -5,7 +5,6 @@ import graft.multimodal.Multimodal
 import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The INTERLEAVED multimodal emission OPERATED CONTINUOUSLY — the
   * streaming twin of `mm_curation_emit_ids`: media-caption pairs
@@ -134,19 +133,9 @@ object StreamingMmEmit {
     ()
   }
 
-  def runPass(spark: SparkSession, env: Env): Unit = {
-    val q = spark.readStream.schema(env.schema)
-      .option("maxFilesPerTrigger", 1).parquet(env.inDir)
-      .writeStream
-      .option("checkpointLocation", env.ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(Tables.normalizeDocuments(batch), batchId, env)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runPass(spark: SparkSession, env: Env): Unit =
+    Drain.files(spark, env.schema, env.inDir, env.ckpt)((batch, batchId) =>
+      processBatch(Tables.normalizeDocuments(batch), batchId, env))
 
   /** Full loop: prepare, land the corpus in `slices` ordered
     * arrivals, drain, return the accumulated positioned entries
@@ -170,14 +159,10 @@ object StreamingMmEmit {
     * memoized worlds. Keyed by checkpoint path (unique per call) so
     * repeated runs accumulate entries rather than silently orphaning
     * the previous tree on overwrite. */
-  private val adhocEnvs = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, Env])
+  private val adhocEnvs = graft.SessionCaches.memo[Env]
 
-  private def trackAdhoc(spark: SparkSession, env: Env): Unit = {
-    adhocEnvs.put(
-      spark.sparkContext.applicationId + "#" + env.dir + "#adhoc#" + env.ckpt, env)
-    ()
-  }
+  private def trackAdhoc(spark: SparkSession, env: Env): Unit =
+    adhocEnvs.put(spark, env.dir, "adhoc", env.ckpt)(env)
 
   /** The drained positioned entries (both gate faces) PLUS the stream
     * world that produced them — the env is Reapable, so a memoized
@@ -221,8 +206,7 @@ object StreamingMmEmit {
       qmodel = qmodel)
   }
 
-  private val entriesMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, MmEmitStreamWorld])
+  private val entriesMemo = graft.SessionCaches.memo[MmEmitStreamWorld]
 
   /** The interleaved-emission stream artifacts per (application, sf
     * dir), memoized — the streaming twins (windows + boundary
@@ -235,14 +219,14 @@ object StreamingMmEmit {
     * bimodal machinery ([[runMmEmitStream]]) remains the
     * slicing-parity spec's harness. */
   private def streamedWorld(spark: SparkSession, dir: String): MmEmitStreamWorld =
-    entriesMemo.getOrElseUpdate(spark.sparkContext.applicationId + "#" + dir, {
+    entriesMemo(spark, dir) {
       val tri = streamedTrimodalWorld(spark, dir)
       val df = spark.read.parquet(tri.env.mmOutDir).drop("batch").persist()
       df.count()
       val g = spark.read.parquet(tri.env.mmGatedOutDir).drop("batch").persist()
       g.count()
       MmEmitStreamWorld(df, tri.env, gated = Some(g), qmodel = tri.qmodel)
-    })
+    }
 
   def streamedEntries(spark: SparkSession, dir: String): DataFrame =
     streamedWorld(spark, dir).entries
@@ -368,10 +352,7 @@ object StreamingMmEmit {
     // staged-rename versioning tolerates concurrent writers by
     // design, and each face's lineage is exactly the sequential
     // composition's — determinism is untouched.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val alignedFace = Future(placeTrimodalFace(bs, env, batchId, gated, lens,
-      TrimodalOffsetsName, env.outDir))(FacePool)
+    //
     // the BIMODAL (interleaved image-caption) emission is the
     // mrank=0 projection of the same gated union — the consolidated
     // pass places it against its own offset state instead of a
@@ -379,19 +360,21 @@ object StreamingMmEmit {
     // gates were computed twice per corpus before this)
     val mmAligned = gated.filter(col("mrank") === 0)
       .select(col("doc_id"), col("shard"), col("mt").as("media_tokens"), col("text"))
-    val mmFace = Future(placeFace(bs, env, batchId, mmAligned, lens,
-      OffsetsName, env.mmOutDir))(FacePool)
-    var keeps: List[DataFrame] = Nil
-    val gatedFaces = env.quality.toSeq.flatMap { qstore =>
+    // persisted keep-sets, freed once every face has settled
+    val keeps = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    def pin(df: DataFrame): DataFrame = { keeps.add(df.persist()); df.count(); df }
+    // (transcript keep-set, trimodal keep-set): scored once, on the
+    // first gated face that needs it, while the aligned faces place
+    lazy val keepSets: (DataFrame, DataFrame) = {
+      val qstore = env.quality.get
       val model = qstore.loadProduction(bs, graft.ml.QualityModel.ModelName)
         .getOrElse(sys.error("no production quality model"))
       // ONE per-doc transcript decision drives both gated faces (the
       // caption is the shared half of every record family)
-      val tKeep = graft.ml.QualityModel.scoreClosedForm(
+      val tKeep = pin(graft.ml.QualityModel.scoreClosedForm(
         gated.select(col("doc_id"), col("text")).distinct()
           .select(col("doc_id"), split(col("text"), " ").as("toks")), model)
-        .filter(col("proba") >= 0.5).select(col("doc_id")).persist()
-      tKeep.count()
+        .filter(col("proba") >= 0.5).select(col("doc_id")))
       // the TRIMODAL gated face additionally honors the MEDIA-quality
       // model when the registry carries one: the decode-stat LR
       // (re-resolved per batch like the transcript model) drops a
@@ -400,41 +383,35 @@ object StreamingMmEmit {
       // name gates transcript-only (deployment-optional).
       val triKeep = qstore.loadProduction(bs, graft.ml.MediaQualityModel.ModelName)
         .map { mmodel =>
-          tKeep.join(graft.ml.MediaQualityModel.mediaKeepIds(
+          pin(tKeep.join(graft.ml.MediaQualityModel.mediaKeepIds(
             bs, env.dir, gated.select(col("doc_id")).distinct(), mmodel),
-            Seq("doc_id")).persist()
+            Seq("doc_id")))
         }.getOrElse(tKeep)
-      if (!(triKeep eq tKeep)) triKeep.count()
-      keeps = tKeep :: (if (triKeep eq tKeep) Nil else List(triKeep))
-      Seq(
-        Future(placeTrimodalFace(bs, env, batchId,
-          gated.join(triKeep, Seq("doc_id")), lens,
-          TrimodalGatedOffsetsName, env.gatedOutDir))(FacePool),
-        Future(placeFace(bs, env, batchId,
-          mmAligned.join(tKeep, Seq("doc_id")), lens,
-          GatedOffsetsName, env.mmGatedOutDir))(FacePool))
+      (tKeep, triKeep)
     }
-    (Seq(alignedFace, mmFace) ++ gatedFaces)
-      .foreach(Await.result(_, Duration.Inf))
-    keeps.foreach(_.unpersist())
-    // gated/lens are localCheckpoint-backed and dead once every face
-    // has landed (Await above) — free their blocks NOW instead of
-    // waiting for driver GC + ContextCleaner (unpersist() only acts
-    // on CacheManager entries; past batches' checkpoint blocks would
-    // otherwise accumulate between GC cycles on a long stream)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(lens)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(gated)
-    ()
+    val alignedFaces: Seq[() => Unit] = Seq(
+      () => placeTrimodalFace(bs, env, batchId, gated, lens,
+        TrimodalOffsetsName, env.outDir),
+      () => placeFace(bs, env, batchId, mmAligned, lens, OffsetsName, env.mmOutDir))
+    val gatedFaces: Seq[() => Unit] = if (env.quality.isEmpty) Nil else Seq(
+      () => placeTrimodalFace(bs, env, batchId,
+        gated.join(keepSets._2, Seq("doc_id")), lens,
+        TrimodalGatedOffsetsName, env.gatedOutDir),
+      () => placeFace(bs, env, batchId,
+        mmAligned.join(keepSets._1, Seq("doc_id")), lens,
+        GatedOffsetsName, env.mmGatedOutDir))
+    try StreamPools.runAll(alignedFaces ++ gatedFaces)
+    finally {
+      keeps.forEach(_.unpersist())
+      // gated/lens are localCheckpoint-backed and dead once every face
+      // has settled — free their blocks NOW instead of waiting for
+      // driver GC + ContextCleaner (unpersist() only acts on
+      // CacheManager entries; past batches' checkpoint blocks would
+      // otherwise accumulate between GC cycles on a long stream)
+      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(lens)
+      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(gated)
+    }
   }
-
-  /** Fixed 4-thread pool for concurrent face placement — one thread
-    * per face of the consolidated pass; Spark schedules the
-    * submitted jobs across the session's cores as usual. */
-  private lazy val FacePool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) => {
-        val t = new Thread(r, "graft-face-place"); t.setDaemon(true); t
-      }))
 
   /** Position + land one trimodal gate face's records for one
     * micro-batch against its own offset state. */
@@ -463,20 +440,9 @@ object StreamingMmEmit {
     ()
   }
 
-  def runTrimodalPass(spark: SparkSession, env: Env): Unit = {
-    val q = spark.readStream.schema(env.schema)
-      .option("maxFilesPerTrigger", 1).parquet(env.inDir)
-      .writeStream
-      .option("checkpointLocation", env.ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          processTrimodalBatch(Tables.normalizeDocuments(batch), batchId, env)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runTrimodalPass(spark: SparkSession, env: Env): Unit =
+    Drain.files(spark, env.schema, env.inDir, env.ckpt)((batch, batchId) =>
+      processTrimodalBatch(Tables.normalizeDocuments(batch), batchId, env))
 
   /** Full trimodal loop: land the corpus in `slices` ordered
     * arrivals, drain, return the accumulated positioned records. */
@@ -490,15 +456,14 @@ object StreamingMmEmit {
     spark.read.parquet(env.outDir).drop("batch")
   }
 
-  private val trimodalEntriesMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, MmEmitStreamWorld])
+  private val trimodalEntriesMemo = graft.SessionCaches.memo[MmEmitStreamWorld]
 
   /** ONE trimodal stream pass per (application, sf dir), memoized —
     * attributed by the `cache_warm_trimodal_stream` bench entry. Runs
     * with the PRODUCTION quality store, so it places BOTH faces per
     * micro-batch (the consolidated-pass rule). */
   private def streamedTrimodalWorld(spark: SparkSession, dir: String): MmEmitStreamWorld =
-    trimodalEntriesMemo.getOrElseUpdate(spark.sparkContext.applicationId + "#" + dir, {
+    trimodalEntriesMemo(spark, dir) {
       val qstore = graft.ml.QualityModel.productionStore(spark, dir)
       val vBefore = qstore.productionVersion(graft.ml.QualityModel.ModelName)
       val mvBefore = qstore.productionVersion(graft.ml.MediaQualityModel.ModelName)
@@ -533,7 +498,7 @@ object StreamingMmEmit {
           .getOrElse(sys.error("no production quality model")).localCheckpoint(true)),
         mqmodel = Some(qstore.loadProduction(spark, graft.ml.MediaQualityModel.ModelName)
           .getOrElse(sys.error("no production media quality model")).localCheckpoint(true)))
-    })
+    }
 
   def streamedTrimodalEntries(spark: SparkSession, dir: String): DataFrame =
     streamedTrimodalWorld(spark, dir).entries
@@ -548,14 +513,13 @@ object StreamingMmEmit {
     * by the emission twin, the shuffle twin, and the gated
     * certificate; without the cut each rep re-pays the window cut
     * over the drained entries. */
-  private val triWinMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame])
+  private val triWinMemo = graft.SessionCaches.memo[DataFrame]
 
   private[graft] def streamedTrimodalWindows(spark: SparkSession, dir: String): DataFrame =
-    triWinMemo.getOrElseUpdate(spark.sparkContext.applicationId + "#" + dir, {
+    triWinMemo(spark, dir) {
       Multimodal.trimodalEmitWindowsOf(spark, dir,
         streamedTrimodalEntries(spark, dir)).localCheckpoint(true)
-    })
+    }
 
   /** Streaming twin of `mm_trimodal_emit_ids` — same oracle: the
     * continuously-assembled THREE-MODALITY training stream must cut
@@ -595,13 +559,12 @@ object StreamingMmEmit {
     * ([[gatedCertArtifacts]]'s shape one level up):
     * `(streamedGatedWindows, streamedWindows, batchGated, expected,
     * flipSeq)`. */
-  private val trimodalGatedCertMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap
-      .empty[String, (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame)])
+  private val trimodalGatedCertMemo = graft.SessionCaches.memo[
+    (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame)]
 
   private def trimodalGatedCertArtifacts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) =
-    trimodalGatedCertMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    trimodalGatedCertMemo(s, dir) {
       val world = streamedTrimodalWorld(s, dir)
       def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
       val sg = pin(Multimodal.trimodalEmitWindowsOf(s, dir,
@@ -656,7 +619,7 @@ object StreamingMmEmit {
         .join(expected.filter(!col("expected_keep")).select(col("doc_id")), Seq("doc_id"))
         .groupBy(col("shard")).agg(min(floor(col("start_off") / 2048)).as("flip_seq")))
       (sg, sa, batchGated, expected, flipSeq)
-    })
+    }
 
   /** THE LEARNED GATES DRIVING THE THREE-MODALITY RELEASE — the
     * [[streamMmEmitGated]] certificate one level up, now a TWO-FILTER
@@ -826,15 +789,14 @@ object StreamingMmEmit {
     * release artifacts, memoized + lineage-cut once per session (the
     * text gate's gatedCertArtifacts rule): per bench rep the
     * certificate pays only the comparison joins. */
-  private val gatedCertMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap
-      .empty[String, (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame)])
+  private val gatedCertMemo = graft.SessionCaches.memo[
+    (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame)]
 
   /** `(streamedGatedWindows, streamedAlignedWindows, batchGated,
     * expected, flipSeq)`. */
   private def gatedCertArtifacts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) =
-    gatedCertMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    gatedCertMemo(s, dir) {
       val world = streamedWorld(s, dir)
       def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
       val sg = pin(Multimodal.mmEmitWindows(s, dir,
@@ -864,7 +826,7 @@ object StreamingMmEmit {
         .join(expected.filter(!col("expected_keep")).select(col("doc_id")), Seq("doc_id"))
         .groupBy(col("shard")).agg(min(floor(col("start_off") / 2048)).as("flip_seq")))
       (sg, sa, batchGated, expected, flipSeq)
-    })
+    }
 
   /** THE LEARNED GATE DRIVING THE MULTIMODAL EMISSION — the text
     * gate's active-deployment certificate one modality up
@@ -1077,12 +1039,11 @@ object StreamingMmEmit {
     def reapRoots: Seq[String] = env.reapRoots
   }
 
-  private val triForgetStreamMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, TrimodalStreamForgetWorld])
+  private val triForgetStreamMemo = graft.SessionCaches.memo[TrimodalStreamForgetWorld]
 
   private[graft] def trimodalStreamForgetWorld(s: SparkSession,
       dir: String): TrimodalStreamForgetWorld =
-    triForgetStreamMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    triForgetStreamMemo(s, dir) {
       import graft.multimodal.Multimodal.{TakedownMod, TakedownResidue}
       val docs = Tables.documents(s, dir)
       // the SAME exact integer midpoint the series world cuts at, so
@@ -1141,7 +1102,7 @@ object StreamingMmEmit {
             .localCheckpoint(true),
           affectedShards = affected, rewriteJobs = rewriteJobCount)
       }
-    })
+    }
 
   /** Bench warm hook: the two-phase drain + mid-stream rewrite,
     * attributed once. */
@@ -1263,8 +1224,7 @@ object StreamingMmEmit {
 
   val SeriesWindowsName = "trimodal_release_windows"
 
-  private val triSeriesMemo = graft.SessionCaches.register(
-    scala.collection.concurrent.TrieMap.empty[String, TrimodalSeriesWorld])
+  private val triSeriesMemo = graft.SessionCaches.memo[TrimodalSeriesWorld]
 
   /** Installed phase-1 batches get ids shifted out of a fresh
     * checkpoint's id space, so the resumed pass's batch 0.. neither
@@ -1275,7 +1235,7 @@ object StreamingMmEmit {
 
   private[graft] def trimodalSeriesWorld(s: SparkSession,
       dir: String): TrimodalSeriesWorld =
-    triSeriesMemo.getOrElseUpdate(s.sparkContext.applicationId + "#" + dir, {
+    triSeriesMemo(s, dir) {
       val docs = Tables.documents(s, dir)
       // DERIVE phase 1 from the live-takedown world's pre-forget pins
       // instead of draining the same half corpus through a second
@@ -1315,7 +1275,7 @@ object StreamingMmEmit {
       val v1Readable =
         env.store.load(s, SeriesWindowsName, v1Ver).count() == v1w.count()
       TrimodalSeriesWorld(env, mid, v1w, v2w, v1Ver, v2Ver, v1Readable)
-    })
+    }
 
   /** Bench warm hook: the two-phase drain + both publications,
     * attributed once. */

@@ -6,7 +6,6 @@ import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The SCD Type-2 dimension MAINTAINED INCREMENTALLY — the Delta
   * Live Tables / dbt-snapshot feature: events arrive in
@@ -113,19 +112,9 @@ object StreamingScd2 {
     ()
   }
 
-  def runPass(spark: SparkSession, env: Env): Unit = {
-    val q = spark.readStream.schema(env.schema)
-      .option("maxFilesPerTrigger", 1).parquet(env.inDir)
-      .writeStream
-      .option("checkpointLocation", env.ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(Tables.normalizeEvents(batch), batchId, env)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runPass(spark: SparkSession, env: Env): Unit =
+    Drain.files(spark, env.schema, env.inDir, env.ckpt)((batch, batchId) =>
+      processBatch(Tables.normalizeEvents(batch), batchId, env))
 
   /** Immutable closed history + the final open rows = the full
     * dimension, identical to the batch build. */

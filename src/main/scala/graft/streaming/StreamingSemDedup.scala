@@ -5,7 +5,6 @@ import graft.queries.Kmeans
 import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** SemDeDup OPERATED CONTINUOUSLY — incremental semantic dedup the
   * way a serving ingest runs it: vectors arrive in micro-batches,
@@ -80,20 +79,9 @@ object StreamingSemDedup {
     ()
   }
 
-  def runPass(spark: SparkSession, env: Env): Unit = {
-    val q = spark.readStream.schema(env.schema)
-      .option("maxFilesPerTrigger", 1).parquet(env.inDir)
-      .writeStream
-      .option("checkpointLocation", env.ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          processBatch(Tables.normalizeEmbeddings(batch), batchId, env)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runPass(spark: SparkSession, env: Env): Unit =
+    Drain.files(spark, env.schema, env.inDir, env.ckpt)((batch, batchId) =>
+      processBatch(Tables.normalizeEmbeddings(batch), batchId, env))
 
   def runSemDedupStream(spark: SparkSession, dir: String, slices: Int = 3): DataFrame = {
     val env = prepare(spark, dir)

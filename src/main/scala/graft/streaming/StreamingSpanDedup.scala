@@ -6,7 +6,6 @@ import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The ExactSubstr span filter OPERATED CONTINUOUSLY — the prefix
   * semantics of `text_dedup_spans_prefix` decided at arrival: a
@@ -68,19 +67,9 @@ object StreamingSpanDedup {
     ()
   }
 
-  def runPass(spark: SparkSession, env: Env): Unit = {
-    val q = spark.readStream.schema(env.schema)
-      .option("maxFilesPerTrigger", 1).parquet(env.inDir)
-      .writeStream
-      .option("checkpointLocation", env.ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(Tables.normalizeDocuments(batch), batchId, env)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runPass(spark: SparkSession, env: Env): Unit =
+    Drain.files(spark, env.schema, env.inDir, env.ckpt)((batch, batchId) =>
+      processBatch(Tables.normalizeDocuments(batch), batchId, env))
 
   def runSpanDedupStream(spark: SparkSession, dir: String, slices: Int = 3): DataFrame = {
     val env = prepare(spark, dir)

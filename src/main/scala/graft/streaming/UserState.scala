@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom keyed state over the event stream (`mapGroupsWithState`) —
   * the stateful-processing capability class the reference keeps in
@@ -78,13 +78,9 @@ object UserState {
     val profiles = events
       .groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout())(updateProfile)
-    val q = profiles.writeStream
+    Drain.run(profiles.writeStream
       .outputMode(OutputMode.Update())
-      .format("memory").queryName("graft_user_profiles")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .format("memory").queryName("graft_user_profiles"), ckpt)
     finalProfiles(spark, "graft_user_profiles")
   }
 }

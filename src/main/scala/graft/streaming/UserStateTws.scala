@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues,
-  Trigger, TTLConfig, ValueState}
+  TTLConfig, ValueState}
 
 /** The [[UserState]] per-user profile on `transformWithState` — the
   * arbitrary-state API that supersedes `mapGroupsWithState` (typed
@@ -60,13 +60,9 @@ object UserStateTws {
       val profiles = events
         .groupByKey(_.user_id)
         .transformWithState(new ProfileProcessor, TimeMode.None(), OutputMode.Update())
-      val q = profiles.writeStream
+      Drain.run(profiles.writeStream
         .outputMode(OutputMode.Update())
-        .format("memory").queryName("graft_user_profiles_tws")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .format("memory").queryName("graft_user_profiles_tws"), ckpt)
       UserState.finalProfiles(spark, "graft_user_profiles_tws")
     } finally {
       prev match {

@@ -63,6 +63,11 @@ object Bridge {
     }
   }
 
+  /** Whether `df` is a direct `localCheckpoint` result — the only
+    * frames [[unpersistLocalCheckpoint]] accepts. */
+  def isLocalCheckpoint(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+
   /** Explicitly release the cached RDD blocks behind a
     * `localCheckpoint(true)`-pinned DataFrame at a known lifecycle
     * point (end of micro-batch). Relying on driver GC +

@@ -38,49 +38,66 @@ class SessionCachesSpec extends SparkSpec {
   }
 
   test("evict of a path-prefix sibling dir never cross-evicts (/x/corpus vs /x/corpus-v2)") {
-    import scala.collection.concurrent.TrieMap
-    val memo = SessionCaches.register(TrieMap.empty[String, String])
-    val app = spark.sparkContext.applicationId
-    memo.put(app + "#/x/corpus", "a")
-    memo.put(app + "#/x/corpus-v2", "b")
-    memo.put(app + "#/data/x/corpus", "c")
+    val memo = SessionCaches.memo[String]
+    memo.put(spark, "/x/corpus")("a")
+    memo.put(spark, "/x/corpus-v2")("b")
+    memo.put(spark, "/data/x/corpus")("c")
     // plan-text style key embedding the path, bounded by delimiters
-    memo.put("plan:[file:/x/corpus/documents.parquet]", "d")
+    memo.keyed("plan:[file:/x/corpus/documents.parquet]")("d")
     assert(SessionCaches.evict(spark, "/x/corpus") == 2,
       "exact key + bounded plan-text key only")
-    assert(memo.keySet == Set(app + "#/x/corpus-v2", app + "#/data/x/corpus"),
+    assert(!memo.contains(spark, "/x/corpus"))
+    assert(memo.contains(spark, "/x/corpus-v2") && memo.contains(spark, "/data/x/corpus"),
       "prefix-related sibling dirs must stay warm")
-    memo.clear()
+    assert(memo.keyed("plan:[file:/x/corpus/documents.parquet]")("rebuilt") == "rebuilt")
   }
 
   test("evict deletes an engine-temp artifact store's directory, never a caller-owned root") {
-    import scala.collection.concurrent.TrieMap
-    val memo = SessionCaches.register(TrieMap.empty[String, graft.sources.FrameStore])
-    val app = spark.sparkContext.applicationId
+    val memo = SessionCaches.memo[graft.sources.FrameStore]
     val tmpRoot = java.nio.file.Files.createTempDirectory("graft-evict-store-")
     val store = new graft.sources.FrameStore(tmpRoot.toString)
     import spark.implicits._
     store.promote("x", store.register(spark, "x", Seq(1L).toDF("v")))
-    memo.put(app + "#/evict/store/ds", store)
+    memo.put(spark, "/evict/store/ds")(store)
     assert(SessionCaches.evict(spark, "/evict/store/ds") == 1)
     assert(!java.nio.file.Files.exists(tmpRoot),
       "temp-rooted store dir must be reaped on eviction")
-    memo.clear()
   }
 
   test("evict reaps a Reapable composite's declared temp roots") {
-    import scala.collection.concurrent.TrieMap
     case class Fake(root: String) extends Reapable {
       def reapRoots: Seq[String] = Seq(root)
     }
-    val memo = SessionCaches.register(TrieMap.empty[String, Fake])
-    val app = spark.sparkContext.applicationId
+    val memo = SessionCaches.memo[Fake]
     val tmp = java.nio.file.Files.createTempDirectory("graft-reap-")
     java.nio.file.Files.writeString(tmp.resolve("landed.parquet"), "x")
-    memo.put(app + "#/reap/ds", Fake(tmp.toString))
+    memo.put(spark, "/reap/ds")(Fake(tmp.toString))
     assert(SessionCaches.evict(spark, "/reap/ds") == 1)
     assert(!java.nio.file.Files.exists(tmp),
       "a Reapable's declared roots must be deleted on eviction")
-    memo.clear()
+  }
+
+  test("evict frees a memoized localCheckpoint pin's blocks") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val memo = SessionCaches.memo[org.apache.spark.sql.DataFrame]
+    memo(spark, "/evict/pin/ds")(spark.range(1000).toDF("id").localCheckpoint(true))
+    val pins = persisted -- before
+    assert(pins.nonEmpty, "localCheckpoint(true) must pin an RDD")
+    assert(SessionCaches.evict(spark, "/evict/pin/ds") == 1)
+    assert((pins & persisted).isEmpty,
+      s"evict must free the pin's RDD, still persisted: ${pins & persisted}")
+  }
+
+  test("evicting a dataset unpersists AnnCert's exact-kNN side") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    SessionCaches.evict(spark, sf) // start cold: another suite may have warmed it
+    val before = persisted
+    graft.queries.AnnCert.warmExactKnn(spark, sf)
+    val pins = persisted -- before
+    assert(pins.nonEmpty, "warmExactKnn must persist the exact side")
+    assert(SessionCaches.evict(spark, sf) >= 1)
+    assert((pins & persisted).isEmpty,
+      s"evict must unpersist the exact-kNN frame, still persisted: ${pins & persisted}")
   }
 }
