@@ -87,8 +87,8 @@ object DedupGraph {
     //    INHERITS the origin plan's size ESTIMATE (originStats), and
     //    estimates multiply through the round's joins — the
     //    sizeInBytes BigInt's bit-length grows geometrically,
-    //    31 -> 141 -> 579 -> 2334 -> 9350 bits over five rounds
-    //    (graft.dev.StatsProbe), until join-stats products burn
+    //    31 -> 141 -> 579 -> 2334 -> 9350 bits over five rounds,
+    //    until join-stats products burn
     //    minutes of driver CPU and the loop looks hung.
     //  - RDD-level localCheckpoint + a fresh leaf DataFrame over the
     //    checkpointed rows (this code): the new plan is a LEAF with

@@ -32,16 +32,17 @@ object Bridge {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
-  /** Dev-probe support: per-NODE metrics of the slowest completed SQL
-    * executions from the session's status store — the attribution
-    * level below DrainProbe2's per-execution task sums (a foreachBatch
-    * drain's decision write is ONE execution; this shows which
-    * operator inside it carries the time). Returns printable lines. */
-  def sqlNodeMetricLines(spark: SparkSession, topExec: Int): Seq[String] = {
+  /** Dev-probe support: per-NODE metrics of the `topExec` slowest
+    * completed SQL executions among `execIds`, from the session's
+    * status store — the attribution level below per-execution task
+    * sums (a foreachBatch drain's decision write is ONE execution;
+    * this shows which operator inside it carries the time). Returns
+    * printable lines. */
+  def sqlNodeMetricLines(spark: SparkSession, execIds: Set[Long], topExec: Int): Seq[String] = {
     val store = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.statusStore
     val execs = store.executionsList()
-      .filter(_.completionTime.isDefined)
+      .filter(e => e.completionTime.isDefined && execIds.contains(e.executionId))
       .sortBy(e => -(e.completionTime.get.getTime - e.submissionTime))
       .take(topExec)
     execs.flatMap { e =>

@@ -3,9 +3,11 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 /** Each repeated mechanism has one owner: the bounded stream drain
-  * (`Drain`), the batch-action pool (`StreamPools`) and the memo key
-  * format (`SessionCaches`). A copy of one outside its owner fails
-  * here, so the mechanisms do not fork again. */
+  * (`Drain`), the batch-action pool (`StreamPools`), the memo key
+  * format (`SessionCaches`), the session builder (`GraftSession`) and
+  * the runnable mains (the driver contract, the daily jobs and the one
+  * dev `Probe`). A copy of one outside its owners fails here, so the
+  * mechanisms and the one-off probe mains do not fork again. */
 class OwnershipSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -17,9 +19,9 @@ class OwnershipSpec extends org.scalatest.funsuite.AnyFunSuite {
     }
   }
 
-  // "File.scala:line" for each line holding `needle`, outside `owner`
-  private def copiesOf(needle: String, owner: String): Seq[String] =
-    sources.filterNot(_.getFileName.toString == owner).flatMap { p =>
+  // "File.scala:line" for each line holding `needle`, outside the `owners`
+  private def copiesOf(needle: String, owners: Set[String]): Seq[String] =
+    sources.filterNot(p => owners(p.getFileName.toString)).flatMap { p =>
       Files.readAllLines(p).toArray(Array.empty[String]).toSeq.zipWithIndex.collect {
         case (line, i) if line.contains(needle) => s"${root.relativize(p)}:${i + 1}"
       }
@@ -29,13 +31,15 @@ class OwnershipSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(Files.isDirectory(root) && sources.exists(_.endsWith("graft/SessionCaches.scala")))
   }
 
-  for ((needle, owner) <- Seq(
-      "Trigger.AvailableNow" -> "Drain.scala",
-      "newFixedThreadPool" -> "StreamPools.scala",
-      "SessionCaches.register" -> "SessionCaches.scala",
-      "applicationId + \"#\"" -> "SessionCaches.scala"))
-    test(s"`$needle` appears only in $owner") {
-      val copies = copiesOf(needle, owner)
-      assert(copies.isEmpty, s"copies outside $owner: ${copies.mkString(", ")}")
+  for ((needle, owners) <- Seq(
+      "Trigger.AvailableNow" -> Set("Drain.scala"),
+      "newFixedThreadPool" -> Set("StreamPools.scala"),
+      "SessionCaches.register" -> Set("SessionCaches.scala"),
+      "applicationId + \"#\"" -> Set("SessionCaches.scala"),
+      "SparkSession.builder()" -> Set("GraftSession.scala"),
+      "def main(" -> Set("Verify.scala", "Bench.scala", "Jobs.scala", "Probe.scala")))
+    test(s"`$needle` appears only in ${owners.mkString(", ")}") {
+      val copies = copiesOf(needle, owners)
+      assert(copies.isEmpty, s"copies outside ${owners.mkString(", ")}: ${copies.mkString(", ")}")
     }
 }
