@@ -10,9 +10,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   *
   * Injects the native functions into the FunctionRegistry, the
   * [[graft.plans.TopKPerKeyStrategy]] planner strategy, and the
-  * [[graft.plans.WindowTopKRewrite]] optimizer rule at session build
-  * time. [[GraftSession.attach]] remains the programmatic equivalent
-  * for an already-built session.
+  * [[graft.plans.WindowTopKRewrite]] and [[graft.plans.FooterMinMax]]
+  * optimizer rules at session build time. [[GraftSession.attach]]
+  * remains the programmatic equivalent for an already-built session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -20,5 +20,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     graft.functions.GraftFunctions.descriptions.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
     ext.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)
+    ext.injectOptimizerRule(_ => graft.plans.FooterMinMax)
   }
 }

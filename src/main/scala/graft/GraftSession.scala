@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * tuned defaults (UTC, AQE with skew handling, right-sized shuffle
   * partitions for the target cluster), the native functions
   * (`graft_fingerprint64`, `graft_cosine`, `graft_auc`) registered,
-  * and the custom planner strategy installed. A user of the reference
-  * system starts here and has every query surface available.
+  * and the custom planner strategy and optimizer rules installed. A
+  * user of the reference system starts here and has every query
+  * surface available.
   */
 object GraftSession {
 
@@ -28,7 +29,7 @@ object GraftSession {
     spark
   }
 
-  /** Install graft's functions, strategy, and optimizer rule on an
+  /** Install graft's functions, strategy, and optimizer rules on an
     * existing session. */
   def attach(spark: SparkSession): SparkSession = {
     graft.functions.GraftFunctions.register(spark)
@@ -36,10 +37,9 @@ object GraftSession {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
     }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.WindowTopKRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.WindowTopKRewrite
-    }
+    val installed = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = installed ++
+      Seq(graft.plans.WindowTopKRewrite, graft.plans.FooterMinMax).filterNot(installed.contains)
     spark
   }
 }

@@ -32,13 +32,12 @@ object Jobs {
   /** One cron firing of compute-daily-metrics: full deterministic
     * recompute of the rollup (the reference recomputes today and
     * upserts; recompute-then-merge keyed by day subsumes it) pushed
-    * through the same MERGE body the streaming sink uses. Returns
-    * the store contents after the merge. */
+    * through the same MERGE body the streaming sink uses; the merge
+    * is keyed by day, so the staged rollup is not sorted. Returns the
+    * store contents after the merge, by day. */
   def dailyMetricsTick(spark: SparkSession, dir: String, url: String): DataFrame = {
     JdbcMetricsSink.upsertDailyMetrics(
-      FraudAnalytics.dailyMetrics.fn(spark, dir)
-        .select(col("day"), col("num_predictions"), col("fraud_rate"),
-          col("avg_amount"), col("avg_proba")), url)
+      FraudAnalytics.dailyRollup(Tables.events(spark, dir)), url)
     spark.read.jdbc(url, JdbcMetricsSink.Table, new java.util.Properties)
       .orderBy(col("day"))
   }

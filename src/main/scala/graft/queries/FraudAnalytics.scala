@@ -23,9 +23,12 @@ import org.apache.spark.sql.types.DecimalType
   * arithmetic (no UDF, no shuffle): at 100 TB it is an
   * embarrassingly-parallel map over scan partitions inside one
   * WholeStageCodegen stage. Time-anchored predicates compare `ts`
-  * with a scalar subquery on `max(ts)` (never a driver-side collect)
-  * and filter before scoring, so `from_json(props)` runs only on the
-  * rows inside the window.
+  * with a scalar subquery on `max(ts)` and filter before scoring, so
+  * `from_json(props)` runs only on the rows inside the window. On a
+  * parquet scan the [[graft.plans.FooterMinMax]] rule answers that
+  * anchor from the files' footers and folds it into the filter as a
+  * literal, so no job computes it; on any other source (a stream's
+  * micro-batch, a filtered or cached frame) the scan answers it.
   */
 object FraudAnalytics {
 
@@ -109,7 +112,13 @@ object FraudAnalytics {
     * the reference's `NOW()` predicates. A predicate on it stays a
     * plain filter on `ts`, so it can sit below the scoring projection
     * (a cross join with the 1-row aggregate would pin it above). NULL
-    * on an empty table, where every window is empty. */
+    * on an empty table, where every window is empty.
+    *
+    * Over an unfiltered parquet table, as every [[Tables.events]]
+    * caller has, [[graft.plans.FooterMinMax]] answers it from the
+    * row-group statistics on the driver (the analog of the
+    * reference's `event_time` btree, `init.sql:19-21`); elsewhere, or
+    * when a footer lacks statistics, the scan and its aggregate do. */
   def anchorTs(events: DataFrame): Column = events.agg(max(col("ts"))).scalar()
 
   /** The rows of `events` inside the trailing `interval` (an interval
@@ -189,15 +198,20 @@ object FraudAnalytics {
        |       ROUND(AVG(value), 6) AS avg_amount,
        |       ROUND(AVG(proba), 6) AS avg_proba
        |FROM s GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    scored(Tables.events(s, dir))
+    dailyRollup(Tables.events(s, dir)).orderBy(col("day"))
+  }
+
+  /** The rows of [[dailyMetrics]] in no order — what a MERGE keyed by
+    * `day` stages ([[graft.jobs.Jobs.dailyMetricsTick]]), which needs
+    * no sort. */
+  def dailyRollup(events: DataFrame): DataFrame =
+    scored(events)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(
         count(lit(1)).as("num_predictions"),
         r6(avg(col("prediction").cast("double"))).as("fraud_rate"),
         r6(avg(col("value"))).as("avg_amount"),
         r6(avg(col("proba"))).as("avg_proba"))
-      .orderBy(col("day"))
-  }
 
   // ---------------------------------------------------------------- M3/P3/P4
   /** Row-level scoring output — the streaming micro-batch body as a

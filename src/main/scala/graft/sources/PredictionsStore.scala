@@ -26,6 +26,8 @@ import org.apache.spark.sql.functions._
   *
   * Dynamic partition overwrite gives the idempotent
   * recompute-today's-partition upsert (A2) without row-level merge.
+  * It is set on the write, not the session, so a later static
+  * overwrite elsewhere in the session still replaces its whole path.
   */
 object PredictionsStore {
 
@@ -45,16 +47,17 @@ object PredictionsStore {
     * leaves it None and inherits the 128 MiB default. */
   def write(scored: DataFrame, path: String, mode: String = "overwrite",
       blockSizeBytes: Option[Long] = None): Unit = {
-    scored.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // INT96 (the legacy default) carries NO min/max statistics, which
     // silently disables every ts-range row-group prune; INT64 micros
-    // is the annotated type with stats and predicate pushdown.
+    // is the annotated type with stats and predicate pushdown. The
+    // parquet writer reads this only from the session conf.
     scored.sparkSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     val w = scored
       .withColumn("day", to_date(col("ts")))
       .repartition(col("day"))
       .sortWithinPartitions(col("day"), col("ts"))
       .write.mode(mode).partitionBy("day")
+      .option("partitionOverwriteMode", "dynamic")
     blockSizeBytes.fold(w)(b =>
       w.option("parquet.block.size", b.toString)
         .option("parquet.page.size", math.max(1024L, b / 4).toString))

@@ -82,7 +82,6 @@ object ScoringStream {
   def runDailyMetricsStream(spark: SparkSession, dir: String): DataFrame = {
     val ckpt  = Files.createTempDirectory("graft-ckpt-").toString
     val store = Files.createTempDirectory("graft-daily-store-").toString
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // ~30 daily groups: a handful of state-store partitions beats the
     // session default (one state store instance per shuffle
     // partition, each with checkpoint + commit overhead per batch).
@@ -128,7 +127,8 @@ object ScoringStream {
         // update set is one row per touched day (~30 here; bounded by
         // days-per-batch at any scale), so collapse to one write task
         // instead of fanning 30 rows across every core.
-        batch.coalesce(1).write.mode("overwrite").partitionBy("day").parquet(store)
+        batch.coalesce(1).write.mode("overwrite").partitionBy("day")
+          .option("partitionOverwriteMode", "dynamic").parquet(store)
         ()
       }, ckpt)
     spark.read.parquet(store)

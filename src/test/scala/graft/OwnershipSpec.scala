@@ -42,4 +42,10 @@ class OwnershipSpec extends org.scalatest.funsuite.AnyFunSuite {
       val copies = copiesOf(needle, owners)
       assert(copies.isEmpty, s"copies outside ${owners.mkString(", ")}: ${copies.mkString(", ")}")
     }
+
+  test("no source sets partitionOverwriteMode on the session, only on the write that needs it") {
+    val copies = Seq("spark.sql.sources.partitionOverwriteMode", "PARTITION_OVERWRITE_MODE")
+      .flatMap(copiesOf(_, Set.empty))
+    assert(copies.isEmpty, s"session-wide partitionOverwriteMode at ${copies.mkString(", ")}")
+  }
 }

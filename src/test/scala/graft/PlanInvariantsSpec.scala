@@ -93,6 +93,44 @@ class PlanInvariantsSpec extends SparkSpec {
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"), plan)
   }
 
+  test("trailing-window anchors come from parquet footers: no max(ts) scan, two fewer jobs") {
+    // Runs on the graft-extended session; the JSON-parse invariant
+    // below then holds with the footer rule in the plans as well.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Max
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.graftbridge.Bridge
+    GraftSession.attach(spark)
+    def maxOverParquet(df: DataFrame): Seq[Aggregate] =
+      df.queryExecution.optimizedPlan.collectWithSubqueries {
+        case a: Aggregate if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[Max])) &&
+            a.exists {
+              case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
+              case _                  => false
+            } => a
+      }
+    def jobs(name: String): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+      }
+      Bridge.drainListenerBus(spark)
+      spark.sparkContext.addSparkListener(l)
+      try { SparkEntry.queries(name)(spark, sf).collect(); Bridge.drainListenerBus(spark); n.get }
+      finally spark.sparkContext.removeSparkListener(l)
+    }
+    for (name <- Seq("fraud_hourly_stats", "fraud_rate_bound_1h", "fraud_freshness_15m",
+                     "fraud_dq_report")) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      assert(maxOverParquet(df).isEmpty, s"$name:\n${df.queryExecution.optimizedPlan}")
+      val fromFooters = jobs(name)
+      spark.conf.set("spark.graft.footerMinMax.enabled", "false")
+      val fromScan = try jobs(name) finally spark.conf.unset("spark.graft.footerMinMax.enabled")
+      assert(fromScan - fromFooters == 2, s"$name: $fromScan jobs with the scan, $fromFooters with footers")
+    }
+  }
+
   test("trailing-window fraud panels filter on ts before any JSON parse, never a nested loop") {
     import org.apache.spark.sql.catalyst.expressions.JsonToStructs
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}

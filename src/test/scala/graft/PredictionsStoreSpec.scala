@@ -79,4 +79,18 @@ class PredictionsStoreSpec extends SparkSpec {
     val expectedOthers = scored.filter(to_date(col("ts")) =!= "2024-01-05").count()
     assert(after.filter(col("day") =!= "2024-01-05").count() == expectedOthers)
   }
+
+  test("the store's dynamic overwrite stays on its write: a later static overwrite replaces every partition") {
+    spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    val base = Files.createTempDirectory("graft-store-").toString
+    val scored = FraudAnalytics.scored(Tables.events(spark, sf))
+      .select("event_id", "ts", "value", "proba", "prediction")
+    PredictionsStore.write(scored.limit(20), s"$base/predictions", "append")
+    import spark.implicits._
+    val other = s"$base/static"
+    Seq((1, "a"), (2, "b")).toDF("v", "p").write.mode("overwrite").partitionBy("p").parquet(other)
+    Seq((3, "a")).toDF("v", "p").write.mode("overwrite").partitionBy("p").parquet(other)
+    val after = spark.read.parquet(other).collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(after == Seq((3, "a")), "the static overwrite kept partitions it did not write")
+  }
 }
