@@ -6,7 +6,7 @@ import scala.util.control.NonFatal
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.LogicalTypeAnnotation.{IntLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.catalyst.InternalRow
@@ -57,8 +57,7 @@ import org.apache.spark.sql.types._
   * Spark's `OptimizeOneRowRelationSubquery` then folds into the outer
   * plan as a literal; elsewhere it is a one-row `LocalRelation`,
   * which collects without a job. Installed by
-  * [[graft.GraftSession.attach]] and [[graft.GraftExtensions]]. Kill
-  * switch: `spark.graft.footerMinMax.enabled=false`.
+  * [[graft.GraftSession.attach]] and [[graft.GraftExtensions]].
   */
 object FooterMinMax extends Rule[LogicalPlan] {
 
@@ -67,8 +66,7 @@ object FooterMinMax extends Rule[LogicalPlan] {
   private val NoRebaseMicros = -2208988800000000L
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString("spark.graft.footerMinMax.enabled", "true").toBoolean) plan
-    else plan.transformUpWithPruning(_.containsPattern(AGGREGATE)) {
+    plan.transformUpWithPruning(_.containsPattern(AGGREGATE)) {
       case agg: Aggregate if agg.groupingExpressions.isEmpty =>
         rewrite(agg, inSubquery = plan.isInstanceOf[Subquery]).getOrElse(agg)
     }
@@ -162,12 +160,11 @@ object FooterMinMax extends Rule[LogicalPlan] {
           HadoopInputFile.fromStatus(f.fileStatus, hconf), ParquetMetadataConverter.NO_FILTER)
         val fields = footer.getFileMetaData.getSchema.getFields.asScala.toSeq
           .filter(t => conf.resolver(t.getName, col.name))
-          .map(t => t -> Option.when(t.isPrimitive)(t.asPrimitiveType).flatMap(scaleOf(_, col.dataType)))
         fields match {
-          case Seq((t, Some(scale))) =>
+          case Seq(t) if t.isPrimitive && readsAsIs(t.asPrimitiveType, col.dataType) =>
             footer.getBlocks.asScala.toSeq.filter(_.getRowCount > 0).map { rg =>
               rg.getColumns.asScala.find(c => c.getPath.size == 1 && c.getPath.toArray.head == t.getName)
-                .flatMap(chunkRange(_, scale))
+                .flatMap(chunkRange)
             }
           case _ => Seq(None)
         }
@@ -186,31 +183,25 @@ object FooterMinMax extends Rule[LogicalPlan] {
 
   /** A chunk's `Some(range)`, `Some(None)` when it holds only nulls,
     * `None` when it holds values without a min/max. */
-  private def chunkRange(c: ColumnChunkMetaData, scale: Long => Long): Option[Option[(Long, Long)]] = {
+  private def chunkRange(c: ColumnChunkMetaData): Option[Option[(Long, Long)]] = {
     val s: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
     if (s != null && s.hasNonNullValue)
-      Some(Some((scale(s.genericGetMin.asInstanceOf[java.lang.Long]),
-        scale(s.genericGetMax.asInstanceOf[java.lang.Long]))))
+      Some(Some((s.genericGetMin.asInstanceOf[java.lang.Long].longValue,
+        s.genericGetMax.asInstanceOf[java.lang.Long].longValue)))
     else if (s != null && s.isNumNullsSet && s.getNumNulls == c.getValueCount) Some(None)
     else None
   }
 
-  /** How a stored INT64 maps to Spark's value of `dt`, for the
-    * physical/logical type pairs Spark reads without conversion or
-    * with a fixed unit scale. */
-  private def scaleOf(t: PrimitiveType, dt: DataType): Option[Long => Long] =
-    if (t.getPrimitiveTypeName != PrimitiveTypeName.INT64) None
-    else (t.getLogicalTypeAnnotation, dt) match {
-      case (null, LongType) => Some(identity)
-      case (i: IntLogicalTypeAnnotation, LongType) if i.isSigned && i.getBitWidth == 64 => Some(identity)
-      case (ts: TimestampLogicalTypeAnnotation, LongType) if ts.getUnit == TimeUnit.NANOS => Some(identity)
-      case (ts: TimestampLogicalTypeAnnotation, TimestampType | TimestampNTZType)
-          if ts.isAdjustedToUTC == (dt == TimestampType) =>
-        ts.getUnit match {
-          case TimeUnit.MICROS => Some(identity)
-          case TimeUnit.MILLIS => Some(Math.multiplyExact(_: Long, 1000L))
-          case _               => None
-        }
-      case _ => None
-    }
+  /** Whether Spark reads the stored INT64 `t` as `dt` unchanged: a
+    * plain or nanos-timestamp INT64 as a long, a micros timestamp as
+    * the timestamp type of its UTC adjustment. Other units and
+    * annotations are left to the scan. */
+  private def readsAsIs(t: PrimitiveType, dt: DataType): Boolean =
+    t.getPrimitiveTypeName == PrimitiveTypeName.INT64 && ((t.getLogicalTypeAnnotation, dt) match {
+      case (null, LongType) => true
+      case (ts: TimestampLogicalTypeAnnotation, LongType) => ts.getUnit == TimeUnit.NANOS
+      case (ts: TimestampLogicalTypeAnnotation, TimestampType | TimestampNTZType) =>
+        ts.getUnit == TimeUnit.MICROS && ts.isAdjustedToUTC == (dt == TimestampType)
+      case _ => false
+    })
 }

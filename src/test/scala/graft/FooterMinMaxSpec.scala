@@ -17,12 +17,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** [[FooterMinMax]] answers `max`/`min` from parquet footers. Wherever
-  * it fires it must return exactly the scan's answer (the rule's kill
-  * switch gives the scan's); where the footers cannot answer, or the
+  * it fires it must return exactly the scan's answer (the session
+  * without the rule gives the scan's); where the footers cannot answer, or the
   * plan is not one it may rewrite, the plan must stay as it was. */
 class FooterMinMaxSpec extends SparkSpec {
-
-  private val Switch = "spark.graft.footerMinMax.enabled"
 
   private def withConf[A](kvs: (String, String)*)(body: => A): A = {
     val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -46,13 +44,13 @@ class FooterMinMaxSpec extends SparkSpec {
     }) => a
   }
 
-  /** `df`'s rows with the rule on, and the scan's rows with it off;
+  /** `df`'s rows with the rule, and the scan's rows without it;
     * and whether the rule left a max/min aggregate in the plan. */
   private def onOff(df: => DataFrame): (Seq[Row], Seq[Row], Boolean) = {
     GraftSession.attach(spark)
     val on = df
     val rows = on.collect().toSeq
-    (rows, withConf(Switch -> "false")(df.collect().toSeq),
+    (rows, withoutFooterMinMax(df.collect().toSeq),
       extrema(on.queryExecution.optimizedPlan).nonEmpty)
   }
 
@@ -73,7 +71,7 @@ class FooterMinMaxSpec extends SparkSpec {
   /** The rule, applied directly to `df`'s plan optimized without it,
     * returns that plan unchanged. */
   private def leftAlone(df: => DataFrame): Unit = {
-    val p = withConf(Switch -> "false")(df.queryExecution.optimizedPlan)
+    val p = withoutFooterMinMax(df.queryExecution.optimizedPlan)
     assert(extrema(p).nonEmpty, p)
     assert(FooterMinMax(p) == p, p)
   }
@@ -139,17 +137,15 @@ class FooterMinMaxSpec extends SparkSpec {
     assert(lo.toInstant == Instant.parse("2024-01-01T00:00:00.000001Z"))
   }
 
-  test("min(ts) answers from TIMESTAMP_MILLIS and TIMESTAMP_MICROS footers alike") {
+  test("min(ts) answers from TIMESTAMP_MICROS footers") {
     val ltz = StructType(Seq(StructField("ts", TimestampType)))
-    for (unit <- Seq("TIMESTAMP_MILLIS", "TIMESTAMP_MICROS")) {
-      val dir = table()
-      withConf("spark.sql.parquet.outputTimestampType" -> unit) {
-        write(dir, ltz, Seq(Row(java.sql.Timestamp.from(Instant.parse("2024-04-02T00:00:00.125Z")))))
-        write(dir, ltz, Seq(Row(java.sql.Timestamp.from(Instant.parse("2024-04-01T23:59:59.875Z")))))
-      }
-      val Seq(Row(lo: java.sql.Timestamp)) = answered(spark.read.parquet(dir).agg(min("ts")))
-      assert(lo.toInstant == Instant.parse("2024-04-01T23:59:59.875Z"), unit)
+    val dir = table()
+    withConf("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      write(dir, ltz, Seq(Row(java.sql.Timestamp.from(Instant.parse("2024-04-02T00:00:00.125Z")))))
+      write(dir, ltz, Seq(Row(java.sql.Timestamp.from(Instant.parse("2024-04-01T23:59:59.875Z")))))
     }
+    val Seq(Row(lo: java.sql.Timestamp)) = answered(spark.read.parquet(dir).agg(min("ts")))
+    assert(lo.toInstant == Instant.parse("2024-04-01T23:59:59.875Z"))
   }
 
   test("a filtered scan is left to the scan") {

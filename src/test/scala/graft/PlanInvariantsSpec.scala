@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.Max
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.col
 
 /** Physical-plan invariants for headline queries — the shapes that
@@ -93,23 +96,24 @@ class PlanInvariantsSpec extends SparkSpec {
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"), plan)
   }
 
+  /** The `max` aggregates over a parquet relation in `df`'s optimized
+    * plan, subqueries included: the scan-answered window anchor. */
+  private def maxOverParquet(df: DataFrame): Seq[LogicalPlan] =
+    df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case a: Aggregate if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[Max])) &&
+          a.exists {
+            case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
+            case _                  => false
+          } => a
+    }
+
+  private val anchoredPanels =
+    Seq("fraud_hourly_stats", "fraud_rate_bound_1h", "fraud_freshness_15m", "fraud_dq_report")
+
   test("trailing-window anchors come from parquet footers: no max(ts) scan, two fewer jobs") {
-    // Runs on the graft-extended session; the JSON-parse invariant
-    // below then holds with the footer rule in the plans as well.
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.Max
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     import org.apache.spark.sql.graftbridge.Bridge
     GraftSession.attach(spark)
-    def maxOverParquet(df: DataFrame): Seq[Aggregate] =
-      df.queryExecution.optimizedPlan.collectWithSubqueries {
-        case a: Aggregate if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[Max])) &&
-            a.exists {
-              case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
-              case _                  => false
-            } => a
-      }
     def jobs(name: String): Int = {
       val n = new java.util.concurrent.atomic.AtomicInteger(0)
       val l = new SparkListener {
@@ -120,39 +124,43 @@ class PlanInvariantsSpec extends SparkSpec {
       try { SparkEntry.queries(name)(spark, sf).collect(); Bridge.drainListenerBus(spark); n.get }
       finally spark.sparkContext.removeSparkListener(l)
     }
-    for (name <- Seq("fraud_hourly_stats", "fraud_rate_bound_1h", "fraud_freshness_15m",
-                     "fraud_dq_report")) {
+    for (name <- anchoredPanels) {
       val df = SparkEntry.queries(name)(spark, sf)
       assert(maxOverParquet(df).isEmpty, s"$name:\n${df.queryExecution.optimizedPlan}")
       val fromFooters = jobs(name)
-      spark.conf.set("spark.graft.footerMinMax.enabled", "false")
-      val fromScan = try jobs(name) finally spark.conf.unset("spark.graft.footerMinMax.enabled")
+      val fromScan = withoutFooterMinMax(jobs(name))
       assert(fromScan - fromFooters == 2, s"$name: $fromScan jobs with the scan, $fromFooters with footers")
     }
   }
 
   test("trailing-window fraud panels filter on ts before any JSON parse, never a nested loop") {
     import org.apache.spark.sql.catalyst.expressions.JsonToStructs
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
     def parses(p: LogicalPlan): Boolean =
       p.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs]))
     def tsFilter(p: LogicalPlan): Boolean = p match {
       case Filter(cond, _) => cond.references.exists(_.name == "ts")
       case _               => false
     }
-    for ((name, scores) <- Seq("fraud_hourly_stats" -> true, "fraud_rate_bound_1h" -> true,
-                               "fraud_freshness_15m" -> false, "fraud_dq_report" -> true)) {
+    def check(name: String, scores: Boolean, footers: Boolean): Unit = {
       val df = SparkEntry.queries(name)(spark, sf)
+      val optimized = df.queryExecution.optimizedPlan
+      assert(maxOverParquet(df).isEmpty == footers, s"$name (footers=$footers):\n$optimized")
       val plan = formatted(df)
       assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
         s"$name:\n$plan")
       // the window predicate must sit below every from_json, subquery
       // plans included: no payload outside the window is parsed
-      val optimized = df.queryExecution.optimizedPlan
       val parsing = optimized.collectWithSubqueries { case p if parses(p) => p }
       assert(parsing.nonEmpty == scores, s"$name:\n$optimized")
       parsing.foreach(p =>
         assert(p.children.exists(_.exists(tsFilter)), s"$name parses JSON below the window:\n$p"))
+    }
+    // both anchor shapes: a literal folded from parquet footers, and the
+    // scan's max(ts) subquery (INT96 or stats-less inputs, DST zones)
+    GraftSession.attach(spark)
+    for ((name, scores) <- anchoredPanels.zip(Seq(true, true, false, true))) {
+      check(name, scores, footers = true)
+      withoutFooterMinMax(check(name, scores, footers = false))
     }
   }
 

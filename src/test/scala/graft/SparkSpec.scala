@@ -23,4 +23,14 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.Sf
+
+  /** `body` with [[graft.plans.FooterMinMax]] out of the shared
+    * session's optimizer rules, so a `max`/`min` anchor is answered by
+    * the scan; the rules are restored after. */
+  def withoutFooterMinMax[A](body: => A): A = {
+    val rules = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = rules.filterNot(_ == graft.plans.FooterMinMax)
+    try body
+    finally spark.experimental.extraOptimizations = rules
+  }
 }
