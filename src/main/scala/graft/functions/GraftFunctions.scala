@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.DoubleType
   * like any built-in once registered:
   *
   *   graft_fingerprint64(str)       — codegen'd rolling-hash (scalar)
+  *   graft_json_number(json, key)   — in-place scan of a flat JSON int object (NULL = undecided)
   *   graft_cosine(a, b)             — fused cosine similarity
   *   graft_dot(a, b)                — fused dot product (PQ/ADC kernel)
   *   graft_sorted_intersect(a, b)   — two-pointer merge intersection count
@@ -63,6 +64,10 @@ object GraftFunctions {
       new ExpressionInfo(classOf[RollingHash].getName, "graft_fingerprint64"),
       (children: Seq[Expression]) => arity("graft_fingerprint64", 1, children)(
         RollingHash(children.head))),
+    (FunctionIdentifier("graft_json_number"),
+      new ExpressionInfo(classOf[JsonNumberAt].getName, "graft_json_number"),
+      (children: Seq[Expression]) => arity("graft_json_number", 2, children)(
+        JsonNumberAt(children(0), children(1)))),
     (FunctionIdentifier("graft_cosine"),
       new ExpressionInfo(classOf[CosineSim].getName, "graft_cosine"),
       (children: Seq[Expression]) => arity("graft_cosine", 2, children)(

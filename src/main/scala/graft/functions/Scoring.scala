@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DoubleType, MapType, StringType}
 
 /** Closed-form scoring expressions — the reference's per-record Python
@@ -39,6 +41,26 @@ object Scoring {
   /** Single tolerant feature lookup: `features.get(k, 0.0)`. */
   def featureAt(features: Column, key: String): Column =
     coalesce(element_at(features, key).cast(DoubleType), lit(0.0))
+
+  /** [[featureAt]] of a JSON feature payload —
+    * `featureAt(from_json(json, FeatureMapType), key)`, bit for bit,
+    * with the same P1 tolerance (absent key, non-numeric value, NULL or
+    * malformed payload → 0.0).
+    *
+    * [[JsonNumberAt]] answers first, by scanning the bytes in place, on
+    * the payloads it can decide: one flat object of at most
+    * [[JsonNumberAt.MaxMembers]] distinct printable-ASCII keys, every
+    * value an integer literal of at most [[JsonNumberAt.MaxDigits]]
+    * digits, JSON whitespace only. That is the shape every producer
+    * here writes (`{"k": 87}`). On anything else it is NULL and Spark's
+    * own parse — the expression above — decides, so Spark keeps the
+    * final say on every input the kernel does not decide. */
+  def jsonFeatureAt(json: Column, key: String): Column =
+    coalesce(jsonNumberAt(json, key), featureAt(from_json(json, FeatureMapType), key))
+
+  /** The [[JsonNumberAt]] kernel alone: NULL where it does not decide. */
+  def jsonNumberAt(json: Column, key: String): Column =
+    Bridge.column(json)(JsonNumberAt(_, Literal(key)))
 
   /** P2 — merge a scalar column into the feature map
     * (`features["amount"] = amount`). The reference's dict assignment

@@ -22,9 +22,16 @@ import org.apache.spark.sql.types.DecimalType
   * for the aggregate. The scoring pipeline itself is pure column
   * arithmetic (no UDF, no shuffle): at 100 TB it is an
   * embarrassingly-parallel map over scan partitions inside one
-  * WholeStageCodegen stage. Time-anchored predicates compare `ts`
-  * with a scalar subquery on `max(ts)` and filter before scoring, so
-  * `from_json(props)` runs only on the rows inside the window. On a
+  * WholeStageCodegen stage. The one model feature `k` is read from
+  * `props` by [[graft.functions.JsonNumberAt]], a codegen'd scan of
+  * the string's bytes in place; Spark's `from_json` (a Jackson
+  * parser, a reader and a map per row) runs only on the payloads the
+  * scan does not decide ([[Scoring.jsonFeatureAt]]), and no producer
+  * here writes one. `from_json` has no codegen of its own, so the
+  * projection that reads `k` runs just below the scoring stage, not
+  * inside it. Time-anchored predicates compare `ts` with a scalar
+  * subquery on `max(ts)` and filter before scoring, so only the rows
+  * inside the window are read for `k` at all. On a
   * parquet scan the [[graft.plans.FooterMinMax]] rule answers that
   * anchor from the files' footers and folds it into the filter as a
   * literal, so no job computes it; on any other source (a stream's
@@ -41,20 +48,21 @@ object FraudAnalytics {
   private val Coef   = Seq(0.002, 1.5, 0.05)
   private val Intercept = -2.5
 
-  /** Scoring pipeline over events: parse features, derive model
-    * inputs, score with the logistic closed form; heuristic fallback
-    * kept as its own column (M9). `prediction` thresholds on the raw
+  /** Scoring pipeline over events: read the `k` feature from the
+    * `props` JSON ([[Scoring.jsonFeatureAt]]), derive model inputs,
+    * score with the logistic closed form; heuristic fallback kept as
+    * its own column (M9). `prediction` thresholds on the raw
     * logit (`logit >= 0` ⇔ `sigmoid(logit) >= 0.5`) so the
     * classification is exact arithmetic, immune to libm ulp skew.
     */
   def scored(events: DataFrame): DataFrame =
-    scoredFrom(events, from_json(col("props"), Scoring.FeatureMapType))
+    scoredFrom(events, Scoring.jsonFeatureAt(col("props"), "k"))
 
-  /** [[scored]] over an already-parsed feature map — sources that
-    * carry a native `MapType` column (the Kafka transaction payload,
-    * typed Datasets) score without a JSON round-trip through `props`. */
-  def scoredFrom(events: DataFrame, features: Column): DataFrame = {
-    val k     = Scoring.featureAt(features, "k")
+  /** [[scored]] over an already-derived risk feature `k` (a non-null
+    * DOUBLE) — sources that carry it natively (the Kafka transaction
+    * payload's feature map, typed Datasets) score without a JSON
+    * round-trip through `props`. */
+  def scoredFrom(events: DataFrame, k: Column): DataFrame = {
     val night = when(hour(col("ts")).isin(0, 1, 2, 3, 23), lit(1.0)).otherwise(lit(0.0))
     val feats = Seq(col("value"), col("k") / lit(100.0), col("night"))
     events
@@ -76,8 +84,11 @@ object FraudAnalytics {
     * in streaming. */
   def scoredWithIngestMetrics(events: DataFrame,
                               obs: org.apache.spark.sql.Observation): DataFrame = {
-    val malformed = from_json(col("props"), Scoring.FeatureMapType).isNull
-      .and(col("props").isNotNull)
+    // the kernel answers only well-formed flat objects, so a payload
+    // it decides is never malformed: Spark parses only the rest
+    val malformed = col("props").isNotNull &&
+      Scoring.jsonNumberAt(col("props"), "k").isNull &&
+      from_json(col("props"), Scoring.FeatureMapType).isNull
     scored(events.observe(obs,
       count(lit(1)).as("n_ingested"),
       sum(when(malformed, 1L).otherwise(0L)).as("n_malformed")))

@@ -87,11 +87,11 @@ object KafkaScoring {
     * projection as the batch/file-source pipelines
     * ([[FraudAnalytics.scoredFrom]]) — one scoring definition across
     * batch, file-stream and Kafka-stream. The payload maps onto the
-    * events shape (`event_time→ts`, `amount→value`); its already-
-    * parsed feature map feeds the scorer directly (no JSON
-    * round-trip, no lambda — the whole path stays codegen-resident),
-    * with the events-table risk convention `k` = 100 × merchant_risk
-    * bridged as the scoring feature (absent → 0.0, the P1 tolerant
+    * events shape (`event_time→ts`, `amount→value`); the scoring
+    * feature comes straight from its already-parsed feature map (no
+    * JSON round-trip, no lambda — the whole path stays
+    * codegen-resident), with the events-table risk convention
+    * `k` = 100 × merchant_risk (absent → 0.0, the P1 tolerant
     * default). */
   def scoredTransactions(wire: DataFrame): DataFrame =
     scoredParsed(parsedTransactions(wire))
@@ -106,8 +106,7 @@ object KafkaScoring {
       parsed
         .withColumnRenamed("event_time", "ts")
         .withColumn("value", col("amount")),
-      map(lit("k"),
-        coalesce(element_at(col("features"), "merchant_risk"), lit(0.0)) * 100.0))
+      coalesce(element_at(col("features"), "merchant_risk"), lit(0.0)) * 100.0)
 
   /** The raw subscribed source — requires the spark-sql-kafka
     * connector on the classpath at plan time (`load()` resolves the

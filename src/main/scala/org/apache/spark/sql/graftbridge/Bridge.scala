@@ -1,17 +1,27 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Minimal bridge into `private[sql]` constructors: building a
-  * DataFrame from a raw LogicalPlan. This is the standard pattern
-  * Spark extension libraries use to attach custom logical operators
-  * (the public API deliberately hides plan construction).
+  * DataFrame from a raw LogicalPlan, or a Column from a raw
+  * Expression. This is the standard pattern Spark extension libraries
+  * use to attach custom logical operators and expressions (the public
+  * API deliberately hides plan construction).
   */
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A Column over a native Catalyst expression built on `arg` — how
+    * the DataFrame API carries a graft expression without a registered
+    * SQL name, so it works on any session, attached or not (the
+    * ColumnNode ⇄ Expression converters are `private[sql]`). */
+  def column(arg: Column)(build: Expression => Expression): Column =
+    org.apache.spark.sql.classic.ExpressionUtils.column(
+      build(org.apache.spark.sql.classic.ExpressionUtils.expression(arg)))
 
   /** The leaf NAME a column refers to, when it is a plain (possibly
     * qualified) attribute reference or an alias — `col("doc_id")`,

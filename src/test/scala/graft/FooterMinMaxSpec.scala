@@ -50,7 +50,7 @@ class FooterMinMaxSpec extends SparkSpec {
     GraftSession.attach(spark)
     val on = df
     val rows = on.collect().toSeq
-    (rows, withoutFooterMinMax(df.collect().toSeq),
+    (rows, withoutRules(graft.plans.FooterMinMax)(df.collect().toSeq),
       extrema(on.queryExecution.optimizedPlan).nonEmpty)
   }
 
@@ -71,7 +71,7 @@ class FooterMinMaxSpec extends SparkSpec {
   /** The rule, applied directly to `df`'s plan optimized without it,
     * returns that plan unchanged. */
   private def leftAlone(df: => DataFrame): Unit = {
-    val p = withoutFooterMinMax(df.queryExecution.optimizedPlan)
+    val p = withoutRules(graft.plans.FooterMinMax)(df.queryExecution.optimizedPlan)
     assert(extrema(p).nonEmpty, p)
     assert(FooterMinMax(p) == p, p)
   }

@@ -27,6 +27,16 @@ class FunctionsSpec extends SparkSpec {
     assert(df.distinct().count() == 100)
   }
 
+  test("graft_json_number reads a flat JSON int object in place and stays inside WholeStageCodegen") {
+    GraftFunctions.register(spark)
+    val df = Seq("""{"k": 87}""", """{"a": 1, "k": -3}""", """{"a": 1}""", """{"k": 1.5}""", null)
+      .toDF("s").repartition(1).selectExpr("graft_json_number(s, 'k') AS v")
+    assert(df.collect().map(r => Option(r.get(0))).toSeq ==
+      Seq(Some(87.0), Some(-3.0), Some(0.0), None, None))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("*(") && plan.contains("Project [graft_json_number("), plan)
+  }
+
   test("graft_auc matches BinaryClassificationEvaluator within 2/bins") {
     GraftFunctions.register(spark)
     // separable-ish synthetic scores with overlap

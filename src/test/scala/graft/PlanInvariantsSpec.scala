@@ -76,7 +76,10 @@ class PlanInvariantsSpec extends SparkSpec {
   }
 
   test("rank-filter window engages Spark's WindowGroupLimit pre-filter") {
-    val plan = formatted(SparkEntry.queries("tpch_window_top_orders")(spark, sf))
+    // Spark's own plan: an earlier suite may have attached
+    // WindowTopKRewrite, which plans this idiom as TopKPerKey instead
+    val plan = withoutRules(graft.plans.WindowTopKRewrite)(
+      formatted(SparkEntry.queries("tpch_window_top_orders")(spark, sf)))
     assert(plan.contains("WindowGroupLimit"), plan)
   }
 
@@ -94,6 +97,48 @@ class PlanInvariantsSpec extends SparkSpec {
     // carry one, and nothing may fall back to an interpreted UDF.
     assert("""\*\(\d+\) Project""".r.findFirstIn(plan).isDefined, plan)
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"), plan)
+  }
+
+  test("fraud scoring reads k with the JSON kernel, Spark's parse only as its fallback; scoring stays codegen'd") {
+    import graft.functions.JsonNumberAt
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Coalesce, Expression, JsonToStructs}
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // JSON parses outside the fallback arm of a kernel-first coalesce
+    def bare(e: Expression): Int = e match {
+      case Coalesce((_: JsonNumberAt) +: _) => 0
+      case j: JsonToStructs                 => 1 + bare(j.child)
+      case _                                => e.children.map(bare).sum
+    }
+    def guarded(e: Expression): Int = e.collect {
+      case c @ Coalesce((_: JsonNumberAt) +: rest) if rest.exists(_.exists(_.isInstanceOf[JsonToStructs])) => c
+    }.size
+    // the operators one codegen stage fuses (InputAdapter starts the next)
+    def fused(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case _               => p.children.flatMap(fused)
+    })
+    object Aqe extends AdaptiveSparkPlanHelper
+    for (name <- Seq("fraud_timeseries_minute", "fraud_daily_metrics", "fraud_scored_events")) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      val optimized = df.queryExecution.optimizedPlan
+      val exprs = optimized.collectWithSubqueries { case p => p.expressions }.flatten
+      assert(exprs.map(bare).sum == 0, s"$name parses props outside the kernel's fallback:\n$optimized")
+      assert(exprs.map(guarded).sum > 0, s"$name does not read k with the kernel:\n$optimized")
+      df.collect() // AQE settles the codegen stages on execution
+      // the projection that scores the kernel's `k` (the one reading it
+      // holds Spark's parse, a CodegenFallback, so it runs outside a stage)
+      val executed = df.queryExecution.executedPlan
+      val kernelK = Aqe.collect(executed) { case p: ProjectExec => p.projectList }.flatten
+        .collect { case a: Alias if a.exists(_.isInstanceOf[JsonNumberAt]) => a.exprId }.toSet
+      def scores(p: SparkPlan): Boolean =
+        p.isInstanceOf[ProjectExec] && p.references.exists(a => kernelK(a.exprId))
+      val scoring = Aqe.collect(executed) { case p if scores(p) => p }
+      val inStage = Aqe.collect(executed) { case w: WholeStageCodegenExec => w }
+        .flatMap(w => fused(w.child)).filter(scores)
+      assert(kernelK.nonEmpty && scoring.nonEmpty && scoring.forall(p => inStage.exists(_ eq p)),
+        s"$name scoring projection left whole-stage codegen:\n$executed")
+    }
   }
 
   /** The `max` aggregates over a parquet relation in `df`'s optimized
@@ -128,7 +173,7 @@ class PlanInvariantsSpec extends SparkSpec {
       val df = SparkEntry.queries(name)(spark, sf)
       assert(maxOverParquet(df).isEmpty, s"$name:\n${df.queryExecution.optimizedPlan}")
       val fromFooters = jobs(name)
-      val fromScan = withoutFooterMinMax(jobs(name))
+      val fromScan = withoutRules(graft.plans.FooterMinMax)(jobs(name))
       assert(fromScan - fromFooters == 2, s"$name: $fromScan jobs with the scan, $fromFooters with footers")
     }
   }
@@ -160,7 +205,7 @@ class PlanInvariantsSpec extends SparkSpec {
     GraftSession.attach(spark)
     for ((name, scores) <- anchoredPanels.zip(Seq(true, true, false, true))) {
       check(name, scores, footers = true)
-      withoutFooterMinMax(check(name, scores, footers = false))
+      withoutRules(graft.plans.FooterMinMax)(check(name, scores, footers = false))
     }
   }
 

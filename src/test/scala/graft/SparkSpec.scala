@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites
@@ -24,12 +26,14 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.Sf
 
-  /** `body` with [[graft.plans.FooterMinMax]] out of the shared
-    * session's optimizer rules, so a `max`/`min` anchor is answered by
-    * the scan; the rules are restored after. */
-  def withoutFooterMinMax[A](body: => A): A = {
+  /** `body` with `drop` out of the shared session's extra optimizer
+    * rules, so a case sees Spark's own plan whether or not an earlier
+    * suite attached graft's rules (e.g. a `max`/`min` anchor answered
+    * by the scan without [[graft.plans.FooterMinMax]]); the rules are
+    * restored after. */
+  def withoutRules[A](drop: Rule[LogicalPlan]*)(body: => A): A = {
     val rules = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = rules.filterNot(_ == graft.plans.FooterMinMax)
+    spark.experimental.extraOptimizations = rules.filterNot(drop.contains)
     try body
     finally spark.experimental.extraOptimizations = rules
   }

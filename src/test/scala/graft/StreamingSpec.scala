@@ -527,11 +527,18 @@ class StreamingSpec extends SparkSpec {
   test("observe() ingest metrics count malformed payloads in-plan") {
     val good = graft.sources.Tables.events(spark, sf)
     val bad = good.limit(3).withColumn("props", lit("""{broken"""))
+    // well formed, but outside what the JSON kernel decides: Spark's
+    // parse reads them, so they score and are not malformed
+    val deferred = Seq("""{"k":1.5}""", """{'k':1}""")
+      .map(p => good.limit(2).withColumn("props", lit(p))).reduce(_ union _)
     val obs = org.apache.spark.sql.Observation("ingest")
-    val scored = FraudAnalytics.scoredWithIngestMetrics(good.union(bad), obs)
+    val scored = FraudAnalytics.scoredWithIngestMetrics(good.union(bad).union(deferred), obs)
     val total = scored.count()
+    assert(total == good.count() + 7)
     assert(obs.get("n_ingested") == total)
     assert(obs.get("n_malformed") == 3L)
+    assert(FraudAnalytics.scored(deferred).select("k").as[Double].collect().sorted.toSeq ==
+      Seq(1.0, 1.0, 1.5, 1.5))
   }
 
   test("T5 upgrade: mapGroupsWithState per-user profiles match batch aggregation") {
