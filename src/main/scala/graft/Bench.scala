@@ -196,13 +196,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // The engine's recommended session config (GraftSession): AQE on
     // with skew handling — runtime coalescing collapses the tiny
     // post-shuffle partitions these SF inputs produce, and the same
     // conf is what a production deployment would run with.
-    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.createLocal()
     // Warm the session (codegen, scheduler, file index caches) so
     // one-time init cost doesn't land on an arbitrary first query.
     // Warm-ups are best-effort: a failure here must degrade to worse

@@ -5,12 +5,10 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // The correctness gate runs with the full engine attached (native
     // functions, TopKPerKey strategy, window-top-k rewrite) so the
     // custom-operator path is oracle-checked, not just spec-checked.
-    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.createLocal()
     new java.io.File(outDir).mkdirs()
     // Drop stale per-query dirs from a previous run of a DIFFERENT
     // registry (a renamed or removed query would otherwise linger in
@@ -65,19 +63,24 @@ object Verify {
     // checker looks entries up by dumped-dir name.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      def attempt(): Unit = fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      try attempt()
-      catch { case e1: Throwable =>
-        System.err.println(s"[verify] $name failed once, retrying: ${e1.getMessage}")
-        try attempt()
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    // The checker compares each dump in DuckDB with oracle SQL whose
+    // timestamps are plain TIMESTAMP: INT96 reads that way, the engine's
+    // UTC-adjusted INT64 reads as TIMESTAMP WITH TIME ZONE.
+    GraftSession.scoped(spark, "spark.sql.parquet.outputTimestampType" -> "INT96") { dumps =>
+      SparkEntry.queries
+        .filter { case (name, _) => only.forall(_.contains(name)) }
+        .foreach { case (name, fn) =>
+          def attempt(): Unit = fn(dumps, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          try attempt()
+          catch { case e1: Throwable =>
+            System.err.println(s"[verify] $name failed once, retrying: ${e1.getMessage}")
+            try attempt()
+            catch { case e: Throwable =>
+              System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            }
+          }
         }
-      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

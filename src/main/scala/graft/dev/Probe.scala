@@ -151,9 +151,7 @@ object Probe {
       "usage: graft.dev.Probe <sfDir> <name>[,<name>…] [reps | explain[=mode]]")
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     names.foreach(resolve) // an unknown name fails before the session starts
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
-    val spark = GraftSession.create(s"local[$cpus]", cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.createLocal()
     try {
       spark.range(1000).selectExpr("sum(id)").collect() // session warm-up
       names.foreach(n => run(spark, args(0), Seq(n), args.lift(2).getOrElse("1"))

@@ -132,8 +132,7 @@ object DailyMetricsJob {
     val dir  = args.headOption.getOrElse("/root/testdata/sf0.001")
     val url  = if (args.length > 1) args(1) else JdbcMetricsSink.derbyUrl()
     val mode = if (args.length > 2) args(2) else "once"
-    val spark = graft.GraftSession.create(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.createLocal()
     if (mode == "once") {
       val out = Jobs.dailyMetricsTick(spark, dir, url)
       println(s"[daily-metrics-job] upserted ${out.count()} days -> $url")

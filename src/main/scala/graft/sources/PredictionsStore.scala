@@ -28,6 +28,10 @@ import org.apache.spark.sql.functions._
   * recompute-today's-partition upsert (A2) without row-level merge.
   * It is set on the write, not the session, so a later static
   * overwrite elsewhere in the session still replaces its whole path.
+  *
+  * The row-group stats need `ts` stored as INT64 micros, which the
+  * session writes from the start (`GraftSession.FormatConfs`); the
+  * store sets no session conf of its own.
   */
 object PredictionsStore {
 
@@ -47,11 +51,6 @@ object PredictionsStore {
     * leaves it None and inherits the 128 MiB default. */
   def write(scored: DataFrame, path: String, mode: String = "overwrite",
       blockSizeBytes: Option[Long] = None): Unit = {
-    // INT96 (the legacy default) carries NO min/max statistics, which
-    // silently disables every ts-range row-group prune; INT64 micros
-    // is the annotated type with stats and predicate pushdown. The
-    // parquet writer reads this only from the session conf.
-    scored.sparkSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     val w = scored
       .withColumn("day", to_date(col("ts")))
       .repartition(col("day"))

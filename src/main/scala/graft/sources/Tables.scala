@@ -26,11 +26,11 @@ object Tables {
     * plain TIMESTAMP(MICROS) without UTC adjustment (which Spark reads
     * natively as TIMESTAMP_NTZ). Normalize both to a session-tz
     * TimestampType — the session is pinned to UTC (GraftSession), so
-    * the NTZ→LTZ cast preserves the stored wall-clock instant. */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    * the NTZ→LTZ cast preserves the stored wall-clock instant. The
+    * legacy conf is one of `GraftSession.FormatConfs`, set when the
+    * session is built or attached. */
+  def events(spark: SparkSession, dir: String): DataFrame =
     normalizeEvents(load(spark, dir, "events"))
-  }
 
   /** Normalize the `ts` column to TimestampType regardless of how the
     * file stored it (int64 nanos, TIMESTAMP_NTZ, or already LTZ). */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import graft.Q
+import graft.{GraftSession, Q}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -69,36 +69,12 @@ object ClickAttribution {
   }
 
   /** Run the bounded backfill: land joined pairs, then the
-    * latest-click-wins cut per purchase. */
-  def runAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val ckpt = Files.createTempDirectory("graft-attr-ckpt-").toString
-    val out  = Files.createTempDirectory("graft-attr-out-").toString + "/pairs"
-    // Captured up front so the read-back below can carry an explicit
-    // schema: a bounded run that joins zero pairs writes no data
-    // files, and a schema-less read would fail with unable-to-infer
-    // instead of returning the correct empty frame.
-    val pairsSchema = joinedPairs(spark, dir).schema
-    // Join state lives per shuffle partition (one store pair per
-    // partition per batch); a handful beats the session default for
-    // the bounded backfill, same tuning as the daily-metrics stream.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData  = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    // Inner-join output isn't watermark-gated; skip the trailing
-    // no-data batch (it exists to finalize append-mode state only).
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try Drain.run(joinedPairs(spark, dir).writeStream
-      .format("parquet").option("path", out), ckpt)
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-    }
-    spark.read.schema(pairsSchema).parquet(out)
-      .groupBy(col("event_id"), col("user_id"), col("ts"))
-      .agg(max_by(col("click_id"), struct(col("click_ts"), col("click_id")))
-        .as("click_id"))
-      .orderBy(col("event_id"))
-  }
+    * latest-click-wins cut per purchase. Inner-join output isn't
+    * watermark-gated, so the trailing no-data batch (it exists to
+    * finalize append-mode state only) is skipped. */
+  def runAttribution(spark: SparkSession, dir: String): DataFrame =
+    latestClick(landedPairs(spark, dir, "inner",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))
 
   /** LEFT OUTER attribution: every purchase lands, with NULL click
     * columns when no click preceded it within 30 minutes.
@@ -118,17 +94,10 @@ object ClickAttribution {
     * conventions inside the eviction predicate can never flip a row
     * across the cut. */
   def runAttributionLeftOuter(spark: SparkSession, dir: String): DataFrame = {
-    val ckpt = Files.createTempDirectory("graft-attrlo-ckpt-").toString
-    val out  = Files.createTempDirectory("graft-attrlo-out-").toString + "/pairs"
-    val pairs = joinedPairs(spark, dir, joinType = "leftOuter")
-    val pairsSchema = pairs.schema
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     // NOTE: no-data micro-batches stay ENABLED here — the trailing
     // no-data batch is precisely what advances the watermark and
     // flushes the null-extended evictions the inner variant skips.
-    try Drain.run(pairs.writeStream.format("parquet").option("path", out), ckpt)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    val pairs = landedPairs(spark, dir, "leftOuter")
     // Replay the eventual global watermark from the bounded input: a
     // 1-row broadcast anchor (same pattern as the anchored P6
     // queries), never a driver-side loop.
@@ -138,14 +107,37 @@ object ClickAttribution {
         max(when(col("event_type") === "click", col("ts"))),
         max(when(col("event_type") === "purchase", col("ts"))))
         - expr("INTERVAL 1 HOUR") - expr("INTERVAL 1 SECOND")).as("horizon"))
-    spark.read.schema(pairsSchema).parquet(out)
-      .crossJoin(broadcast(horizon))
-      .filter(col("click_id").isNotNull || col("ts") < col("horizon"))
-      .groupBy(col("event_id"), col("user_id"), col("ts"))
-      .agg(max_by(col("click_id"), struct(col("click_ts"), col("click_id")))
-        .as("click_id"))
-      .orderBy(col("event_id"))
+    latestClick(pairs.crossJoin(broadcast(horizon))
+      .filter(col("click_id").isNotNull || col("ts") < col("horizon")))
   }
+
+  /** Drain [[joinedPairs]] once into a fresh parquet dir, with `confs`
+    * on the drain's session, and read the landed pairs back. Join
+    * state lives per shuffle partition (one store pair per partition
+    * per batch); a handful beats the session default for the bounded
+    * backfill, same tuning as the daily-metrics stream. The read-back
+    * carries the pairs' schema: a run that joins zero pairs writes no
+    * data files, and a schema-less read would fail with
+    * unable-to-infer instead of returning the correct empty frame. */
+  private def landedPairs(spark: SparkSession, dir: String, joinType: String,
+      confs: (String, String)*): DataFrame = {
+    val out = Files.createTempDirectory("graft-attr-out-").toString + "/pairs"
+    val schema = GraftSession.scoped(spark,
+        ("spark.sql.shuffle.partitions" -> "4") +: confs: _*) { s =>
+      val pairs = joinedPairs(s, dir, joinType)
+      Drain.run(pairs.writeStream.format("parquet").option("path", out),
+        Files.createTempDirectory("graft-attr-ckpt-").toString)
+      pairs.schema
+    }
+    spark.read.schema(schema).parquet(out)
+  }
+
+  /** The latest-click-wins cut per purchase: keyed `max_by` over
+    * (click_ts, click_id), a deterministic total order. */
+  private def latestClick(pairs: DataFrame): DataFrame =
+    pairs.groupBy(col("event_id"), col("user_id"), col("ts"))
+      .agg(max_by(col("click_id"), struct(col("click_ts"), col("click_id"))).as("click_id"))
+      .orderBy(col("event_id"))
 
   // ---------------------------------------------------------------- queries
   val attribution: Q = Q("stream_click_attribution",

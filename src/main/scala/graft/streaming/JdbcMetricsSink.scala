@@ -113,11 +113,7 @@ object JdbcMetricsSink {
   def upsertDailyMetrics(batch: DataFrame, url: String): Unit = {
     ensureTable(url)
     val staging = freshStagingName()
-    batch
-      .select(col("day"), col("num_predictions"),
-        round(col("fraud_rate"), 6).as("fraud_rate"),
-        round(col("avg_amount"), 6).as("avg_amount"),
-        round(col("avg_proba"), 6).as("avg_proba"))
+    ScoringStream.roundedDailyMetrics(batch)
       .coalesce(1) // one row per touched day — one write task, like the parquet sink
       .write.mode("overwrite")
       .jdbc(url, staging, new java.util.Properties)
@@ -142,26 +138,8 @@ object JdbcMetricsSink {
     * foreachBatch body above as the upsert. Returns the table read
     * back through the JDBC SOURCE (round-trip through the store). */
   def runDailyMetricsJdbcStream(spark: SparkSession, dir: String, url: String): DataFrame = {
-    val ckpt = Files.createTempDirectory("graft-jdbc-ckpt-").toString
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData  = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try Drain.run(ScoringStream.dailyMetricsAgg(spark, dir).writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertDailyMetrics(batch, url)
-        () // pin the Scala (not Java VoidFunction2) overload
-      }, ckpt)
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-    }
-    spark.read.jdbc(url, Table, new java.util.Properties)
-      .select(col("day"), col("num_predictions"),
-        round(col("fraud_rate"), 6).as("fraud_rate"),
-        round(col("avg_amount"), 6).as("avg_amount"),
-        round(col("avg_proba"), 6).as("avg_proba"))
+    ScoringStream.drainDailyMetrics(spark, dir)(upsertDailyMetrics(_, url))
+    ScoringStream.roundedDailyMetrics(spark.read.jdbc(url, Table, new java.util.Properties))
       .orderBy(col("day"))
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import graft.Q
+import graft.{GraftSession, Q}
 import graft.queries.FraudAnalytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -41,14 +41,12 @@ object ScoringStream {
   /** Unbounded raw event stream over a directory of events parquet,
     * normalized to the declared engine schema (same handling as the
     * batch [[graft.sources.Tables.events]]). */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
     graft.sources.Tables.normalizeEvents(
       spark.readStream
         .schema(eventsFileSchema(spark, dir))
         .option("pathGlobFilter", "events.parquet") // the sf dir holds all tables
         .parquet(dir))
-  }
 
   /** Unbounded scored stream over a directory of events parquet. */
   def scoredStream(spark: SparkSession, dir: String): DataFrame =
@@ -77,32 +75,25 @@ object ScoringStream {
     * recompute). Update-mode rows land via foreachBatch into an
     * in-memory store keyed by day — the A2 upsert (`ON CONFLICT
     * (day) DO UPDATE`, compute-daily-metrics.py:21-35). On a real
-    * deployment the same foreachBatch body is a JDBC merge or a
-    * `replaceWhere` partition overwrite. */
+    * deployment the same foreachBatch body is a JDBC merge
+    * ([[JdbcMetricsSink]]) or a `replaceWhere` partition overwrite. */
   def runDailyMetricsStream(spark: SparkSession, dir: String): DataFrame = {
-    val ckpt  = Files.createTempDirectory("graft-ckpt-").toString
     val store = Files.createTempDirectory("graft-daily-store-").toString
-    // ~30 daily groups: a handful of state-store partitions beats the
-    // session default (one state store instance per shuffle
-    // partition, each with checkpoint + commit overhead per batch).
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    // In UPDATE mode every batch already emits its updated groups; the
-    // trailing no-data micro-batch exists to advance the watermark for
-    // APPEND-mode finalization/state eviction, which this bounded
-    // backfill never needs — skip a whole state-store commit cycle.
-    val prevNoData = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try runDailyMetricsStreamInner(spark, dir, ckpt, store)
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
+    drainDailyMetrics(spark, dir) { batch =>
+      // Keyed upsert as dynamic partition overwrite: each updated
+      // `day` replaces exactly its own partition — the scalable
+      // analog of `INSERT .. ON CONFLICT (day) DO UPDATE`. The
+      // update set is one row per touched day (~30 here; bounded by
+      // days-per-batch at any scale), so collapse to one write task
+      // instead of fanning 30 rows across every core.
+      batch.coalesce(1).write.mode("overwrite").partitionBy("day")
+        .option("partitionOverwriteMode", "dynamic").parquet(store)
     }
+    roundedDailyMetrics(spark.read.parquet(store)).orderBy(col("day"))
   }
 
   /** The streaming daily-metrics aggregate (event-time day window,
-    * 1-hour watermark) — shared by the parquet partition-overwrite
-    * sink and the JDBC merge sink ([[JdbcMetricsSink]]). */
+    * 1-hour watermark). */
   private[graft] def dailyMetricsAgg(spark: SparkSession, dir: String): DataFrame =
     scoredStream(spark, dir)
       .withWatermark("ts", "1 hour")
@@ -115,29 +106,33 @@ object ScoringStream {
       .select(to_date(col("win.start")).as("day"), col("num_predictions"),
         col("fraud_rate"), col("avg_amount"), col("avg_proba"))
 
-  private def runDailyMetricsStreamInner(spark: SparkSession, dir: String,
-                                         ckpt: String, store: String): DataFrame = {
-    val agg = dailyMetricsAgg(spark, dir)
-    Drain.run(agg.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Keyed upsert as dynamic partition overwrite: each updated
-        // `day` replaces exactly its own partition — the scalable
-        // analog of `INSERT .. ON CONFLICT (day) DO UPDATE`. The
-        // update set is one row per touched day (~30 here; bounded by
-        // days-per-batch at any scale), so collapse to one write task
-        // instead of fanning 30 rows across every core.
-        batch.coalesce(1).write.mode("overwrite").partitionBy("day")
-          .option("partitionOverwriteMode", "dynamic").parquet(store)
-        ()
-      }, ckpt)
-    spark.read.parquet(store)
-      .select(col("day"), col("num_predictions"),
-        round(col("fraud_rate"), 6).as("fraud_rate"),
-        round(col("avg_amount"), 6).as("avg_amount"),
-        round(col("avg_proba"), 6).as("avg_proba"))
-      .orderBy(col("day"))
-  }
+  /** Drain [[dailyMetricsAgg]] over `dir` once on a fresh checkpoint,
+    * handing each update-mode batch of days to `sink`. ~30 daily
+    * groups: a handful of state-store partitions beats the session
+    * default (one state store instance per shuffle partition, each with
+    * checkpoint + commit overhead per batch). In UPDATE mode every
+    * batch already emits its updated groups; the trailing no-data
+    * micro-batch exists to advance the watermark for APPEND-mode
+    * finalization/state eviction, which this bounded backfill never
+    * needs — skip a whole state-store commit cycle. */
+  private[graft] def drainDailyMetrics(spark: SparkSession, dir: String)(
+      sink: DataFrame => Unit): Unit =
+    GraftSession.scoped(spark,
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") { s =>
+      Drain.run(dailyMetricsAgg(s, dir).writeStream
+        .outputMode("update")
+        .foreachBatch { (batch: DataFrame, _: Long) => sink(batch) },
+        Files.createTempDirectory("graft-daily-ckpt-").toString)
+    }
+
+  /** The daily-metrics columns with the ratios rounded to 6 places,
+    * as both stores keep them. */
+  private[graft] def roundedDailyMetrics(df: DataFrame): DataFrame =
+    df.select(col("day"), col("num_predictions"),
+      round(col("fraud_rate"), 6).as("fraud_rate"),
+      round(col("avg_amount"), 6).as("avg_amount"),
+      round(col("avg_proba"), 6).as("avg_proba"))
 
   /** The complete real-time scoring shape (M8 in streaming form):
     * event stream → model-feature projection → `foreachBatch` that
@@ -258,20 +253,19 @@ object ScoringStream {
   def runSessionizeStream(spark: SparkSession, dir: String): DataFrame = {
     val ckpt = Files.createTempDirectory("graft-sess-ckpt-").toString
     val out  = Files.createTempDirectory("graft-sess-out-").toString + "/sessions"
-    val sess = eventsStream(spark, dir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-      .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
-        count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("session_start"), col("session_end"), col("n_events"))
-    val sessSchema = sess.schema
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    // no-data micro-batches stay ENABLED: the trailing batch advances
-    // the watermark to its final value and flushes closed sessions.
-    try Drain.run(sess.writeStream
-      .outputMode("append").format("parquet").option("path", out), ckpt)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    val sessSchema = GraftSession.scoped(spark, "spark.sql.shuffle.partitions" -> "4") { s =>
+      val sess = eventsStream(s, dir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+        .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
+          count(lit(1)).as("n_events"))
+        .select(col("user_id"), col("session_start"), col("session_end"), col("n_events"))
+      // no-data micro-batches stay ENABLED: the trailing batch advances
+      // the watermark to its final value and flushes closed sessions.
+      Drain.run(sess.writeStream
+        .outputMode("append").format("parquet").option("path", out), ckpt)
+      sess.schema
+    }
     val horizon = graft.sources.Tables.events(spark, dir)
       .agg((max(col("ts"))
         - expr("INTERVAL 1 HOUR") - expr("INTERVAL 1 SECOND")).as("horizon"))

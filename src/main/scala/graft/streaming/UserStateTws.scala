@@ -45,17 +45,16 @@ object UserStateTws {
   }
 
   /** [[UserState.runProfiles]] on the transformWithState operator.
-    * The operator requires the RocksDB state store provider; the conf
-    * is scoped to this run and restored after. */
-  def runProfiles(spark: SparkSession, dir: String): Dataset[UserProfile] = {
-    import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    * The operator requires the RocksDB state store provider, which
+    * only this run's child session ([[graft.GraftSession.scoped]])
+    * uses. The `memory` sink registers its view in that child, so the
+    * profiles are read there too. */
+  def runProfiles(spark: SparkSession, dir: String): Dataset[UserProfile] =
+    graft.GraftSession.scoped(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") { s =>
+      import s.implicits._
       val ckpt = java.nio.file.Files.createTempDirectory("graft-tws-ckpt-").toString
-      val events = ScoringStream.scoredStream(spark, dir)
+      val events = ScoringStream.scoredStream(s, dir)
         .select($"user_id", $"ts", $"value").as[UserEvent]
       val profiles = events
         .groupByKey(_.user_id)
@@ -63,12 +62,6 @@ object UserStateTws {
       Drain.run(profiles.writeStream
         .outputMode(OutputMode.Update())
         .format("memory").queryName("graft_user_profiles_tws"), ckpt)
-      UserState.finalProfiles(spark, "graft_user_profiles_tws")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
+      UserState.finalProfiles(s, "graft_user_profiles_tws")
     }
-  }
 }

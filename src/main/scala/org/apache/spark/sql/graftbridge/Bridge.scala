@@ -15,6 +15,13 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A child session with a copy of `spark`'s conf, functions,
+    * optimizer rules and temp views, sharing its `SparkContext` and
+    * cache manager (what a streaming query does for its own batches;
+    * `cloneSession` is `private[sql]`). */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
   /** A Column over a native Catalyst expression built on `arg` — how
     * the DataFrame API carries a graft expression without a registered
     * SQL name, so it works on any session, attached or not (the

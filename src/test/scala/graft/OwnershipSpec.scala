@@ -4,9 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 
 /** Each repeated mechanism has one owner: the bounded stream drain
   * (`Drain`), the batch-action pool (`StreamPools`), the memo key
-  * format (`SessionCaches`), the session builder (`GraftSession`) and
-  * the runnable mains (the driver contract, the daily jobs and the one
-  * dev `Probe`). A copy of one outside its owners fails here, so the
+  * format (`SessionCaches`), the session builder and every session
+  * conf write (`GraftSession`) and the runnable mains (the driver
+  * contract, the daily jobs and the one dev `Probe`). A copy of one outside its owners fails here, so the
   * mechanisms and the one-off probe mains do not fork again. */
 class OwnershipSpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -37,6 +37,8 @@ class OwnershipSpec extends org.scalatest.funsuite.AnyFunSuite {
       "SessionCaches.register" -> Set("SessionCaches.scala"),
       "applicationId + \"#\"" -> Set("SessionCaches.scala"),
       "SparkSession.builder()" -> Set("GraftSession.scala"),
+      "conf.set(" -> Set("GraftSession.scala"),
+      "conf.unset(" -> Set("GraftSession.scala"),
       "def main(" -> Set("Verify.scala", "Bench.scala", "Jobs.scala", "Probe.scala")))
     test(s"`$needle` appears only in ${owners.mkString(", ")}") {
       val copies = copiesOf(needle, owners)

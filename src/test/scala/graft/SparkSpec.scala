@@ -6,16 +6,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites
-  * run sequentially in the forked test JVM). */
+  * run sequentially in the forked test JVM), built with the engine's
+  * own session confs but without `attach`, so a suite that needs the
+  * graft rules or functions attaches them itself. */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder("local[4]", 4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
