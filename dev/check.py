@@ -51,7 +51,12 @@ for name in names:
         print(f"✗ {name}: ORACLE SQL ERROR: {e}")
         n_fail += 1
         continue
-    g, e = canon(got), canon(exp)
+    try:
+        g, e = canon(got), canon(exp)
+    except Exception as ex:
+        print(f"✗ {name}: canon error {ex}")
+        n_fail += 1
+        continue
     dt_mismatch = [(c, str(g[c].dtype), str(e[c].dtype)) for c in g.columns
                    if c in e.columns and str(g[c].dtype) != str(e[c].dtype)]
     if dt_mismatch:

@@ -1,28 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.execution.LogicalRDD
 import scala.collection.concurrent.TrieMap
 
-/** Central registry for the engine's memoized session caches (the
-  * `appId#dir`-keyed memos holding persisted frames, trained
-  * centroids, promoted artifact stores, …).
-  *
-  * It OWNS THE KEY FORMAT: every memo is a [[SessionCaches.Memo]]
-  * made by [[SessionCaches.memo]], which registers it at class-init
-  * and builds its `appId#dir[#variant…]` keys — the same format
-  * [[SessionCaches.evict]] matches. Keys that are not per dataset dir
-  * are plan-canonical ([[SessionCaches.planKey]], which embeds the
-  * input file paths) or not per application at all.
-  *
-  * The registry adds the BOUNDED-SESSION hook the per-query memos
-  * deliberately lack: a long-lived session that walks many datasets
-  * calls [[SessionCaches.evict]] after finishing one, releasing every
-  * persisted block and memo entry for that (application, dataset)
-  * pair instead of accumulating cached state without bound. The
-  * gate/bench harness never needs this (one dataset per JVM); a
-  * multi-tenant deployment calls it from its dataset-lifecycle hook.
-  */
 /** A memoized value whose on-disk footprint spans engine-created
   * temp directories beyond any [[graft.sources.VersionedStore]] it
   * holds (landed stream outputs, arrival files, checkpoints):
@@ -43,6 +24,32 @@ trait Reapable {
   def reapRoots: Seq[String]
 }
 
+/** Central registry for the engine's memoized session caches (the
+  * `appId#dir`-keyed memos holding persisted frames, trained
+  * centroids, promoted artifact stores, …).
+  *
+  * It OWNS THE KEY FORMAT: every memo is a [[SessionCaches.Memo]]
+  * made by [[SessionCaches.memo]], which registers it at class-init
+  * and builds its `appId#dir[#variant…]` keys — the same format
+  * [[SessionCaches.evict]] matches. Keys that are not per dataset dir
+  * are plan-canonical ([[SessionCaches.planKey]], which embeds the
+  * input file paths) or not per application at all.
+  *
+  * The registry adds the BOUNDED-SESSION hook the per-query memos
+  * deliberately lack: a long-lived session that walks many datasets
+  * calls [[SessionCaches.evict]] after finishing one, releasing every
+  * persisted block and memo entry for that (application, dataset)
+  * pair instead of accumulating cached state without bound. The
+  * gate/bench harness never needs this (one dataset per JVM); a
+  * multi-tenant deployment calls it from its dataset-lifecycle hook.
+  *
+  * It also OWNS THE LINEAGE CUT and the per-batch pin release:
+  * [[SessionCaches.cutLineage]] is the engine's one way to freeze a
+  * frame's rows (a memo that holds a cut frees it on eviction),
+  * [[SessionCaches.cutToLeaf]] the iterative loops' variant, and
+  * [[SessionCaches.pinned]] the scope that frees a micro-batch's cuts
+  * and persisted frames when the batch ends, also when it throws.
+  */
 object SessionCaches {
 
   private val registered =
@@ -92,6 +99,76 @@ object SessionCaches {
       Seq(df.inputFiles.sorted.mkString(","),
         df.queryExecution.analyzed.canonicalized.toString)).mkString("#")
 
+  /** `df`'s rows, materialized now, under a plan that is one leaf over
+    * them — a lineage cut (`localCheckpoint`), not a `persist`. A
+    * persisted frame caches execution only: every consumer ACTION
+    * still re-analyzes its whole logical plan, and the engine's deep
+    * frames (gate pipelines, curation cascades, carry-flush lineages)
+    * and the plans that union several of them spend their wall in
+    * Catalyst, not in the cached scan. Eager, so concurrent readers
+    * find the rows materialized. The blocks live outside the
+    * CacheManager: a memo entry holding the cut frees them on
+    * eviction, and a per-batch cut frees them at the end of its
+    * [[pinned]] scope. */
+  def cutLineage(df: DataFrame): DataFrame = df.localCheckpoint(true)
+
+  /** A cut for iterative loops (one per round): checkpoints `df`'s RDD
+    * and builds a fresh leaf over its rows; the first action truncates
+    * the lineage, and the ContextCleaner reclaims past rounds. Unlike
+    * [[cutLineage]], whose `LogicalRDD` inherits the origin plan's
+    * size estimate (originStats), the leaf carries the default
+    * estimate. Inherited estimates multiply through a round's joins:
+    * the sizeInBytes BigInt grew 31 -> 141 -> 579 -> 2334 -> 9350 bits
+    * over five connected-components rounds, until join-stats products
+    * burned minutes of driver CPU. Costs one row-conversion pass. */
+  def cutToLeaf(df: DataFrame): DataFrame = {
+    val rdd = df.rdd
+    rdd.localCheckpoint()
+    df.sparkSession.createDataFrame(rdd, df.schema)
+  }
+
+  /** The frames one [[pinned]] scope frees. Registration is
+    * thread-safe: a batch's faces register from
+    * [[graft.streaming.StreamPools]] threads. */
+  final class Pins private[SessionCaches] extends AutoCloseable {
+    private val frees = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]
+
+    /** [[SessionCaches.cutLineage]], freed when the scope ends. */
+    def cutLineage(df: DataFrame): DataFrame = {
+      val cut = SessionCaches.cutLineage(df)
+      frees.add(() => unpersistLocalCheckpoint(cut))
+      cut
+    }
+
+    /** `df.persist()` (lazy), unpersisted when the scope ends. */
+    def persist(df: DataFrame): DataFrame = {
+      frees.add(() => { df.unpersist(); () })
+      df.persist()
+    }
+
+    /** Frees every registered frame; [[pinned]] calls it. */
+    def close(): Unit = frees.forEach(_())
+  }
+
+  /** Run `body`, then free every frame it pinned through `pins` —
+    * also when it throws, so a failed micro-batch leaves no blocks
+    * behind for its replay to add to. The body's exception is the one
+    * raised. */
+  def pinned[A](body: Pins => A): A = scala.util.Using.resource(new Pins)(body)
+
+  /** Free the blocks behind a [[cutLineage]] result. The frame is
+    * unreadable afterwards, so callers pass only cuts whose consumers
+    * have all completed. Only the cut itself is accepted: a frame
+    * derived from it (or joined with a memoized cut) would free
+    * blocks other frames still read, so a plan whose root is not a
+    * `LogicalRDD` throws IllegalArgumentException. */
+  private[graft] def unpersistLocalCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false); ()
+      case other => throw new IllegalArgumentException(
+        s"unpersistLocalCheckpoint takes a cutLineage result, not a derived ${other.nodeName} plan")
+    }
+
   // Release whatever resources a memo value pins: persisted frames
   // unpersist; promoted artifact stores delete their directory tree
   // ONLY when the entry explicitly owns them — the store IS the memo
@@ -116,8 +193,8 @@ object SessionCaches {
   private def releaseShared(v: Any): Unit = v match {
     case df: DataFrame =>
       df.unpersist()
-      // a localCheckpoint pin lives outside the CacheManager
-      if (Bridge.isLocalCheckpoint(df)) Bridge.unpersistLocalCheckpoint(df)
+      // a cut's blocks live outside the CacheManager
+      if (df.queryExecution.analyzed.isInstanceOf[LogicalRDD]) unpersistLocalCheckpoint(df)
     case _: graft.sources.VersionedStore => () // shared — owner reaps
     case r: Reapable =>
       r.reapRoots.foreach(reapTempRoot)

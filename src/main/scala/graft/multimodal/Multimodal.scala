@@ -1,6 +1,7 @@
 package graft.multimodal
 
 import graft.Q
+import graft.SessionCaches.cutLineage
 import graft.sources.Tables
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -682,8 +683,7 @@ object Multimodal {
           .withColumn("version", lit(v.toLong))
       }.reduce(_ unionByName _)
       MediaSeriesWorld(store,
-        graft.queries.Curation.psiSeries(counts, nsFeature = "rms")
-          .localCheckpoint(true))
+        cutLineage(graft.queries.Curation.psiSeries(counts, nsFeature = "rms")))
     }.report.orderBy(col("v_new"), col("v_base"), col("feature"))
   }
 
@@ -899,7 +899,7 @@ object Multimodal {
 
   /** dHash-48 per image (incl. the planted perturbed twins) over any
     * documents frame — shared by the batch dedup and the streaming
-    * twin. localCheckpoint: the hash must compute ONCE per image —
+    * twin. Cut: the hash must compute ONCE per image —
     * the 48-sample HOF expression would otherwise be inlined through
     * the band explode and the self-join and re-evaluated per
     * CANDIDATE row (measured 111 s at sf0.1; 8-byte rows checkpoint
@@ -913,9 +913,8 @@ object Multimodal {
       .select((col("doc_id") + TwinOffset).as("doc_id"), col("w"), col("h"),
         expr("concat(chr((ascii(substring(px, 1, 1)) + 7) % 128), substring(px, 2))")
           .as("px"))
-    parsed.unionByName(twins)
-      .select(col("doc_id"), expr(dhashSparkExpr).as("dh"))
-      .localCheckpoint()
+    cutLineage(parsed.unionByName(twins)
+      .select(col("doc_id"), expr(dhashSparkExpr).as("dh")))
   }
 
   /** The 4×12-bit band explode over `(doc_id, dh)`. */
@@ -955,8 +954,8 @@ object Multimodal {
   /** Corpus fingerprint frames, memoized per (application, sf dir,
     * modality): the hash pass (decode + staged HOF evaluation) is
     * each modality's most expensive column op — the pair build and
-    * the data card share ONE pass. The hash functions already
-    * localCheckpoint, so the memo hands out the materialized rows. */
+    * the data card share ONE pass. The hash functions already cut
+    * their lineage, so the memo hands out the materialized rows. */
   private val hashMemo = graft.SessionCaches.memo[org.apache.spark.sql.DataFrame]
 
   private def memoHashes(s: SparkSession, dir: String, kind: String,
@@ -1090,8 +1089,8 @@ object Multimodal {
     * split into 49 equal frames, and bit k records whether frame
     * k+1's energy exceeds frame k's — the sign-of-derivative
     * signature the published audio fingerprints (Haitsma-Kalker
-    * style) reduce to, in integer-exact arithmetic. localCheckpoint
-    * for the same reason as [[imageHashes]]. */
+    * style) reduce to, in integer-exact arithmetic. Cut for the same
+    * reason as [[imageHashes]]. */
   def audioHashes(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val base = wavFrames(docs)
       .withColumn("hx", hex(col("payload")))
@@ -1104,7 +1103,7 @@ object Multimodal {
       .select((col("doc_id") + TwinOffset).as("doc_id"), col("n"),
         expr("concat(chr((ascii(substring(ds, 1, 1)) + 7) % 128), substring(ds, 2))")
           .as("ds"))
-    // STAGED evaluation, one localCheckpoint per stage: HOFs are
+    // STAGED evaluation, one lineage cut per stage: HOFs are
     // interpreted (no codegen CSE), so an expression referenced k
     // times is EVALUATED k times — and positional substring over a
     // string is O(position), so the naive per-bit frame sums were
@@ -1113,23 +1112,20 @@ object Multimodal {
     // (split, O(n)), the 49 frame energies once (slices over the
     // value array), then the 48 comparison bits over the energy
     // array. 1.6 s at sf0.1.
-    val vals = base.unionByName(twins)
+    val vals = cutLineage(base.unionByName(twins)
       .withColumn("vals", expr("transform(split(ds, ''), c -> CAST(ascii(c) AS BIGINT))"))
-      .select(col("doc_id"), col("n"), col("vals"))
-      .localCheckpoint()
-    val es = vals.select(col("doc_id"), expr(
+      .select(col("doc_id"), col("n"), col("vals")))
+    val es = cutLineage(vals.select(col("doc_id"), expr(
       s"""transform(sequence(0, 48), k ->
          |  IF(((k * n) div 49) >= (((k + 1) * n) div 49), CAST(0 AS BIGINT),
          |    aggregate(slice(vals, ((k * n) div 49) + 1,
          |        (((k + 1) * n) div 49) - ((k * n) div 49)),
-         |      CAST(0 AS BIGINT), (a, x) -> a + x)))""".stripMargin).as("es"))
-      .localCheckpoint()
-    es.select(col("doc_id"), expr(
+         |      CAST(0 AS BIGINT), (a, x) -> a + x)))""".stripMargin).as("es")))
+    cutLineage(es.select(col("doc_id"), expr(
       """aggregate(sequence(0, 47), CAST(0 AS BIGINT),
         |  (acc, k) -> acc + IF(element_at(es, k + 2) > element_at(es, k + 1),
         |    shiftleft(CAST(1 AS BIGINT), k), CAST(0 AS BIGINT)))""".stripMargin)
-      .as("ah"))
-      .localCheckpoint()
+      .as("ah")))
   }
 
   /** Acoustic near-duplicate detection — the audio face of
@@ -1283,8 +1279,8 @@ object Multimodal {
       val slots = new java.util.concurrent.atomic.AtomicReferenceArray[
         org.apache.spark.sql.DataFrame](2)
       graft.streaming.StreamPools.runAll(Seq(
-        () => slots.set(0, jointClustersOf(pairs).localCheckpoint(true)),
-        () => slots.set(1, jointClustersOf(pruned).localCheckpoint(true))))
+        () => slots.set(0, cutLineage(jointClustersOf(pairs))),
+        () => slots.set(1, cutLineage(jointClustersOf(pruned)))))
       val full = slots.get(0)
       val after = slots.get(1)
       store.promote("joint_clusters", store.register(s, "joint_clusters", full))
@@ -1926,13 +1922,9 @@ object Multimodal {
 
   private[graft] def trimodalGated(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     trimodalGatedMemo(s, dir)(
-      // localCheckpoint (lineage CUT), not persist: the three
-      // alignment programs are a deep tree, and each consumer ACTION
-      // re-runs Catalyst over it (persist caches execution only) —
-      // the emission family embeds this frame repeatedly, so the
-      // re-analysis wall dwarfs the cached-scan execution
-      trimodalGatedOf(Tables.documents(s, dir), Tables.embeddings(s, dir))
-        .localCheckpoint(true))
+      // cut: the emission family embeds this deep three-program tree
+      // repeatedly
+      cutLineage(trimodalGatedOf(Tables.documents(s, dir), Tables.embeddings(s, dir))))
 
   /** [[trimodalGated]] over any documents frame — shared with the
     * streaming twin's per-micro-batch gates (stream-static equi-joins
@@ -2255,7 +2247,7 @@ object Multimodal {
       "FROM n") { (s, dir) =>
     // the scored window frame and both ranked schedules are a few
     // hundred rows but their LINEAGE carries the model-scoring join —
-    // localCheckpoint once per (application, dir) so the certificate's
+    // cut once per (application, dir) so the certificate's
     // six aggregate legs (× bench reps) don't re-pay the scoring DAG
     val (w, ranked, rankedPatch) = triCompositeMemo(s, dir) {
         val store = graft.ml.QualityModel.productionStore(s, dir)
@@ -2268,7 +2260,7 @@ object Multimodal {
           .groupBy(col("shard").as("data_shard"),
             floor(col("start_off") / 2048).cast("long").as("seq_id"))
           .agg(avg(col("proba")).as("win_quality"))
-        val wf = trimodalEmitWindows(s, dir).withColumnRenamed("shard", "data_shard")
+        val wf = cutLineage(trimodalEmitWindows(s, dir).withColumnRenamed("shard", "data_shard")
           .withColumn("patch_share",
             round(col("n_patch").cast("double") / col("n_tokens"), 6))
           .join(winQ, Seq("data_shard", "seq_id"), "left_outer")
@@ -2277,18 +2269,17 @@ object Multimodal {
           .withColumn("win_quality",
             coalesce(round(col("win_quality"), 6), lit(0.5)))
           .withColumn("cscore",
-            round(col("patch_share") - lit(0.25) * col("win_quality"), 6))
-          .localCheckpoint(true)
+            round(col("patch_share") - lit(0.25) * col("win_quality"), 6)))
         // the non-vacuity leg needs only the patch-share quartile
         // MEMBERSHIP — derived via the closed-form boundary device,
         // not a second full two-level rank (r19 verdict item #1;
         // equivalence to compositeTrimodalRank's quartile column is
         // spec-pinned in MultimodalSpec)
         (wf,
-          compositeTrimodalRank(wf, col("cscore")).localCheckpoint(true),
-          graft.queries.Curation.quartileMembershipAsc(wf,
+          cutLineage(compositeTrimodalRank(wf, col("cscore"))),
+          cutLineage(graft.queries.Curation.quartileMembershipAsc(wf,
             scaled = (col("patch_share") + 1) * 8,
-            tieKey = trimodalTieKey).localCheckpoint(true))
+            tieKey = trimodalTieKey)))
       }
     def key(salt: String) = md5(concat(lit(salt), col("data_shard").cast("string"),
       lit(":"), col("seq_id").cast("string")))
@@ -2412,10 +2403,8 @@ object Multimodal {
 
   private[graft] def trimodalPositioned(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     trimodalPosMemo(s, dir)(
-      // localCheckpoint, not persist — same lineage-cut rationale as
-      // trimodalGated (the positioned frame feeds the pack/emit/freq
-      // family, each action re-analyzing the whole tree otherwise)
-      trimodalPositionOf(s, dir, trimodalGated(s, dir)).localCheckpoint(true))
+      // cut: the positioned frame feeds the pack/emit/freq family
+      cutLineage(trimodalPositionOf(s, dir, trimodalGated(s, dir))))
 
   /** Position any gated trimodal record frame on the interleaved
     * stream (tot = patch block + transcript id count) — shared by the
@@ -2465,7 +2454,7 @@ object Multimodal {
     trimodalWinMemo(s, dir) {
       val pos = graft.WarmPhases.phase("position") { trimodalPositioned(s, dir) }
       graft.WarmPhases.phase("windows") {
-        trimodalEmitWindowsOf(s, dir, pos).localCheckpoint(true)
+        cutLineage(trimodalEmitWindowsOf(s, dir, pos))
       }
     }
 
@@ -2673,7 +2662,7 @@ object Multimodal {
       val gated = trimodalGated(s, dir)
       val store = new graft.sources.FrameStore(
         java.nio.file.Files.createTempDirectory("graft-forget-trimodal-").toString)
-      val before = trimodalEmitWindows(s, dir).localCheckpoint(true)
+      val before = cutLineage(trimodalEmitWindows(s, dir))
       store.promote("trimodal_windows",
         store.register(s, "trimodal_windows", before))
       // the gates are per-doc facts, so filtering the gated record
@@ -2682,8 +2671,8 @@ object Multimodal {
       // offset in its shard, so affected shards recut wholesale
       val affected = gated.filter(col("doc_id") % 20 === 8)
         .select(col("shard")).distinct()
-      val rebuilt = trimodalEmitWindowsOf(s, dir, trimodalPositionOf(s, dir,
-        gated.filter(col("doc_id") % 20 =!= 8))).localCheckpoint(true)
+      val rebuilt = cutLineage(trimodalEmitWindowsOf(s, dir, trimodalPositionOf(s, dir,
+        gated.filter(col("doc_id") % 20 =!= 8))))
       store.rewrite(s, "trimodal_windows") { df =>
         df.join(broadcast(affected), Seq("shard"), "left_anti")
           .unionByName(rebuilt.join(broadcast(affected), Seq("shard")))
@@ -2838,7 +2827,7 @@ object Multimodal {
     * arithmetic), dHash each frame's pixels with the image grid, and
     * chain the frame hashes with rotate-XOR — frame ORDER is part of
     * the signature, a one-frame perceptual change stays Hamming-small
-    * (the property banding needs). Staged localCheckpoints for the
+    * (the property banding needs). Staged lineage cuts for the
     * same interpreted-HOF reasons as [[imageHashes]]. */
   def videoHashes(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val frames = videoFramePx(videoFrames(docs))
@@ -2926,20 +2915,18 @@ object Multimodal {
         (max(col("lum_sum")) - min(col("lum_sum"))).cast("double").as("v_lum_spread"))
 
   /** Per-frame dHash → rotate-XOR chain over `(doc_id, w, h, f, px)`
-    * rows. Staged localCheckpoints ([[imageHashes]] reasons). */
+    * rows. Staged lineage cuts ([[imageHashes]] reasons). */
   private def chainSignature(frames: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val fdh = frames
-      .select(col("doc_id"), col("f"), expr(dhashSparkExpr).as("dh"))
-      .localCheckpoint()
-    fdh.groupBy(col("doc_id"))
+    val fdh = cutLineage(frames
+      .select(col("doc_id"), col("f"), expr(dhashSparkExpr).as("dh")))
+    cutLineage(fdh.groupBy(col("doc_id"))
       .agg(
         max(when(col("f") === 0, col("dh"))).as("dh0"),
         max(when(col("f") === 1, col("dh"))).as("dh1"),
         max(when(col("f") === 2, col("dh"))).as("dh2"))
       .select(col("doc_id"), expr(
         s"${rotSpark("dh0", 0)} ^ ${rotSpark("dh1", 5)} ^ ${rotSpark("dh2", 10)}")
-        .as("dh"))
-      .localCheckpoint()
+        .as("dh")))
   }
 
   /** Parse + temporal signature over raw `(doc_id, payload)` video
@@ -3190,12 +3177,9 @@ object Multimodal {
       val symtab = seg.select(col("sym")).distinct()
         .withColumn("id", (row_number().over(
           org.apache.spark.sql.expressions.Window.orderBy(col("sym"))) - 1).cast("long"))
-      // localCheckpoint, not persist: joined into per-micro-batch
-      // plans in both gated mm streams — the memo-boundary lineage
-      // cut keeps every consumer's plan at scan size
-      val df = seg.join(broadcast(symtab), Seq("sym"))
-        .select(col("word"), col("j").cast("long").as("j"), col("id"), col("sym"))
-        .localCheckpoint(true)
+      // cut: joined into per-micro-batch plans in both gated mm streams
+      val df = cutLineage(seg.join(broadcast(symtab), Seq("sym"))
+        .select(col("word"), col("j").cast("long").as("j"), col("id"), col("sym")))
       (df, df.count())
     }
 
@@ -3211,8 +3195,7 @@ object Multimodal {
       dir: String): (org.apache.spark.sql.DataFrame, Long) =
     mmVocabLensCache(s, dir) {
       val (syms, _) = mmCaptionSymsStats(s, dir)
-      val df = syms.groupBy(col("word")).agg(count(lit(1)).as("nsym"))
-        .localCheckpoint(true)
+      val df = cutLineage(syms.groupBy(col("word")).agg(count(lit(1)).as("nsym")))
       (df, df.count())
     }
 
@@ -3249,7 +3232,7 @@ object Multimodal {
 
   private[graft] def mmEmitPositioned(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     mmPosCache(s, dir) {
-      mmPositionOf(s, dir, mmEmitDocs(s, dir)).localCheckpoint(true)
+      cutLineage(mmPositionOf(s, dir, mmEmitDocs(s, dir)))
     }
 
   /** Position any `(doc_id, shard, media_tokens, text)` aligned-docs
@@ -3614,7 +3597,7 @@ object Multimodal {
       // between the store lifecycle and the certificate (the cert's
       // substantive content is the UNTOUCHED-shard preservation and
       // gc durability, both checked against the store's own parquet)
-      val before = mmEmitWindows(s, dir, mmEmitPositioned(s, dir)).localCheckpoint(true)
+      val before = cutLineage(mmEmitWindows(s, dir, mmEmitPositioned(s, dir)))
       store.promote("mm_windows", store.register(s, "mm_windows", before))
       // the forget, PROPAGATED: removal shifts every later record's
       // offsets IN ITS SHARD, so the whole affected shard recuts from
@@ -3628,8 +3611,7 @@ object Multimodal {
       val reduced = mmEmitDocsOf(
         Tables.documents(s, dir).filter(!mmForgotten(col("doc_id"))),
         Tables.embeddings(s, dir))
-      val rebuilt = mmEmitWindows(s, dir, mmPositionOf(s, dir, reduced))
-        .localCheckpoint(true)
+      val rebuilt = cutLineage(mmEmitWindows(s, dir, mmPositionOf(s, dir, reduced)))
       store.rewrite(s, "mm_windows") { df =>
         df.join(broadcast(affected), Seq("shard"), "left_anti")
           .unionByName(rebuilt.join(broadcast(affected), Seq("shard")))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Q
+import graft.SessionCaches.cutLineage
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -154,13 +155,10 @@ object Curation {
 
   private[graft] def lmScores(s: SparkSession, dir: String): DataFrame =
     lmMemo(s, dir)(
-      // localCheckpoint (lineage CUT), not persist: the vocab-join +
-      // groupBy tree re-ANALYZES on every consumer action otherwise,
-      // and downstream plans (curriculum rank, pack joins) embed this
-      // tree several times over — Catalyst wall, not execution wall
-      // (the r20 pack probe: counting a 2-row cached frame derived
-      // from it read 2.4 s)
-      lmScoresCompute(s, dir).localCheckpoint(true))
+      // cut: downstream plans (curriculum rank, pack joins) embed this
+      // tree several times over (the r20 pack probe: counting a 2-row
+      // cached frame derived from it read 2.4 s)
+      cutLineage(lmScoresCompute(s, dir)))
 
   private[graft] def lmScoresCompute(s: SparkSession, dir: String): DataFrame = {
     val tc = TextOps.tokenCounts(s, dir)
@@ -398,7 +396,7 @@ object Curation {
       // cut) and shared between the store lifecycle and the cert —
       // the cert's substantive content is untouched-shard
       // preservation + gc durability against the store's own parquet
-      val before = mixPackManifest(Tables.documents(s, dir)).localCheckpoint(true)
+      val before = cutLineage(mixPackManifest(Tables.documents(s, dir)))
       store.promote("mix_pack", store.register(s, "mix_pack", before))
       // the forget, PROPAGATED: deleting the doc's own manifest rows
       // is not enough — removal shifts the running offsets of every
@@ -412,8 +410,8 @@ object Curation {
       // shards); gc makes the withdrawal durable on disk.
       val affected = Tables.documents(s, dir)
         .filter(col("doc_id") % 20 === 7).select(col("source")).distinct()
-      val rebuilt = mixPackManifest(
-        Tables.documents(s, dir).filter(col("doc_id") % 20 =!= 7)).localCheckpoint(true)
+      val rebuilt = cutLineage(mixPackManifest(
+        Tables.documents(s, dir).filter(col("doc_id") % 20 =!= 7)))
       store.rewrite(s, "mix_pack") { df =>
         df.join(broadcast(affected), Seq("source"), "left_anti")
           .unionByName(rebuilt.join(broadcast(affected), Seq("source")))
@@ -526,17 +524,13 @@ object Curation {
 
   private[graft] def curriculumSchedule(s: SparkSession, dir: String): DataFrame =
     curriculumMemo(s, dir) {
-      // localCheckpoint (lineage CUT), not persist: the memoized frame
-      // carries the whole two-level-rank + tie-cut + shuffleRank tree,
-      // and every consumer ACTION re-runs Catalyst over it (persist
-      // caches execution, not analysis) — consumers like the pack join
-      // embed the tree 4+ times, so the re-analysis wall dwarfs the
-      // cached-scan execution (guide §3.3: materialize to truncate).
+      // cut: the two-level-rank + tie-cut + shuffleRank tree is
+      // embedded 4+ times by consumers like the pack join.
       // The rank device's plan invariants stay pinned on the
       // PRE-checkpoint plan (PlanInvariantsSpec explains
       // curriculumScheduleCompute without executing it).
       val (df0, ranked) = curriculumScheduleCompute(s, dir)
-      val df = df0.localCheckpoint(true)
+      val df = cutLineage(df0)
       ranked.unpersist()
       df
     }
@@ -641,11 +635,10 @@ object Curation {
 
   private[graft] def compositeSchedule(s: SparkSession, dir: String): DataFrame =
     compositeMemo(s, dir) {
-      // localCheckpoint, not persist — same lineage-cut rationale as
-      // curriculumSchedule above (plan invariants pinned on the
-      // pre-checkpoint compute)
+      // cut like curriculumSchedule above (plan invariants pinned on
+      // the pre-checkpoint compute)
       val (df0, sc, ranked) = compositeScheduleCompute(s, dir)
-      val df = df0.localCheckpoint(true)
+      val df = cutLineage(df0)
       sc.unpersist(); ranked.unpersist()
       df
     }
@@ -1213,7 +1206,7 @@ object Curation {
       val base = store.loadProduction(s, DriftBaselineName)
         .getOrElse(sys.error("no promoted drift baseline"))
       BaselineWorld(store,
-        psiVsBaseline(newCounts, base, bv).localCheckpoint(true))
+        cutLineage(psiVsBaseline(newCounts, base, bv)))
     }.report.orderBy(col("slice"), col("feature"))
   }
 
@@ -1307,7 +1300,7 @@ object Curation {
         store.load(s, DriftBaselineName, v)
           .withColumn("version", lit(v.toLong))
       }.reduce(_ unionByName _)
-      SeriesDriftWorld(store, psiSeries(counts).localCheckpoint(true))
+      SeriesDriftWorld(store, cutLineage(psiSeries(counts)))
     }.report.orderBy(col("v_new"), col("v_base"), col("feature"))
   }
 

@@ -74,40 +74,20 @@ object DedupGraph {
     * r1 < r2 would drop r2's min next round — whose id is the
     * component min, every member labeled with it. */
   def connectedComponentsWithRounds(pairs: DataFrame, maxIters: Int = 64): (DataFrame, Int) = {
-    val session = pairs.sparkSession
-    // Round boundaries CUT the logical tree and the RDD lineage but
-    // NOT via Dataset.localCheckpoint. Three failure modes bracket
-    // this choice, all measured:
-    //  - No cut at all (persist chain): each round's composed plan
-    //    references the previous round's tree several times, so the
-    //    LOGICAL tree size multiplies per round and the analyzer's
-    //    tree walks go exponential (measured: round 0 = 2 s,
-    //    round 1 = 30 s at sf0.1).
-    //  - Dataset.localCheckpoint: cuts the tree, but LogicalRDD
-    //    INHERITS the origin plan's size ESTIMATE (originStats), and
-    //    estimates multiply through the round's joins — the
-    //    sizeInBytes BigInt's bit-length grows geometrically,
-    //    31 -> 141 -> 579 -> 2334 -> 9350 bits over five rounds,
-    //    until join-stats products burn
-    //    minutes of driver CPU and the loop looks hung.
-    //  - RDD-level localCheckpoint + a fresh leaf DataFrame over the
-    //    checkpointed rows (this code): the new plan is a LEAF with
-    //    the DEFAULT size estimate (constant per round, so stats
-    //    stay bounded), the first action truncates the RDD lineage,
-    //    and the ContextCleaner reclaims prior rounds. Costs one
-    //    row-conversion pass per round over the two-long frames —
-    //    linear in |V|+|E|, negligible against the round's joins.
-    def cut(df: DataFrame): DataFrame = {
-      val rdd = df.rdd // RDD[Row]; localCheckpoint truncates lineage
-      rdd.localCheckpoint() // at the first action that computes it
-      session.createDataFrame(rdd, df.schema)
-    }
+    // Round boundaries CUT the logical tree and the RDD lineage with
+    // SessionCaches.cutToLeaf (its scaladoc has why not cutLineage).
+    // Without a cut (a persist chain), each round's composed plan
+    // references the previous round's tree several times, so the
+    // LOGICAL tree size multiplies per round and the analyzer's tree
+    // walks go exponential (measured: round 0 = 2 s, round 1 = 30 s
+    // at sf0.1).
+    import graft.SessionCaches.cutToLeaf
     // symmetric edge list; every node also self-loops through the
     // nodes frame so singout-free mins include the node itself
-    var cedges = cut(pairs.select(col("d1").as("a"), col("d2").as("b"))
+    var cedges = cutToLeaf(pairs.select(col("d1").as("a"), col("d2").as("b"))
       .union(pairs.select(col("d2").as("a"), col("d1").as("b")))
       .distinct())
-    var labels = cut(cedges.select(col("a").as("v")).distinct()
+    var labels = cutToLeaf(cedges.select(col("a").as("v")).distinct()
       .withColumn("lbl", col("v")))
     // coalesce: sum over an empty label frame is SQL NULL — a corpus
     // with zero near-dup pairs must converge to an empty result, not
@@ -125,7 +105,7 @@ object DedupGraph {
         .persist() // min + star emission both read it
       // (a) per-center min — this IS the round's label frame
       val m = withSelf.groupBy(col("a")).agg(min(col("b")).as("lbl"))
-      val nextLabels = cut(m.select(col("a").as("v"), col("lbl")))
+      val nextLabels = cutToLeaf(m.select(col("a").as("v"), col("lbl")))
       // (b) hash-to-min star emission: every center hands its whole
       //     neighborhood to its min — (m(u), b) for b ∈ N(u) ∪ {u} —
       //     which is what creates the SHORTCUTS plain propagation
@@ -136,7 +116,7 @@ object DedupGraph {
         .join(nextLabels.select(col("v").as("a"), col("lbl").as("ma")), Seq("a"))
         .select(col("ma").as("a"), col("b"))
         .filter(col("a") =!= col("b"))
-      val nextEdges = cut(star
+      val nextEdges = cutToLeaf(star
         .union(star.select(col("b").as("a"), col("a").as("b")))
         .distinct())
       val s = lblSum(nextLabels) // ONE action: materializes + checkpoints

@@ -96,10 +96,8 @@ object Kmeans {
   private val trainCache = graft.SessionCaches.memo[Array[Array[Double]]]
 
   def trained(s: SparkSession, dir: String): Array[Array[Double]] =
-    trainCache(s, dir) {
-      val vv = vecs(Tables.embeddings(s, dir)).persist()
-      try train(vv) finally vv.unpersist(blocking = false)
-    }
+    trainCache(s, dir)(graft.SessionCaches.pinned(pins =>
+      train(pins.persist(vecs(Tables.embeddings(s, dir))))))
 
   /** Per-vector (vec_id, cluster, cos) assignment frame under the
     * trained centroids, PERSISTED and memoized per (application, sf

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Q
+import graft.SessionCaches.cutLineage
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -892,7 +893,7 @@ object TextOps {
     * parquet-backed or persisted upstream the re-reads are cheap
     * scans; a caller whose upstream is an EXPENSIVE unpersisted
     * computation (per-row tokenization, a wide join) should persist
-    * or localCheckpoint the pruned `(source, doc_id, value, …)`
+    * or cut the lineage of the pruned `(source, doc_id, value, …)`
     * projection before calling, or the upstream re-pays per branch.
     *
     * `order` MUST lead with `doc_id`: the sub-shard is a doc_id
@@ -1404,7 +1405,7 @@ object TextOps {
     * The tail is gate-invariant — a doc retained under ANY quality
     * gate carries the same planted/redacted text — so a two-face
     * consumer (the shadow stream: heuristic + learned decisions per
-    * micro-batch) localCheckpoints this and projects both gates from
+    * micro-batch) cuts this and projects both gates from
     * it instead of paying the regex tail twice per batch. */
   private[graft] def curationDecideShared(marked: DataFrame): DataFrame =
     marked
@@ -1487,17 +1488,14 @@ object TextOps {
       val contam = maybeBroadcast(
         contaminationAgg(s, dir).select(col("doc_id")).withColumn("is_contam", lit(true)),
         contaminationAgg(s, dir).count() * 16)
-      // localCheckpoint (lineage CUT), not persist: the marked frame
-      // sits on the scrub + boiler/dup-prefix + dedup-join tree, and
-      // the whole curation family re-runs Catalyst over that tree on
-      // EVERY action otherwise (persist caches execution, not
-      // analysis) — the decide cascade embeds it once per consumer
-      per
+      // cut: the marked frame sits on the scrub + boiler/dup-prefix +
+      // dedup-join tree, and the decide cascade embeds it once per
+      // consumer
+      cutLineage(per
         .join(keepers, Seq("fp"))
         .join(near, Seq("doc_id"), "left_outer")
         .join(contam, Seq("doc_id"), "left_outer")
-        .withColumn("is_exact_dup", col("doc_id") =!= col("keeper"))
-        .localCheckpoint(true)
+        .withColumn("is_exact_dup", col("doc_id") =!= col("keeper")))
     }
 
   /** The composed pipeline with the LEARNED quality gate: same
@@ -1527,11 +1525,8 @@ object TextOps {
   private[graft] def curationLearnedDecisionsCached(s: SparkSession, dir: String,
       model: DataFrame): DataFrame =
     learnedDecisionsCache(s, dir)(
-      // localCheckpoint (lineage CUT), not persist: the record sits on
-      // the whole curation+scoring tree, and certificates union it
-      // with several siblings — re-analysis of the combined plan, not
-      // execution, dominated their wall-clock
-      curationLearnedDecisions(s, dir, model).localCheckpoint(true))
+      // cut: certificates union it with several siblings
+      cutLineage(curationLearnedDecisions(s, dir, model)))
 
   /** Per-source DATA CARD — the datasheet a curated-corpus release
     * publishes (Datasheets-for-Datasets / Dolma-style): for each
@@ -2131,10 +2126,9 @@ object TextOps {
 
   private[graft] def curationWindows(s: SparkSession, dir: String): DataFrame =
     curWinMemo(s, dir) {
-      emitWindowsOfRetained(curationDecisions(s, dir)
+      cutLineage(emitWindowsOfRetained(curationDecisions(s, dir)
         .filter(col("drop_reason").isNull)
-        .select(col("source"), col("doc_id"), col("red"), col("final_tokens")))
-        .localCheckpoint(true)
+        .select(col("source"), col("doc_id"), col("red"), col("final_tokens"))))
     }
 
   /** Window cutting + hashing over positioned retained texts
@@ -2185,14 +2179,11 @@ object TextOps {
       val symtab = seg.select(col("sym")).distinct()
         .withColumn("id", (row_number().over(
           org.apache.spark.sql.expressions.Window.orderBy(col("sym"))) - 1).cast("long"))
-      // localCheckpoint, not persist: the table's lineage is the full
-      // cascade + BPE fold, and it is JOINED into every window-cut
-      // plan (4× per streaming micro-batch) — persist caches execution
-      // but every consumer still re-analyzes the giant tree (the
-      // memo-boundary rule this round applied to the schedules)
-      val df = seg.join(broadcast(symtab), Seq("sym"))
-        .select(col("word"), col("j").cast("long").as("j"), col("id"), col("sym"))
-        .localCheckpoint(true)
+      // cut: the table's lineage is the full cascade + BPE fold, and
+      // it is JOINED into every window-cut plan (4× per streaming
+      // micro-batch)
+      val df = cutLineage(seg.join(broadcast(symtab), Seq("sym"))
+        .select(col("word"), col("j").cast("long").as("j"), col("id"), col("sym")))
       (df, df.count())
     }
 
@@ -2219,11 +2210,10 @@ object TextOps {
       val symtab = seg.select(col("sym")).distinct()
         .withColumn("id", (row_number().over(
           org.apache.spark.sql.expressions.Window.orderBy(col("sym"))) - 1).cast("long"))
-      // localCheckpoint like [[emitWordSymsStats]] — same giant
-      // lineage, joined into every GATED window cut
-      val df = seg.join(broadcast(symtab), Seq("sym"))
-        .select(col("word"), col("j").cast("long").as("j"), col("id"), col("sym"))
-        .localCheckpoint(true)
+      // cut like [[emitWordSymsStats]] — same giant lineage, joined
+      // into every GATED window cut
+      val df = cutLineage(seg.join(broadcast(symtab), Seq("sym"))
+        .select(col("word"), col("j").cast("long").as("j"), col("id"), col("sym")))
       (df, df.count())
     }
 
@@ -2246,12 +2236,11 @@ object TextOps {
       symsStats: => (DataFrame, Long)): (DataFrame, Long, Long) =
     wordEncCache(s, dir, variant) {
       val (syms, _) = symsStats
-      val df = syms.groupBy(col("word")).agg(
+      val df = cutLineage(syms.groupBy(col("word")).agg(
           array_join(transform(
             array_sort(collect_list(struct(col("j"), col("id")))),
             x => x.getField("id").cast("string")), ",").as("ids_csv"),
-          count(lit(1)).as("nsym"))
-        .localCheckpoint(true)
+          count(lit(1)).as("nsym")))
       val r = df.agg(count(lit(1)), coalesce(sum(col("nsym")), lit(0L))).head()
       (df, r.getLong(0), r.getLong(0) * 32L + r.getLong(1) * 8L)
     }
@@ -2453,12 +2442,11 @@ object TextOps {
       // cut) and shared between the store lifecycle and the cert —
       // the cert's substantive content is untouched-shard
       // preservation + gc durability against the store's own parquet
-      val before = emitWindowsOfRetained(retained).localCheckpoint(true)
+      val before = cutLineage(emitWindowsOfRetained(retained))
       store.promote("emit_windows", store.register(s, "emit_windows", before))
       val affected = retained.filter(col("doc_id") % 20 === 7)
         .select(col("source")).distinct()
-      val rebuilt = emitWindowsOfRetained(retained.filter(col("doc_id") % 20 =!= 7))
-        .localCheckpoint(true)
+      val rebuilt = cutLineage(emitWindowsOfRetained(retained.filter(col("doc_id") % 20 =!= 7)))
       store.rewrite(s, "emit_windows") { df =>
         df.join(broadcast(affected), Seq("source"), "left_anti")
           .unionByName(rebuilt.join(broadcast(affected), Seq("source")))

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 
 import graft.Q
+import graft.SessionCaches.pinned
 import graft.sources.{CowMerge, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -102,9 +103,9 @@ object StreamingCowMerge {
   /** One micro-batch MERGE: recompute each touched day from its
     * pre-batch generation + this batch's rows, commit as
     * `gen-<batchId>`. Idempotent under replay (see object doc). */
-  def mergeBatch(batch: DataFrame, batchId: Long, store: String): Unit = {
+  def mergeBatch(batch: DataFrame, batchId: Long, store: String): Unit = pinned { pins =>
     val s = batch.sparkSession
-    val updates = CowMerge.dailyAgg(batch).persist()
+    val updates = pins.persist(CowMerge.dailyAgg(batch))
     val days = updates.select(col("day")).distinct()
       .collect().map(_.getDate(0).toString).sorted
     days.foreach { day =>
@@ -125,7 +126,6 @@ object StreamingCowMerge {
       val marker = gen.resolve(Done)
       if (!Files.exists(marker)) Files.createFile(marker)
     }
-    updates.unpersist()
   }
 
   /** The whole store at its newest complete generations. */

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 
 import graft.Q
+import graft.SessionCaches.pinned
 import graft.queries.{Curation, TextOps}
 import graft.sources.{FrameStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -219,18 +220,18 @@ object StreamingCuration {
     * escaping (the doc_id anti-join this replaces would have
     * subtracted the earlier row as if it were this batch's own
     * replayed append). */
-  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = {
+  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = pinned { pins =>
     val bs = batch.sparkSession
     graft.functions.GraftFunctions.register(bs)
     // a micro-batch is one small arrival file = one input split;
     // spread it across the session's shuffle width so every per-row
     // text pass (quality, shingles, grams) uses the full executor
     // set, and persist: four consumers read it below
-    val docs = batch.repartition(bs.sessionState.conf.numShufflePartitions).persist()
+    val docs = pins.persist(batch.repartition(bs.sessionState.conf.numShufflePartitions))
     // the shingle pass (tokenize + hash per row) is the batch's most
     // expensive column op — computed ONCE, shared by the near-dup
     // join and the index append
-    val batchHs = TextOps.hashedShingleArrays(docs).persist()
+    val batchHs = pins.persist(TextOps.hashedShingleArrays(docs))
     // line + span scrub masks, PREFIX semantics against the promoted
     // count state: carriers so far = Σ n_docs over OTHER batches'
     // stamps (replay-safe by provenance) + the in-batch rank; in
@@ -249,8 +250,8 @@ object StreamingCuration {
       .getOrElse(sys.error("no production fp index"))
       .filter(col("batch_id") =!= batchId)
       .select(col("doc_id")).distinct()
-    val segs = TextOps.lineSegments(docs)
-      .withColumn("fp", xxhash64(col("line"))).persist()
+    val segs = pins.persist(TextOps.lineSegments(docs)
+      .withColumn("fp", xxhash64(col("line"))))
     val lineFirsts = segs.select(col("fp"), col("doc_id")).distinct()
       .join(seenIds, Seq("doc_id"), "left_anti")
     val lineBase = env.store.loadProduction(bs, LineCounts)
@@ -264,7 +265,7 @@ object StreamingCuration {
         .filter(col("k") + coalesce(col("base_n"), lit(0L)) >= TextOps.LineMinDocs)
         .select(col("fp"), col("doc_id")),
       Seq("fp", "doc_id")).select(col("doc_id"), col("seg_id"))
-    val starts = TextOps.spanStarts(docs).persist()
+    val starts = pins.persist(TextOps.spanStarts(docs))
     val spanFirsts = starts.select(col("fp"), col("doc_id")).distinct()
       .join(seenIds, Seq("doc_id"), "left_anti")
     val spanBase = env.store.loadProduction(bs, SpanCounts)
@@ -339,17 +340,17 @@ object StreamingCuration {
     // concurrent writers by design), and every production read either
     // resolved its version path eagerly above or filters this batch's
     // own stamp, so ordering among the actions is immaterial.
-    val (decisionActs, sharedPin): (Seq[() => Unit], Option[DataFrame]) =
+    val decisionActs: Seq[() => Unit] =
       env.quality match {
         case Some(qstore) if env.shadow =>
           // shadow mode lands BOTH faces: the cascade's gate-invariant
-          // prefix + PII tail is computed ONCE (localCheckpoint — the
-          // tail regexes were the stack's second-most-expensive pass,
-          // paid twice per batch before this), then each gate is a
-          // cheap projection. The learned face scores only pre-quality
+          // prefix + PII tail is computed ONCE (a cut — the tail
+          // regexes were the stack's second-most-expensive pass, paid
+          // twice per batch before this), then each gate is a cheap
+          // projection. The learned face scores only pre-quality
           // survivors: the gate can only fire where the prefix kept the
           // doc, so the decisions are unchanged.
-          val shared = TextOps.curationDecideShared(marked).localCheckpoint(true)
+          val shared = pins.cutLineage(TextOps.curationDecideShared(marked))
           val heurFace = () => {
             TextOps.decideFromShared(shared, col("quality_score") < 0.7)
               .write.mode("overwrite").parquet(s"${env.outDir}/batch=$batchId")
@@ -366,19 +367,19 @@ object StreamingCuration {
               .write.mode("overwrite").parquet(s"${env.learnedOutDir}/batch=$batchId")
             ()
           }
-          (Seq(heurFace, learnedFace), Some(shared))
+          Seq(heurFace, learnedFace)
         case Some(qstore) =>
-          (Seq(() => {
+          Seq(() => {
             learnedDecisions(qstore)
               .write.mode("overwrite").parquet(s"${env.outDir}/batch=$batchId")
             ()
-          }), None)
+          })
         case None =>
-          (Seq(() => {
+          Seq(() => {
             TextOps.curationDecide(marked)
               .write.mode("overwrite").parquet(s"${env.outDir}/batch=$batchId")
             ()
-          }), None)
+          })
       }
     // the indexes grow with EVERY doc (dropped docs still index —
     // the batch pipeline's pair list spans the whole corpus)
@@ -398,18 +399,7 @@ object StreamingCuration {
         spanFirsts.groupBy(col("fp")).agg(count(lit(1)).as("n_docs"))
           .withColumn("batch_id", lit(batchId)),
         batchId = Some(batchId), streamId = Some(env.ckpt)); () })
-    try StreamPools.runAll(decisionActs ++ appendActs)
-    finally {
-      // shared is dead once both faces landed (or the batch failed and
-      // will replay) — free its checkpoint blocks now rather than
-      // letting past batches' pins wait on driver GC + ContextCleaner
-      sharedPin.foreach(org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint)
-      starts.unpersist()
-      segs.unpersist()
-      batchHs.unpersist()
-      docs.unpersist()
-    }
-    ()
+    StreamPools.runAll(decisionActs ++ appendActs)
   }
 
   /** One `AvailableNow` pass over the arrival files, resuming from

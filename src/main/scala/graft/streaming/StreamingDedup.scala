@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 
 import graft.Q
+import graft.SessionCaches.pinned
 import graft.queries.TextOps
 import graft.sources.{FrameStore, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -160,26 +161,27 @@ object StreamingDedup {
     * the exact single-run result. */
   def runPass(spark: SparkSession, env: StreamEnv): Unit =
     Drain.files(spark, env.schema, env.inDir, env.ckpt) { (batch, batchId) =>
-      // everything inside the micro-batch binds to the STREAM'S
-      // (cloned) session — the native functions must be registered
-      // there, and the index scan must come from the same session
-      // or expression resolution runs against the wrong registry
-      val bs = batch.sparkSession
-      graft.functions.GraftFunctions.register(bs)
-      val idx = env.store.loadProduction(bs, IndexName)
-        .getOrElse(sys.error("no production shingle index"))
-      // a micro-batch arrives as one small file (one input split);
-      // repartition to the session's shuffle width so the per-row
-      // shingle pass uses every core, and persist it so the dedup
-      // join and the index append pay the tokenize+hash pass ONCE
-      val hs = TextOps.hashedShingleArrays(
-        batch.repartition(bs.sessionState.conf.numShufflePartitions)).persist()
-      dedupShinglesAgainstIndex(hs, idx)
-        .write.mode("overwrite").parquet(s"${env.outDir}/batch=$batchId")
-      env.store.appendBatch(bs, IndexName, hs,
-        batchId = Some(batchId), streamId = Some(env.ckpt))
-      hs.unpersist()
-      ()
+      pinned { pins =>
+        // everything inside the micro-batch binds to the STREAM'S
+        // (cloned) session — the native functions must be registered
+        // there, and the index scan must come from the same session
+        // or expression resolution runs against the wrong registry
+        val bs = batch.sparkSession
+        graft.functions.GraftFunctions.register(bs)
+        val idx = env.store.loadProduction(bs, IndexName)
+          .getOrElse(sys.error("no production shingle index"))
+        // a micro-batch arrives as one small file (one input split);
+        // repartition to the session's shuffle width so the per-row
+        // shingle pass uses every core, and persist it so the dedup
+        // join and the index append pay the tokenize+hash pass ONCE
+        val hs = pins.persist(TextOps.hashedShingleArrays(
+          batch.repartition(bs.sessionState.conf.numShufflePartitions)))
+        dedupShinglesAgainstIndex(hs, idx)
+          .write.mode("overwrite").parquet(s"${env.outDir}/batch=$batchId")
+        env.store.appendBatch(bs, IndexName, hs,
+          batchId = Some(batchId), streamId = Some(env.ckpt))
+        ()
+      }
     }
 
   /** The accumulated pair list (empty-schema frame when no batch

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Q
+import graft.SessionCaches.{cutLineage, pinned}
 import graft.queries.Curation
 import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -127,8 +128,8 @@ object StreamingDrift {
     val env = prepare(s, dir, docs)
     StreamingCuration.landOrderedSlicesOf(docs, "doc_id", env.inDir, slices)
     runPass(s, env)
-    val counts = drainedCounts(s, env).localCheckpoint(true)
-    val report = Curation.psiReport(s, counts).localCheckpoint(true)
+    val counts = cutLineage(drainedCounts(s, env))
+    val report = cutLineage(Curation.psiReport(s, counts))
     val staged = s.read.parquet(env.docsDir).drop("batch")
     val clean = verdicts(counts, report)
       .filter(col("promoted")).select(col("slice"))
@@ -191,7 +192,7 @@ object StreamingDrift {
         Curation.baselineCounts(base)))
     StreamingCuration.landOrderedSlicesOf(newDocs, "doc_id", env.inDir, slices)
     runPass(s, env)
-    val counts = drainedCounts(s, env).localCheckpoint(true)
+    val counts = cutLineage(drainedCounts(s, env))
     val (bv, report) = baselineReport(s, env, counts)
     val clean = verdicts(counts, report)
       .filter(col("promoted")).select(col("slice"))
@@ -201,7 +202,7 @@ object StreamingDrift {
       env.store.register(s, CleanCorpusName, cleanDocs))
     val cleanCount = env.store.loadProduction(s, CleanCorpusName)
       .getOrElse(sys.error("no promoted clean corpus")).count()
-    BaselineDriftWorld(env, bv, counts, report.localCheckpoint(true), cleanCount)
+    BaselineDriftWorld(env, bv, counts, cutLineage(report), cleanCount)
   }
 
   /** RE-RESOLVE the production baseline and report against it — the
@@ -293,8 +294,8 @@ object StreamingDrift {
       processBatch(batch, batchId, eT)
       processBatch(batch.filter(col("doc_id") >= mid), batchId, eB)
       // ONE loudness decode per batch, shared by both media faces
-      val stats = Multimodal.mediaLoudnessStats(batch).persist()
-      try {
+      pinned { pins =>
+        val stats = pins.persist(Multimodal.mediaLoudnessStats(batch))
         def mediaFace(st: org.apache.spark.sql.DataFrame,
                       pop: org.apache.spark.sql.DataFrame, e: Env): Unit = {
           Multimodal.mediaFeaturePairs(
@@ -310,7 +311,7 @@ object StreamingDrift {
         mediaFace(stats, batch, eM)
         mediaFace(stats.filter(col("doc_id") >= mid),
           batch.filter(col("doc_id") >= mid), eMB)
-      } finally { stats.unpersist(); () }
+      }
     }
     }
     // the four face blocks are INDEPENDENT (own env, own store, own
@@ -322,8 +323,8 @@ object StreamingDrift {
     StreamPools.runAll(Seq(
     () => {
     // text face
-    val tCounts = drainedCounts(s, eT).localCheckpoint(true)
-    val tReport = Curation.psiReport(s, tCounts).localCheckpoint(true)
+    val tCounts = cutLineage(drainedCounts(s, eT))
+    val tReport = cutLineage(Curation.psiReport(s, tCounts))
     val tStaged = s.read.parquet(eT.docsDir).drop("batch")
     val tClean = verdicts(tCounts, tReport)
       .filter(col("promoted")).select(col("slice"))
@@ -336,9 +337,8 @@ object StreamingDrift {
     },
     () => {
     // media face
-    val mCounts = drainedCounts(s, eM).localCheckpoint(true)
-    val mReport = Curation.psiReport(s, mCounts, nsFeature = "rms")
-      .localCheckpoint(true)
+    val mCounts = cutLineage(drainedCounts(s, eM))
+    val mReport = cutLineage(Curation.psiReport(s, mCounts, nsFeature = "rms"))
     val mClean = verdicts(mCounts, mReport, Seq("rms", "peak"), nsFeature = "rms")
       .filter(col("promoted")).select(col("slice"))
     eM.store.promote(MediaCleanName,
@@ -351,9 +351,9 @@ object StreamingDrift {
     },
     () => {
     // cross-release text face (baseline re-resolved from the pointer)
-    val bCounts = drainedCounts(s, eB).localCheckpoint(true)
+    val bCounts = cutLineage(drainedCounts(s, eB))
     val (bv, bReport0) = baselineReport(s, eB, bCounts)
-    val bReport = bReport0.localCheckpoint(true)
+    val bReport = cutLineage(bReport0)
     val bClean = verdicts(bCounts, bReport)
       .filter(col("promoted")).select(col("slice"))
     eB.store.promote(CleanCorpusName,
@@ -366,13 +366,13 @@ object StreamingDrift {
     },
     () => {
     // cross-release media face
-    val mbCounts = drainedCounts(s, eMB).localCheckpoint(true)
+    val mbCounts = cutLineage(drainedCounts(s, eMB))
     val mbv = eMB.store.productionVersion(Curation.DriftBaselineName)
       .getOrElse(sys.error("no promoted media drift baseline"))
     val mbBase = eMB.store.loadProduction(s, Curation.DriftBaselineName)
       .getOrElse(sys.error("no promoted media drift baseline"))
-    val mbReport = Curation.psiVsBaseline(mbCounts, mbBase, mbv, nsFeature = "rms")
-      .localCheckpoint(true)
+    val mbReport = cutLineage(
+      Curation.psiVsBaseline(mbCounts, mbBase, mbv, nsFeature = "rms"))
     val mbClean = verdicts(mbCounts, mbReport, Seq("rms", "peak"), nsFeature = "rms")
       .filter(col("promoted")).select(col("slice"))
     eMB.store.promote(MediaCleanName,

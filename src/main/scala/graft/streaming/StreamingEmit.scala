@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Q
+import graft.SessionCaches.{cutLineage, pinned}
 import graft.queries.TextOps
 import graft.sources.FrameStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -112,7 +113,7 @@ object StreamingEmit {
     * stamp, and the append rides the batch watermark. */
   private def cutAgainstCarry(bs: SparkSession, env: Env, batchId: Long,
       retained: DataFrame, carryName: String, windowsDir: String,
-      cut: DataFrame => DataFrame, faceCols: Seq[String]): Unit = {
+      cut: DataFrame => DataFrame, faceCols: Seq[String]): Unit = pinned { pins =>
     // LATEST state per source (appends accumulate one row per source
     // per touching batch); this batch's own stamp filters out first
     // so a replay recovers the exact pre-batch carry
@@ -135,11 +136,11 @@ object StreamingEmit {
     val carryRows = carry.filter(col("carry_text") =!= "")
       .select(col("source"), col("done_off").as("start_off"),
         col("carry_text").as("red"))
-    val positioned = carryRows.unionByName(inBatch).persist()
+    val positioned = pins.persist(carryRows.unionByName(inBatch))
     val totals = positioned
       .groupBy(col("source"))
       .agg(max(col("start_off") + size(split(col("red"), " "))).as("total_off"))
-    val windows = cut(positioned).persist()
+    val windows = pins.persist(cut(positioned))
     // a window is COMPLETE when the stream has moved past its end
     val complete = windows.join(totals, Seq("source"))
       .filter((col("seq_id") + 1) * 512 <= col("total_off"))
@@ -172,8 +173,6 @@ object StreamingEmit {
     env.cur.store.appendBatch(bs, carryName,
       newCarry.unionByName(boundary).withColumn("batch_id", lit(batchId)),
       batchId = Some(batchId), streamId = Some(env.cur.ckpt))
-    windows.unpersist()
-    positioned.unpersist()
     ()
   }
 
@@ -276,22 +275,19 @@ object StreamingEmit {
         env.cur.store.gc(StreamingCuration.SpanCounts, keep = 1)
       }
       val vAfter = qstore.productionVersion(graft.ml.QualityModel.ModelName)
-      // lineage-cut pin: the drain frames sit on carry-flush lineages
-      // (symbol tables, prefix sums), and a dozen certificates union
-      // them — localCheckpoint collapses each to a cached-RDD scan so
-      // consumers pay execution, not repeated Catalyst re-analysis
-      def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
+      // cut: the drain frames sit on carry-flush lineages (symbol
+      // tables, prefix sums), and a dozen certificates union them
       graft.WarmPhases.phase("artifacts") {
         Unified(env,
-          windows = pin(allWindows(s, env)),
-          decisions = pin(StreamingCuration.streamedDecisions(s, env.cur)),
-          learned = pin(s.read.parquet(env.cur.learnedOutDir).drop("batch")),
-          gatedWindows = pin(allGatedWindows(s, env)),
+          windows = cutLineage(allWindows(s, env)),
+          decisions = cutLineage(StreamingCuration.streamedDecisions(s, env.cur)),
+          learned = cutLineage(s.read.parquet(env.cur.learnedOutDir).drop("batch")),
+          gatedWindows = cutLineage(allGatedWindows(s, env)),
           // the model THIS run resolved, pinned with the artifacts: the
           // learned certificate's batch twin must score with the same
           // model the stream used, even if a promotion lands between
           // the (possibly much earlier, memoized) run and the cert
-          qmodel = pin(qstore.loadProduction(s, graft.ml.QualityModel.ModelName)
+          qmodel = cutLineage(qstore.loadProduction(s, graft.ml.QualityModel.ModelName)
             .getOrElse(sys.error("no production quality model"))),
           sameModelVersion = vBefore.isDefined && vBefore == vAfter)
       }
@@ -393,27 +389,23 @@ object StreamingEmit {
     * certificate's batch-side artifacts, pinned once per session. */
   private def gatedCertArtifacts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    gatedCertMemo(s, dir) {
+    gatedCertMemo(s, dir)(pinned { pins =>
       val un = unifiedRun(s, dir)
-      // localCheckpoint, not persist: these frames sit on the FULL
-      // curation+scoring lineage, and a certificate plan that unions
-      // several such trees spends its wall-clock in Catalyst
-      // re-analysis, not execution (measured: 25 s wall, 1.7 s of
-      // stages) — the lineage cut collapses each to a cached-RDD scan
-      def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
+      // cuts: these frames sit on the FULL curation+scoring lineage
+      // (measured before the cuts: 25 s wall, 1.7 s of stages)
       // batch twin scores with the MODEL THE STREAM USED (pinned in
       // the unified artifacts) — the stream_curation_learned rule
       val batchLearned = TextOps.curationLearnedDecisionsCached(s, dir, un.qmodel)
       val gatedRetained = batchLearned.filter(col("drop_reason").isNull)
         .select(col("source"), col("doc_id"), col("red"), col("final_tokens"))
       // ONE positioning pass feeds both the recut and the flip offsets
-      val gatedPos = pin(TextOps.sourcePrefixSum(gatedRetained, col("final_tokens")))
+      val gatedPos = pins.cutLineage(TextOps.sourcePrefixSum(gatedRetained, col("final_tokens")))
       // batch recut of BOTH faces, against the same pre-quality
       // release symbol table the gated stream cuts with
-      val batchGated = pin(TextOps.emitWindowsIdsWith(
+      val batchGated = cutLineage(TextOps.emitWindowsIdsWith(
         TextOps.preQualityWordEncStats(s, dir), gatedPos))
       // flip docs: where the heuristic and learned cascades disagree
-      val flips = pin(un.decisions
+      val flips = cutLineage(un.decisions
         .select(col("doc_id"), col("source"), col("drop_reason").as("h"))
         .join(batchLearned.select(col("doc_id"), col("drop_reason").as("l")), Seq("doc_id"))
         .filter(!(col("h") <=> col("l"))))
@@ -424,22 +416,18 @@ object StreamingEmit {
         un.decisions.filter(col("drop_reason").isNull)
           .select(col("source"), col("doc_id"), col("final_tokens")),
         col("final_tokens"))
-      val flipSeq = pin(flips.filter(col("h").isNull)
+      val flipSeq = cutLineage(flips.filter(col("h").isNull)
         .join(hOff.select(col("doc_id"), col("start_off")), Seq("doc_id"))
         .unionByName(flips.filter(col("l").isNull)
           .join(gatedPos.select(col("doc_id"), col("start_off")), Seq("doc_id")))
         .groupBy(col("source"))
         .agg(min(floor(col("start_off") / 512)).as("flip_seq")))
-      val batchPack = pin(TextOps.packRetained(
+      val batchPack = cutLineage(TextOps.packRetained(
         batchLearned.filter(col("drop_reason").isNull)
           .select(col("source"), col("doc_id"), col("final_tokens").as("n_tokens"))))
-      // gatedPos was pin()ed (localCheckpoint), whose blocks live
-      // outside the CacheManager — unpersist() would be a no-op; the
-      // intermediate's blocks are reclaimed by the ContextCleaner once
-      // this scope drops the last reference (dependents are
-      // checkpointed themselves, so nothing re-reads it)
+      // gatedPos is freed here: its dependents are cut themselves
       (batchGated, flips, flipSeq, batchPack)
-    }
+    })
 
   val streamCurationGated: Q = Q("stream_curation_gated",
     TextOps.curationOracleBody + TextOps.emitTokenCtes + """

@@ -70,7 +70,7 @@ object StreamingEvalBuild {
         }
       }
       val manifest = graft.WarmPhases.phase("artifacts") {
-        s.read.parquet(outDir).drop("batch").localCheckpoint(true)
+        graft.SessionCaches.cutLineage(s.read.parquet(outDir).drop("batch"))
       }
       World(inDir, outDir, ckpt, store, manifest)
     }

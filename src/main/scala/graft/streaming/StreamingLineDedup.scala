@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Q
+import graft.SessionCaches.pinned
 import graft.queries.TextOps
 import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -49,9 +50,9 @@ object StreamingLineDedup {
     Env(s"$scratch/in", s"$scratch/reports", s"$scratch/ckpt", store, docs.schema)
   }
 
-  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = {
+  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = pinned { pins =>
     val bs = batch.sparkSession
-    val segs = TextOps.lineSegments(batch).withColumn("fp", xxhash64(col("line"))).persist()
+    val segs = pins.persist(TextOps.lineSegments(batch).withColumn("fp", xxhash64(col("line"))))
     val firsts = segs.select(col("fp"), col("doc_id")).distinct()
     val base = env.store.loadProduction(bs, CountsName)
       .getOrElse(sys.error("no production line counts"))
@@ -71,7 +72,6 @@ object StreamingLineDedup {
       firsts.groupBy(col("fp")).agg(count(lit(1)).as("n_docs"))
         .withColumn("batch_id", lit(batchId)),
       batchId = Some(batchId), streamId = Some(env.ckpt))
-    segs.unpersist()
     ()
   }
 

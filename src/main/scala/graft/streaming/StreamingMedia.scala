@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Q
+import graft.SessionCaches.pinned
 import graft.multimodal.Multimodal
 import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -58,13 +59,13 @@ object StreamingMedia {
       hashBands)
   }
 
-  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = {
+  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = pinned { pins =>
     val bs = batch.sparkSession
     // one arrival file = one input split; the fingerprint pass is the
     // expensive per-row work, so spread it across the session's
     // shuffle width (the StreamingCuration.processBatch discipline)
-    val bands = env.hashBands(
-      batch.repartition(bs.sessionState.conf.numShufflePartitions)).persist()
+    val bands = pins.persist(env.hashBands(
+      batch.repartition(bs.sessionState.conf.numShufflePartitions)))
     val seen = env.store.loadProduction(bs, BandIdx)
       .getOrElse(sys.error("no production media band index"))
       .filter(col("batch_id") =!= batchId)
@@ -91,7 +92,6 @@ object StreamingMedia {
     env.store.appendBatch(bs, BandIdx,
       bands.withColumn("batch_id", lit(batchId)),
       batchId = Some(batchId), streamId = Some(env.ckpt))
-    bands.unpersist()
     ()
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Q
+import graft.SessionCaches.pinned
 import graft.queries.Curation
 import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -68,14 +69,13 @@ object StreamingMixPack {
     * replay — own rows filtered by provenance, append skipped by the
     * identity-checked watermark — so a crash between the entry write
     * and the append replays into the committed state either way. */
-  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = {
+  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = pinned { pins =>
     val bs = batch.sparkSession
-    val mixed = Curation.mixFrame(
+    val mixed = pins.persist(Curation.mixFrame(
         batch.select(col("doc_id"), col("source"),
           size(split(col("text"), " ")).cast("long").as("n_tokens")))
       .select(col("source"), col("doc_id"), col("rep").cast("long").as("rep"),
-        col("n_tokens"))
-      .persist()
+        col("n_tokens")))
     val base = env.store.loadProduction(bs, OffsetsName)
       .getOrElse(sys.error("no production mix offsets"))
       .filter(col("batch_id") =!= batchId)
@@ -93,7 +93,6 @@ object StreamingMixPack {
       mixed.groupBy(col("source")).agg(sum(col("n_tokens")).as("batch_tokens"))
         .withColumn("batch_id", lit(batchId)),
       batchId = Some(batchId), streamId = Some(env.ckpt))
-    mixed.unpersist()
     ()
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Q
+import graft.SessionCaches.{cutLineage, pinned}
 import graft.multimodal.Multimodal
 import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -80,16 +81,14 @@ object StreamingMmEmit {
     * mid-stream promotion takes effect at the next batch). IDEMPOTENT
     * under at-least-once replay — own rows filtered by provenance,
     * appends skipped by the identity-checked watermark. */
-  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = {
+  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = pinned { pins =>
     val bs = batch.sparkSession
-    // localCheckpoint (eager), not persist: both faces read it AND
-    // every face action re-analyzes its plan — the lineage cut keeps
-    // those plans at scan size (the trimodal batch's rule)
-    val aligned = Multimodal.mmEmitDocsOf(batch, Tables.embeddings(bs, env.dir))
-      .localCheckpoint(true)
+    // both faces read it
+    val aligned = pins.cutLineage(
+      Multimodal.mmEmitDocsOf(batch, Tables.embeddings(bs, env.dir)))
     // caption lens paid ONCE per batch — the gated face's records are
     // a subset of the aligned ids, so both positionings share it
-    val lens = Multimodal.mmCapLensOf(bs, env.dir, aligned).localCheckpoint(true)
+    val lens = pins.cutLineage(Multimodal.mmCapLensOf(bs, env.dir, aligned))
     placeFace(bs, env, batchId, aligned, lens, OffsetsName, env.outDir)
     env.quality.foreach { qstore =>
       val model = qstore.loadProduction(bs, graft.ml.QualityModel.ModelName)
@@ -100,20 +99,13 @@ object StreamingMmEmit {
       placeFace(bs, env, batchId, aligned.join(keep, Seq("doc_id")), lens,
         GatedOffsetsName, env.gatedOutDir)
     }
-    // aligned/lens are localCheckpoint-backed and dead once both
-    // faces have landed — free their blocks NOW instead of waiting
-    // for driver GC + ContextCleaner (blocks from past batches would
-    // otherwise accumulate between GC cycles on a long stream)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(lens)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(aligned)
-    ()
   }
 
   /** Position + land one gate face's records for one micro-batch
     * against its own offset state. */
   private def placeFace(bs: SparkSession, env: Env, batchId: Long,
-      docs: DataFrame, lens: DataFrame, offsetsName: String, outDir: String): Unit = {
-    val placedRaw = Multimodal.mmPositionWithLens(docs, lens).persist()
+      docs: DataFrame, lens: DataFrame, offsetsName: String, outDir: String): Unit = pinned { pins =>
+    val placedRaw = pins.persist(Multimodal.mmPositionWithLens(docs, lens))
     val base = env.store.loadProduction(bs, offsetsName)
       .getOrElse(sys.error(s"no production $offsetsName"))
       .filter(col("batch_id") =!= batchId)
@@ -129,7 +121,6 @@ object StreamingMmEmit {
       placedRaw.groupBy(col("shard")).agg(sum(col("tot")).as("batch_tokens"))
         .withColumn("batch_id", lit(batchId)),
       batchId = Some(batchId), streamId = Some(env.ckpt))
-    placedRaw.unpersist()
     ()
   }
 
@@ -199,7 +190,7 @@ object StreamingMmEmit {
       require(vBefore.flatten == qs.productionVersion(graft.ml.QualityModel.ModelName),
         "quality model promoted during the memoized mm emission pass")
       qs.loadProduction(spark, graft.ml.QualityModel.ModelName)
-        .getOrElse(sys.error("no production quality model")).localCheckpoint(true)
+        .map(cutLineage).getOrElse(sys.error("no production quality model"))
     }
     MmEmitStreamWorld(spark.read.parquet(env.outDir).drop("batch"), env,
       gated = quality.map(_ => spark.read.parquet(env.gatedOutDir).drop("batch")),
@@ -310,7 +301,7 @@ object StreamingMmEmit {
     * per-shard record order, so the drained windows are EXACTLY the
     * batch trimodal emission for any slicing — the twin shares
     * `mm_trimodal_emit_ids`'s oracle verbatim. */
-  def processTrimodalBatch(batch: DataFrame, batchId: Long, env: Env): Unit = {
+  def processTrimodalBatch(batch: DataFrame, batchId: Long, env: Env): Unit = pinned { pins =>
     val bs = batch.sparkSession
     // honor the takedown registry when this world maintains one: a
     // doc on the PRODUCTION list is never ingested by later batches
@@ -331,17 +322,13 @@ object StreamingMmEmit {
     // face programs reuse this one exchange instead of re-shuffling.
     // Partition count = the trimodal shard alphabet (4), the same
     // constant the offsets state is keyed by.
-    // localCheckpoint (eager), not persist+count: ALL faces read it —
-    // the three gates run once per batch AND, crucially, every face
-    // action (2 writes × 4 faces) re-ANALYZES its full logical plan;
-    // with persist those plans embed the whole gate pipeline (250–700
-    // nodes measured), with the lineage cut they are scans. Eager =
-    // materialized before the concurrent face reads, like the count
-    // this replaces.
-    val gated = Multimodal.trimodalGatedOf(live, Tables.embeddings(bs, env.dir))
-      .repartition(4, col("shard"))
-      .localCheckpoint(true)
-    val lens = Multimodal.trimodalCapLensOf(bs, env.dir, gated).localCheckpoint(true)
+    // Cut, not persisted: ALL faces read it, and with persist the 2
+    // writes × 4 faces each re-analyzed the whole gate pipeline
+    // (250–700 plan nodes measured).
+    val gated = pins.cutLineage(
+      Multimodal.trimodalGatedOf(live, Tables.embeddings(bs, env.dir))
+        .repartition(4, col("shard")))
+    val lens = pins.cutLineage(Multimodal.trimodalCapLensOf(bs, env.dir, gated))
     // The four faces are INDEPENDENT sinks (each owns its offset
     // state + output dir) over the shared cached frames, and at
     // micro-batch sizes their placement jobs are latency-bound, not
@@ -360,21 +347,20 @@ object StreamingMmEmit {
     // gates were computed twice per corpus before this)
     val mmAligned = gated.filter(col("mrank") === 0)
       .select(col("doc_id"), col("shard"), col("mt").as("media_tokens"), col("text"))
-    // persisted keep-sets, freed once every face has settled
-    val keeps = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    def pin(df: DataFrame): DataFrame = { keeps.add(df.persist()); df.count(); df }
-    // (transcript keep-set, trimodal keep-set): scored once, on the
-    // first gated face that needs it, while the aligned faces place
+    // (transcript keep-set, trimodal keep-set): persisted and scored
+    // once, on the first gated face that needs it, while the aligned
+    // faces place
     lazy val keepSets: (DataFrame, DataFrame) = {
       val qstore = env.quality.get
       val model = qstore.loadProduction(bs, graft.ml.QualityModel.ModelName)
         .getOrElse(sys.error("no production quality model"))
       // ONE per-doc transcript decision drives both gated faces (the
       // caption is the shared half of every record family)
-      val tKeep = pin(graft.ml.QualityModel.scoreClosedForm(
+      val tKeep = pins.persist(graft.ml.QualityModel.scoreClosedForm(
         gated.select(col("doc_id"), col("text")).distinct()
           .select(col("doc_id"), split(col("text"), " ").as("toks")), model)
         .filter(col("proba") >= 0.5).select(col("doc_id")))
+      tKeep.count()
       // the TRIMODAL gated face additionally honors the MEDIA-quality
       // model when the registry carries one: the decode-stat LR
       // (re-resolved per batch like the transcript model) drops a
@@ -383,9 +369,11 @@ object StreamingMmEmit {
       // name gates transcript-only (deployment-optional).
       val triKeep = qstore.loadProduction(bs, graft.ml.MediaQualityModel.ModelName)
         .map { mmodel =>
-          pin(tKeep.join(graft.ml.MediaQualityModel.mediaKeepIds(
+          val k = pins.persist(tKeep.join(graft.ml.MediaQualityModel.mediaKeepIds(
             bs, env.dir, gated.select(col("doc_id")).distinct(), mmodel),
             Seq("doc_id")))
+          k.count()
+          k
         }.getOrElse(tKeep)
       (tKeep, triKeep)
     }
@@ -400,24 +388,14 @@ object StreamingMmEmit {
       () => placeFace(bs, env, batchId,
         mmAligned.join(keepSets._1, Seq("doc_id")), lens,
         GatedOffsetsName, env.mmGatedOutDir))
-    try StreamPools.runAll(alignedFaces ++ gatedFaces)
-    finally {
-      keeps.forEach(_.unpersist())
-      // gated/lens are localCheckpoint-backed and dead once every face
-      // has settled — free their blocks NOW instead of waiting for
-      // driver GC + ContextCleaner (unpersist() only acts on
-      // CacheManager entries; past batches' checkpoint blocks would
-      // otherwise accumulate between GC cycles on a long stream)
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(lens)
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(gated)
-    }
+    StreamPools.runAll(alignedFaces ++ gatedFaces)
   }
 
   /** Position + land one trimodal gate face's records for one
     * micro-batch against its own offset state. */
   private def placeTrimodalFace(bs: SparkSession, env: Env, batchId: Long,
-      recs: DataFrame, lens: DataFrame, offsetsName: String, outDir: String): Unit = {
-    val placedRaw = Multimodal.trimodalPositionWithLens(recs, lens).persist()
+      recs: DataFrame, lens: DataFrame, offsetsName: String, outDir: String): Unit = pinned { pins =>
+    val placedRaw = pins.persist(Multimodal.trimodalPositionWithLens(recs, lens))
     val base = env.store.loadProduction(bs, offsetsName)
       .getOrElse(sys.error(s"no production $offsetsName"))
       .filter(col("batch_id") =!= batchId)
@@ -436,7 +414,6 @@ object StreamingMmEmit {
       placedRaw.groupBy(col("shard")).agg(sum(col("tot")).as("batch_tokens"))
         .withColumn("batch_id", lit(batchId)),
       batchId = Some(batchId), streamId = Some(env.ckpt))
-    placedRaw.unpersist()
     ()
   }
 
@@ -495,9 +472,9 @@ object StreamingMmEmit {
       }
       MmEmitStreamWorld(df, env, gated = Some(g),
         qmodel = Some(qstore.loadProduction(spark, graft.ml.QualityModel.ModelName)
-          .getOrElse(sys.error("no production quality model")).localCheckpoint(true)),
+          .map(cutLineage).getOrElse(sys.error("no production quality model"))),
         mqmodel = Some(qstore.loadProduction(spark, graft.ml.MediaQualityModel.ModelName)
-          .getOrElse(sys.error("no production media quality model")).localCheckpoint(true)))
+          .map(cutLineage).getOrElse(sys.error("no production media quality model"))))
     }
 
   def streamedTrimodalEntries(spark: SparkSession, dir: String): DataFrame =
@@ -517,8 +494,8 @@ object StreamingMmEmit {
 
   private[graft] def streamedTrimodalWindows(spark: SparkSession, dir: String): DataFrame =
     triWinMemo(spark, dir) {
-      Multimodal.trimodalEmitWindowsOf(spark, dir,
-        streamedTrimodalEntries(spark, dir)).localCheckpoint(true)
+      cutLineage(Multimodal.trimodalEmitWindowsOf(spark, dir,
+        streamedTrimodalEntries(spark, dir)))
     }
 
   /** Streaming twin of `mm_trimodal_emit_ids` — same oracle: the
@@ -566,8 +543,7 @@ object StreamingMmEmit {
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) =
     trimodalGatedCertMemo(s, dir) {
       val world = streamedTrimodalWorld(s, dir)
-      def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
-      val sg = pin(Multimodal.trimodalEmitWindowsOf(s, dir,
+      val sg = cutLineage(Multimodal.trimodalEmitWindowsOf(s, dir,
         world.gated.getOrElse(sys.error("trimodal pass ran without a quality store"))))
       val sa = streamedTrimodalWindows(s, dir) // already lineage-cut
       val qmodel = world.qmodel.get
@@ -592,13 +568,13 @@ object StreamingMmEmit {
       // batch twin composes BOTH pinned gates — the two-filter
       // decision the stream's gated face places per micro-batch
       val keepIds = tKeepIds.join(mKeepIds, Seq("doc_id"))
-      val batchGated = pin(Multimodal.trimodalEmitWindowsOf(s, dir,
+      val batchGated = cutLineage(Multimodal.trimodalEmitWindowsOf(s, dir,
         Multimodal.trimodalPositionOf(s, dir, gated.join(keepIds, Seq("doc_id")))))
       // expected per-DOC decision under the pinned models (a doc's
       // records all keep or all drop — the caption/media stats are
       // doc-level facts), with each gate's own verdict kept so the
       // flips-only-media leg can attribute every drop to its filter
-      val expected = pin(docsWithRecords.select(col("doc_id"))
+      val expected = cutLineage(docsWithRecords.select(col("doc_id"))
         .join(tKeepIds.withColumn("tk", lit(true)), Seq("doc_id"), "left_outer")
         .join(mKeepIds.withColumn("mk", lit(true)), Seq("doc_id"), "left_outer")
         .join(mvKeepIds.withColumn("mvk", lit(true)), Seq("doc_id"), "left_outer")
@@ -615,7 +591,7 @@ object StreamingMmEmit {
       // side: a stream/batch parity regression fails
       // stream_equals_batch directly instead of misattributing a
       // secondary diverges_at_first_flip signal
-      val flipSeq = pin(world.entries
+      val flipSeq = cutLineage(world.entries
         .join(expected.filter(!col("expected_keep")).select(col("doc_id")), Seq("doc_id"))
         .groupBy(col("shard")).agg(min(floor(col("start_off") / 2048)).as("flip_seq")))
       (sg, sa, batchGated, expected, flipSeq)
@@ -798,10 +774,9 @@ object StreamingMmEmit {
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) =
     gatedCertMemo(s, dir) {
       val world = streamedWorld(s, dir)
-      def pin(df: DataFrame): DataFrame = df.localCheckpoint(true)
-      val sg = pin(Multimodal.mmEmitWindows(s, dir,
+      val sg = cutLineage(Multimodal.mmEmitWindows(s, dir,
         world.gated.getOrElse(sys.error("mm emission pass ran without a quality store"))))
-      val sa = pin(Multimodal.mmEmitWindows(s, dir, world.entries))
+      val sa = cutLineage(Multimodal.mmEmitWindows(s, dir, world.entries))
       // batch twin gates with the MODEL THE STREAM USED (pinned in
       // the world) — the stream_curation_learned rule
       val qmodel = world.qmodel.get
@@ -809,10 +784,10 @@ object StreamingMmEmit {
       val keepIds = graft.ml.QualityModel.scoreClosedForm(
         aligned.select(col("doc_id"), split(col("text"), " ").as("toks")), qmodel)
         .filter(col("proba") >= 0.5).select(col("doc_id"))
-      val batchGated = pin(Multimodal.mmEmitWindows(s, dir,
+      val batchGated = cutLineage(Multimodal.mmEmitWindows(s, dir,
         Multimodal.mmPositionOf(s, dir, aligned.join(keepIds, Seq("doc_id")))))
       // expected per-record decision under the pinned model
-      val expected = pin(aligned.select(col("doc_id"))
+      val expected = cutLineage(aligned.select(col("doc_id"))
         .join(keepIds.withColumn("k", lit(true)), Seq("doc_id"), "left_outer")
         .select(col("doc_id"), coalesce(col("k"), lit(false)).as("expected_keep")))
       // per-shard FIRST flip window: each dropped record's window
@@ -822,7 +797,7 @@ object StreamingMmEmit {
       // flip offsets stream-side keeps the first-divergence leg
       // self-contained: a stream/batch parity regression fails
       // stream_equals_batch, not this leg)
-      val flipSeq = pin(world.entries
+      val flipSeq = cutLineage(world.entries
         .join(expected.filter(!col("expected_keep")).select(col("doc_id")), Seq("doc_id"))
         .groupBy(col("shard")).agg(min(floor(col("start_off") / 2048)).as("flip_seq")))
       (sg, sa, batchGated, expected, flipSeq)
@@ -942,7 +917,7 @@ object StreamingMmEmit {
       .withColumn("batch", col("batch").cast("long"))
     val affected = landed.filter(forgotten(col("doc_id")))
       .select(col("shard")).distinct().collect().map(_.getLong(0)).toSeq
-    if (affected.nonEmpty) {
+    if (affected.nonEmpty) pinned { pins =>
       val kept = landed.filter(col("shard").isin(affected: _*))
         .filter(!forgotten(col("doc_id")))
       val recut = graft.queries.TextOps.sourcePrefixSum(
@@ -954,16 +929,15 @@ object StreamingMmEmit {
       // shard's rows (recut rows keep their landed batch, so the
       // affected-batch set is closed under the recut); every other
       // landed dir is preserved byte-for-byte on disk, unread
-      val affectedBatches = landed.filter(col("shard").isin(affected: _*))
-        .select(col("batch")).distinct().localCheckpoint(true)
+      val affectedBatches = pins.cutLineage(landed.filter(col("shard").isin(affected: _*))
+        .select(col("batch")).distinct())
       // pinned BEFORE the batch dirs it read from are overwritten;
       // unaffected shards' rows WITHIN an affected batch ride along
       // because dynamic overwrite replaces whole partitions
-      val replacement = landed
+      val replacement = pins.cutLineage(landed
         .join(broadcast(affectedBatches), Seq("batch"), "left_semi")
         .filter(!col("shard").isin(affected: _*))
-        .unionByName(recut.select(landed.columns.map(col): _*))
-        .localCheckpoint(true)
+        .unionByName(recut.select(landed.columns.map(col): _*)))
       // ONE write job for the whole takedown (the PredictionsStore
       // upsert shape): dynamic partition overwrite replaces exactly
       // the affected batch dirs; repartition(batch) gives each dir
@@ -1062,15 +1036,13 @@ object StreamingMmEmit {
       graft.WarmPhases.phase("drain1") {
         runTrimodalPass(s, env) // phase-1 query dies here
       }
-      val pre = s.read.parquet(env.outDir).localCheckpoint(true)
+      val pre = cutLineage(s.read.parquet(env.outDir))
       // the phase-1 offset states, pinned BEFORE the takedown rewrite —
       // the carry the series world resumes from (4-row frames per face)
       val preOff = env.store.loadProduction(s, TrimodalOffsetsName)
-        .getOrElse(sys.error("no trimodal offsets at phase-1 drain"))
-        .localCheckpoint(true)
+        .map(cutLineage).getOrElse(sys.error("no trimodal offsets at phase-1 drain"))
       val preMmOff = env.store.loadProduction(s, OffsetsName)
-        .getOrElse(sys.error("no bimodal offsets at phase-1 drain"))
-        .localCheckpoint(true)
+        .map(cutLineage).getOrElse(sys.error("no bimodal offsets at phase-1 drain"))
       graft.WarmPhases.phase("takedown") {
         applyTrimodalStreamForget(s, env) // the takedown lands mid-stream
       }
@@ -1079,7 +1051,7 @@ object StreamingMmEmit {
       // touching two dataset dirs can't read the other world's count
       // off the shared volatile (the r19 ADVICE finding)
       val rewriteJobCount = lastTakedownRewriteJobs
-      val post = s.read.parquet(env.outDir).localCheckpoint(true)
+      val post = cutLineage(s.read.parquet(env.outDir))
       graft.WarmPhases.phase("drain2") {
         StreamingCuration.landOrderedSlicesOf(
           docs.filter(col("doc_id") >= mid), "doc_id", env.inDir, 2, tag = "b")
@@ -1087,7 +1059,7 @@ object StreamingMmEmit {
         env.store.compact(s, TrimodalOffsetsName)
         env.store.gc(TrimodalOffsetsName, keep = 1)
       }
-      val fin = s.read.parquet(env.outDir).drop("batch").localCheckpoint(true)
+      val fin = cutLineage(s.read.parquet(env.outDir).drop("batch"))
       val affected = pre
         .filter(col("doc_id") % TakedownMod === TakedownResidue)
         .select(col("shard")).distinct().collect().map(_.getLong(0)).toSeq
@@ -1095,11 +1067,9 @@ object StreamingMmEmit {
         TrimodalStreamForgetWorld(env, mid,
           preEntries = pre, preOffsets = preOff, preMmOffsets = preMmOff,
           postRewriteEntries = post,
-          preWindows = Multimodal.trimodalEmitWindowsOf(s, dir, pre.drop("batch"))
-            .localCheckpoint(true),
+          preWindows = cutLineage(Multimodal.trimodalEmitWindowsOf(s, dir, pre.drop("batch"))),
           entries = fin,
-          finalWindows = Multimodal.trimodalEmitWindowsOf(s, dir, fin)
-            .localCheckpoint(true),
+          finalWindows = cutLineage(Multimodal.trimodalEmitWindowsOf(s, dir, fin)),
           affectedShards = affected, rewriteJobs = rewriteJobCount)
       }
     }
@@ -1257,8 +1227,8 @@ object StreamingMmEmit {
         env.store.register(s, TrimodalOffsetsName, shifted(fw.preOffsets)))
       env.store.promote(OffsetsName,
         env.store.register(s, OffsetsName, shifted(fw.preMmOffsets)))
-      val v1w = Multimodal.trimodalEmitWindowsOf(s, dir,
-        s.read.parquet(env.outDir).drop("batch")).localCheckpoint(true)
+      val v1w = cutLineage(Multimodal.trimodalEmitWindowsOf(s, dir,
+        s.read.parquet(env.outDir).drop("batch")))
       val v1Ver = env.store.register(s, SeriesWindowsName, v1w)
       env.store.promote(SeriesWindowsName, v1Ver)
       StreamingCuration.landOrderedSlicesOf(
@@ -1266,8 +1236,8 @@ object StreamingMmEmit {
       runTrimodalPass(s, env) // fresh query over the continuation + carry
       env.store.compact(s, TrimodalOffsetsName)
       env.store.gc(TrimodalOffsetsName, keep = 1)
-      val v2w = Multimodal.trimodalEmitWindowsOf(s, dir,
-        s.read.parquet(env.outDir).drop("batch")).localCheckpoint(true)
+      val v2w = cutLineage(Multimodal.trimodalEmitWindowsOf(s, dir,
+        s.read.parquet(env.outDir).drop("batch")))
       val v2Ver = env.store.register(s, SeriesWindowsName, v2w)
       env.store.promote(SeriesWindowsName, v2Ver)
       // a training run pinned to v1 still resolves it intact AFTER

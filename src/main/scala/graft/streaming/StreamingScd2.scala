@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Q
+import graft.SessionCaches.pinned
 import graft.queries.FraudAnalytics
 import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -76,7 +77,7 @@ object StreamingScd2 {
     ()
   }
 
-  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = {
+  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = pinned { pins =>
     val bs = batch.sparkSession
     val state = env.store.loadProduction(bs, OpenName)
       .getOrElse(sys.error("no scd2 open state"))
@@ -88,7 +89,7 @@ object StreamingScd2 {
       .select(col("user_id"), col("event_type"), col("ts"), col("event_id"),
         lit(false).as("is_state"), lit(0L).as("version"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val chg = anchors.union(arriving)
+    val chg = pins.persist(anchors.union(arriving)
       .withColumn("prev", lag(col("event_type"), 1).over(w))
       .filter(col("is_state") || col("prev").isNull || col("event_type") =!= col("prev"))
       .withColumn("rn", row_number().over(w))
@@ -96,8 +97,7 @@ object StreamingScd2 {
         max(when(col("is_state"), col("version") - 1)).over(
           Window.partitionBy(col("user_id"))))
       .withColumn("v", coalesce(col("base"), lit(0L)) + col("rn"))
-      .withColumn("valid_to", lead(col("ts"), 1).over(w))
-      .persist()
+      .withColumn("valid_to", lead(col("ts"), 1).over(w)))
     chg.filter(col("valid_to").isNotNull)
       .select(col("user_id"), col("v").as("version"), col("event_type"),
         col("ts").as("valid_from"), col("valid_to"))
@@ -108,7 +108,6 @@ object StreamingScd2 {
           col("event_id").as("from_eid"), col("v").as("version"))
         .withColumn("batch_id", lit(batchId)),
       batchId = Some(batchId), streamId = Some(env.ckpt))
-    chg.unpersist()
     ()
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Q
+import graft.SessionCaches.pinned
 import graft.queries.Kmeans
 import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -48,13 +49,13 @@ object StreamingSemDedup {
     Env(s"$scratch/in", s"$scratch/verdicts", s"$scratch/ckpt", store, dir, emb.schema)
   }
 
-  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = {
+  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = pinned { pins =>
     val bs = batch.sparkSession
     graft.functions.GraftFunctions.register(bs)
     // per-batch centroid re-resolve (memoized per session = the
     // production pointer staying on one version)
     val cents = Kmeans.trained(bs, env.dir)
-    val arrived = Kmeans.assign(Kmeans.vecs(batch), cents).persist()
+    val arrived = pins.persist(Kmeans.assign(Kmeans.vecs(batch), cents))
     val base = env.store.loadProduction(bs, MembersName)
       .getOrElse(sys.error("no production member state"))
       .filter(col("batch_id") =!= batchId)
@@ -75,7 +76,6 @@ object StreamingSemDedup {
       arrived.select(col("vec_id"), col("v"), col("cluster"))
         .withColumn("batch_id", lit(batchId)),
       batchId = Some(batchId), streamId = Some(env.ckpt))
-    arrived.unpersist()
     ()
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Q
+import graft.SessionCaches.pinned
 import graft.queries.TextOps
 import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -43,9 +44,9 @@ object StreamingSpanDedup {
     Env(s"$scratch/in", s"$scratch/reports", s"$scratch/ckpt", store, docs.schema)
   }
 
-  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = {
+  def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = pinned { pins =>
     val bs = batch.sparkSession
-    val starts = TextOps.spanStarts(batch).persist()
+    val starts = pins.persist(TextOps.spanStarts(batch))
     val firsts = starts.select(col("fp"), col("doc_id")).distinct()
     val base = env.store.loadProduction(bs, CountsName)
       .getOrElse(sys.error("no production span counts"))
@@ -63,7 +64,6 @@ object StreamingSpanDedup {
       firsts.groupBy(col("fp")).agg(count(lit(1)).as("n_docs"))
         .withColumn("batch_id", lit(batchId)),
       batchId = Some(batchId), streamId = Some(env.ckpt))
-    starts.unpersist()
     ()
   }
 

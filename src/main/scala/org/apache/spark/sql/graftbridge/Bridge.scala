@@ -80,30 +80,4 @@ object Bridge {
       header +: nodeLines
     }
   }
-
-  /** Whether `df` is a direct `localCheckpoint` result — the only
-    * frames [[unpersistLocalCheckpoint]] accepts. */
-  def isLocalCheckpoint(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-
-  /** Explicitly release the cached RDD blocks behind a
-    * `localCheckpoint(true)`-pinned DataFrame at a known lifecycle
-    * point (end of micro-batch). Relying on driver GC +
-    * ContextCleaner lets checkpoint blocks from past batches
-    * accumulate between GC cycles on long streams; freeing them
-    * deterministically bounds the storage footprint at one batch's
-    * pins. The frame is UNREADABLE afterwards (localCheckpoint
-    * severed its lineage) — callers only pass frames whose consumers
-    * have all completed.
-    *
-    * Only the direct `localCheckpoint(true)` result is accepted: a
-    * frame derived from it (or joined with a memoized pin) would
-    * otherwise free blocks that other frames still read, so any plan
-    * whose root is not a `LogicalRDD` throws IllegalArgumentException. */
-  def unpersistLocalCheckpoint(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD =>
-      lr.rdd.unpersist(blocking = false); ()
-    case other => throw new IllegalArgumentException(
-      s"unpersistLocalCheckpoint takes a localCheckpoint(true) result, not a derived ${other.nodeName} plan")
-  }
 }

@@ -4,10 +4,12 @@ import java.nio.file.{Files, Path, Paths}
 
 /** Each repeated mechanism has one owner: the bounded stream drain
   * (`Drain`), the batch-action pool (`StreamPools`), the memo key
-  * format (`SessionCaches`), the session builder and every session
+  * format (`SessionCaches`), the lineage cut and per-batch pin
+  * release (`SessionCaches`), the session builder and every session
   * conf write (`GraftSession`) and the runnable mains (the driver
-  * contract, the daily jobs and the one dev `Probe`). A copy of one outside its owners fails here, so the
-  * mechanisms and the one-off probe mains do not fork again. */
+  * contract, the daily jobs and the one dev `Probe`). A copy of one
+  * outside its owners fails here, so the mechanisms and the one-off
+  * probe mains do not fork again. */
 class OwnershipSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -39,6 +41,8 @@ class OwnershipSpec extends org.scalatest.funsuite.AnyFunSuite {
       "SparkSession.builder()" -> Set("GraftSession.scala"),
       "conf.set(" -> Set("GraftSession.scala"),
       "conf.unset(" -> Set("GraftSession.scala"),
+      "localCheckpoint(" -> Set("SessionCaches.scala"),
+      "unpersistLocalCheckpoint(" -> Set("SessionCaches.scala"),
       "def main(" -> Set("Verify.scala", "Bench.scala", "Jobs.scala", "Probe.scala")))
     test(s"`$needle` appears only in ${owners.mkString(", ")}") {
       val copies = copiesOf(needle, owners)

@@ -100,4 +100,38 @@ class SessionCachesSpec extends SparkSpec {
     assert((pins & persisted).isEmpty,
       s"evict must unpersist the exact-kNN frame, still persisted: ${pins & persisted}")
   }
+
+  test("unpersistLocalCheckpoint rejects a derived frame and frees a direct pin") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val pinned = SessionCaches.cutLineage(spark.range(0, 100, 1, 4).toDF("id"))
+    val pins = persisted -- before
+    assert(pins.nonEmpty)
+    val derived = pinned.filter(col("id") % 2 === 0)
+    intercept[IllegalArgumentException](SessionCaches.unpersistLocalCheckpoint(derived))
+    assert(pins.subsetOf(persisted), "a rejected call must not free the pin")
+    assert(derived.count() == 50 && pinned.count() == 100)
+    SessionCaches.unpersistLocalCheckpoint(pinned)
+    assert((pins & persisted).isEmpty)
+  }
+
+  test("pinned frees a cut and a persist made on a pool thread when its body throws") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val (rddsBefore, cachedBefore) = (persisted, cachedEntries)
+    val boom = new IllegalStateException("batch failed")
+    val thrown = intercept[IllegalStateException] {
+      SessionCaches.pinned { pins =>
+        graft.streaming.StreamPools.runAll(Seq(() => {
+          pins.cutLineage(spark.range(0, 100, 1, 4).toDF("pinned_cut"))
+          pins.persist(spark.range(0, 37, 1, 3).toDF("pinned_persist")).count()
+          assert((persisted -- rddsBefore).size == 2 && cachedEntries == cachedBefore + 1,
+            "the body must hold one cut and one persisted frame")
+          throw boom
+        }))
+      }
+    }
+    assert(thrown eq boom, s"the body's exception must propagate, got $thrown")
+    assert(persisted == rddsBefore, s"still persisted: ${persisted -- rddsBefore}")
+    assert(cachedEntries == cachedBefore, "the persisted frame must leave the cache manager")
+  }
 }

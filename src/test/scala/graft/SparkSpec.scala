@@ -22,6 +22,9 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.Sf
 
+  /** Frames registered in the shared session's cache manager. */
+  def cachedEntries: Int = org.apache.spark.sql.CacheEntries.count(spark)
+
   /** `body` with `drop` out of the shared session's extra optimizer
     * rules, so a case sees Spark's own plan whether or not an earlier
     * suite attached graft's rules (e.g. a `max`/`min` anchor answered

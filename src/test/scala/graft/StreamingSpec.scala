@@ -377,6 +377,24 @@ class StreamingSpec extends SparkSpec {
       "valid_from", "valid_to", "is_current"))
   }
 
+  test("a failing mm emission batch frees its per-batch pins") {
+    import graft.streaming.StreamingMmEmit
+    val env = StreamingMmEmit.prepare(spark, sf)
+    // the face's output root is a regular file, so its write throws
+    // after the batch has cut `aligned`/`lens` and persisted its
+    // placement
+    Files.createFile(java.nio.file.Paths.get(env.outDir))
+    val batch = graft.sources.Tables.documents(spark, sf)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    // a first failing run builds the session memos the batch reads
+    intercept[Exception](StreamingMmEmit.processBatch(batch, 0L, env))
+    val (rddsBefore, cachedBefore) = (persisted, cachedEntries)
+    // the replay of the failed batch must not add a second set of pins
+    intercept[Exception](StreamingMmEmit.processBatch(batch, 0L, env))
+    assert(persisted == rddsBefore, s"pins left behind: ${persisted -- rddsBefore}")
+    assert(cachedEntries == cachedBefore, "a persisted frame was left in the cache manager")
+  }
+
   test("curation replay normalization is provenance-keyed: a re-delivered doc_id is an exact dup") {
     // a doc_id legitimately arriving AGAIN in a later batch must be
     // caught by the fp index (its earlier row is genuine state, not a
