@@ -184,7 +184,7 @@ object SessionCaches {
   // memory with no remaining handle. Plain values just drop.
   private def release(v: Any): Unit = v match {
     // owned store: the memo value is the store itself
-    case vs: graft.sources.VersionedStore => reapTempRoot(vs.root)
+    case vs: graft.sources.VersionedStore[_] => reapTempRoot(vs.root)
     case other => releaseShared(other)
   }
 
@@ -195,7 +195,7 @@ object SessionCaches {
       df.unpersist()
       // a cut's blocks live outside the CacheManager
       if (df.queryExecution.analyzed.isInstanceOf[LogicalRDD]) unpersistLocalCheckpoint(df)
-    case _: graft.sources.VersionedStore => () // shared — owner reaps
+    case _: graft.sources.VersionedStore[_] => () // shared — owner reaps
     case r: Reapable =>
       r.reapRoots.foreach(reapTempRoot)
       // a Reapable composite (the unified stream artifacts) still

@@ -6,7 +6,6 @@ import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature.{StandardScaler, StandardScalerModel, VectorAssembler}
-import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -117,10 +116,6 @@ object FraudModel {
     val (means, stds, coef, b) = closedForm(model)
     Scoring.logisticProba(features, means, stds, coef, b)
   }
-
-  /** MLlib probability-of-fraud column from transform output. */
-  def mllibProba(scored: DataFrame): DataFrame =
-    scored.withColumn("proba", vector_to_array(col("probability")).getItem(1))
 
   /** MLlib's own probability computed driver-side (manual z-score +
     * `predictProbability` on local vectors) — the ground truth the

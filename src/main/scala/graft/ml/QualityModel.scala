@@ -167,14 +167,12 @@ object QualityModel {
     storeMemo(s, dir) {
       val store = new graft.sources.FrameStore(
         java.nio.file.Files.createTempDirectory("graft-quality-lr-").toString)
-      store.promote(ModelName, store.register(s, ModelName, closedForm(s, dir)))
+      store.publish(s, ModelName, closedForm(s, dir))
       // the MEDIA-quality model ships in the same registry: the
       // trimodal stream re-resolves both gates per micro-batch from
       // one production store (a store WITHOUT the media name runs
       // transcript-gated only — the gate is deployment-optional)
-      store.promote(MediaQualityModel.ModelName,
-        store.register(s, MediaQualityModel.ModelName,
-          MediaQualityModel.closedForm(s, dir)))
+      store.publish(s, MediaQualityModel.ModelName, MediaQualityModel.closedForm(s, dir))
       store
     }
 

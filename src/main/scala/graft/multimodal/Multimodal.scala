@@ -672,11 +672,9 @@ object Multimodal {
       val stats = mediaLoudnessStatsCached(s, dir)
       val versions = (1 to 3).map { v =>
         val cut = mn + (mx - mn + 1) * v / 3
-        val vv = store.register(s, graft.queries.Curation.DriftBaselineName,
+        store.publish(s, graft.queries.Curation.DriftBaselineName,
           mediaFeaturePairs(stats.filter(col("doc_id") < cut), Seq.empty)
             .groupBy(col("feature"), col("bucket")).agg(count(lit(1)).as("c")))
-        store.promote(graft.queries.Curation.DriftBaselineName, vv)
-        vv
       }
       val counts = versions.map { v =>
         store.load(s, graft.queries.Curation.DriftBaselineName, v)
@@ -686,22 +684,6 @@ object Multimodal {
         cutLineage(graft.queries.Curation.psiSeries(counts, nsFeature = "rms")))
     }.report.orderBy(col("v_new"), col("v_base"), col("feature"))
   }
-
-  /** Per-doc `(slice, feature, bucket)` loudness rows of a documents
-    * frame — shared by the batch monitor and its streaming twin
-    * (slice anchors come from the static table, so a streamed batch
-    * buckets identically). Repartitions BEFORE the synth+decode: the
-    * sf parquet is one split and the per-payload RMS aggregate is the
-    * expensive map — one task would serialize the whole decode (the
-    * consolidated-trimodal-pass lesson). Both loudness features come
-    * out of ONE decode pass via a 2-entry map explode, not a union
-    * that re-decodes the corpus per branch. */
-  private[graft] def mediaDriftBuckets(docs: org.apache.spark.sql.DataFrame,
-                                       mn: Long, mx: Long): org.apache.spark.sql.DataFrame =
-    mediaFeaturePairs(
-      mediaLoudnessStats(docs).withColumn("slice",
-        graft.queries.Curation.sliceCol(mn, mx)),
-      Seq(col("slice")))
 
   /** The decoded per-clip loudness stats `(doc_id, rms_l, peak_l)` —
     * one decode pass, repartitioned first (single-split sf parquet
@@ -1283,7 +1265,7 @@ object Multimodal {
         () => slots.set(1, cutLineage(jointClustersOf(pruned)))))
       val full = slots.get(0)
       val after = slots.get(1)
-      store.promote("joint_clusters", store.register(s, "joint_clusters", full))
+      store.publish(s, "joint_clusters", full)
       store.rewrite(s, "joint_clusters")(_ => after)
       store.gc("joint_clusters", keep = 0)
       JointForgetWorld(store, after)
@@ -1329,8 +1311,7 @@ object Multimodal {
       |       (c.doc_id = c.cluster_id) AS is_keeper
       |FROM comp c JOIN (SELECT cluster_id, COUNT(*) AS sz FROM comp GROUP BY 1) n USING (cluster_id)
       |ORDER BY c.doc_id""".stripMargin) { (s, dir) =>
-    jointForgetWorld(s, dir).store.loadProduction(s, "joint_clusters")
-      .getOrElse(sys.error("no production post-forget joint clusters"))
+    jointForgetWorld(s, dir).store.production(s, "joint_clusters")
       .orderBy(col("doc_id"))
   }
 
@@ -2251,8 +2232,7 @@ object Multimodal {
     // six aggregate legs (× bench reps) don't re-pay the scoring DAG
     val (w, ranked, rankedPatch) = triCompositeMemo(s, dir) {
         val store = graft.ml.QualityModel.productionStore(s, dir)
-        val model = store.loadProduction(s, graft.ml.MediaQualityModel.ModelName)
-          .getOrElse(sys.error("no production media quality model"))
+        val model = store.production(s, graft.ml.MediaQualityModel.ModelName)
         val scores = graft.ml.MediaQualityModel.scoreClosedForm(
           graft.ml.MediaQualityModel.mediaStats(s, dir), model)
         val winQ = trimodalPositioned(s, dir)
@@ -2663,8 +2643,7 @@ object Multimodal {
       val store = new graft.sources.FrameStore(
         java.nio.file.Files.createTempDirectory("graft-forget-trimodal-").toString)
       val before = cutLineage(trimodalEmitWindows(s, dir))
-      store.promote("trimodal_windows",
-        store.register(s, "trimodal_windows", before))
+      store.publish(s, "trimodal_windows", before)
       // the gates are per-doc facts, so filtering the gated record
       // union IS re-gating the reduced corpus (keep sets are pairwise
       // in no one else's docs); removal shifts every later record's
@@ -2716,8 +2695,7 @@ object Multimodal {
       "  (SELECT COUNT(DISTINCT doc_id % 4) FROM documents WHERE doc_id % 20 = 8) AS n_shards_affected,\n" +
       "  TRUE AS forget_equals_rebuild") { (s, dir) =>
     val world = forgottenTrimodalWorld(s, dir)
-    val after = world.store.loadProduction(s, "trimodal_windows")
-      .getOrElse(sys.error("no production post-forget trimodal windows"))
+    val after = world.store.production(s, "trimodal_windows")
     val rebuilt = world.rebuilt
     val cols = Seq("n_tokens", "n_patch", "window_fp")
     val diff = after.as("a").join(rebuilt.as("r"), Seq("shard", "seq_id"), "full_outer")
@@ -3598,7 +3576,7 @@ object Multimodal {
       // substantive content is the UNTOUCHED-shard preservation and
       // gc durability, both checked against the store's own parquet)
       val before = cutLineage(mmEmitWindows(s, dir, mmEmitPositioned(s, dir)))
-      store.promote("mm_windows", store.register(s, "mm_windows", before))
+      store.publish(s, "mm_windows", before)
       // the forget, PROPAGATED: removal shifts every later record's
       // offsets IN ITS SHARD, so the whole affected shard recuts from
       // the reduced aligned set — untouched shards' rows stay AS-IS
@@ -3643,8 +3621,7 @@ object Multimodal {
        |  TRUE AS forget_equals_rebuild""".stripMargin) { (s, dir) =>
     val world = forgottenMmWorld(s, dir)
     val before = world.before
-    val after = world.store.loadProduction(s, "mm_windows")
-      .getOrElse(sys.error("no production forgotten mm windows"))
+    val after = world.store.production(s, "mm_windows")
     val rebuilt = world.rebuilt
     val cols = Seq("n_tokens", "n_patch", "window_fp")
     val diff = after.as("a").join(rebuilt.as("r"), Seq("shard", "seq_id"), "full_outer")

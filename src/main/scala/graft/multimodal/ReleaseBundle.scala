@@ -157,8 +157,7 @@ object ReleaseBundle {
   private def promoteManifest(s: SparkSession, store: FrameStore,
       rows: Seq[(String, Int, Long)]): Unit = {
     import s.implicits._
-    store.promote(BundleName, store.register(s, BundleName,
-      rows.toDF("component", "version", "n_rows")))
+    store.publish(s, BundleName, rows.toDF("component", "version", "n_rows"))
     ()
   }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.Files
 
 import graft.Q
 import graft.sources.Tables
@@ -17,12 +17,11 @@ import org.apache.spark.sql.types._
   * codes + KB-scale codebooks and never touches the raw vectors until
   * the final refine.
   *
-  * Layout (same pointer pattern as the model registry):
+  * A version ([[graft.sources.VersionedStore]] layout) holds:
   * {{{
-  *   <root>/<name>/v<N>/codes/      (vec_id, list_id, codes array<int>)  — corpus-scale
-  *   <root>/<name>/v<N>/codebooks/  (m, j, centroid array<double>)       — M·K rows
-  *   <root>/<name>/v<N>/coarse/     (list_id, centroid, list_mean)       — NumLists rows
-  *   <root>/<name>/PRODUCTION       pointer file, atomically replaced
+  *   v<N>/codes/      (vec_id, list_id, codes array<int>)  — corpus-scale
+  *   v<N>/codebooks/  (m, j, centroid array<double>)       — M·K rows
+  *   v<N>/coarse/     (list_id, centroid, list_mean)       — NumLists rows
   * }}}
   *
   * Doubles round-trip parquet bit-exactly, so a reloaded index
@@ -30,7 +29,7 @@ import org.apache.spark.sql.types._
   * DedupSpec (cold-reload equality) and by the oracle-gated
   * `sim_ann_index_roundtrip` certificate.
   */
-final class AnnIndexStore(root: String) extends graft.sources.VersionedStore(root) {
+final class AnnIndexStore(root: String) extends graft.sources.VersionedStore[PqAnn.PqIndex](root) {
 
   /** Persist an index as the next version; returns the version. The
     * codes frame is written partitioned by `list_id` so a probe of
@@ -66,7 +65,7 @@ final class AnnIndexStore(root: String) extends graft.sources.VersionedStore(roo
   /** Load a version purely from disk: driver constants from the two
     * KB-scale tables, codes as a lazy parquet scan. */
   def load(spark: SparkSession, name: String, version: Int): PqAnn.PqIndex = {
-    val dir = nameDir(name).resolve(s"v$version")
+    val dir = versionPath(name, version)
     val books = spark.read.parquet(dir.resolve("codebooks").toString)
       .select(col("m"), col("j"), col("centroid")).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
@@ -82,116 +81,64 @@ final class AnnIndexStore(root: String) extends graft.sources.VersionedStore(roo
     PqAnn.PqIndex(coarse.map(_._2), bookArr, coarse.map(_._3), codes)
   }
 
-  def loadProduction(spark: SparkSession, name: String): Option[PqAnn.PqIndex] =
-    productionVersion(name).map(load(spark, name, _))
-
   /** INSERT arriving vectors into the production index without
     * retraining: encode them with the production constants
-    * ([[PqAnn.encodeWith]]) and publish base + batch as a NEW version,
-    * flipped in by the same atomic PRODUCTION pointer move as every
-    * other promotion — a concurrent [[loadProduction]] sees either the
-    * complete old index or the complete extended one, never a
-    * half-appended codes directory, and a crash mid-append leaves only
-    * an unpromoted staging dir (skipped by the next version number,
-    * reclaimable). The base version's immutable code files are
-    * HARDLINKED into the staged version — O(#files) metadata, zero
-    * data copied — the local-FS analog of a manifest referencing
-    * immutable segments, which is how a 100 TB store appends (a 0.1%
-    * daily arrival must never re-encode or re-copy the corpus).
-    * Sound because encoding is deterministic in the constants: the
-    * extended index is bit-identical to a one-shot encode of the
-    * union corpus (pinned by `sim_ann_index_append`).
-    *
-    * When `batchId` is given (streaming foreachBatch callers), the
-    * append is IDEMPOTENT under at-least-once replay: a production
-    * batch watermark ≥ the arriving id means this batch's encode
-    * already committed (the crash landed between the append and the
-    * checkpoint commit) and is skipped — a replayed batch can never
-    * produce two codes for one vec_id. Returns the promoted
-    * version. */
+    * ([[PqAnn.encodeWith]]) and publish base + batch as a new version.
+    * The base version's immutable code files are HARDLINKED into it —
+    * O(#files) metadata, zero data copied — which is how a 100 TB
+    * store appends (a 0.1% daily arrival must never re-encode or
+    * re-copy the corpus). Sound because encoding is deterministic in
+    * the constants: the extended index is bit-identical to a one-shot
+    * encode of the union corpus (pinned by `sim_ann_index_append`).
+    * With `batchId` a replayed batch is skipped, so it can never
+    * produce two codes for one vec_id. */
   def appendBatch(spark: SparkSession, name: String, newEmb: DataFrame,
                   batchId: Option[Long] = None,
-                  streamId: Option[String] = None): Int = {
-    val v = productionVersion(name)
-      .getOrElse(sys.error(s"no production index $name to append to"))
-    if (batchId.exists(id => lastAppliedBatch(name, streamId).exists(_ >= id))) v
-    else {
+                  streamId: Option[String] = None): Int =
+    derive(name, batchId, streamId) { (v, staging) =>
       val idx = load(spark, name, v)
-      val next = stageVersion(name, batchId, streamId) { staging =>
-        linkTree(nameDir(name).resolve(s"v$v"), staging)
-        PqAnn.encodeWith(newEmb, idx.cents, idx.books, idx.listMeans)
-          .write.mode("append").partitionBy("list_id")
-          .parquet(staging.resolve("codes").toString)
-      }
-      promote(name, next)
-      next
+      linkTree(versionPath(name, v), staging)
+      PqAnn.encodeWith(newEmb, idx.cents, idx.books, idx.listMeans)
+        .write.mode("append").partitionBy("list_id")
+        .parquet(staging.resolve("codes").toString)
     }
-  }
 
   /** Test/diagnostic visibility of a version's codes directory. */
   def codesDir(name: String, version: Int): String =
-    nameDir(name).resolve(s"v$version").resolve("codes").toString
+    versionPath(name, version).resolve("codes").toString
+
+  // publish production's codes rewritten through `f`, one file per
+  // list; the KB-scale codebooks and coarse tables are hardlinked
+  private def rewriteCodes(spark: SparkSession, name: String)(f: DataFrame => DataFrame): Int =
+    derive(name) { (v, staging) =>
+      val src = versionPath(name, v)
+      linkTree(src.resolve("codebooks"), staging.resolve("codebooks"))
+      linkTree(src.resolve("coarse"), staging.resolve("coarse"))
+      f(spark.read.parquet(src.resolve("codes").toString))
+        .repartition(col("list_id"))
+        .write.partitionBy("list_id")
+        .parquet(staging.resolve("codes").toString)
+    }
 
   /** DELETE codes matching `predicate` from the production index —
     * right-to-be-forgotten on the ANN artifact, mirroring
     * [[graft.sources.FrameStore.deleteWhere]]: a withdrawn vector
     * must leave the derived codes, not just the corpus table.
-    * Publishes the filtered codes as a new version (codebooks/coarse
-    * hardlinked — the KB-scale constants are untouched by a delete),
-    * flips the pointer atomically; superseded versions hold the rows
-    * until [[gc]] retires them. At 100 TB the rewrite prunes to the
-    * predicate-touched `list_id` partitions — this same operation
-    * under partition pruning. Returns the promoted version. */
+    * Superseded versions hold the rows until [[gc]] retires them. At
+    * 100 TB the rewrite prunes to the predicate-touched `list_id`
+    * partitions — this same operation under partition pruning. */
   def deleteWhere(spark: SparkSession, name: String,
-                  predicate: org.apache.spark.sql.Column): Int = {
-    val v = productionVersion(name)
-      .getOrElse(sys.error(s"no production index $name to delete from"))
-    val src = nameDir(name).resolve(s"v$v")
-    val next = stageVersion(name) { staging =>
-      linkTree(src.resolve("codebooks"), staging.resolve("codebooks"))
-      linkTree(src.resolve("coarse"), staging.resolve("coarse"))
-      spark.read.parquet(src.resolve("codes").toString)
-        .filter(!predicate)
-        .repartition(col("list_id"))
-        .write.mode("overwrite").partitionBy("list_id")
-        .parquet(staging.resolve("codes").toString)
-      val marker = src.resolve("BATCH")
-      if (Files.exists(marker))
-        Files.copy(marker, staging.resolve("BATCH"))
-    }
-    promote(name, next)
-    next
-  }
+                  predicate: org.apache.spark.sql.Column): Int =
+    rewriteCodes(spark, name)(_.filter(!predicate))
 
   /** Compact the production version's CODES: every append adds part
     * files inside the touched `list_id` partitions, and a probe's
     * partition-pruned scan eventually opens one file per historical
-    * batch (the streaming small-files problem). Rewrites the codes
-    * one file per list (repartition on the partition column),
-    * hardlinks the KB-scale codebooks/coarse tables, and flips the
-    * pointer atomically. Row-identical by construction — the
-    * streamed append certificate runs AGAINST the compacted index,
-    * so the oracle gate covers compaction soundness too. */
-  def compact(spark: SparkSession, name: String): Int = {
-    val v = productionVersion(name)
-      .getOrElse(sys.error(s"no production index $name to compact"))
-    val src = nameDir(name).resolve(s"v$v")
-    val next = stageVersion(name) { staging =>
-      linkTree(src.resolve("codebooks"), staging.resolve("codebooks"))
-      linkTree(src.resolve("coarse"), staging.resolve("coarse"))
-      spark.read.parquet(src.resolve("codes").toString)
-        .repartition(col("list_id"))
-        .write.mode("overwrite").partitionBy("list_id")
-        .parquet(staging.resolve("codes").toString)
-      // maintenance preserves the applied-batch watermark: a replayed
-      // micro-batch must still be recognized after a compaction ran
-      val marker = src.resolve("BATCH")
-      if (Files.exists(marker))
-        Files.copy(marker, staging.resolve("BATCH"))
-    }
-    promote(name, next)
-    next
-  }
+    * batch (the streaming small-files problem). Row-identical by
+    * construction — the streamed append certificate runs AGAINST the
+    * compacted index, so the oracle gate covers compaction soundness
+    * too. */
+  def compact(spark: SparkSession, name: String): Int = rewriteCodes(spark, name)(identity)
 }
 
 /** The oracle-gated roundtrip certificate + the persisted-index query
@@ -227,8 +174,7 @@ object AnnIndexStore {
        |  TRUE AS one_code_per_vector, TRUE AS results_equal
        |FROM embeddings""".stripMargin) { (s, dir) =>
     val emb = Tables.embeddings(s, dir)
-    val idx = forDir(s, dir).loadProduction(s, IndexName)
-      .getOrElse(sys.error("no production ANN index"))
+    val idx = forDir(s, dir).production(s, IndexName)
     val fresh = PqAnn.queryIndex(emb, PqAnn.cachedIndex(s, dir))
     val indexed = PqAnn.queryIndex(emb, idx)
     // one-pass symmetric diff on the (q_id, rank) key — each ANN
@@ -329,8 +275,7 @@ object AnnIndexStore {
     s"""SELECT c.*, (SELECT COUNT(*) FROM embeddings) AS n_codes,
        |  TRUE AS append_equals_oneshot, TRUE AS one_code_per_vector
        |FROM (${AnnCert.certOracleSql("060")}) c""".stripMargin) { (s, dir) =>
-    val idx = appendedStore(s, dir).loadProduction(s, BaseIndexName)
-      .getOrElse(sys.error("no production base index"))
+    val idx = appendedStore(s, dir).production(s, BaseIndexName)
     appendCertFrame(s, dir, idx)
   }
 
@@ -366,8 +311,7 @@ object AnnIndexStore {
       |  TRUE AS no_forgotten_anywhere, TRUE AS one_code_per_vector""".stripMargin) {
     (s, dir) =>
     val emb = Tables.embeddings(s, dir)
-    val idx = forgottenStore(s, dir).loadProduction(s, IndexName)
-      .getOrElse(sys.error("no production forgotten index"))
+    val idx = forgottenStore(s, dir).production(s, IndexName)
     val isForgot = (c: org.apache.spark.sql.Column) => c % 17 === 3
     val codeStats = idx.codes.agg(
       count(lit(1)).as("n_codes_after"),

@@ -397,7 +397,7 @@ object Curation {
       // the cert's substantive content is untouched-shard
       // preservation + gc durability against the store's own parquet
       val before = cutLineage(mixPackManifest(Tables.documents(s, dir)))
-      store.promote("mix_pack", store.register(s, "mix_pack", before))
+      store.publish(s, "mix_pack", before)
       // the forget, PROPAGATED: deleting the doc's own manifest rows
       // is not enough — removal shifts the running offsets of every
       // later doc in its source shard, so the whole affected shard's
@@ -445,8 +445,7 @@ object Curation {
        |  TRUE AS forget_equals_rebuild""".stripMargin) { (s, dir) =>
     val world = forgottenPackWorld(s, dir)
     val before = world.before
-    val after = world.store.loadProduction(s, "mix_pack")
-      .getOrElse(sys.error("no production forgotten pack manifest"))
+    val after = world.store.production(s, "mix_pack")
     // rebuilt from scratch on the reduced corpus — the gold standard
     val rebuilt = world.rebuilt
     val cols = Seq("n_entries", "n_docs", "seq_tokens", "first_doc", "last_doc")
@@ -1193,9 +1192,7 @@ object Curation {
       val mid = releaseMid(s, dir)
       val store = new graft.sources.FrameStore(
         graft.sources.Scratch.dir("graft-driftbase-").toString + "/store")
-      store.promote(DriftBaselineName,
-        store.register(s, DriftBaselineName,
-          baselineCounts(docs.filter(col("doc_id") < mid))))
+      store.publish(s, DriftBaselineName, baselineCounts(docs.filter(col("doc_id") < mid)))
       val newDocs = docs.filter(col("doc_id") >= mid)
       val r = newDocs.agg(min(col("doc_id")), max(col("doc_id"))).head()
       val newCounts = driftBuckets(newDocs, r.getLong(0), r.getLong(1))
@@ -1203,8 +1200,7 @@ object Curation {
         .agg(count(lit(1)).as("c"))
       val bv = store.productionVersion(DriftBaselineName)
         .getOrElse(sys.error("no promoted drift baseline"))
-      val base = store.loadProduction(s, DriftBaselineName)
-        .getOrElse(sys.error("no promoted drift baseline"))
+      val base = store.production(s, DriftBaselineName)
       BaselineWorld(store,
         cutLineage(psiVsBaseline(newCounts, base, bv)))
     }.report.orderBy(col("slice"), col("feature"))
@@ -1288,10 +1284,7 @@ object Curation {
         graft.sources.Scratch.dir("graft-driftseries-").toString + "/store")
       val versions = (1 to 3).map { v =>
         val cut = mn + (mx - mn + 1) * v / 3
-        val vv = store.register(s, DriftBaselineName,
-          baselineCounts(docs.filter(col("doc_id") < cut)))
-        store.promote(DriftBaselineName, vv)
-        vv
+        store.publish(s, DriftBaselineName, baselineCounts(docs.filter(col("doc_id") < cut)))
       }
       // the report reads the RELOADED versioned artifacts, not the
       // frames it just built — the longitudinal chart is a fact of

@@ -2443,7 +2443,7 @@ object TextOps {
       // the cert's substantive content is untouched-shard
       // preservation + gc durability against the store's own parquet
       val before = cutLineage(emitWindowsOfRetained(retained))
-      store.promote("emit_windows", store.register(s, "emit_windows", before))
+      store.publish(s, "emit_windows", before)
       val affected = retained.filter(col("doc_id") % 20 === 7)
         .select(col("source")).distinct()
       val rebuilt = cutLineage(emitWindowsOfRetained(retained.filter(col("doc_id") % 20 =!= 7)))
@@ -2497,8 +2497,7 @@ object TextOps {
     val retained = curationDecisions(s, dir).filter(col("drop_reason").isNull)
       .select(col("source"), col("doc_id"), col("red"), col("final_tokens"))
     val world = forgottenEmitWorld(s, dir)
-    val after = world.store.loadProduction(s, "emit_windows")
-      .getOrElse(sys.error("no production forgotten emission windows"))
+    val after = world.store.production(s, "emit_windows")
     val rebuilt = world.rebuilt
     val cols = Seq("n_tokens", "window_fp")
     val diff = after.as("a").join(rebuilt.as("r"), Seq("source", "seq_id"), "full_outer")
@@ -2962,7 +2961,7 @@ object TextOps {
       val bench = hashedGrams8(Tables.fanOut(Tables.documents(s, dir)))
         .filter(col("doc_id") % 4 === 3)
         .select(col("h")).distinct()
-      store.promote("bench_grams", store.register(s, "bench_grams", bench))
+      store.publish(s, "bench_grams", bench)
       store
     }
 
@@ -2998,8 +2997,7 @@ object TextOps {
       |  ROUND(CAST(n_hit AS DOUBLE) / n_grams, 6) AS overlap
       |FROM agg WHERE CAST(n_hit AS DOUBLE) / n_grams >= 0.5
       |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val bench = benchGramStore(s, dir).loadProduction(s, "bench_grams")
-      .getOrElse(sys.error("no production benchmark gram index"))
+    val bench = benchGramStore(s, dir).production(s, "bench_grams")
       .withColumn("hit", lit(1))
     val docs = Tables.documents(s, dir)
     val split = docs.agg(expr("max(doc_id) * 9 div 10")).head().getLong(0)

@@ -1,100 +1,138 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileSystemException, Files, NoSuchFileException, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Versioned-artifact mechanics shared by every persisted store in
-  * the engine (model registry pattern; reference lifecycle:
-  * `services/fraud_service/app/main.py:73-97` resolves a Production
-  * artifact by pointer and hot-reloads it):
+/** The engine's one owner of versioned artifacts: the model registry,
+  * the persisted ANN index and every parquet frame store share this
+  * layout and lifecycle (the reference resolves its Production model
+  * through MLflow's registry and stage pointer,
+  * `services/training/app/training.py:93-110`,
+  * `services/fraud_service/app/main.py:73-97`).
   *
-  *  - immutable version directories `<root>/<name>/v<N>/`,
-  *  - an atomically-replaced `PRODUCTION` pointer file — readers see
-  *    either the complete old version or the complete new one,
-  *  - hardlink staging for appends: a new version references the
-  *    previous version's immutable files at O(#files) metadata cost
-  *    (the local-FS analog of a manifest over immutable segments —
-  *    at 100 TB an append must never re-copy the corpus).
+  * {{{
+  *   <root>/<name>/v<N>/         one immutable version, written by the subclass
+  *   <root>/<name>/v<N>/BATCH    replay marker: "<batchId>[\n<streamId>]"
+  *   <root>/<name>/PRODUCTION    pointer file holding N, atomically replaced
+  *   <root>/<name>/.staging-*    a version being built, or crash debris
+  * }}}
+  *
+  *  - BUILD: every version is built in a `.staging-*` dir and RENAMED
+  *    into place as the next free `v<N>` ([[stageVersion]]), so
+  *    `versions` never sees a half-written version and two writers
+  *    never share a number. Versions are write-once.
+  *  - PROMOTE: [[promote]] replaces `PRODUCTION` by an atomic move, so
+  *    a reader sees the complete old version or the complete new one.
+  *    Resolution is ONE read of the pointer ([[productionVersion]]),
+  *    cheap enough to run per micro-batch.
+  *  - DERIVE: appends and maintenance publish a version built from
+  *    production through one step ([[derive]]): resolve production,
+  *    skip a replayed batch, stage, carry or stamp the `BATCH` marker,
+  *    promote. Appends HARDLINK production's immutable files into the
+  *    staged version at O(#files) metadata cost (the local-FS analog
+  *    of a manifest over immutable segments: at 100 TB an append must
+  *    never re-copy the corpus).
+  *  - REPLAY: a foreachBatch append stamps its `batchId` and stream
+  *    (checkpoint) identity into `BATCH`; a later append of an id at
+  *    or below production's marker from the SAME stream already
+  *    committed and is skipped (the idempotent sink of Structured
+  *    Streaming's at-least-once replay). Maintenance carries the
+  *    marker forward, so a replay is still recognized after it.
+  *  - RETIRE: [[gc]] deletes superseded versions and stale staging
+  *    debris.
   */
-abstract class VersionedStore(val root: String) extends Serializable {
+abstract class VersionedStore[A](val root: String) extends Serializable {
 
   protected def nameDir(name: String): Path = Paths.get(root, name)
 
-  /** Build a version in a dot-prefixed staging dir and RENAME it into
-    * place as `v<next>` before returning. `versions()` therefore never
-    * observes a half-written version: a crash mid-write leaves only an
-    * ignorable `.staging-*` name (swept by [[gc]]), and two concurrent
-    * writers cannot collide on a version number — the rename loser
-    * retries at the next free number. `batchId`, when given, is
-    * recorded inside the version (see [[appliedBatch]]) so streaming
-    * replays of an already-applied micro-batch can be skipped;
-    * `streamId` (the appender's checkpoint identity) is recorded
-    * beside it so the skip applies only to replays from the SAME
-    * stream — batchIds are monotonic within one checkpoint, not
-    * across checkpoints. */
-  protected def stageVersion(name: String, batchId: Option[Long] = None,
-                             streamId: Option[String] = None)
-                            (write: Path => Unit): Int = {
+  protected def versionPath(name: String, version: Int): Path =
+    nameDir(name).resolve(s"v$version")
+
+  /** One version of `name`, read back as the artifact. */
+  def load(spark: SparkSession, name: String, version: Int): A
+
+  /** The promoted artifact, None when nothing is promoted. */
+  def loadProduction(spark: SparkSession, name: String): Option[A] =
+    productionVersion(name).map(load(spark, name, _))
+
+  /** The promoted artifact; fails naming it when nothing is promoted. */
+  def production(spark: SparkSession, name: String): A =
+    load(spark, name, requireProduction(name))
+
+  private def requireProduction(name: String): Int =
+    productionVersion(name).getOrElse(sys.error(s"no production version of $name under $root"))
+
+  /** Build a version with `write` in a staging dir and rename it into
+    * place as `v<next>`; the rename loser of two concurrent writers
+    * retries at the next free number. Returns the version, NOT
+    * promoted. */
+  protected def stageVersion(name: String)(write: Path => Unit): Int = {
     val d = nameDir(name)
     Files.createDirectories(d)
     val staging = Files.createTempDirectory(d, ".staging-")
     write(staging)
-    batchId.foreach { id =>
-      // the callback may have HARDLINKED the previous version's BATCH
-      // marker into staging (linkTree of a batch-stamped version);
-      // writing through that link would corrupt the source version's
-      // marker, so unlink first and write a fresh file
-      Files.deleteIfExists(staging.resolve("BATCH"))
-      Files.writeString(staging.resolve("BATCH"),
-        id.toString + streamId.map("\n" + _).getOrElse(""))
-    }
     var v = latestVersion(name).getOrElse(0) + 1
     var done = false
     while (!done) {
       try { Files.move(staging, d.resolve(s"v$v")); done = true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => v += 1 }
+      catch { case _: FileSystemException if Files.exists(d.resolve(s"v$v")) => v += 1 }
     }
     v
   }
 
-  /** The foreachBatch batchId recorded when `version` was published,
-    * if it came from a batch-stamped append. */
-  def appliedBatch(name: String, version: Int): Option[Long] = {
-    val p = nameDir(name).resolve(s"v$version").resolve("BATCH")
-    if (Files.exists(p))
-      Some(Files.readString(p).linesIterator.next().trim.toLong)
-    else None
-  }
-
-  /** The stream (checkpoint) identity recorded beside the batchId,
-    * when the publishing append carried one. */
-  def appliedStream(name: String, version: Int): Option[String] = {
-    val p = nameDir(name).resolve(s"v$version").resolve("BATCH")
-    if (Files.exists(p)) Files.readString(p).linesIterator.drop(1).nextOption()
-    else None
-  }
-
-  /** The batchId the PRODUCTION version was published under. Streaming
-    * appenders use this to make at-least-once foreachBatch replays
-    * idempotent: batchIds from ONE checkpoint are monotonic, so a
-    * production marker ≥ the arriving batchId means this batch's
-    * append already committed (the crash landed between the append
-    * and the checkpoint commit) and must not run again.
-    *
-    * When `streamId` is given, the watermark counts ONLY if the
-    * marker's recorded stream identity matches: a FRESH checkpoint
-    * (batchIds restarting at 0) pointed at an existing batch-stamped
-    * store would otherwise silently skip every early batch. An
-    * identity-less marker (a pre-identity append, or a non-streaming
-    * caller) never matches an identity-bearing probe — the safe
-    * direction, since re-running an append that did NOT commit from
-    * this stream is exactly what at-least-once demands. */
-  def lastAppliedBatch(name: String, streamId: Option[String] = None): Option[Long] =
-    productionVersion(name).flatMap { v =>
-      appliedBatch(name, v)
-        .filter(_ => streamId.isEmpty || appliedStream(name, v) == streamId)
+  /** The one publish step for a version derived from production:
+    * resolve production (or fail), return it unchanged when `batchId`
+    * is a replay from the same stream, else stage the new version
+    * with `build(productionVersion, stagingDir)`, stamp `batchId` into
+    * its marker or carry production's, and promote it. Returns the
+    * production version afterwards. */
+  protected def derive(name: String, batchId: Option[Long] = None,
+                       streamId: Option[String] = None)
+                      (build: (Int, Path) => Unit): Int = {
+    val prod = requireProduction(name)
+    if (batchId.exists(id => appliedBy(name, prod, streamId).exists(_ >= id))) prod
+    else {
+      val next = stageVersion(name) { staging =>
+        build(prod, staging)
+        val stamp = staging.resolve("BATCH")
+        // a hardlinked copy of production's marker is replaced, never
+        // written through (that would rewrite production's own)
+        Files.deleteIfExists(stamp)
+        val carried = versionPath(name, prod).resolve("BATCH")
+        batchId match {
+          case Some(id) => Files.writeString(stamp, id.toString + streamId.map("\n" + _).getOrElse(""))
+          case None => if (Files.exists(carried)) Files.copy(carried, stamp)
+        }
+      }
+      promote(name, next)
+      next
     }
+  }
+
+  private def marker(name: String, version: Int): Option[(Long, Option[String])] =
+    try {
+      val lines = Files.readString(versionPath(name, version).resolve("BATCH")).linesIterator
+      Some((lines.next().trim.toLong, lines.nextOption()))
+    } catch { case _: NoSuchFileException => None }
+
+  // the marker's batchId when `streamId` is absent or is the marker's
+  // stream; an identity-less marker never matches a named stream
+  private def appliedBy(name: String, version: Int, streamId: Option[String]): Option[Long] =
+    marker(name, version).collect { case (id, s) if streamId.isEmpty || s == streamId => id }
+
+  /** The batchId `version` was published under, if batch-stamped. */
+  def appliedBatch(name: String, version: Int): Option[Long] = marker(name, version).map(_._1)
+
+  /** The stream identity recorded beside the batchId, if any. */
+  def appliedStream(name: String, version: Int): Option[String] =
+    marker(name, version).flatMap(_._2)
+
+  /** Production's batch marker, counted only for `streamId`'s own
+    * appends when given: a FRESH checkpoint (batchIds restarting at 0)
+    * against a batch-stamped store must append, not skip. */
+  def lastAppliedBatch(name: String, streamId: Option[String] = None): Option[Long] =
+    productionVersion(name).flatMap(appliedBy(name, _, streamId))
 
   def versions(name: String): Seq[Int] = {
     val d = nameDir(name)
@@ -122,10 +160,11 @@ abstract class VersionedStore(val root: String) extends Serializable {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  def productionVersion(name: String): Option[Int] = {
-    val p = nameDir(name).resolve("PRODUCTION")
-    if (Files.exists(p)) Some(Files.readString(p).trim.toInt) else None
-  }
+  /** One read of the PRODUCTION pointer; None when it is absent,
+    * including when it disappears under the read. */
+  def productionVersion(name: String): Option[Int] =
+    try Some(Files.readString(nameDir(name).resolve("PRODUCTION")).trim.toInt)
+    catch { case _: NoSuchFileException => None }
 
   /** Hardlink every data file under `src` into the same relative
     * layout under `dst` (parquet part files are immutable once
@@ -162,15 +201,14 @@ abstract class VersionedStore(val root: String) extends Serializable {
     * segments; gc = dropping old manifests, segments reclaimed when
     * the last reference goes). Returns the deleted versions. */
   def gc(name: String, keep: Int = 1): Seq[Int] = {
-    val prod = productionVersion(name)
-      .getOrElse(sys.error(s"no production version of $name to gc against"))
+    val prod = requireProduction(name)
     import scala.jdk.CollectionConverters._
     def rmTree(d: Path): Unit =
       scala.util.Using.resource(Files.walk(d)) { stream =>
         stream.iterator().asScala.toSeq.reverse.foreach(Files.delete)
       }
     val doomed = versions(name).filter(_ < prod).sorted.dropRight(keep)
-    doomed.foreach(v => rmTree(nameDir(name).resolve(s"v$v")))
+    doomed.foreach(v => rmTree(versionPath(name, v)))
     // age-gate the staging sweep: a .staging-* tree touched within the
     // last 10 minutes may belong to a LIVE writer mid-stageVersion —
     // deleting it would fail that writer's write() or rename. The gate
@@ -203,137 +241,62 @@ abstract class VersionedStore(val root: String) extends Serializable {
   * restarts as a promoted artifact (a restarted dedup stream resumes
   * from the promoted index, not from a session cache).
   */
-final class FrameStore(root: String) extends VersionedStore(root) {
+final class FrameStore(root: String) extends VersionedStore[DataFrame](root) {
 
-  private def dataDir(name: String, v: Int): Path =
-    nameDir(name).resolve(s"v$v").resolve("data")
+  private def data(version: Path): String = version.resolve("data").toString
 
-  /** Persist `df` as the next version of `name`; returns the version
-    * (NOT yet promoted — callers decide when to flip the pointer).
-    * Staged: a crash mid-write never publishes a half-written
-    * version. */
-  def register(spark: SparkSession, name: String, df: DataFrame,
-               partitionCols: Seq[String] = Nil): Int =
-    stageVersion(name) { staging =>
-      val w = df.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(staging.resolve("data").toString)
-    }
+  /** Persist `df` as the next version of `name`; returns the version,
+    * NOT yet promoted. */
+  def register(spark: SparkSession, name: String, df: DataFrame): Int =
+    stageVersion(name)(dir => df.write.parquet(data(dir)))
+
+  /** Persist `df` as the next version of `name` and promote it. */
+  def publish(spark: SparkSession, name: String, df: DataFrame): Int = {
+    val v = register(spark, name, df)
+    promote(name, v)
+    v
+  }
 
   def load(spark: SparkSession, name: String, version: Int): DataFrame =
-    spark.read.parquet(dataDir(name, version).toString)
+    spark.read.parquet(data(versionPath(name, version)))
 
-  def loadProduction(spark: SparkSession, name: String): Option[DataFrame] =
-    productionVersion(name).map(load(spark, name, _))
-
-  /** Append `batch` to the production frame and publish atomically:
-    * hardlink the production version's files into a staged next
-    * version, append the batch there, rename the staging dir into
-    * place, flip the pointer. A concurrent reader sees the complete
-    * old frame until the flip; a crash leaves only an ignorable
-    * `.staging-*` dir (reclaimed by [[gc]]). When `batchId` is given
-    * (streaming foreachBatch callers), the append is IDEMPOTENT
-    * under at-least-once replay: batchIds from one checkpoint are
-    * monotonic, so a production watermark ≥ the arriving id means
-    * this batch's append already committed (the crash landed between
-    * the append and the checkpoint commit) and is skipped.
-    *
-    * Pass `streamId` (the stream's checkpoint location) with
-    * `batchId`: the watermark skip is ENFORCED to the stream identity
-    * recorded in the marker, so a FRESH checkpoint (batchIds
-    * restarting at 0) pointed at an existing batch-stamped store
-    * appends normally instead of silently dropping every early batch
-    * — the store↔checkpoint lifetime coupling is checked, not just
-    * documented. Returns the promoted version. */
+  /** Append `batch` to the production frame: production's files are
+    * hardlinked into the new version and the batch is written beside
+    * them. With `batchId` (and the stream's checkpoint location as
+    * `streamId`) a replay of an applied batch is skipped. */
   def appendBatch(spark: SparkSession, name: String, batch: DataFrame,
-                  partitionCols: Seq[String] = Nil,
                   batchId: Option[Long] = None,
-                  streamId: Option[String] = None): Int = {
-    val v = productionVersion(name)
-      .getOrElse(sys.error(s"no production frame $name to append to"))
-    if (batchId.exists(id => lastAppliedBatch(name, streamId).exists(_ >= id))) v
-    else {
-      val next = stageVersion(name, batchId, streamId) { staging =>
-        linkTree(nameDir(name).resolve(s"v$v"), staging)
-        val w = batch.write.mode("append")
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(staging.resolve("data").toString)
-      }
-      promote(name, next)
-      next
+                  streamId: Option[String] = None): Int =
+    derive(name, batchId, streamId) { (v, staging) =>
+      linkTree(versionPath(name, v), staging)
+      batch.write.mode("append").parquet(data(staging))
     }
-  }
+
+  /** Publish production rewritten through `f` — the maintenance
+    * primitive behind [[deleteWhere]], [[compact]] and state-snapshot
+    * pruning (e.g. the SCD2 twin's open-row set, which appends
+    * per-batch deltas and periodically collapses to the current row
+    * per key). */
+  def rewrite(spark: SparkSession, name: String)(f: DataFrame => DataFrame): Int =
+    derive(name) { (v, staging) => f(load(spark, name, v)).write.parquet(data(staging)) }
 
   /** DELETE rows from the production frame — the
     * right-to-be-forgotten half of the artifact lifecycle: a corpus
     * doc withdrawn from training must leave every derived artifact
     * (postings, fingerprints, gram indexes), not just the corpus
-    * table. Publishes the filtered frame as a new version and flips
-    * the pointer atomically; superseded versions still hold the rows
-    * until [[gc]] retires them (an auditable grace window — run gc
-    * to make the forget durable on disk). A full rewrite is the
-    * parquet baseline; at 100 TB the store would partition and
-    * rewrite only predicate-touched partitions, which is this same
-    * operation under a partition pruning filter. Returns the
-    * promoted version. */
-  /** REWRITE the production frame through `f` and publish
-    * atomically — the general maintenance primitive behind
-    * [[deleteWhere]] and state-snapshot pruning (e.g. the SCD2
-    * twin's open-row set, which appends per-batch deltas and
-    * periodically collapses to the current row per key). Preserves
-    * the applied-batch watermark (same as compact): if a streaming
-    * appender also feeds this store, a rewrite that dropped the
-    * marker would reset lastAppliedBatch to None and an
-    * at-least-once replay would re-append an already-committed
-    * batch. */
-  def rewrite(spark: SparkSession, name: String)(f: DataFrame => DataFrame): Int = {
-    val v = productionVersion(name)
-      .getOrElse(sys.error(s"no production frame $name to rewrite"))
-    val df = load(spark, name, v)
-    val next = stageVersion(name) { staging =>
-      f(df).write.mode("overwrite")
-        .parquet(staging.resolve("data").toString)
-      val marker = nameDir(name).resolve(s"v$v").resolve("BATCH")
-      if (Files.exists(marker))
-        Files.copy(marker, staging.resolve("BATCH"))
-    }
-    promote(name, next)
-    next
-  }
-
+    * table. Superseded versions still hold the rows until [[gc]]
+    * retires them (an auditable grace window — run gc to make the
+    * forget durable on disk). A full rewrite is the parquet baseline;
+    * at 100 TB the store would partition and rewrite only
+    * predicate-touched partitions, which is this same operation under
+    * a partition pruning filter. */
   def deleteWhere(spark: SparkSession, name: String,
                   predicate: org.apache.spark.sql.Column): Int =
     rewrite(spark, name)(_.filter(!predicate))
 
-  /** COMPACT the production frame: every [[appendBatch]] adds part
-    * files, and after N micro-batches a scan opens N× the files it
-    * needs (the classic streaming small-files problem — at 100 TB
-    * the file-listing alone dominates). Rewrites production into a
-    * new version — `targetFiles` part files (per partition dir when
-    * partitioned, via repartition on the partition columns) — and
-    * flips the pointer atomically; readers see either the fragmented
-    * or the compacted version, both with identical rows. Old
-    * versions stay until [[gc]]. Returns the promoted version. */
-  def compact(spark: SparkSession, name: String,
-              partitionCols: Seq[String] = Nil, targetFiles: Int = 1): Int = {
-    val v = productionVersion(name)
-      .getOrElse(sys.error(s"no production frame $name to compact"))
-    val df = load(spark, name, v)
-    import org.apache.spark.sql.functions.col
-    val out =
-      if (partitionCols.nonEmpty) df.repartition(partitionCols.map(col): _*)
-      else df.coalesce(targetFiles)
-    val next = stageVersion(name) { staging =>
-      val w = out.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(staging.resolve("data").toString)
-      // maintenance preserves the applied-batch watermark: a replayed
-      // micro-batch must still be recognized after a compaction ran
-      val marker = nameDir(name).resolve(s"v$v").resolve("BATCH")
-      if (Files.exists(marker))
-        Files.copy(marker, staging.resolve("BATCH"))
-    }
-    promote(name, next)
-    next
-  }
+  /** COMPACT the production frame into one file: every [[appendBatch]]
+    * adds part files, and after N micro-batches a scan opens N× the
+    * files it needs (the streaming small-files problem — at 100 TB the
+    * file listing alone dominates). Rows are unchanged. */
+  def compact(spark: SparkSession, name: String): Int = rewrite(spark, name)(_.coalesce(1))
 }

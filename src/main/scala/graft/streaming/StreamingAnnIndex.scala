@@ -87,8 +87,7 @@ object StreamingAnnIndex {
        |  TRUE AS append_equals_oneshot, TRUE AS one_code_per_vector
        |FROM (${AnnCert.certOracleSql("060")}) c""".stripMargin) { (s, dir) =>
     val store = memoStore(s, dir)
-    val idx = store.loadProduction(s, AnnIndexStore.BaseIndexName)
-      .getOrElse(sys.error("no production streamed index"))
+    val idx = store.production(s, AnnIndexStore.BaseIndexName)
     AnnIndexStore.appendCertFrame(s, dir, idx)
   }
 

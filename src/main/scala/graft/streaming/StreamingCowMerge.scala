@@ -134,14 +134,6 @@ object StreamingCowMerge {
       .flatMap { case (day, _) => readDay(s, store, day, Long.MaxValue) }
       .reduce(_ unionByName _)
 
-  /** TIME TRAVEL: the store exactly as it stood after batch
-    * `asOfBid` committed (-1 = the base load) — a pure read-side
-    * choice over the retained generations, no data movement. */
-  def readStoreAsOf(s: SparkSession, store: String, asOfBid: Long): DataFrame =
-    dayDirs(store)
-      .flatMap { case (day, _) => readDay(s, store, day, asOfBid + 1) }
-      .reduce(_ unionByName _)
-
   /** The as-of generation dirs as a flat path list — for readers
     * that don't need the day column reconstructed (per-version
     * totals), ONE multi-path scan instead of |days| subframes. */

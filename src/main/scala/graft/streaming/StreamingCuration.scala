@@ -110,28 +110,24 @@ object StreamingCuration {
     * ([[processBatch]]). */
   def seedState(spark: SparkSession, store: FrameStore, seed: DataFrame,
                 batchId: Long): Unit = {
-    store.promote(ShingleIdx,
-      store.register(spark, ShingleIdx,
-        TextOps.hashedShingleArrays(seed).withColumn("batch_id", lit(batchId))))
-    store.promote(FpIdx,
-      store.register(spark, FpIdx,
-        seed.select(col("doc_id"), md5(col("text")).as("fp"))
-          .withColumn("batch_id", lit(batchId))))
+    store.publish(spark, ShingleIdx,
+      TextOps.hashedShingleArrays(seed).withColumn("batch_id", lit(batchId)))
+    store.publish(spark, FpIdx,
+      seed.select(col("doc_id"), md5(col("text")).as("fp"))
+        .withColumn("batch_id", lit(batchId)))
     // per-(fp, batch) distinct-doc-count state for the two scrub
     // stages — the [[StreamingLineDedup]] / [[StreamingSpanDedup]]
     // artifact shape, collapsed at drain by [[snapshotCounts]]
-    store.promote(LineCounts,
-      store.register(spark, LineCounts,
-        TextOps.lineSegments(seed).withColumn("fp", xxhash64(col("line")))
-          .select(col("fp"), col("doc_id")).distinct()
-          .groupBy(col("fp")).agg(count(lit(1)).as("n_docs"))
-          .withColumn("batch_id", lit(batchId))))
-    store.promote(SpanCounts,
-      store.register(spark, SpanCounts,
-        TextOps.spanStarts(seed)
-          .select(col("fp"), col("doc_id")).distinct()
-          .groupBy(col("fp")).agg(count(lit(1)).as("n_docs"))
-          .withColumn("batch_id", lit(batchId))))
+    store.publish(spark, LineCounts,
+      TextOps.lineSegments(seed).withColumn("fp", xxhash64(col("line")))
+        .select(col("fp"), col("doc_id")).distinct()
+        .groupBy(col("fp")).agg(count(lit(1)).as("n_docs"))
+        .withColumn("batch_id", lit(batchId)))
+    store.publish(spark, SpanCounts,
+      TextOps.spanStarts(seed)
+        .select(col("fp"), col("doc_id")).distinct()
+        .groupBy(col("fp")).agg(count(lit(1)).as("n_docs"))
+        .withColumn("batch_id", lit(batchId)))
   }
 
   /** Land the corpus as `slices` contiguous doc_id ranges, one file
@@ -155,7 +151,7 @@ object StreamingCuration {
     * counts — the [[StreamingScd2.snapshotState]] discipline).
     * Collapses O(fps·batches) delta rows to O(fps) + the last
     * batch's deltas; the watermark survives via
-    * [[graft.sources.VersionedStore.rewrite]]. */
+    * [[graft.sources.FrameStore.rewrite]]. */
   def snapshotCounts(spark: SparkSession, store: FrameStore, name: String,
                      ckpt: String): Unit = {
     val lastB = store.lastAppliedBatch(name, Some(ckpt)).getOrElse(-1L)
@@ -246,16 +242,14 @@ object StreamingCuration {
     // one distinct carrier early for every doc sharing a line/window
     // with it (batch parity break; spec-pinned below). Its own rank
     // rows drop too: its carrier status lives entirely in the base.
-    val seenIds = env.store.loadProduction(bs, FpIdx)
-      .getOrElse(sys.error("no production fp index"))
+    val seenIds = env.store.production(bs, FpIdx)
       .filter(col("batch_id") =!= batchId)
       .select(col("doc_id")).distinct()
     val segs = pins.persist(TextOps.lineSegments(docs)
       .withColumn("fp", xxhash64(col("line"))))
     val lineFirsts = segs.select(col("fp"), col("doc_id")).distinct()
       .join(seenIds, Seq("doc_id"), "left_anti")
-    val lineBase = env.store.loadProduction(bs, LineCounts)
-      .getOrElse(sys.error("no production line counts"))
+    val lineBase = env.store.production(bs, LineCounts)
       .filter(col("batch_id") =!= batchId)
       .groupBy(col("fp")).agg(sum(col("n_docs")).as("base_n"))
     // no broadcast hint on either count state: both grow with the corpus
@@ -268,8 +262,7 @@ object StreamingCuration {
     val starts = pins.persist(TextOps.spanStarts(docs))
     val spanFirsts = starts.select(col("fp"), col("doc_id")).distinct()
       .join(seenIds, Seq("doc_id"), "left_anti")
-    val spanBase = env.store.loadProduction(bs, SpanCounts)
-      .getOrElse(sys.error("no production span counts"))
+    val spanBase = env.store.production(bs, SpanCounts)
       .filter(col("batch_id") =!= batchId)
       .groupBy(col("fp")).agg(sum(col("n_docs")).as("base_n"))
     val dupStarts = starts.join(
@@ -285,8 +278,7 @@ object StreamingCuration {
     //    doc_id is legitimately re-delivered later); in-batch ties
     //    resolve to the smallest doc_id (same batch ⇒ same ingest
     //    cycle ⇒ min-id keeper, matching the batch rule)
-    val seen = env.store.loadProduction(bs, FpIdx)
-      .getOrElse(sys.error("no production fp index"))
+    val seen = env.store.production(bs, FpIdx)
       .filter(col("batch_id") =!= batchId)
       .select(col("fp")).distinct().withColumn("seen", lit(true))
     val exact = perDoc.join(seen, Seq("fp"), "left_outer")
@@ -296,16 +288,14 @@ object StreamingCuration {
     // 2. near: later side of any J ≥ 0.5 pair vs index ∪ batch; own
     //    replayed rows again dropped by provenance, so the shared
     //    dedup join skips its doc_id-keyed normalization shuffle
-    val idx = env.store.loadProduction(bs, ShingleIdx)
-      .getOrElse(sys.error("no production shingle index"))
+    val idx = env.store.production(bs, ShingleIdx)
       .filter(col("batch_id") =!= batchId)
     val nearIds = StreamingDedup.dedupShinglesAgainstIndex(batchHs, idx,
         normalizeReplay = false)
       .select(col("d2").as("doc_id")).distinct().withColumn("is_near_dup", lit(true))
     // 3. contaminated: overlap vs the fixed benchmark gram artifact
     //    (benchmark docs themselves are never screened — batch rule)
-    val bench = env.benchStore.loadProduction(bs, "bench_grams")
-      .getOrElse(sys.error("no production benchmark gram index"))
+    val bench = env.benchStore.production(bs, "bench_grams")
       .withColumn("hit", lit(1))
     val contamIds = TextOps.hashedGrams8(docs.filter(col("doc_id") % 4 =!= 3))
       .join(bench, Seq("h"), "left_outer")
@@ -323,8 +313,7 @@ object StreamingCuration {
       .join(nearIds, Seq("doc_id"), "left_outer")
       .join(contamIds, Seq("doc_id"), "left_outer")
     def learnedDecisions(qstore: FrameStore): DataFrame = {
-      val model = qstore.loadProduction(bs, graft.ml.QualityModel.ModelName)
-        .getOrElse(sys.error("no production quality model"))
+      val model = qstore.production(bs, graft.ml.QualityModel.ModelName)
       val proba = graft.ml.QualityModel.scoreClosedForm(
         marked.select(col("doc_id"), split(col("kept_text"), " ").as("toks")), model)
       TextOps.curationDecideWith(marked.join(proba, Seq("doc_id")),
@@ -357,8 +346,7 @@ object StreamingCuration {
             ()
           }
           val learnedFace = () => {
-            val model = qstore.loadProduction(bs, graft.ml.QualityModel.ModelName)
-              .getOrElse(sys.error("no production quality model"))
+            val model = qstore.production(bs, graft.ml.QualityModel.ModelName)
             val proba = graft.ml.QualityModel.scoreClosedForm(
               shared.filter(col("pre_drop").isNull)
                 .select(col("doc_id"), split(col("kept_text"), " ").as("toks")), model)

@@ -133,9 +133,8 @@ object StreamingDedup {
     val docs = Tables.documents(spark, dir)
     val split = docs.agg(expr("max(doc_id) * 9 div 10")).head().getLong(0)
     val store = new FrameStore(s"$tmp/store")
-    val v = store.register(spark, IndexName,
+    store.publish(spark, IndexName,
       TextOps.hashedShingles(spark, dir).filter(col("doc_id") < split))
-    store.promote(IndexName, v)
     StreamEnv(s"$tmp/in", s"$tmp/pairs", s"$tmp/ckpt", store, split, docs.schema)
   }
 
@@ -168,8 +167,7 @@ object StreamingDedup {
         // or expression resolution runs against the wrong registry
         val bs = batch.sparkSession
         graft.functions.GraftFunctions.register(bs)
-        val idx = env.store.loadProduction(bs, IndexName)
-          .getOrElse(sys.error("no production shingle index"))
+        val idx = env.store.production(bs, IndexName)
         // a micro-batch arrives as one small file (one input split);
         // repartition to the session's shuffle width so the per-row
         // shingle pass uses every core, and persist it so the dedup
@@ -194,8 +192,7 @@ object StreamingDedup {
     else {
       val emptyDocs = spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], env.schema)
-      dedupBatchAgainstIndex(emptyDocs,
-        env.store.loadProduction(spark, IndexName).get)
+      dedupBatchAgainstIndex(emptyDocs, env.store.production(spark, IndexName))
         .orderBy(col("d1"), col("d2"))
     }
 
@@ -218,8 +215,7 @@ object StreamingDedup {
     corpusMemo(s, dir) {
       val store = new FrameStore(
         Files.createTempDirectory("graft-shingle-index-").toString)
-      val v = store.register(s, "corpus_shingles", TextOps.hashedShingles(s, dir))
-      store.promote("corpus_shingles", v)
+      store.publish(s, "corpus_shingles", TextOps.hashedShingles(s, dir))
       store
     }
 
@@ -245,8 +241,7 @@ object StreamingDedup {
       |  TRUE AS reload_equals_session, TRUE AS one_row_per_doc
       |FROM sizes""".stripMargin) { (s, dir) =>
     val fresh = TextOps.hashedShingles(s, dir)
-    val reloaded = corpusIndexStore(s, dir).loadProduction(s, "corpus_shingles")
-      .getOrElse(sys.error("no production corpus shingle index"))
+    val reloaded = corpusIndexStore(s, dir).production(s, "corpus_shingles")
     // one-pass symmetric diff on doc_id (unique per side): array
     // equality over the sorted shingle arrays
     val diff = fresh.as("f").join(reloaded.as("r"), Seq("doc_id"), "full_outer")
@@ -277,8 +272,7 @@ object StreamingDedup {
     forgetMemo(s, dir) {
       val store = new FrameStore(
         Files.createTempDirectory("graft-forget-index-").toString)
-      val v = store.register(s, "corpus_shingles", TextOps.hashedShingles(s, dir))
-      store.promote("corpus_shingles", v)
+      store.publish(s, "corpus_shingles", TextOps.hashedShingles(s, dir))
       // the forget: docs withdrawn from training leave the postings
       // artifact; gc retires the superseded versions that still held
       // the rows, making the deletion durable on disk
@@ -305,8 +299,7 @@ object StreamingDedup {
       |  TRUE AS forget_equals_rebuild""".stripMargin) { (s, dir) =>
     graft.functions.GraftFunctions.register(s)
     val before = TextOps.hashedShingles(s, dir)
-    val after = forgottenStore(s, dir).loadProduction(s, "corpus_shingles")
-      .getOrElse(sys.error("no production forgotten index"))
+    val after = forgottenStore(s, dir).production(s, "corpus_shingles")
     // rebuild from scratch on the reduced corpus (fresh plan, not the
     // memoized cache) — the gold standard the forgotten index must equal
     val rebuilt = TextOps.hashedShingleArrays(

@@ -135,10 +135,8 @@ object StreamingDrift {
       .filter(col("promoted")).select(col("slice"))
     // ≤ 4-row promotion key — the slice prune IS the quarantine
     val cleanDocs = staged.join(broadcast(clean), Seq("slice"))
-    env.store.promote(CleanCorpusName,
-      env.store.register(s, CleanCorpusName, cleanDocs))
-    val cleanCount = env.store.loadProduction(s, CleanCorpusName)
-      .getOrElse(sys.error("no promoted clean corpus")).count()
+    env.store.publish(s, CleanCorpusName, cleanDocs)
+    val cleanCount = env.store.production(s, CleanCorpusName).count()
     DriftWorld(env, counts, report, staged, cleanCount)
   }
 
@@ -187,9 +185,7 @@ object StreamingDrift {
     // judgment); the reference is the PROMOTED artifact, not a slice
     val env = prepare(s, dir, newDocs)
     // the last release pinned its distribution BEFORE this crawl ran
-    env.store.promote(Curation.DriftBaselineName,
-      env.store.register(s, Curation.DriftBaselineName,
-        Curation.baselineCounts(base)))
+    env.store.publish(s, Curation.DriftBaselineName, Curation.baselineCounts(base))
     StreamingCuration.landOrderedSlicesOf(newDocs, "doc_id", env.inDir, slices)
     runPass(s, env)
     val counts = cutLineage(drainedCounts(s, env))
@@ -198,10 +194,8 @@ object StreamingDrift {
       .filter(col("promoted")).select(col("slice"))
     val cleanDocs = s.read.parquet(env.docsDir).drop("batch")
       .join(broadcast(clean), Seq("slice"))
-    env.store.promote(CleanCorpusName,
-      env.store.register(s, CleanCorpusName, cleanDocs))
-    val cleanCount = env.store.loadProduction(s, CleanCorpusName)
-      .getOrElse(sys.error("no promoted clean corpus")).count()
+    env.store.publish(s, CleanCorpusName, cleanDocs)
+    val cleanCount = env.store.production(s, CleanCorpusName).count()
     BaselineDriftWorld(env, bv, counts, cutLineage(report), cleanCount)
   }
 
@@ -212,8 +206,7 @@ object StreamingDrift {
       counts: DataFrame): (Int, DataFrame) = {
     val bv = env.store.productionVersion(Curation.DriftBaselineName)
       .getOrElse(sys.error("no promoted drift baseline"))
-    val base = env.store.loadProduction(s, Curation.DriftBaselineName)
-      .getOrElse(sys.error("no promoted drift baseline"))
+    val base = env.store.production(s, Curation.DriftBaselineName)
     (bv, Curation.psiVsBaseline(counts, base, bv))
   }
 
@@ -275,15 +268,12 @@ object StreamingDrift {
     val eMB = faceEnv("mbase", nmn, nmx)
     // the last release pinned its distributions BEFORE this crawl ran
     graft.WarmPhases.phase("baselines") {
-      eB.store.promote(Curation.DriftBaselineName,
-        eB.store.register(s, Curation.DriftBaselineName,
-          Curation.baselineCounts(base)))
-      eMB.store.promote(Curation.DriftBaselineName,
-        eMB.store.register(s, Curation.DriftBaselineName,
-          // rides the session-shared corpus decode (doc_id-pruned)
-          Multimodal.mediaBaselineCountsOfStats(
-            Multimodal.mediaLoudnessStatsCached(s, dir)
-              .filter(col("doc_id") < mid))))
+      eB.store.publish(s, Curation.DriftBaselineName, Curation.baselineCounts(base))
+      eMB.store.publish(s, Curation.DriftBaselineName,
+        // rides the session-shared corpus decode (doc_id-pruned)
+        Multimodal.mediaBaselineCountsOfStats(
+          Multimodal.mediaLoudnessStatsCached(s, dir)
+            .filter(col("doc_id") < mid)))
     }
     graft.WarmPhases.phase("land") {
       StreamingCuration.landOrderedSlicesOf(docs, "doc_id", eT.inDir, 3)
@@ -328,11 +318,8 @@ object StreamingDrift {
     val tStaged = s.read.parquet(eT.docsDir).drop("batch")
     val tClean = verdicts(tCounts, tReport)
       .filter(col("promoted")).select(col("slice"))
-    eT.store.promote(CleanCorpusName,
-      eT.store.register(s, CleanCorpusName,
-        tStaged.join(broadcast(tClean), Seq("slice"))))
-    val tCleanCount = eT.store.loadProduction(s, CleanCorpusName)
-      .getOrElse(sys.error("no promoted clean corpus")).count()
+    eT.store.publish(s, CleanCorpusName, tStaged.join(broadcast(tClean), Seq("slice")))
+    val tCleanCount = eT.store.production(s, CleanCorpusName).count()
     worldMemo.put(s, dir)(DriftWorld(eT, tCounts, tReport, tStaged, tCleanCount))
     },
     () => {
@@ -341,12 +328,10 @@ object StreamingDrift {
     val mReport = cutLineage(Curation.psiReport(s, mCounts, nsFeature = "rms"))
     val mClean = verdicts(mCounts, mReport, Seq("rms", "peak"), nsFeature = "rms")
       .filter(col("promoted")).select(col("slice"))
-    eM.store.promote(MediaCleanName,
-      eM.store.register(s, MediaCleanName,
-        s.read.parquet(eM.docsDir).drop("batch")
-          .join(broadcast(mClean), Seq("slice"))))
-    val mCleanCount = eM.store.loadProduction(s, MediaCleanName)
-      .getOrElse(sys.error("no promoted clean media set")).count()
+    eM.store.publish(s, MediaCleanName,
+      s.read.parquet(eM.docsDir).drop("batch")
+        .join(broadcast(mClean), Seq("slice")))
+    val mCleanCount = eM.store.production(s, MediaCleanName).count()
     mediaMemo.put(s, dir)(MediaDriftWorld(eM, mCounts, mReport, mCleanCount))
     },
     () => {
@@ -356,12 +341,10 @@ object StreamingDrift {
     val bReport = cutLineage(bReport0)
     val bClean = verdicts(bCounts, bReport)
       .filter(col("promoted")).select(col("slice"))
-    eB.store.promote(CleanCorpusName,
-      eB.store.register(s, CleanCorpusName,
-        s.read.parquet(eB.docsDir).drop("batch")
-          .join(broadcast(bClean), Seq("slice"))))
-    val bCleanCount = eB.store.loadProduction(s, CleanCorpusName)
-      .getOrElse(sys.error("no promoted clean corpus")).count()
+    eB.store.publish(s, CleanCorpusName,
+      s.read.parquet(eB.docsDir).drop("batch")
+        .join(broadcast(bClean), Seq("slice")))
+    val bCleanCount = eB.store.production(s, CleanCorpusName).count()
     baselineMemo.put(s, dir)(BaselineDriftWorld(eB, bv, bCounts, bReport, bCleanCount))
     },
     () => {
@@ -369,18 +352,15 @@ object StreamingDrift {
     val mbCounts = cutLineage(drainedCounts(s, eMB))
     val mbv = eMB.store.productionVersion(Curation.DriftBaselineName)
       .getOrElse(sys.error("no promoted media drift baseline"))
-    val mbBase = eMB.store.loadProduction(s, Curation.DriftBaselineName)
-      .getOrElse(sys.error("no promoted media drift baseline"))
+    val mbBase = eMB.store.production(s, Curation.DriftBaselineName)
     val mbReport = cutLineage(
       Curation.psiVsBaseline(mbCounts, mbBase, mbv, nsFeature = "rms"))
     val mbClean = verdicts(mbCounts, mbReport, Seq("rms", "peak"), nsFeature = "rms")
       .filter(col("promoted")).select(col("slice"))
-    eMB.store.promote(MediaCleanName,
-      eMB.store.register(s, MediaCleanName,
-        s.read.parquet(eMB.docsDir).drop("batch")
-          .join(broadcast(mbClean), Seq("slice"))))
-    val mbCleanCount = eMB.store.loadProduction(s, MediaCleanName)
-      .getOrElse(sys.error("no promoted clean media set")).count()
+    eMB.store.publish(s, MediaCleanName,
+      s.read.parquet(eMB.docsDir).drop("batch")
+        .join(broadcast(mbClean), Seq("slice")))
+    val mbCleanCount = eMB.store.production(s, MediaCleanName).count()
     mediaBaselineMemo.put(s, dir)(
       BaselineDriftWorld(eMB, mbv, mbCounts, mbReport, mbCleanCount))
     }))

@@ -47,11 +47,9 @@ object StreamingEmit {
     def emptyCarry() =
       Seq.empty[(String, Long, String)].toDF("source", "done_off", "carry_text")
         .withColumn("batch_id", lit(-1L))
-    cur.store.promote(CarryName,
-      cur.store.register(spark, CarryName, emptyCarry()))
+    cur.store.publish(spark, CarryName, emptyCarry())
     if (quality.isDefined && shadow)
-      cur.store.promote(CarryGatedName,
-        cur.store.register(spark, CarryGatedName, emptyCarry()))
+      cur.store.publish(spark, CarryGatedName, emptyCarry())
     Env(cur, cur.outDir + "-windows", dir)
   }
 
@@ -117,8 +115,7 @@ object StreamingEmit {
     // LATEST state per source (appends accumulate one row per source
     // per touching batch); this batch's own stamp filters out first
     // so a replay recovers the exact pre-batch carry
-    val carry = latestCarry(env.cur.store.loadProduction(bs, carryName)
-      .getOrElse(sys.error(s"no production $carryName"))
+    val carry = latestCarry(env.cur.store.production(bs, carryName)
       .filter(col("batch_id") =!= batchId))
     // per-source positioned stream: the carry tail sits at done_off,
     // batch docs follow at done_off + |carry| + in-batch prefix sum
@@ -192,8 +189,7 @@ object StreamingEmit {
     * and read the accumulated windows back — BOTH window faces
     * (text fingerprint + tokenized-ID hash). */
   def allWindows(spark: SparkSession, env: Env): DataFrame = {
-    val latest = latestCarry(env.cur.store.loadProduction(spark, CarryName)
-      .getOrElse(sys.error("no production emit carry")))
+    val latest = latestCarry(env.cur.store.production(spark, CarryName))
       .filter(col("carry_text") =!= "")
       .select(col("source"), col("done_off").as("start_off"),
         col("carry_text").as("red"))
@@ -212,8 +208,7 @@ object StreamingEmit {
     * source's final partial from the gated carry, union the
     * continuously-completed gated windows. */
   def allGatedWindows(spark: SparkSession, env: Env): DataFrame = {
-    val latest = latestCarry(env.cur.store.loadProduction(spark, CarryGatedName)
-      .getOrElse(sys.error("no production gated emit carry")))
+    val latest = latestCarry(env.cur.store.production(spark, CarryGatedName))
       .filter(col("carry_text") =!= "")
       .select(col("source"), col("done_off").as("start_off"),
         col("carry_text").as("red"))
@@ -287,8 +282,7 @@ object StreamingEmit {
           // learned certificate's batch twin must score with the same
           // model the stream used, even if a promotion lands between
           // the (possibly much earlier, memoized) run and the cert
-          qmodel = cutLineage(qstore.loadProduction(s, graft.ml.QualityModel.ModelName)
-            .getOrElse(sys.error("no production quality model"))),
+          qmodel = cutLineage(qstore.production(s, graft.ml.QualityModel.ModelName)),
           sameModelVersion = vBefore.isDefined && vBefore == vAfter)
       }
     }

@@ -47,10 +47,10 @@ object StreamingEvalBuild {
       val store = new FrameStore(s"$scratch/store")
       // the persisted index: distinct train-side grams, promoted once
       graft.WarmPhases.phase("index") {
-        store.promote(GramsName, store.register(s, GramsName,
+        store.publish(s, GramsName,
           TextOps.hashedGrams8(Tables.fanOut(docs))
             .withColumn("bucket", TextOps.splitBucket)
-            .filter(col("bucket") < 90).select(col("h")).distinct()))
+            .filter(col("bucket") < 90).select(col("h")).distinct())
       }
       val inDir = s"$scratch/in"
       val outDir = s"$scratch/manifests"
@@ -63,8 +63,7 @@ object StreamingEvalBuild {
           val b = Tables.normalizeDocuments(batch)
           val cand = b.withColumn("bucket", TextOps.splitBucket)
             .filter(col("bucket") >= 90)
-          val seen = store.loadProduction(s, GramsName)
-            .getOrElse(sys.error("no production train-gram index"))
+          val seen = store.production(s, GramsName)
           TextOps.evalManifestOf(cand, TextOps.hashedGrams8(cand), seen)
             .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
         }

@@ -39,13 +39,12 @@ object StreamingKmeansUpdate {
     // offline exactly as the oracle derives them (vec_id < K)
     val cents = Kmeans.seeds(Kmeans.vecs(emb))
     val store = new FrameStore(s"$scratch/store")
-    store.promote(PartialsName,
-      store.register(spark, PartialsName,
-        spark.range(0).select(col("id").cast("int").as("k"),
-          col("id").cast("int").as("d"),
-          col("id").cast("decimal(38,6)").as("sd"),
-          col("id").as("cnt"),
-          col("id").as("batch_id"))))
+    store.publish(spark, PartialsName,
+      spark.range(0).select(col("id").cast("int").as("k"),
+        col("id").cast("int").as("d"),
+        col("id").cast("decimal(38,6)").as("sd"),
+        col("id").as("cnt"),
+        col("id").as("batch_id")))
     Env(s"$scratch/in", s"$scratch/ckpt", store, cents, emb.schema)
   }
 
@@ -72,8 +71,7 @@ object StreamingKmeansUpdate {
     * report `(k, n_vecs, update_sum)` — every seed cluster reported,
     * empty ones as (0, 0.0). */
   def updateReport(spark: SparkSession, env: Env): DataFrame = {
-    val merged = env.store.loadProduction(spark, PartialsName)
-      .getOrElse(sys.error("no partials"))
+    val merged = env.store.production(spark, PartialsName)
       .groupBy(col("k"), col("d"))
       .agg(sum(col("sd")).as("sd"), sum(col("cnt")).as("cnt"))
     val perK = merged.groupBy(col("k"))

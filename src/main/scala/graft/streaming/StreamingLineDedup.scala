@@ -42,11 +42,10 @@ object StreamingLineDedup {
     val scratch = Scratch.dir("graft-linededup-").toString
     val docs = Tables.documents(spark, dir)
     val store = new FrameStore(s"$scratch/store")
-    store.promote(CountsName,
-      store.register(spark, CountsName,
-        docs.filter(lit(false)).select(xxhash64(col("text")).as("fp"))
-          .withColumn("n_docs", lit(0L))
-          .withColumn("batch_id", lit(-1L))))
+    store.publish(spark, CountsName,
+      docs.filter(lit(false)).select(xxhash64(col("text")).as("fp"))
+        .withColumn("n_docs", lit(0L))
+        .withColumn("batch_id", lit(-1L)))
     Env(s"$scratch/in", s"$scratch/reports", s"$scratch/ckpt", store, docs.schema)
   }
 
@@ -54,8 +53,7 @@ object StreamingLineDedup {
     val bs = batch.sparkSession
     val segs = pins.persist(TextOps.lineSegments(batch).withColumn("fp", xxhash64(col("line"))))
     val firsts = segs.select(col("fp"), col("doc_id")).distinct()
-    val base = env.store.loadProduction(bs, CountsName)
-      .getOrElse(sys.error("no production line counts"))
+    val base = env.store.production(bs, CountsName)
       .filter(col("batch_id") =!= batchId)
       .groupBy(col("fp")).agg(sum(col("n_docs")).as("base_n"))
     val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))

@@ -52,9 +52,8 @@ object StreamingMedia {
     val scratch = Scratch.dir("graft-mediadedup-").toString
     val docs = Tables.documents(spark, dir)
     val store = new FrameStore(s"$scratch/store")
-    store.promote(BandIdx,
-      store.register(spark, BandIdx,
-        hashBands(docs.filter(lit(false))).withColumn("batch_id", lit(-1L))))
+    store.publish(spark, BandIdx,
+      hashBands(docs.filter(lit(false))).withColumn("batch_id", lit(-1L)))
     Env(s"$scratch/in", s"$scratch/pairs", s"$scratch/ckpt", store, docs.schema,
       hashBands)
   }
@@ -66,8 +65,7 @@ object StreamingMedia {
     // shuffle width (the StreamingCuration.processBatch discipline)
     val bands = pins.persist(env.hashBands(
       batch.repartition(bs.sessionState.conf.numShufflePartitions)))
-    val seen = env.store.loadProduction(bs, BandIdx)
-      .getOrElse(sys.error("no production media band index"))
+    val seen = env.store.production(bs, BandIdx)
       .filter(col("batch_id") =!= batchId)
     // earlier-seen side × this batch, BOTH orientations: ingest order
     // does not imply id order here (a planted twin's 1e6-offset id
@@ -181,9 +179,7 @@ object StreamingMedia {
       StreamingCuration.landOrderedSlices(s, env.inDir, dir, 2)
       runPass(s, env)
       env.store.compact(s, BandIdx)
-      env.store.promote(PairsName,
-        env.store.register(s, PairsName,
-          s.read.parquet(env.outDir).drop("batch")))
+      env.store.publish(s, PairsName, s.read.parquet(env.outDir).drop("batch"))
       forgetMedia(s, env, PairsName, takedown)
       env
     }
@@ -212,10 +208,8 @@ object StreamingMedia {
        |  TRUE AS postings_equal_rebuild,
        |  TRUE AS pairs_equal_rebuild""".stripMargin) { (s, dir) =>
     val env = forgottenImageEnv(s, dir)
-    val postingsAfter = env.store.loadProduction(s, BandIdx)
-      .getOrElse(sys.error("no production media band index"))
-    val pairsAfter = env.store.loadProduction(s, PairsName)
-      .getOrElse(sys.error("no production media pair list"))
+    val postingsAfter = env.store.production(s, BandIdx)
+    val pairsAfter = env.store.production(s, PairsName)
     val rebuiltBands = Multimodal.imageBands(
       Multimodal.imageHashesOf(s, dir).filter(!takedown(col("doc_id"))))
     val rebuiltPairs = Multimodal.hammingPairs(Multimodal.bandCandidates(rebuiltBands))

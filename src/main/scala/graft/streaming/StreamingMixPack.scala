@@ -54,11 +54,10 @@ object StreamingMixPack {
     val scratch = Scratch.dir("graft-mixpack-").toString
     val docs = Tables.documents(spark, dir)
     val store = new FrameStore(s"$scratch/store")
-    store.promote(OffsetsName,
-      store.register(spark, OffsetsName,
-        docs.filter(lit(false)).select(col("source"))
-          .withColumn("batch_tokens", lit(0L))
-          .withColumn("batch_id", lit(-1L))))
+    store.publish(spark, OffsetsName,
+      docs.filter(lit(false)).select(col("source"))
+        .withColumn("batch_tokens", lit(0L))
+        .withColumn("batch_id", lit(-1L)))
     Env(s"$scratch/in", s"$scratch/entries", s"$scratch/ckpt", store, docs.schema)
   }
 
@@ -76,8 +75,7 @@ object StreamingMixPack {
           size(split(col("text"), " ")).cast("long").as("n_tokens")))
       .select(col("source"), col("doc_id"), col("rep").cast("long").as("rep"),
         col("n_tokens")))
-    val base = env.store.loadProduction(bs, OffsetsName)
-      .getOrElse(sys.error("no production mix offsets"))
+    val base = env.store.production(bs, OffsetsName)
       .filter(col("batch_id") =!= batchId)
       .groupBy(col("source")).agg(sum(col("batch_tokens")).as("base_off"))
     graft.queries.TextOps.sourcePrefixSum(mixed, col("n_tokens"),

@@ -64,10 +64,9 @@ object StreamingMmEmit {
       docs.filter(lit(false)).select((col("doc_id") % 4).as("shard"))
         .withColumn("batch_tokens", lit(0L))
         .withColumn("batch_id", lit(-1L))
-    store.promote(OffsetsName, store.register(spark, OffsetsName, emptyOffsets()))
+    store.publish(spark, OffsetsName, emptyOffsets())
     if (quality.isDefined)
-      store.promote(GatedOffsetsName,
-        store.register(spark, GatedOffsetsName, emptyOffsets()))
+      store.publish(spark, GatedOffsetsName, emptyOffsets())
     Env(s"$scratch/in", s"$scratch/entries", s"$scratch/ckpt", store, dir,
       docs.schema, quality)
   }
@@ -91,8 +90,7 @@ object StreamingMmEmit {
     val lens = pins.cutLineage(Multimodal.mmCapLensOf(bs, env.dir, aligned))
     placeFace(bs, env, batchId, aligned, lens, OffsetsName, env.outDir)
     env.quality.foreach { qstore =>
-      val model = qstore.loadProduction(bs, graft.ml.QualityModel.ModelName)
-        .getOrElse(sys.error("no production quality model"))
+      val model = qstore.production(bs, graft.ml.QualityModel.ModelName)
       val keep = graft.ml.QualityModel.scoreClosedForm(
         aligned.select(col("doc_id"), split(col("text"), " ").as("toks")), model)
         .filter(col("proba") >= 0.5).select(col("doc_id"))
@@ -106,8 +104,7 @@ object StreamingMmEmit {
   private def placeFace(bs: SparkSession, env: Env, batchId: Long,
       docs: DataFrame, lens: DataFrame, offsetsName: String, outDir: String): Unit = pinned { pins =>
     val placedRaw = pins.persist(Multimodal.mmPositionWithLens(docs, lens))
-    val base = env.store.loadProduction(bs, offsetsName)
-      .getOrElse(sys.error(s"no production $offsetsName"))
+    val base = env.store.production(bs, offsetsName)
       .filter(col("batch_id") =!= batchId)
       .groupBy(col("shard")).agg(sum(col("batch_tokens")).as("base_off"))
     placedRaw
@@ -189,8 +186,7 @@ object StreamingMmEmit {
     val qmodel = quality.map { qs =>
       require(vBefore.flatten == qs.productionVersion(graft.ml.QualityModel.ModelName),
         "quality model promoted during the memoized mm emission pass")
-      qs.loadProduction(spark, graft.ml.QualityModel.ModelName)
-        .map(cutLineage).getOrElse(sys.error("no production quality model"))
+      cutLineage(qs.production(spark, graft.ml.QualityModel.ModelName))
     }
     MmEmitStreamWorld(spark.read.parquet(env.outDir).drop("batch"), env,
       gated = quality.map(_ => spark.read.parquet(env.gatedOutDir).drop("batch")),
@@ -272,16 +268,13 @@ object StreamingMmEmit {
       docs.filter(lit(false)).select((col("doc_id") % 4).as("shard"))
         .withColumn("batch_tokens", lit(0L))
         .withColumn("batch_id", lit(-1L))
-    store.promote(TrimodalOffsetsName,
-      store.register(spark, TrimodalOffsetsName, emptyOffsets()))
+    store.publish(spark, TrimodalOffsetsName, emptyOffsets())
     // the consolidated pass also places the bimodal projection face
     // against its own offset state (same store, distinct names)
-    store.promote(OffsetsName, store.register(spark, OffsetsName, emptyOffsets()))
+    store.publish(spark, OffsetsName, emptyOffsets())
     if (quality.isDefined) {
-      store.promote(TrimodalGatedOffsetsName,
-        store.register(spark, TrimodalGatedOffsetsName, emptyOffsets()))
-      store.promote(GatedOffsetsName,
-        store.register(spark, GatedOffsetsName, emptyOffsets()))
+      store.publish(spark, TrimodalGatedOffsetsName, emptyOffsets())
+      store.publish(spark, GatedOffsetsName, emptyOffsets())
     }
     Env(s"$scratch/in", s"$scratch/entries", s"$scratch/ckpt", store, dir,
       docs.schema, quality)
@@ -352,8 +345,7 @@ object StreamingMmEmit {
     // faces place
     lazy val keepSets: (DataFrame, DataFrame) = {
       val qstore = env.quality.get
-      val model = qstore.loadProduction(bs, graft.ml.QualityModel.ModelName)
-        .getOrElse(sys.error("no production quality model"))
+      val model = qstore.production(bs, graft.ml.QualityModel.ModelName)
       // ONE per-doc transcript decision drives both gated faces (the
       // caption is the shared half of every record family)
       val tKeep = pins.persist(graft.ml.QualityModel.scoreClosedForm(
@@ -396,8 +388,7 @@ object StreamingMmEmit {
   private def placeTrimodalFace(bs: SparkSession, env: Env, batchId: Long,
       recs: DataFrame, lens: DataFrame, offsetsName: String, outDir: String): Unit = pinned { pins =>
     val placedRaw = pins.persist(Multimodal.trimodalPositionWithLens(recs, lens))
-    val base = env.store.loadProduction(bs, offsetsName)
-      .getOrElse(sys.error(s"no production $offsetsName"))
+    val base = env.store.production(bs, offsetsName)
       .filter(col("batch_id") =!= batchId)
       .groupBy(col("shard")).agg(sum(col("batch_tokens")).as("base_off"))
     placedRaw
@@ -471,10 +462,8 @@ object StreamingMmEmit {
         (df0, g0)
       }
       MmEmitStreamWorld(df, env, gated = Some(g),
-        qmodel = Some(qstore.loadProduction(spark, graft.ml.QualityModel.ModelName)
-          .map(cutLineage).getOrElse(sys.error("no production quality model"))),
-        mqmodel = Some(qstore.loadProduction(spark, graft.ml.MediaQualityModel.ModelName)
-          .map(cutLineage).getOrElse(sys.error("no production media quality model"))))
+        qmodel = Some(cutLineage(qstore.production(spark, graft.ml.QualityModel.ModelName))),
+        mqmodel = Some(cutLineage(qstore.production(spark, graft.ml.MediaQualityModel.ModelName))))
     }
 
   def streamedTrimodalEntries(spark: SparkSession, dir: String): DataFrame =
@@ -889,7 +878,7 @@ object StreamingMmEmit {
     *     batches are preserved byte-for-byte (at 100 TB a takedown
     *     recuts ONE shard, never the release — the CowMerge shape);
     *  3. the offset-carry state drops the forgotten mass via the
-    *     watermark-preserving [[graft.sources.VersionedStore.rewrite]],
+    *     watermark-preserving [[graft.sources.FrameStore.rewrite]],
     *     so the CONTINUING stream places post-forget records exactly
     *     at the recut prefix's end.
     *
@@ -907,10 +896,9 @@ object StreamingMmEmit {
     import graft.multimodal.Multimodal.{TakedownMod, TakedownResidue}
     def forgotten(id: org.apache.spark.sql.Column) =
       id % TakedownMod === TakedownResidue
-    env.store.promote(TrimodalTakedownsName,
-      env.store.register(s, TrimodalTakedownsName,
-        Tables.documents(s, env.dir).filter(forgotten(col("doc_id")))
-          .select(col("doc_id"))))
+    env.store.publish(s, TrimodalTakedownsName,
+      Tables.documents(s, env.dir).filter(forgotten(col("doc_id")))
+        .select(col("doc_id")))
     // partition discovery types `batch` as int — pin it long so the
     // collected ids and the offset-state union stay type-stable
     val landed = s.read.parquet(env.outDir)
@@ -1039,10 +1027,8 @@ object StreamingMmEmit {
       val pre = cutLineage(s.read.parquet(env.outDir))
       // the phase-1 offset states, pinned BEFORE the takedown rewrite —
       // the carry the series world resumes from (4-row frames per face)
-      val preOff = env.store.loadProduction(s, TrimodalOffsetsName)
-        .map(cutLineage).getOrElse(sys.error("no trimodal offsets at phase-1 drain"))
-      val preMmOff = env.store.loadProduction(s, OffsetsName)
-        .map(cutLineage).getOrElse(sys.error("no bimodal offsets at phase-1 drain"))
+      val preOff = cutLineage(env.store.production(s, TrimodalOffsetsName))
+      val preMmOff = cutLineage(env.store.production(s, OffsetsName))
       graft.WarmPhases.phase("takedown") {
         applyTrimodalStreamForget(s, env) // the takedown lands mid-stream
       }
@@ -1223,14 +1209,11 @@ object StreamingMmEmit {
       fw.preEntries.withColumn("batch", col("batch") + SeriesInstallShift)
         .repartition(col("batch"))
         .write.partitionBy("batch").parquet(env.outDir)
-      env.store.promote(TrimodalOffsetsName,
-        env.store.register(s, TrimodalOffsetsName, shifted(fw.preOffsets)))
-      env.store.promote(OffsetsName,
-        env.store.register(s, OffsetsName, shifted(fw.preMmOffsets)))
+      env.store.publish(s, TrimodalOffsetsName, shifted(fw.preOffsets))
+      env.store.publish(s, OffsetsName, shifted(fw.preMmOffsets))
       val v1w = cutLineage(Multimodal.trimodalEmitWindowsOf(s, dir,
         s.read.parquet(env.outDir).drop("batch")))
-      val v1Ver = env.store.register(s, SeriesWindowsName, v1w)
-      env.store.promote(SeriesWindowsName, v1Ver)
+      val v1Ver = env.store.publish(s, SeriesWindowsName, v1w)
       StreamingCuration.landOrderedSlicesOf(
         docs.filter(col("doc_id") >= mid), "doc_id", env.inDir, 2, tag = "b")
       runTrimodalPass(s, env) // fresh query over the continuation + carry
@@ -1238,8 +1221,7 @@ object StreamingMmEmit {
       env.store.gc(TrimodalOffsetsName, keep = 1)
       val v2w = cutLineage(Multimodal.trimodalEmitWindowsOf(s, dir,
         s.read.parquet(env.outDir).drop("batch")))
-      val v2Ver = env.store.register(s, SeriesWindowsName, v2w)
-      env.store.promote(SeriesWindowsName, v2Ver)
+      val v2Ver = env.store.publish(s, SeriesWindowsName, v2w)
       // a training run pinned to v1 still resolves it intact AFTER
       // the v2 flip (version immutability on the release artifact)
       val v1Readable =

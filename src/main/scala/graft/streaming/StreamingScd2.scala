@@ -44,12 +44,11 @@ object StreamingScd2 {
     val scratch = Scratch.dir("graft-scd2-").toString
     val ev = Tables.events(spark, dir)
     val store = new FrameStore(s"$scratch/store")
-    store.promote(OpenName,
-      store.register(spark, OpenName,
-        ev.filter(lit(false)).select(col("user_id"), col("event_type"),
-          col("ts").as("valid_from"), col("event_id").as("from_eid"))
-          .withColumn("version", lit(0L))
-          .withColumn("batch_id", lit(-1L))))
+    store.publish(spark, OpenName,
+      ev.filter(lit(false)).select(col("user_id"), col("event_type"),
+        col("ts").as("valid_from"), col("event_id").as("from_eid"))
+        .withColumn("version", lit(0L))
+        .withColumn("batch_id", lit(-1L)))
     Env(s"$scratch/in", s"$scratch/closed", s"$scratch/ckpt", store, ev.schema)
   }
 
@@ -79,8 +78,7 @@ object StreamingScd2 {
 
   def processBatch(batch: DataFrame, batchId: Long, env: Env): Unit = pinned { pins =>
     val bs = batch.sparkSession
-    val state = env.store.loadProduction(bs, OpenName)
-      .getOrElse(sys.error("no scd2 open state"))
+    val state = env.store.production(bs, OpenName)
       .filter(col("batch_id") =!= batchId)
     val anchors = openRows(state)
       .select(col("user_id"), col("event_type"), col("valid_from").as("ts"),
@@ -118,8 +116,7 @@ object StreamingScd2 {
   /** Immutable closed history + the final open rows = the full
     * dimension, identical to the batch build. */
   def dimension(spark: SparkSession, env: Env): DataFrame = {
-    val open = openRows(env.store.loadProduction(spark, OpenName)
-        .getOrElse(sys.error("no scd2 open state")))
+    val open = openRows(env.store.production(spark, OpenName))
       .select(col("user_id"), col("version"), col("event_type"),
         col("valid_from"),
         lit(null).cast("timestamp").as("valid_to"), lit(true).as("is_current"))

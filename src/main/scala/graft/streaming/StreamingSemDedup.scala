@@ -41,11 +41,10 @@ object StreamingSemDedup {
     val scratch = Scratch.dir("graft-semdedup-").toString
     val emb = Tables.embeddings(spark, dir)
     val store = new FrameStore(s"$scratch/store")
-    store.promote(MembersName,
-      store.register(spark, MembersName,
-        Kmeans.vecs(emb).filter(lit(false))
-          .select(col("vec_id"), col("v"), lit(0L).as("cluster"))
-          .withColumn("batch_id", lit(-1L))))
+    store.publish(spark, MembersName,
+      Kmeans.vecs(emb).filter(lit(false))
+        .select(col("vec_id"), col("v"), lit(0L).as("cluster"))
+        .withColumn("batch_id", lit(-1L)))
     Env(s"$scratch/in", s"$scratch/verdicts", s"$scratch/ckpt", store, dir, emb.schema)
   }
 
@@ -56,8 +55,7 @@ object StreamingSemDedup {
     // production pointer staying on one version)
     val cents = Kmeans.trained(bs, env.dir)
     val arrived = pins.persist(Kmeans.assign(Kmeans.vecs(batch), cents))
-    val base = env.store.loadProduction(bs, MembersName)
-      .getOrElse(sys.error("no production member state"))
+    val base = env.store.production(bs, MembersName)
       .filter(col("batch_id") =!= batchId)
       .select(col("vec_id"), col("v"), col("cluster"))
     val earlier = base.union(arrived.select(col("vec_id"), col("v"), col("cluster")))

@@ -36,11 +36,10 @@ object StreamingSpanDedup {
     val scratch = Scratch.dir("graft-spandedup-").toString
     val docs = Tables.documents(spark, dir)
     val store = new FrameStore(s"$scratch/store")
-    store.promote(CountsName,
-      store.register(spark, CountsName,
-        docs.filter(lit(false)).select(xxhash64(col("text")).as("fp"))
-          .withColumn("n_docs", lit(0L))
-          .withColumn("batch_id", lit(-1L))))
+    store.publish(spark, CountsName,
+      docs.filter(lit(false)).select(xxhash64(col("text")).as("fp"))
+        .withColumn("n_docs", lit(0L))
+        .withColumn("batch_id", lit(-1L)))
     Env(s"$scratch/in", s"$scratch/reports", s"$scratch/ckpt", store, docs.schema)
   }
 
@@ -48,8 +47,7 @@ object StreamingSpanDedup {
     val bs = batch.sparkSession
     val starts = pins.persist(TextOps.spanStarts(batch))
     val firsts = starts.select(col("fp"), col("doc_id")).distinct()
-    val base = env.store.loadProduction(bs, CountsName)
-      .getOrElse(sys.error("no production span counts"))
+    val base = env.store.production(bs, CountsName)
       .filter(col("batch_id") =!= batchId)
       .groupBy(col("fp")).agg(sum(col("n_docs")).as("base_n"))
     val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))

@@ -99,6 +99,30 @@ class MlSpec extends SparkSpec {
     assert(reg.signature("fraud_detector", 1).isEmpty)
   }
 
+  test("M7: two concurrent registers on one name get distinct, complete versions") {
+    val reg = new ModelRegistry(Files.createTempDirectory("graft-registry-").toString)
+    val sig = data.drop("label").schema
+    val models = Seq(trained.model, trained2.model)
+    val forms = models.map(FraudModel.closedForm)
+    assert(forms.distinct.size == 2)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val regs = models.map { m =>
+        pool.submit(() => { go.await(); reg.register(m, "fraud_detector", Some(sig)) })
+      }
+      go.countDown()
+      assert(regs.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS)).sorted == Seq(1, 2))
+    } finally pool.shutdownNow()
+    assert(reg.versions("fraud_detector") == Seq(1, 2))
+    val loaded = Seq(1, 2).map(v =>
+      FraudModel.closedForm(PipelineModel.load(reg.versionDir("fraud_detector", v))))
+    for ((f, v) <- loaded.zip(Seq(1, 2)))
+      assert(forms.count(_ == f) == 1, s"v$v is not exactly one of the two models")
+    assert(loaded.distinct.size == 2, "both versions hold the same model")
+    for (v <- Seq(1, 2)) assert(reg.signature("fraud_detector", v).contains(sig), s"v$v lost its signature")
+  }
+
   test("ml_train_eval query row: sizes, AUC bounds, sketch-vs-exact agreement") {
     val row = SparkEntry.queries("ml_train_eval")(spark, sf).head
     assert(row.getAs[Long]("n_train") + row.getAs[Long]("n_test") == 5000L)

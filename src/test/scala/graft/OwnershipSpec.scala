@@ -6,8 +6,10 @@ import java.nio.file.{Files, Path, Paths}
   * (`Drain`), the batch-action pool (`StreamPools`), the memo key
   * format (`SessionCaches`), the lineage cut and per-batch pin
   * release (`SessionCaches`), the session builder and every session
-  * conf write (`GraftSession`) and the runnable mains (the driver
-  * contract, the daily jobs and the one dev `Probe`). A copy of one
+  * conf write (`GraftSession`), the versioned-artifact lifecycle (the
+  * atomic `PRODUCTION` pointer and the `BATCH` replay marker,
+  * `VersionedStore`) and the runnable mains (the driver contract, the
+  * daily jobs and the one dev `Probe`). A copy of one
   * outside its owners fails here, so the mechanisms and the one-off
   * probe mains do not fork again. */
 class OwnershipSpec extends org.scalatest.funsuite.AnyFunSuite {
@@ -43,6 +45,9 @@ class OwnershipSpec extends org.scalatest.funsuite.AnyFunSuite {
       "conf.unset(" -> Set("GraftSession.scala"),
       "localCheckpoint(" -> Set("SessionCaches.scala"),
       "unpersistLocalCheckpoint(" -> Set("SessionCaches.scala"),
+      "ATOMIC_MOVE" -> Set("VersionedStore.scala"),
+      "resolve(\"PRODUCTION\")" -> Set("VersionedStore.scala"),
+      "resolve(\"BATCH\")" -> Set("VersionedStore.scala"),
       "def main(" -> Set("Verify.scala", "Bench.scala", "Jobs.scala", "Probe.scala")))
     test(s"`$needle` appears only in ${owners.mkString(", ")}") {
       val copies = copiesOf(needle, owners)
