@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.Q
 import graft.queries.FraudAnalytics
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 import graft.streaming.{JdbcMetricsSink, ScoringStream}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,9 +20,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    row set. Each tick is idempotent, so any external scheduler
   *    (Airflow, cron, k8s) can fire it at will — the DAG contract.
   *  - the engine-native SCHEDULE: Structured Streaming owns the
-  *    cadence with `Trigger.ProcessingTime`, continuously maintaining
-  *    the same store the tick writes ([[scheduleDailyMetrics]]) —
-  *    the upgrade path that removes the external scheduler entirely.
+  *    cadence with `Trigger.ProcessingTime`, running the tick's own
+  *    rollup incrementally into the same store through the same MERGE
+  *    ([[scheduleDailyMetrics]]) — the upgrade path that removes the
+  *    external scheduler entirely.
   *
   * [[DailyMetricsJob]] is the runnable entry point
   * (`runMain graft.jobs.DailyMetricsJob <sfDir> <jdbcUrl> [once|<interval>]`).
@@ -31,8 +32,9 @@ object Jobs {
 
   /** One cron firing of compute-daily-metrics: full deterministic
     * recompute of the rollup (the reference recomputes today and
-    * upserts; recompute-then-merge keyed by day subsumes it) pushed
-    * through the same MERGE body the streaming sink uses; the merge
+    * upserts; recompute-then-merge keyed by day subsumes it) of the
+    * [[FraudAnalytics.dailyRollup]] the schedule runs incrementally,
+    * pushed through the same MERGE body the schedule uses; the merge
     * is keyed by day, so the staged rollup is not sorted. Returns the
     * store contents after the merge, by day. */
   def dailyMetricsTick(spark: SparkSession, dir: String, url: String): DataFrame = {
@@ -70,27 +72,24 @@ object Jobs {
       .orderBy(col("check"))
   }
 
-  /** Engine-native scheduling of the daily-metrics job: the streaming
-    * twin of [[dailyMetricsTick]] on a processing-time cadence (the
-    * DAG's `schedule_interval` becomes the trigger interval; the
+  /** Engine-native scheduling of the daily-metrics job: the tick's
+    * [[FraudAnalytics.dailyRollup]] run incrementally by
+    * [[ScoringStream.dailyMetricsWriter]] on a processing-time cadence
+    * (the DAG's `schedule_interval` becomes the trigger interval; the
     * hourly production value is `"1 hour"`). Runs until stopped;
-    * every interval the updated days merge into the same store.
+    * every interval the days that new events touched merge into the
+    * same store the tick writes, with the same values.
     *
     * `checkpoint` must be a DURABLE location in production — restart
     * recovery (resume from the last committed source offsets instead
     * of reprocessing history) lives entirely in that directory. The
-    * temp-dir default is for tests/dev only. */
+    * scratch-dir default is for tests/dev only. */
   def scheduleDailyMetrics(spark: SparkSession, dir: String, url: String,
                            every: String = "1 hour",
                            checkpoint: Option[String] = None): StreamingQuery =
-    ScoringStream.dailyMetricsAgg(spark, dir).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint.getOrElse(
-        java.nio.file.Files.createTempDirectory("graft-sched-ckpt-").toString))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        JdbcMetricsSink.upsertDailyMetrics(batch, url)
-        ()
-      }
+    ScoringStream.dailyMetricsWriter(spark, dir)(JdbcMetricsSink.upsertDailyMetrics(_, url))
+      .option("checkpointLocation",
+        checkpoint.getOrElse(Scratch.dir("graft-sched-ckpt-").toString))
       .trigger(Trigger.ProcessingTime(every))
       .start()
 

@@ -166,7 +166,7 @@ object QualityModel {
   def productionStore(s: SparkSession, dir: String): graft.sources.FrameStore =
     storeMemo(s, dir) {
       val store = new graft.sources.FrameStore(
-        java.nio.file.Files.createTempDirectory("graft-quality-lr-").toString)
+        graft.sources.Scratch.dir("graft-quality-lr-").toString)
       store.publish(s, ModelName, closedForm(s, dir))
       // the MEDIA-quality model ships in the same registry: the
       // trimodal stream re-resolves both gates per micro-batch from

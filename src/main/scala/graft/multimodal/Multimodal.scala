@@ -1245,7 +1245,7 @@ object Multimodal {
     jointForgetMemo(s, dir) {
       val pairs = jointPairsUnion(s, dir)
       val store = new graft.sources.FrameStore(
-        java.nio.file.Files.createTempDirectory("graft-forget-joint-").toString)
+        graft.sources.Scratch.dir("graft-forget-joint-").toString)
       // twin ids are parent+TwinOffset with TwinOffset ≡ 0 (mod
       // TakedownMod) — asserted at object construction beside the
       // constants — so the residue filter also withdraws a forgotten
@@ -2641,7 +2641,7 @@ object Multimodal {
     trimodalForgetMemo(s, dir) {
       val gated = trimodalGated(s, dir)
       val store = new graft.sources.FrameStore(
-        java.nio.file.Files.createTempDirectory("graft-forget-trimodal-").toString)
+        graft.sources.Scratch.dir("graft-forget-trimodal-").toString)
       val before = cutLineage(trimodalEmitWindows(s, dir))
       store.publish(s, "trimodal_windows", before)
       // the gates are per-doc facts, so filtering the gated record
@@ -3569,7 +3569,7 @@ object Multimodal {
   private def forgottenMmWorld(s: SparkSession, dir: String): MmForgetWorld =
     mmForgetMemo(s, dir) {
       val store = new graft.sources.FrameStore(
-        java.nio.file.Files.createTempDirectory("graft-forget-mm-emit-").toString)
+        graft.sources.Scratch.dir("graft-forget-mm-emit-").toString)
       // the full and reduced emissions are deterministic functions of
       // the corpus — materialize each ONCE (lineage-cut) and share
       // between the store lifecycle and the certificate (the cert's

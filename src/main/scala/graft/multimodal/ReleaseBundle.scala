@@ -88,7 +88,7 @@ object ReleaseBundle {
       winBefore: DataFrame, recordsBefore: DataFrame,
       winAfter: DataFrame, recordsAfter: DataFrame): BundleWorld = {
       val store = new FrameStore(
-        java.nio.file.Files.createTempDirectory("graft-release-bundle-").toString)
+        graft.sources.Scratch.dir("graft-release-bundle-").toString)
       // ---- publish: the five components + one manifest flip ----
       val before: Seq[(String, Int, Long)] = register(s, store, Map(
         "windows" -> winBefore,

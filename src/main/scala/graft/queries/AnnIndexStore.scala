@@ -1,9 +1,7 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.Q
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -154,7 +152,7 @@ object AnnIndexStore {
 
   private[graft] def forDir(spark: SparkSession, dir: String): AnnIndexStore =
     memo(spark, dir) {
-      val root = Files.createTempDirectory("graft_ann_index_").toString
+      val root = Scratch.dir("graft_ann_index_").toString
       val store = new AnnIndexStore(root)
       val v = store.register(spark, PqAnn.cachedIndex(spark, dir), IndexName)
       store.promote(IndexName, v)
@@ -216,7 +214,7 @@ object AnnIndexStore {
   /** Fresh store seeded with the promoted base index. */
   private[graft] def seededBaseStore(spark: SparkSession, dir: String,
                                      prefix: String): AnnIndexStore = {
-    val store = new AnnIndexStore(Files.createTempDirectory(prefix).toString)
+    val store = new AnnIndexStore(Scratch.dir(prefix).toString)
     val v = store.register(spark, baseIndex(spark, dir), BaseIndexName)
     store.promote(BaseIndexName, v)
     store
@@ -287,7 +285,7 @@ object AnnIndexStore {
   private def forgottenStore(spark: SparkSession, dir: String): AnnIndexStore =
     forgetMemo(spark, dir) {
       val store = new AnnIndexStore(
-        Files.createTempDirectory("graft_ann_forget_").toString)
+        Scratch.dir("graft_ann_forget_").toString)
       store.promote(IndexName,
         store.register(spark, PqAnn.cachedIndex(spark, dir), IndexName))
       store.deleteWhere(spark, IndexName, col("vec_id") % 17 === 3)

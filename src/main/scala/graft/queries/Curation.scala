@@ -391,7 +391,7 @@ object Curation {
   private def forgottenPackWorld(s: SparkSession, dir: String): PackForgetWorld =
     packForgetMemo(s, dir) {
       val store = new graft.sources.FrameStore(
-        java.nio.file.Files.createTempDirectory("graft-forget-pack-").toString)
+        graft.sources.Scratch.dir("graft-forget-pack-").toString)
       // full and reduced manifests materialized ONCE each (lineage
       // cut) and shared between the store lifecycle and the cert —
       // the cert's substantive content is untouched-shard

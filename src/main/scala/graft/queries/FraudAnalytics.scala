@@ -214,7 +214,10 @@ object FraudAnalytics {
 
   /** The rows of [[dailyMetrics]] in no order — what a MERGE keyed by
     * `day` stages ([[graft.jobs.Jobs.dailyMetricsTick]]), which needs
-    * no sort. */
+    * no sort. The only definition of the daily rollup: on a stream of
+    * events it runs unchanged in update mode
+    * ([[graft.streaming.ScoringStream.dailyMetricsWriter]]), so every
+    * store of it holds the same rounded values. */
   def dailyRollup(events: DataFrame): DataFrame =
     scored(events)
       .groupBy(to_date(col("ts")).as("day"))

@@ -2437,7 +2437,7 @@ object TextOps {
       val retained = curationDecisions(s, dir).filter(col("drop_reason").isNull)
         .select(col("source"), col("doc_id"), col("red"), col("final_tokens"))
       val store = new graft.sources.FrameStore(
-        java.nio.file.Files.createTempDirectory("graft-forget-emit-").toString)
+        graft.sources.Scratch.dir("graft-forget-emit-").toString)
       // full and reduced emissions materialized ONCE each (lineage
       // cut) and shared between the store lifecycle and the cert —
       // the cert's substantive content is untouched-shard
@@ -2957,7 +2957,7 @@ object TextOps {
   private[graft] def benchGramStore(s: SparkSession, dir: String): graft.sources.FrameStore =
     benchGramMemo(s, dir) {
       val store = new graft.sources.FrameStore(
-        java.nio.file.Files.createTempDirectory("graft-bench-grams-").toString)
+        graft.sources.Scratch.dir("graft-bench-grams-").toString)
       val bench = hashedGrams8(Tables.fanOut(Tables.documents(s, dir)))
         .filter(col("doc_id") % 4 === 3)
         .select(col("h")).distinct()

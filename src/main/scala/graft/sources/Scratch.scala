@@ -11,7 +11,9 @@ import java.nio.file.{Files, Path}
   * all scratch dirs under ONE per-JVM parent registered for deletion
   * at exit bounds the leak to a single tree per run — the sinks stay
   * readable for the whole session and /tmp no longer grows across
-  * rounds.
+  * rounds. Every temp dir in the engine comes from [[dir]], except
+  * `VersionedStore`'s staging dir, made inside its store so that its
+  * rename into place is atomic.
   */
 object Scratch {
 

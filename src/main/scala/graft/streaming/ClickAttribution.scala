@@ -1,8 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.{GraftSession, Q}
+import graft.sources.Scratch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -121,12 +120,12 @@ object ClickAttribution {
     * unable-to-infer instead of returning the correct empty frame. */
   private def landedPairs(spark: SparkSession, dir: String, joinType: String,
       confs: (String, String)*): DataFrame = {
-    val out = Files.createTempDirectory("graft-attr-out-").toString + "/pairs"
+    val out = Scratch.dir("graft-attr-out-").toString + "/pairs"
     val schema = GraftSession.scoped(spark,
         ("spark.sql.shuffle.partitions" -> "4") +: confs: _*) { s =>
       val pairs = joinedPairs(s, dir, joinType)
       Drain.run(pairs.writeStream.format("parquet").option("path", out),
-        Files.createTempDirectory("graft-attr-ckpt-").toString)
+        Scratch.dir("graft-attr-ckpt-").toString)
       pairs.schema
     }
     spark.read.schema(schema).parquet(out)

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.{Connection, DriverManager}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.sources.Scratch
+import org.apache.spark.sql.DataFrame
 
 /** The JDBC twin of the daily-metrics upsert sink — the reference
   * persists through SQL `INSERT … ON CONFLICT (day) DO UPDATE`
@@ -21,7 +20,7 @@ import org.apache.spark.sql.functions._
   *
   * The update set is one row per touched day (bounded by
   * days-per-batch at any scale), so the staging write is tiny; the
-  * heavy lifting (scan → window agg) stays in the streaming plan.
+  * heavy lifting (scan → day aggregate) stays in the streaming plan.
   *
   * CI runs it against embedded Derby (in-JVM, ships with Spark);
   * against Postgres only the url changes — the DDL uses the portable
@@ -30,11 +29,12 @@ import org.apache.spark.sql.functions._
   * Postgres lower-case). Idempotence across re-runs (the ON-CONFLICT
   * contract) is pinned in JdbcSinkSpec.
   *
-  * Metric values are rounded (6 dp) HERE, so every writer of this
-  * table — the streaming schedule and the external batch tick
-  * ([[graft.jobs.Jobs]]) — stores identical values for identical
-  * inputs; concurrent writers can't make stored rows oscillate
-  * between rounded and unrounded.
+  * Metric values arrive rounded (6 dp): every writer of this table —
+  * the streaming schedule and the external batch tick
+  * ([[graft.jobs.Jobs]]) — stages rows of the one aggregate,
+  * [[graft.queries.FraudAnalytics.dailyRollup]], which rounds inside
+  * the aggregation, so both store identical values for identical
+  * inputs.
   */
 object JdbcMetricsSink {
 
@@ -53,12 +53,12 @@ object JdbcMetricsSink {
   private def freshStagingName(): String =
     s"graft_daily_metrics_stage_${jvmTag}_${stagingSeq.incrementAndGet()}"
 
-  /** Embedded-Derby JDBC url rooted at a fresh temp dir. */
+  /** Embedded-Derby JDBC url rooted at a fresh [[graft.sources.Scratch]]
+    * dir: the store (and Derby's log) lives until the JVM exits. */
   def derbyUrl(): String = {
     System.setProperty("derby.stream.error.file",
-      Files.createTempDirectory("graft-derby-log-").toString + "/derby.log")
-    val dir = Files.createTempDirectory("graft-derby-").toString
-    s"jdbc:derby:$dir/metrics;create=true"
+      Scratch.dir("graft-derby-log-").toString + "/derby.log")
+    s"jdbc:derby:${Scratch.dir("graft-derby-")}/metrics;create=true"
   }
 
   private def withConn[A](url: String)(f: Connection => A): A = {
@@ -113,8 +113,7 @@ object JdbcMetricsSink {
   def upsertDailyMetrics(batch: DataFrame, url: String): Unit = {
     ensureTable(url)
     val staging = freshStagingName()
-    ScoringStream.roundedDailyMetrics(batch)
-      .coalesce(1) // one row per touched day — one write task, like the parquet sink
+    batch.coalesce(1) // one row per touched day — one write task, like the parquet sink
       .write.mode("overwrite")
       .jdbc(url, staging, new java.util.Properties)
     withConn(url) { c =>
@@ -131,15 +130,5 @@ object JdbcMetricsSink {
            |          s."avg_proba")""".stripMargin)
       finally exec(c, s"DROP TABLE $staging")
     }
-  }
-
-  /** [[ScoringStream.runDailyMetricsStream]] with the SQL store as
-    * the sink: same aggregate, same update-mode trigger, the
-    * foreachBatch body above as the upsert. Returns the table read
-    * back through the JDBC SOURCE (round-trip through the store). */
-  def runDailyMetricsJdbcStream(spark: SparkSession, dir: String, url: String): DataFrame = {
-    ScoringStream.drainDailyMetrics(spark, dir)(upsertDailyMetrics(_, url))
-    ScoringStream.roundedDailyMetrics(spark.read.jdbc(url, Table, new java.util.Properties))
-      .orderBy(col("day"))
   }
 }

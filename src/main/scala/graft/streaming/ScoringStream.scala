@@ -1,11 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.{GraftSession, Q}
 import graft.queries.FraudAnalytics
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Scratch
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 /** The real-time surface (SURVEY.md §2.10, §3.1): the same scoring
@@ -57,7 +57,7 @@ object ScoringStream {
     * This is the streaming twin of `fraud_scored_events` and shares
     * its DuckDB oracle. */
   def runScoredBackfill(spark: SparkSession, dir: String, outDir: String): DataFrame = {
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
+    val ckpt = Scratch.dir("graft-ckpt-").toString
     Drain.run(scoredStream(spark, dir)
       .select(
         col("event_id"), col("value").as("amount"), col("k"),
@@ -70,16 +70,15 @@ object ScoringStream {
     spark.read.parquet(outDir).orderBy(col("event_id"))
   }
 
-  /** Streaming daily-metrics: event-time window aggregation with a
-    * 1-hour watermark (T3 upgrade over the reference's hourly batch
-    * recompute). Update-mode rows land via foreachBatch into an
-    * in-memory store keyed by day — the A2 upsert (`ON CONFLICT
-    * (day) DO UPDATE`, compute-daily-metrics.py:21-35). On a real
-    * deployment the same foreachBatch body is a JDBC merge
-    * ([[JdbcMetricsSink]]) or a `replaceWhere` partition overwrite. */
+  /** Streaming daily metrics: [[dailyMetricsWriter]] drained once,
+    * each update-mode batch of days landing in a parquet store keyed
+    * by day — the A2 upsert (`ON CONFLICT (day) DO UPDATE`,
+    * compute-daily-metrics.py:21-35) as a partition overwrite.
+    * [[graft.jobs.Jobs.scheduleDailyMetrics]] runs the same writer
+    * with the JDBC merge ([[JdbcMetricsSink]]) as its sink. */
   def runDailyMetricsStream(spark: SparkSession, dir: String): DataFrame = {
-    val store = Files.createTempDirectory("graft-daily-store-").toString
-    drainDailyMetrics(spark, dir) { batch =>
+    val store = Scratch.dir("graft-daily-store-").toString
+    Drain.run(dailyMetricsWriter(spark, dir) { batch =>
       // Keyed upsert as dynamic partition overwrite: each updated
       // `day` replaces exactly its own partition — the scalable
       // analog of `INSERT .. ON CONFLICT (day) DO UPDATE`. The
@@ -88,51 +87,32 @@ object ScoringStream {
       // instead of fanning 30 rows across every core.
       batch.coalesce(1).write.mode("overwrite").partitionBy("day")
         .option("partitionOverwriteMode", "dynamic").parquet(store)
-    }
-    roundedDailyMetrics(spark.read.parquet(store)).orderBy(col("day"))
+    }, Scratch.dir("graft-daily-ckpt-").toString)
+    spark.read.parquet(store) // the partition column reads back last
+      .select("day", "num_predictions", "fraud_rate", "avg_amount", "avg_proba")
+      .orderBy(col("day"))
   }
 
-  /** The streaming daily-metrics aggregate (event-time day window,
-    * 1-hour watermark). */
-  private[graft] def dailyMetricsAgg(spark: SparkSession, dir: String): DataFrame =
-    scoredStream(spark, dir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 day").as("win"))
-      .agg(
-        count(lit(1)).as("num_predictions"),
-        avg(col("prediction").cast("double")).as("fraud_rate"),
-        avg(col("value")).as("avg_amount"),
-        avg(col("proba")).as("avg_proba"))
-      .select(to_date(col("win.start")).as("day"), col("num_predictions"),
-        col("fraud_rate"), col("avg_amount"), col("avg_proba"))
-
-  /** Drain [[dailyMetricsAgg]] over `dir` once on a fresh checkpoint,
-    * handing each update-mode batch of days to `sink`. ~30 daily
-    * groups: a handful of state-store partitions beats the session
-    * default (one state store instance per shuffle partition, each with
-    * checkpoint + commit overhead per batch). In UPDATE mode every
-    * batch already emits its updated groups; the trailing no-data
-    * micro-batch exists to advance the watermark for APPEND-mode
-    * finalization/state eviction, which this bounded backfill never
-    * needs — skip a whole state-store commit cycle. */
-  private[graft] def drainDailyMetrics(spark: SparkSession, dir: String)(
-      sink: DataFrame => Unit): Unit =
-    GraftSession.scoped(spark,
-      "spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") { s =>
-      Drain.run(dailyMetricsAgg(s, dir).writeStream
+  /** The one streaming writer of the daily rollup: the batch
+    * [[FraudAnalytics.dailyRollup]] run unchanged over [[eventsStream]]
+    * in update mode, each batch of updated days handed to `sink`. Its
+    * state is one row per `to_date(ts)` day, the batch query's own
+    * key, so it counts what the batch recompute counts in the same
+    * session time zone. There is no watermark: one would drop rows
+    * arriving later than its delay, which the reference's hourly
+    * recompute counts, and the state grows by one row per day, so it
+    * needs no eviction (nor the no-data batches a watermark runs).
+    * ~30 daily groups: a handful of state-store partitions beats the
+    * session default (one state store instance per shuffle partition,
+    * each with checkpoint + commit overhead per batch). The caller
+    * picks the checkpoint and the trigger. */
+  private[graft] def dailyMetricsWriter(spark: SparkSession, dir: String)(
+      sink: DataFrame => Unit): DataStreamWriter[Row] =
+    GraftSession.scoped(spark, "spark.sql.shuffle.partitions" -> "4") { s =>
+      FraudAnalytics.dailyRollup(eventsStream(s, dir)).writeStream
         .outputMode("update")
-        .foreachBatch { (batch: DataFrame, _: Long) => sink(batch) },
-        Files.createTempDirectory("graft-daily-ckpt-").toString)
+        .foreachBatch { (batch: DataFrame, _: Long) => sink(batch) }
     }
-
-  /** The daily-metrics columns with the ratios rounded to 6 places,
-    * as both stores keep them. */
-  private[graft] def roundedDailyMetrics(df: DataFrame): DataFrame =
-    df.select(col("day"), col("num_predictions"),
-      round(col("fraud_rate"), 6).as("fraud_rate"),
-      round(col("avg_amount"), 6).as("avg_amount"),
-      round(col("avg_proba"), 6).as("avg_proba"))
 
   /** The complete real-time scoring shape (M8 in streaming form):
     * event stream → model-feature projection → `foreachBatch` that
@@ -146,7 +126,7 @@ object ScoringStream {
   def runModelScoredStream(spark: SparkSession, dir: String, outDir: String,
                            registry: graft.ml.ModelRegistry,
                            modelName: String): DataFrame = {
-    val ckpt = Files.createTempDirectory("graft-model-ckpt-").toString
+    val ckpt = Scratch.dir("graft-model-ckpt-").toString
     val features = scoredStream(spark, dir)
       .select(
         col("event_id"), col("ts"),
@@ -204,7 +184,7 @@ object ScoringStream {
     * is persisted). Flags events spending above the user's lifetime
     * average. */
   def runEnrichedStream(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = graft.sources.Scratch.dir("graft-enrich-").toString
+    val scratch = Scratch.dir("graft-enrich-").toString
     val ckpt = s"$scratch/ckpt"
     val out  = s"$scratch/rows"
     val dim = graft.sources.Tables.events(spark, dir)
@@ -251,8 +231,8 @@ object ScoringStream {
     * and to the oracle: both sides keep exactly the provably-final
     * sessions. */
   def runSessionizeStream(spark: SparkSession, dir: String): DataFrame = {
-    val ckpt = Files.createTempDirectory("graft-sess-ckpt-").toString
-    val out  = Files.createTempDirectory("graft-sess-out-").toString + "/sessions"
+    val ckpt = Scratch.dir("graft-sess-ckpt-").toString
+    val out  = Scratch.dir("graft-sess-out-").toString + "/sessions"
     val sessSchema = GraftSession.scoped(spark, "spark.sql.shuffle.partitions" -> "4") { s =>
       val sess = eventsStream(s, dir)
         .withWatermark("ts", "1 hour")
@@ -280,7 +260,7 @@ object ScoringStream {
   /** Streaming scoring backfill — same oracle as fraud_scored_events. */
   val streamScored: Q = Q("stream_scored_events",
     FraudAnalytics.scoredEvents.oracle.get) { (s, dir) =>
-    val out = Files.createTempDirectory("graft-stream-out-").toString + "/scored"
+    val out = Scratch.dir("graft-stream-out-").toString + "/scored"
     runScoredBackfill(s, dir, out)
   }
 

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import graft.Q
 import graft.queries.{AnnCert, AnnIndexStore, PqAnn}
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -35,7 +33,7 @@ object StreamingAnnIndex {
   /** Fresh stream world: a store seeded with the promoted BASE index
     * (trained on the 80% slice), empty arrival dir + checkpoint. */
   def prepare(spark: SparkSession, dir: String): Env = {
-    val tmp = Files.createTempDirectory("graft-stream-ann-").toString
+    val tmp = Scratch.dir("graft-stream-ann-").toString
     Env(s"$tmp/in", s"$tmp/ckpt",
       AnnIndexStore.seededBaseStore(spark, dir, "graft_stream_ann_store_"),
       Tables.embeddings(spark, dir).schema)

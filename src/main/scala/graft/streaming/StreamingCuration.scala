@@ -6,7 +6,7 @@ import java.nio.file.attribute.FileTime
 import graft.Q
 import graft.SessionCaches.pinned
 import graft.queries.{Curation, TextOps}
-import graft.sources.{FrameStore, Tables}
+import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -89,7 +89,7 @@ object StreamingCuration {
   def prepare(spark: SparkSession, dir: String,
               quality: Option[FrameStore] = None,
               shadow: Boolean = false): Env = {
-    val tmp = Files.createTempDirectory("graft-stream-curation-").toString
+    val tmp = Scratch.dir("graft-stream-curation-").toString
     val docs = Tables.documents(spark, dir)
     val store = new FrameStore(s"$tmp/store")
     seedState(spark, store, docs.filter(lit(false)), batchId = -1L)
@@ -178,7 +178,7 @@ object StreamingCuration {
     for (i <- 0 until slices) {
       val from = lo + span * i / slices
       val until = lo + span * (i + 1) / slices
-      val staging = Files.createTempDirectory("graft-curation-slice-")
+      val staging = Scratch.dir("graft-curation-slice-")
       frame.filter(col(idCol) >= from && col(idCol) < until)
         .coalesce(1).write.mode("overwrite").parquet(staging.toString)
       val part = scala.util.Using.resource(Files.list(staging)) { files =>
@@ -553,7 +553,7 @@ object StreamingCuration {
     * plan is identical to the batch query's. */
   def runStatelessTwin(s: SparkSession, dir: String,
                        transform: DataFrame => DataFrame): DataFrame = {
-    val scratch = graft.sources.Scratch.dir("graft-twin-").toString
+    val scratch = Scratch.dir("graft-twin-").toString
     val ckpt = s"$scratch/ckpt"
     val out  = s"$scratch/rows"
     // the stream reads the file's PHYSICAL schema, then normalizes

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import graft.Q
 import graft.SessionCaches.pinned
 import graft.queries.TextOps
-import graft.sources.{FrameStore, Tables}
+import graft.sources.{FrameStore, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -129,7 +129,7 @@ object StreamingDedup {
     * Arrivals are added with [[addArrivals]], processed with
     * [[runPass]]. */
   def prepare(spark: SparkSession, dir: String): StreamEnv = {
-    val tmp = Files.createTempDirectory("graft-stream-dedup-").toString
+    val tmp = Scratch.dir("graft-stream-dedup-").toString
     val docs = Tables.documents(spark, dir)
     val split = docs.agg(expr("max(doc_id) * 9 div 10")).head().getLong(0)
     val store = new FrameStore(s"$tmp/store")
@@ -214,7 +214,7 @@ object StreamingDedup {
   private def corpusIndexStore(s: SparkSession, dir: String): FrameStore =
     corpusMemo(s, dir) {
       val store = new FrameStore(
-        Files.createTempDirectory("graft-shingle-index-").toString)
+        Scratch.dir("graft-shingle-index-").toString)
       store.publish(s, "corpus_shingles", TextOps.hashedShingles(s, dir))
       store
     }
@@ -271,7 +271,7 @@ object StreamingDedup {
   private def forgottenStore(s: SparkSession, dir: String): FrameStore =
     forgetMemo(s, dir) {
       val store = new FrameStore(
-        Files.createTempDirectory("graft-forget-index-").toString)
+        Scratch.dir("graft-forget-index-").toString)
       store.publish(s, "corpus_shingles", TextOps.hashedShingles(s, dir))
       // the forget: docs withdrawn from training leave the postings
       // artifact; gc retires the superseded versions that still held

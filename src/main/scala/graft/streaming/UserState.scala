@@ -72,7 +72,7 @@ object UserState {
     * returns the final per-user profiles. */
   def runProfiles(spark: SparkSession, dir: String): Dataset[UserProfile] = {
     import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-state-ckpt-").toString
+    val ckpt = graft.sources.Scratch.dir("graft-state-ckpt-").toString
     val events = ScoringStream.scoredStream(spark, dir)
       .select($"user_id", $"ts", $"value").as[UserEvent]
     val profiles = events

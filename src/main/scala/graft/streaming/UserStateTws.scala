@@ -53,7 +53,7 @@ object UserStateTws {
     graft.GraftSession.scoped(spark, "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") { s =>
       import s.implicits._
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-tws-ckpt-").toString
+      val ckpt = graft.sources.Scratch.dir("graft-tws-ckpt-").toString
       val events = ScoringStream.scoredStream(s, dir)
         .select($"user_id", $"ts", $"value").as[UserEvent]
       val profiles = events

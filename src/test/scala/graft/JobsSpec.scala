@@ -3,11 +3,13 @@ package graft
 import graft.jobs.Jobs
 import graft.queries.FraudAnalytics
 import graft.streaming.JdbcMetricsSink
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 
 /** Pins the runnable scheduler surface: a tick must be idempotent
-  * (the cron-refire contract), the DQ report must pass on the driver
-  * corpus, and the engine-native schedule must maintain the same
-  * store on a processing-time cadence. */
+  * (the cron-refire contract) and store exactly the batch rollup, the
+  * DQ report must pass on the driver corpus, and the engine-native
+  * schedule must maintain the same store on a processing-time cadence
+  * and resume from its checkpoint without replaying input. */
 class JobsSpec extends SparkSpec {
 
   test("daily-metrics tick is idempotent and matches the batch rollup") {
@@ -16,7 +18,7 @@ class JobsSpec extends SparkSpec {
     val second = Jobs.dailyMetricsTick(spark, sf, url).collect().toSeq
     assert(first.nonEmpty && first == second, "re-firing the tick must not change the store")
     val batch = FraudAnalytics.dailyMetrics.fn(spark, sf).collect().toSeq
-    assert(first.map(_.getAs[java.sql.Date]("day")) == batch.map(_.getAs[java.sql.Date]("day")))
+    assert(first.map(_.toSeq) == batch.map(_.toSeq), "the store must hold exactly the batch rollup")
   }
 
   test("data-quality tick reports all checks ok on the driver corpus") {
@@ -42,15 +44,30 @@ class JobsSpec extends SparkSpec {
 
   test("processing-time schedule maintains the jdbc store until stopped") {
     val url = JdbcMetricsSink.derbyUrl()
-    val q = Jobs.scheduleDailyMetrics(spark, sf, url, every = "1 second")
-    try {
-      // AvailableNow semantics don't apply here: wait for the first
-      // processing-time batch to commit, then verify the store.
-      val deadline = System.currentTimeMillis() + 60000
-      while (q.recentProgress.forall(_.numInputRows == 0) && System.currentTimeMillis() < deadline)
-        Thread.sleep(200)
-    } finally q.stop()
-    val days = spark.read.jdbc(url, JdbcMetricsSink.Table, new java.util.Properties).count()
-    assert(days > 0, "schedule never committed a batch into the store")
+    val ckpt = graft.sources.Scratch.dir("graft-sched-ckpt-").toString
+    def store() = spark.read.jdbc(url, JdbcMetricsSink.Table, new java.util.Properties)
+      .orderBy("day").collect().toSeq
+    // AvailableNow semantics don't apply here: run the schedule on
+    // `ckpt` until `done`, stop it, and return its progress.
+    def schedule(done: StreamingQuery => Boolean): Seq[StreamingQueryProgress] = {
+      val q = Jobs.scheduleDailyMetrics(spark, sf, url, every = "1 second", checkpoint = Some(ckpt))
+      try {
+        val deadline = System.currentTimeMillis() + 60000
+        while (!done(q) && q.isActive && System.currentTimeMillis() < deadline) Thread.sleep(200)
+      } finally q.stop()
+      q.exception.foreach(e => throw e)
+      q.recentProgress.toSeq
+    }
+    val first = schedule(_.recentProgress.exists(_.numInputRows > 0))
+    assert(first.exists(_.numInputRows > 0), "schedule never committed a batch into the store")
+    val batch = FraudAnalytics.dailyMetrics.fn(spark, sf).collect().toSeq
+    val stored = store()
+    assert(stored.map(_.toSeq) == batch.map(_.toSeq), "the store must hold exactly the batch rollup")
+    // a restart resumes after the committed offsets: no input is
+    // replayed and the store is unchanged
+    val restarted = schedule(_.recentProgress.nonEmpty)
+    assert(restarted.nonEmpty && restarted.forall(_.numInputRows == 0),
+      restarted.map(_.numInputRows).mkString("restart read input rows: ", ", ", ""))
+    assert(store() == stored, "a restart on the same checkpoint must not change the store")
   }
 }

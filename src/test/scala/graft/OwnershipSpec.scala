@@ -8,8 +8,10 @@ import java.nio.file.{Files, Path, Paths}
   * release (`SessionCaches`), the session builder and every session
   * conf write (`GraftSession`), the versioned-artifact lifecycle (the
   * atomic `PRODUCTION` pointer and the `BATCH` replay marker,
-  * `VersionedStore`) and the runnable mains (the driver contract, the
-  * daily jobs and the one dev `Probe`). A copy of one
+  * `VersionedStore`), temp directories (`Scratch`), the daily
+  * rollup aggregate (`FraudAnalytics.dailyRollup`) and the runnable
+  * mains (the driver contract, the daily jobs and the one dev
+  * `Probe`). A copy of one
   * outside its owners fails here, so the mechanisms and the one-off
   * probe mains do not fork again. */
 class OwnershipSpec extends org.scalatest.funsuite.AnyFunSuite {
@@ -48,6 +50,8 @@ class OwnershipSpec extends org.scalatest.funsuite.AnyFunSuite {
       "ATOMIC_MOVE" -> Set("VersionedStore.scala"),
       "resolve(\"PRODUCTION\")" -> Set("VersionedStore.scala"),
       "resolve(\"BATCH\")" -> Set("VersionedStore.scala"),
+      "createTempDirectory(" -> Set("Scratch.scala", "VersionedStore.scala"),
+      ".as(\"num_predictions\")" -> Set("FraudAnalytics.scala"),
       "def main(" -> Set("Verify.scala", "Bench.scala", "Jobs.scala", "Probe.scala")))
     test(s"`$needle` appears only in ${owners.mkString(", ")}") {
       val copies = copiesOf(needle, owners)

@@ -753,9 +753,14 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming daily metrics equal batch daily metrics") {
-    val streamed = ScoringStream.runDailyMetricsStream(spark, sf)
-    val batch = FraudAnalytics.dailyMetrics.fn(spark, sf)
-    assert(streamed.except(batch).count() == 0 && batch.except(streamed).count() == 0)
+    // in UTC and in a zone whose days are not UTC epoch days
+    val newYork = GraftSession.scoped(spark, "spark.sql.session.timeZone" -> "America/New_York")(identity)
+    for (s <- Seq(spark, newYork)) {
+      val streamed = ScoringStream.runDailyMetricsStream(s, sf)
+      val batch = FraudAnalytics.dailyMetrics.fn(s, sf)
+      assert(streamed.except(batch).count() == 0 && batch.except(streamed).count() == 0,
+        s"time zone ${s.conf.get("spark.sql.session.timeZone")}")
+    }
   }
 
   test("state data source exposes streaming aggregation state (ops introspection)") {
